@@ -12,50 +12,89 @@ merges the per-module registries.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+# Imported directly: a module that fails to import must fail the
+# contract, not silently drop its queries from the registry.
+from aws_etl_dados_publicos_cnpj_spark.operators import (
+    behavioral, corpus, dedup, multimodal, quality, relational, similarity,
+    temporal, text,
+)
 
-# The driver's correctness gate checks queries in dict order with a
-# bounded budget (50 observed in rounds 1-4), so ordering is part of
-# the contract. The ordering is GENERATED from CORRECTNESS_r*.json by
-# ``tools/driver_window.py`` (r4 verdict item #8): implementations
-# touched this round first, then never-driver-green queries, then
-# everything else stalest-first. Re-run the tool after adding queries
-# or landing a round's correctness file.
-# The generated file is checked in — if the import fails the
-# verification schedule is gone, so fail LOUDLY rather than silently
-# degrading to registry order (r5 advice).
-from aws_etl_dados_publicos_cnpj_spark._driver_window import DRIVER_PRIORITY
+_MODULES = (
+    relational, dedup, similarity, text, multimodal, temporal, corpus,
+    behavioral, quality,
+)
+_HERE = os.path.dirname(os.path.abspath(__file__))
 
-_DRIVER_PRIORITY = DRIVER_PRIORITY
+# Queries whose implementation changed since the last correctness
+# round: the correctness gate re-checks them first, whatever their
+# history says.
+FRONT = [
+    "video_frame_hash_docs", "video_near_dup_docs", "audio_ehash_docs",
+    "audio_near_dup_docs", "image_ahash_docs", "image_png_ahash_docs",
+    "image_jpeg_ahash_docs", "image_near_dup_docs", "multimodal_meta",
+    "multimodal_features", "multimodal_frame_sample", "multimodal_wav_decode",
+]
 
 
-def _registries():
-    from aws_etl_dados_publicos_cnpj_spark.operators import relational
+def history(repo: str = _HERE) -> dict[str, int]:
+    """name -> latest round with a fully-green correctness row in
+    ``repo/CORRECTNESS_r*.json`` (absent = never green). Green means
+    rows, schema and hash all match with no ``err``."""
+    last_green: dict[str, int] = {}
+    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            rows = json.load(f)
+        for name, row in rows.items():
+            if (
+                row.get("rows_match")
+                and row.get("schema_match")
+                and row.get("hash_match")
+                and not row.get("err")
+            ):
+                last_green[name] = max(last_green.get(name, 0), rnd)
+    return last_green
 
-    modules = [relational]
-    for mod_name in (
-        "dedup", "similarity", "text", "multimodal", "temporal", "corpus",
-        "behavioral", "quality",
-    ):
-        try:
-            mod = __import__(
-                f"aws_etl_dados_publicos_cnpj_spark.operators.{mod_name}",
-                fromlist=[mod_name],
-            )
-            modules.append(mod)
-        except ImportError:
-            pass
-    queries: dict[str, Callable] = {}
-    oracles: dict[str, str] = {}
-    for mod in modules:
-        queries.update(getattr(mod, "QUERIES", {}))
-        oracles.update(getattr(mod, "ORACLES", {}))
-    ordered = {n: queries[n] for n in _DRIVER_PRIORITY if n in queries}
-    ordered.update(queries)  # remaining (twice-green) queries keep registry order
-    return ordered, oracles
+
+def build_window(
+    registry: list[str], green: dict[str, int], front: list[str]
+) -> list[tuple[str, str]]:
+    """The correctness gate checks the first ~50 queries in dict order,
+    so the order is the verification schedule: ``front`` first, then
+    queries with no green row in registry order, then the rest
+    stalest-first (stable on registry order). Returns (name, reason)
+    pairs."""
+    rows: list[tuple[str, str]] = []
+    seen = set()
+    for n in front:
+        if n not in registry:
+            raise ValueError(f"front name not in registry: {n}")
+        rows.append((n, "touched this round"))
+        seen.add(n)
+    for n in registry:
+        if n not in seen and green.get(n, 0) == 0:
+            rows.append((n, "never green"))
+            seen.add(n)
+    rest = sorted(
+        (n for n in registry if n not in seen),
+        key=lambda n: (green[n], registry.index(n)),
+    )
+    rows.extend((n, f"last green r{green[n]}") for n in rest)
+    return rows
+
+
+_QUERIES: dict[str, Callable] = {n: q for m in _MODULES for n, q in m.QUERIES.items()}
+_ORACLES: dict[str, str] = {n: o for m in _MODULES for n, o in m.ORACLES.items()}
+
+_DRIVER_PRIORITY = [n for n, _ in build_window(list(_QUERIES), history(), FRONT)]
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -68,9 +107,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return _registries()[0]
+    return {n: _QUERIES[n] for n in _DRIVER_PRIORITY}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for each SQL-expressible query."""
-    return _registries()[1]
+    return dict(_ORACLES)

@@ -5,57 +5,31 @@ Model: media payloads are opaque ``binary`` columns with a typed
 metadata struct alongside (mime, n_bytes, checksum). Decode /
 feature-extraction runs as Arrow-batched ``mapInPandas``.
 
-Decode status — honest per format:
+Decode status — honest per format. The formats below are the ones the
+registered queries' fixtures synthesize (``media.synthesize_*``), so
+each decode path runs under an oracle gate; variants no fixture emits
+(BMP RLE, G.711, ...) are unit-tested. No external codec library is
+needed:
 
-- **REAL decode, no external codecs needed**: WAV/RIFF PCM audio
-  (stdlib ``wave``: channels, sample rate, duration, RMS, peak),
-  16-bit PCM AIFF audio (r8, ``_aiff_samples``: big-endian IFF walk,
-  COMM 80-bit extended-float rate, SSND offset/blockSize — ``aifc``
-  left the stdlib, so the parse is hand-rolled),
-  uncompressed 24-bit BMP images (``struct`` + numpy: dimensions, mean
-  RGB, real nearest-neighbor thumbnails, per-sample frame extraction),
-  8-bit RGB/RGBA PNG (stdlib ``zlib`` inflate + all five scanline
-  filters inverted in ``_png_pixels``), GIF87a/89a (r8,
-  ``_gif_pixels``: real LZW decompression with variable code widths,
-  dictionary growth/reset and the KwKwK case, palette lookup,
-  interlace reordering — the third compression family here after
-  DEFLATE and huffman+DCT — plus an ``encode_gif`` twin), baseline
-  sequential JPEG
-  (``_jpeg_pixels``: DHT huffman entropy decode + dequant + batched
-  numpy iDCT + sampling-factor MCU assembly + YCbCr→RGB — a genuinely
-  lossy transform codec, with an encoder twin for fixtures), and
-  Motion-JPEG AVI video (``_avi_mjpeg_frames``: RIFF/'movi' walk +
-  per-frame JPEG decode — a STANDARD video container, alongside the
-  synthetic VID0 one), WebP VP8L lossless (r11,
-  ``_webp_pixels``: canonical prefix codes, meta groups, color
-  cache, LZ77 with the 2D distance map, all four transforms
-  inverted, ``encode_webp`` twin; VP8 lossy gets honest
-  dims-from-keyframe-header triage), and Matroska/WebM audio (r11,
-  ``_mkv_audio_samples``: real EBML walk with all three lacing
-  modes; A_PCM via the shared width machinery, A_FLAC via native
-  reassembly; video tracks get container triage).
-- **MP4**: the ISO-BMFF walk is real (r8) down THROUGH the sample
-  tables — box tree → 'vide' trak → tkhd/mdhd/stsd metadata
-  (``_mp4_video_stats``), then stsz × stsc × stco/co64 resolved to
-  per-sample byte ranges (``_mp4_sample_ranges``). MJPEG ('jpeg'
-  sample entries) therefore DECODES for real through the JPEG codec
-  (``_mp4_mjpeg_frames``, routed in ``decode_media`` and
-  ``video_frame_hashes``); H.264/HEVC sample payloads need ffmpeg,
-  absent here — frame access raises ``NotImplementedError`` and
-  quarantines while container stats still return.
-- **STUB**: arithmetic-coded/hierarchical JPEG
-  variants need ffmpeg/PIL, absent in this container —
-  ``decode_media`` raises ``NotImplementedError`` for those mimes;
-  ``decode_features`` rows quarantine per-payload (``ok=false`` +
-  error) instead of killing the job, mirroring the engine's
-  corrupt-CSV quarantine semantics. Progressive huffman JPEG (SOF2)
-  decodes for REAL: spectral selection, successive approximation,
-  EOB runs — the scan loop accumulates per-component coefficient
-  state and the shared iDCT finishes it. Lossless huffman JPEG
-  (SOF3, r11) also decodes for REAL: T.81 Annex-H predictive
-  coding, all seven predictors, point transform, restarts, 2-16-bit
-  precision — with an ``encode_jpeg_lossless`` twin (exact
-  round-trip at Pt=0).
+- **Images** (``image.py``, sniffed by magic in
+  ``containers._image_pixels``): BMP (incl. RLE/palette/bitfields),
+  PNG/APNG, GIF (LZW), JPEG baseline, progressive and lossless
+  (+ JPEG-in-TIFF), TIFF (LZW/Deflate, planar, multi-page), TGA, PCX,
+  SGI, netpbm, QOI, ICO, DDS, Sun Raster, WebP VP8L (lossless + ANMF
+  animation; lossy VP8 gets dims-only triage).
+- **Audio** (``audio.py``): WAV/RIFF (8-32-bit PCM, float, G.711,
+  extensible, RF64), AIFF/AIFC, FLAC (+ encoder twin), Ogg-FLAC,
+  CAF, Sun AU, PCM-in-MP4, PCM and FLAC in Matroska, PCM in AVI.
+- **Video** (``containers.py``/``media.py``): the synthetic VID0
+  layout, Motion-JPEG in AVI, MP4 and Matroska; any other video
+  codec gets container stats and frame access raises.
+
+Anything else — MP3, Vorbis and Opus samples, ADPCM, HEIF/AVIF,
+H.264/HEVC frames and every unlisted mime — raises
+``NotImplementedError`` (or ``ValueError`` for corrupt bytes), and
+``decode_features`` turns that into a quarantine row (``ok=false`` +
+the error) instead of failing the job, mirroring the engine's
+corrupt-CSV quarantine semantics.
 
 At 100 TB: payloads live in parquet binary columns (or are pointers to
 object-store blobs resolved inside the batch fn); ``mapInPandas`` keeps
@@ -71,9 +45,9 @@ bytes zero-copy between JVM and Python.
 # namespace (verdict r12 "what's wrong" item 2: split behind an
 # import-compatible facade, zero behavior change).
 
-from . import audio, containers, image, media, queries, vorbis  # noqa: F401
+from . import audio, containers, image, media, queries  # noqa: F401
 
-for _m in (audio, image, containers, media, queries, vorbis):
+for _m in (audio, image, containers, media, queries):
     for _k, _v in vars(_m).items():
         if not _k.startswith("__"):
             globals()[_k] = _v

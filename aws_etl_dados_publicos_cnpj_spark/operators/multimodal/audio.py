@@ -1,6 +1,6 @@
-"""Audio codecs: WAV/RIFF matrix (PCM widths, IMA/MS ADPCM, G.711, float, RF64),
-AIFF/AIFC, CAF, AU delegation, IFF 8SVX, Creative VOC, MPEG audio Layer III/I
-(+ the encoder twin), FLAC (+ encoder twin), and the Ogg container walk.
+"""Audio codecs: WAV/RIFF matrix (PCM widths, G.711, float, RF64),
+AIFF/AIFC, CAF, AU delegation, FLAC (+ encoder twin), and the Ogg
+container walk (FLAC delegation).
 
 Split out of the r12 single-module multimodal.py (r12 verdict item:
 52% of the package in one file); behavior-identical, facade in
@@ -9,7 +9,6 @@ Split out of the r12 single-module multimodal.py (r12 verdict item:
 
 from __future__ import annotations
 
-from .. import _mp3_tables as _m3t
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 import io
@@ -66,137 +65,6 @@ def _g711_tables() -> tuple[np.ndarray, np.ndarray]:
 
 _G711_ULAW, _G711_ALAW = _g711_tables()
 
-# IMA/DVI ADPCM (WAV format tag 0x11) — the classic 4-bit predictive
-# telephony/game-audio codec, decoded from the public IMA spec: the
-# 89-entry step table and the 8-entry index-adjust table are the
-# format's normative constants.
-_IMA_STEPS = np.array(
-    [
-        7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34,
-        37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143,
-        157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494,
-        544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552,
-        1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428,
-        4871, 5358, 5894, 6484, 7132, 7845, 8630, 9493, 10442, 11487,
-        12635, 13899, 15289, 16818, 18500, 20350, 22385, 24623, 27086,
-        29794, 32767,
-    ],
-    dtype=np.int64,
-)
-_IMA_INDEX_ADJUST = np.array([-1, -1, -1, -1, 2, 4, 6, 8], dtype=np.int64)
-
-
-def _ima_decode_nibbles(
-    nibbles: "list[int]", predictor: int, index: int
-) -> list[int]:
-    """Decode one channel's nibble stream given the block header's
-    seed predictor/step-index — the spec's serial recurrence (each
-    output feeds the next prediction, like the FLAC LPC IIR)."""
-    out = []
-    pred = predictor
-    idx = max(0, min(88, index))
-    for n in nibbles:
-        step = int(_IMA_STEPS[idx])
-        delta = step >> 3
-        if n & 1:
-            delta += step >> 2
-        if n & 2:
-            delta += step >> 1
-        if n & 4:
-            delta += step
-        pred = pred - delta if n & 8 else pred + delta
-        pred = max(-32768, min(32767, pred))
-        out.append(pred)
-        idx = max(0, min(88, idx + int(_IMA_INDEX_ADJUST[n & 7])))
-    return out
-
-
-def _ima_encode_step(v: int, pred: int, idx: int) -> tuple[int, int, int]:
-    """One textbook IMA quantize step: (nibble, new predictor, new
-    step index) for target sample ``v`` from state (pred, idx) — THE
-    recurrence both encoder twins share (WAV tag-0x11 blocks and AIFC
-    'ima4' packets are the same published codec in different
-    packaging)."""
-    step = int(_IMA_STEPS[idx])
-    diff = v - pred
-    nib = 8 if diff < 0 else 0
-    diff = abs(diff)
-    delta = step >> 3
-    if diff >= step:
-        nib |= 4
-        diff -= step
-        delta += step
-    if diff >= step >> 1:
-        nib |= 2
-        diff -= step >> 1
-        delta += step >> 1
-    if diff >= step >> 2:
-        nib |= 1
-        delta += step >> 2
-    pred = pred - delta if nib & 8 else pred + delta
-    pred = max(-32768, min(32767, pred))
-    idx = max(0, min(88, idx + int(_IMA_INDEX_ADJUST[nib & 7])))
-    return nib, pred, idx
-
-
-def _ima_adpcm_samples(
-    payload: bytes, probed: tuple | None = None
-) -> tuple[np.ndarray, int, int]:
-    """(int16 interleaved samples, rate, n_channels) of an IMA ADPCM
-    WAV (format tag 0x11, the codec the stdlib ``wave`` module
-    rejects): per-block per-channel 4-byte headers (seed predictor
-    int16 + step index), then 4-bit nibbles — low nibble first, and
-    for stereo interleaved in 4-byte groups per channel. The block
-    header's predictor is sample 0 of the block (the MS convention
-    ``samples_per_block = (block_align - 4·ch)·2/ch + 1`` encodes)."""
-    probed = probed if probed is not None else _riff_fmt_and_data(payload)
-    if probed is None:
-        raise ValueError("not a parseable RIFF/WAVE container")
-    (tag, n_ch, rate, bits, block_align), data = probed[0][:5], probed[1]
-    if tag != 0x11:
-        raise ValueError(f"not an IMA ADPCM WAV (fmt tag {tag:#x})")
-    if bits != 4:
-        raise ValueError(f"IMA ADPCM must be 4-bit, got {bits}")
-    if n_ch not in (1, 2):
-        raise ValueError(f"unsupported IMA ADPCM channel count {n_ch}")
-    if block_align < 4 * n_ch or block_align % (4 * n_ch):
-        raise ValueError(f"invalid IMA ADPCM block align {block_align}")
-    # honor the fmt extension's samples_per_block like the MS path
-    # does: the final (or every) block's trailing nibbles may be
-    # padding, not samples — decoding them inflates n_frames and
-    # skews rms/peak on externally-encoded WAVs (r9 ADVICE).
-    spb = _ima_fmt_extension(payload)
-    chans: list[list[int]] = [[] for _ in range(n_ch)]
-    for base in range(0, len(data) - len(data) % block_align, block_align):
-        block = data[base : base + block_align]
-        seeds = []
-        for c in range(n_ch):
-            pred, idx = struct.unpack_from("<hB", block, 4 * c)
-            if idx > 88:
-                raise ValueError(f"IMA ADPCM step index {idx} out of range")
-            seeds.append((pred, idx))
-        body = block[4 * n_ch :]
-        # nibbles per channel: mono is sequential; stereo alternates
-        # 4-byte (8-nibble) groups between channels
-        for c in range(n_ch):
-            if n_ch == 1:
-                cb = body
-            else:
-                grp = np.frombuffer(body, np.uint8).reshape(-1, 2, 4)
-                cb = grp[:, c, :].tobytes()
-            nibs: list[int] = []
-            for b in cb:
-                nibs.append(b & 0x0F)  # low nibble first per the spec
-                nibs.append(b >> 4)
-            # the header predictor is sample 0 of the block
-            block_out = [seeds[c][0]] + _ima_decode_nibbles(nibs, *seeds[c])
-            chans[c].extend(block_out[:spb] if spb else block_out)
-    arrs = [np.asarray(ch, dtype=np.int16) for ch in chans]
-    if n_ch == 1:
-        return arrs[0], rate, 1
-    return np.stack(arrs, axis=1).reshape(-1), rate, 2
-
-
 def _riff_chunk(payload: bytes, want: bytes) -> tuple[int, int] | None:
     """(payload offset, declared size) of the first ``want`` chunk in
     a RIFF stream, or None — the ONE chunk walk the fmt-extension and
@@ -219,306 +87,6 @@ def _riff_chunk(payload: bytes, want: bytes) -> tuple[int, int] | None:
     return None
 
 
-def _riff_fmt_chunk(payload: bytes) -> tuple[int, int] | None:
-    return _riff_chunk(payload, b"fmt ")
-
-
-def _ima_fmt_extension(payload: bytes) -> int:
-    """samples_per_block from the fmt chunk's IMA ADPCM extension
-    (cbSize >= 2), 0 when absent or truncated — the same liberal-read
-    discipline as ``_ms_fmt_extension`` (a bogus huge value only makes
-    the truncation a no-op; a bogus small one is the encoder's claim
-    of how many real samples each block holds, which we honor). The
-    +18 offset covers BOTH header layouts: classic cbSize-then-spb,
-    and WAVE_FORMAT_EXTENSIBLE's Samples union (wSamplesPerBlock for
-    compressed formats) at the same position. The +18 field is only
-    trusted when the header actually DECLARES it — cbSize >= 2 at +16,
-    or the extensible on-disk tag — a plain WAVEFORMATEX padded to 20
-    bytes would otherwise yield garbage spb that silently truncates
-    real samples from every block (r10 advice)."""
-    loc = _riff_fmt_chunk(payload)
-    if loc is None or loc[1] < 20:
-        return 0
-    (disk_tag,) = struct.unpack_from("<H", payload, loc[0])
-    (cb,) = struct.unpack_from("<H", payload, loc[0] + 16)
-    if cb < 2 and disk_tag != 0xFFFE:
-        return 0
-    (spb,) = struct.unpack_from("<H", payload, loc[0] + 18)
-    return spb
-
-
-# MS ADPCM (WAV format tag 2) — the other classic 4-bit WAV codec:
-# a 2-tap fixed-point linear predictor chosen per block from the
-# format's 7 canonical coefficient pairs, plus a per-nibble delta
-# adaptation table. Both tables are normative constants of the spec.
-_MS_ADPCM_COEFS = (
-    (256, 0), (512, -256), (0, 0), (192, 64), (240, 0), (460, -208),
-    (392, -232),
-)
-_MS_ADPCM_ADAPT = (
-    230, 230, 230, 230, 307, 409, 512, 614, 768, 614, 512, 409, 307,
-    230, 230, 230,
-)
-
-
-def _trunc_div256(p: int) -> int:
-    """C-style truncating division by 256 (toward zero). The MS ADPCM
-    spec pseudocode and reference decoders (ffmpeg) divide the
-    predictor sum with C integer division; Python's ``>> 8`` floors,
-    which is 1 LSB off for negative sums — and the error feeds the
-    IIR predictor state (r9 ADVICE)."""
-    return p // 256 if p >= 0 else -((-p) // 256)
-
-
-def _ms_decode_nibbles(
-    nibbles: "list[int]", coefs: tuple, s1: int, s2: int, delta: int
-) -> list[int]:
-    """One channel's MS ADPCM recurrence: sample2/sample1 seed the
-    2-tap predictor, the 4-bit code is a signed multiple of the
-    adaptive delta. Serial like the IMA/FLAC-LPC recurrences."""
-    c1, c2 = coefs
-    out = [s2, s1]  # the header samples are the block's first outputs
-    for n in nibbles:
-        pred = _trunc_div256(s1 * c1 + s2 * c2)
-        signed = n - 16 if n >= 8 else n
-        pred = max(-32768, min(32767, pred + signed * delta))
-        out.append(pred)
-        s2, s1 = s1, pred
-        delta = max(16, (_MS_ADPCM_ADAPT[n] * delta) >> 8)
-    return out
-
-
-def _ms_adpcm_samples(
-    payload: bytes, probed: tuple | None = None
-) -> tuple[np.ndarray, int, int]:
-    """(int16 interleaved samples, rate, n_channels) of an MS ADPCM
-    WAV (format tag 2): per-block headers carry a per-channel
-    predictor index, initial delta, and the two seed samples
-    (grouped field-by-field across channels), then 4-bit codes —
-    high nibble first, channels alternating per nibble for stereo.
-    Custom coefficient tables in the fmt extension are honored."""
-    probed = probed if probed is not None else _riff_fmt_and_data(payload)
-    if probed is None:
-        raise ValueError("not a parseable RIFF/WAVE container")
-    (tag, n_ch, rate, bits, block_align), data = probed[0][:5], probed[1]
-    if tag != 2:
-        raise ValueError(f"not an MS ADPCM WAV (fmt tag {tag:#x})")
-    if bits != 4:
-        raise ValueError(f"MS ADPCM must be 4-bit, got {bits}")
-    if n_ch not in (1, 2):
-        raise ValueError(f"unsupported MS ADPCM channel count {n_ch}")
-    if block_align < 7 * n_ch + n_ch // 2:
-        raise ValueError(f"invalid MS ADPCM block align {block_align}")
-    coef_table, spb = _ms_fmt_extension(payload)
-    chans: list[list[int]] = [[] for _ in range(n_ch)]
-    for base in range(0, len(data) - len(data) % block_align, block_align):
-        block = data[base : base + block_align]
-        preds, deltas, s1s, s2s = [], [], [], []
-        for c in range(n_ch):
-            pi = block[c]
-            if pi >= len(coef_table):
-                raise ValueError(f"MS ADPCM predictor index {pi} out of range")
-            preds.append(coef_table[pi])
-        for c in range(n_ch):
-            deltas.append(struct.unpack_from("<h", block, n_ch + 2 * c)[0])
-            s1s.append(struct.unpack_from("<h", block, 3 * n_ch + 2 * c)[0])
-            s2s.append(struct.unpack_from("<h", block, 5 * n_ch + 2 * c)[0])
-        body = block[7 * n_ch :]
-        nibs: list[list[int]] = [[] for _ in range(n_ch)]
-        ch = 0
-        for b in body:
-            for n in (b >> 4, b & 0x0F):  # high nibble first
-                nibs[ch].append(n)
-                ch = (ch + 1) % n_ch
-        for c in range(n_ch):
-            dec = _ms_decode_nibbles(nibs[c], preds[c], s1s[c], s2s[c], deltas[c])
-            chans[c].extend(dec[:spb] if spb else dec)
-    arrs = [np.asarray(c, dtype=np.int16) for c in chans]
-    if n_ch == 1:
-        return arrs[0], rate, 1
-    if len(arrs[0]) != len(arrs[1]):
-        raise ValueError("MS ADPCM channels decoded to different lengths")
-    return np.stack(arrs, axis=1).reshape(-1), rate, 2
-
-
-def _ms_fmt_extension(payload: bytes) -> tuple[tuple, int]:
-    """(coefficient table, samples_per_block) from the fmt chunk's
-    ADPCM extension — falls back to the 7 canonical pairs / 0 when
-    the extension is absent or truncated (liberal read; every value
-    that matters downstream is validated there). Both header layouts
-    (r10): classic tag-2 puts [wSamplesPerBlock][wNumCoef][table] at
-    +18; WAVE_FORMAT_EXTENSIBLE keeps wSamplesPerBlock in the Samples
-    union at the SAME +18 and appends [wNumCoef][table] after the
-    SubFormat GUID at +40."""
-    loc = _riff_fmt_chunk(payload)
-    if loc is None:
-        return _MS_ADPCM_COEFS, 0
-    off, csz = loc
-    (disk_tag,) = struct.unpack_from("<H", payload, off)
-    tbl = off + 40 if disk_tag == 0xFFFE else off + 20
-    spb = 0
-    if csz >= 20:
-        # same declared-extension gate as _ima_fmt_extension: trust
-        # +18 only under cbSize >= 2 or the extensible tag (r10 advice)
-        (cb,) = struct.unpack_from("<H", payload, off + 16)
-        if cb >= 2 or disk_tag == 0xFFFE:
-            (spb,) = struct.unpack_from("<H", payload, off + 18)
-    if off + csz >= tbl + 2:
-        (ncoef,) = struct.unpack_from("<H", payload, tbl)
-        if 1 <= ncoef <= 256 and off + csz >= tbl + 2 + 4 * ncoef:
-            table = tuple(
-                struct.unpack_from("<hh", payload, tbl + 2 + 4 * i)
-                for i in range(ncoef)
-            )
-            return table, spb
-    return _MS_ADPCM_COEFS, spb
-
-
-def encode_ms_adpcm(
-    samples: np.ndarray, rate: int = 8000, frames_per_block: int = 500
-) -> bytes:
-    """MS ADPCM encoder twin for tests/fuzz seeds: mono 1-D or
-    stereo (n, 2) int16 in, format-tag-2 RIFF out. Textbook encode:
-    trial-encode the block against all 7 canonical predictors and
-    keep the one with the least squared error. Lossy — correctness
-    is self-consistency with ``_ms_adpcm_samples`` plus an SNR
-    bound."""
-    s = np.asarray(samples)
-    if np.issubdtype(s.dtype, np.floating):
-        if not np.isfinite(s).all() or (s != np.floor(s)).any():
-            raise ValueError("encode_ms_adpcm: non-integral samples")
-    s = s.astype(np.int64)
-    if s.ndim == 1:
-        s = s[:, None]
-    if s.ndim != 2 or s.shape[1] not in (1, 2):
-        raise ValueError("encode_ms_adpcm takes 1-D mono or (n, 2) stereo")
-    if s.size and (s.max() > 32767 or s.min() < -32768):
-        raise ValueError("samples out of 16-bit range")
-    n_ch = s.shape[1]
-    if frames_per_block < 4 or ((frames_per_block - 2) * n_ch) % 2:
-        raise ValueError(f"invalid frames_per_block {frames_per_block}")
-    block_align = 7 * n_ch + (frames_per_block - 2) * n_ch // 2
-
-    def enc_channel(frame: np.ndarray, pi: int) -> tuple[int, int, list[int]]:
-        c1, c2 = _MS_ADPCM_COEFS[pi]
-        s2, s1 = int(frame[0]), int(frame[1])
-        diffs = np.abs(np.diff(frame))
-        delta = max(16, int(diffs.mean()) // 4 if len(diffs) else 16)
-        idelta = delta
-        err = 0
-        nibs = []
-        for v in frame[2:]:
-            pred = _trunc_div256(s1 * c1 + s2 * c2)
-            diff = int(v) - pred
-            q = min(abs(diff) // delta, 8 if diff < 0 else 7)
-            n = (16 - q) & 0xF if diff < 0 else q
-            signed = n - 16 if n >= 8 else n
-            rec = max(-32768, min(32767, pred + signed * delta))
-            err += (int(v) - rec) ** 2
-            nibs.append(n)
-            s2, s1 = s1, rec
-            delta = max(16, (_MS_ADPCM_ADAPT[n] * delta) >> 8)
-        return err, idelta, nibs
-
-    n = len(s)
-    blocks = bytearray()
-    for base in range(0, n, frames_per_block):
-        frame = s[base : base + frames_per_block]
-        if len(frame) < frames_per_block:
-            pad = np.repeat(frame[-1:], frames_per_block - len(frame), axis=0)
-            frame = np.concatenate([frame, pad]) if len(frame) else np.zeros(
-                (frames_per_block, n_ch), dtype=np.int64
-            )
-        picks = []
-        for c in range(n_ch):
-            best = min(
-                (enc_channel(frame[:, c], pi) + (pi,) for pi in range(7)),
-                key=lambda t: t[0],
-            )
-            picks.append(best)
-        for _e, _d, _nb, pi in picks:
-            blocks.append(pi)
-        for e_d in picks:
-            blocks += struct.pack("<h", e_d[1])
-        for c in range(n_ch):
-            blocks += struct.pack("<h", int(frame[1, c]))
-        for c in range(n_ch):
-            blocks += struct.pack("<h", int(frame[0, c]))
-        # interleave channels per nibble, high nibble first
-        flat: list[int] = []
-        for i in range(frames_per_block - 2):
-            for c in range(n_ch):
-                flat.append(picks[c][2][i])
-        for i in range(0, len(flat), 2):
-            blocks.append((flat[i] << 4) | flat[i + 1])
-    fmt = struct.pack("<HHIIHHHHH", 2, n_ch, rate,
-                      rate * block_align // frames_per_block or 1,
-                      block_align, 4, 4 + 4 * 7, frames_per_block, 7)
-    for c1, c2 in _MS_ADPCM_COEFS:
-        fmt += struct.pack("<hh", c1, c2)
-    out = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    out += b"data" + struct.pack("<I", len(blocks)) + bytes(blocks)
-    return b"RIFF" + struct.pack("<I", 4 + len(out)) + b"WAVE" + out
-
-
-def encode_ima_adpcm(
-    samples: np.ndarray, rate: int = 8000, frames_per_block: int = 505
-) -> bytes:
-    """IMA ADPCM encoder twin for tests/fuzz seeds: mono 1-D or
-    stereo (n, 2) int16 in, format-tag-0x11 RIFF out. Deliberately
-    the textbook encoder (quantize the diff against the current
-    step); the codec is lossy, so correctness is pinned by
-    self-consistency with ``_ima_adpcm_samples`` plus an SNR bound,
-    not byte equality."""
-    s = np.asarray(samples)
-    if np.issubdtype(s.dtype, np.floating):
-        if not np.isfinite(s).all() or (s != np.floor(s)).any():
-            raise ValueError("encode_ima_adpcm: non-integral samples")
-    s = s.astype(np.int64)
-    if s.ndim == 1:
-        s = s[:, None]
-    if s.ndim != 2 or s.shape[1] not in (1, 2):
-        raise ValueError("encode_ima_adpcm takes 1-D mono or (n, 2) stereo")
-    if s.size and (s.max() > 32767 or s.min() < -32768):
-        raise ValueError("samples out of 16-bit range")
-    n_ch = s.shape[1]
-    if frames_per_block < 2 or (frames_per_block - 1) % 8:
-        # nibbles per channel per block must fill whole 4-byte groups
-        raise ValueError(f"invalid frames_per_block {frames_per_block}")
-    block_align = 4 * n_ch + (frames_per_block - 1) * n_ch // 2
-    # pad the tail block with repeated last frames (decoder emits
-    # whole blocks; exactness is not the contract for a lossy codec)
-    n = len(s)
-    blocks = bytearray()
-    idx = [0] * n_ch
-    for base in range(0, n, frames_per_block):
-        frame = s[base : base + frames_per_block]
-        if len(frame) < frames_per_block:
-            pad = np.repeat(frame[-1:], frames_per_block - len(frame), axis=0)
-            frame = np.concatenate([frame, pad])
-        nibs = [[] for _ in range(n_ch)]
-        for c in range(n_ch):
-            pred = int(frame[0, c])
-            blocks += struct.pack("<hBx", pred, idx[c])
-            for v in frame[1:, c]:
-                nib, pred, idx[c] = _ima_encode_step(int(v), pred, idx[c])
-                nibs[c].append(nib)
-        # pack: per channel 8 nibbles -> 4 bytes, channels interleaved
-        for g in range(0, frames_per_block - 1, 8):
-            for c in range(n_ch):
-                for k in range(0, 8, 2):
-                    lo, hi = nibs[c][g + k], nibs[c][g + k + 1]
-                    blocks.append(lo | (hi << 4))
-    fmt = struct.pack(
-        "<HHIIHHH H",
-        0x11, n_ch, rate, rate * block_align // frames_per_block or 1,
-        block_align, 4, 2, frames_per_block,
-    )
-    out = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    out += b"data" + struct.pack("<I", len(blocks)) + bytes(blocks)
-    return b"RIFF" + struct.pack("<I", 4 + len(out)) + b"WAVE" + out
-
-
 # GUID bytes 2-15 of every KSDATAFORMAT_SUBTYPE_* media subtype: the
 # first two bytes are the wrapped format tag, the rest is this fixed
 # suffix (xxxx xxxx-0000-0010-8000-00AA00389B71).
@@ -529,7 +97,7 @@ def _riff_fmt_and_data(payload: bytes) -> tuple[tuple, bytes] | None:
     """((fmt_tag, n_ch, rate, bits, block_align, extensible), data
     bytes) from a raw RIFF/WAVE walk, or None when the container isn't
     parseable this way — used to route the format tags the stdlib
-    ``wave`` module rejects (G.711's 6/7, IMA ADPCM's 0x11, IEEE
+    ``wave`` module rejects (G.711's 6/7, IEEE
     float's 3). WAVE_FORMAT_EXTENSIBLE (0xFFFE — the modern Windows
     default, REQUIRED by the spec for >16-bit audio) unwraps to the
     tag in the SubFormat GUID's first two bytes when the rest of the
@@ -615,19 +183,6 @@ def _wav_samples_f64(payload: bytes) -> tuple[np.ndarray, int, int, int]:
     stdlib-rejected) expand to the int16 grid via
     ``_float_wav_expand``. Corrupt containers raise ValueError."""
     probed = _riff_fmt_and_data(payload)
-    if probed is not None and probed[0][0] == 0x55:
-        # MP3-in-WAV (r12): the data chunk IS an MPEG elementary
-        # stream — decode it through the real Layer III path and
-        # return the int16-grid stream like the bare-MPEG arm
-        s, _rate, _nch = _mp3_decode_samples(probed[1])
-        flat = np.clip(np.round(s.reshape(-1) * 32768.0), -32768, 32767)
-        return flat.astype(np.float64), s.shape[1], _rate, s.shape[0]
-    if probed is not None and probed[0][0] in (0x11, 2):
-        dec = _ima_adpcm_samples if probed[0][0] == 0x11 else _ms_adpcm_samples
-        s, rate, n_ch = dec(payload, probed)
-        n_frames = len(s) // max(n_ch, 1)
-        s, n_frames = _apply_fact(payload, s, n_ch, n_frames)
-        return s.astype(np.float64), n_ch, rate, n_frames
     if probed is not None and probed[0][0] == 3:
         samples, n_ch, rate, n_frames = _float_wav_expand(probed)
         samples, n_frames = _apply_fact(payload, samples, n_ch, n_frames)
@@ -713,7 +268,7 @@ def _pcm_wav_expand(probed: tuple) -> tuple[np.ndarray, int, int, int]:
 def _float_wav_expand(probed: tuple) -> tuple[np.ndarray, int, int, int]:
     """IEEE-float WAV (format tag 3 — the common DAW-export layout the
     stdlib module rejects) expanded to the int16 sample grid, the same
-    discipline as the G.711/ADPCM arms: float is a NORMALIZED encoding
+    discipline as the G.711 arm: float is a NORMALIZED encoding
     (full scale ±1.0) whose canonical integerization is
     ``round(clip(v, -1, 1) · 32767)``, so stats, sampler, and
     fingerprint share one grid (and the fixture oracles hold
@@ -743,14 +298,9 @@ def decode_wav(payload: bytes) -> dict:
     """Decode RIFF PCM audio with the stdlib ``wave`` module: stream
     properties + amplitude stats. No external codec required. Corrupt
     containers surface as ValueError (the module-wide quarantine
-    contract) rather than leaking ``wave.Error``/``EOFError``.
-    MP3-in-WAV (format tag 0x55 — the broadcast-era wrapper) rides the
-    bare-MPEG contract (r12: REAL Layer III sample decode with rms/
-    peak; header-walk triage fallback when the sample layer hits an
-    honest quarantine)."""
-    probed = _riff_fmt_and_data(payload)
-    if probed is not None and probed[0][0] == 0x55:
-        return decode_mp3(probed[1])
+    contract) rather than leaking ``wave.Error``/``EOFError``; so do
+    format tags no arm decodes (ADPCM, MPEG-in-WAV, ...), through the
+    stdlib fallback."""
     samples, n_ch, rate, n_frames = _wav_samples_f64(payload)
     rms = float(np.sqrt(np.mean(samples**2))) if samples.size else 0.0
     peak = float(np.max(np.abs(samples))) if samples.size else 0.0
@@ -803,9 +353,8 @@ def _aiff_samples(payload: bytes) -> tuple[np.ndarray, int, int]:
     'NONE'/'twos' are big-endian PCM, 'sowt' is little-endian PCM
     (the QuickTime byte-swap staple), 'fl32'/'fl64' are big-endian
     IEEE floats expanded to the int16 grid (the float WAV rule),
-    'ima4' is QuickTime IMA ADPCM (r11 — the WAV tag-0x11 recurrence
-    in 34-byte packets), 'ulaw'/'alaw' expand through the G.711
-    tables; transform codecs (AAC, MACE, QDesign) quarantine as
+    'ulaw'/'alaw' expand through the G.711 tables; every other codec
+    (ADPCM 'ima4', AAC, MACE, QDesign) quarantines as
     NotImplementedError — undecodable without codec libraries, same
     contract as the mp4a/AAC arm."""
     if payload[:4] != b"FORM" or payload[8:12] not in (b"AIFF", b"AIFC"):
@@ -845,7 +394,6 @@ def _aiff_samples_impl(payload: bytes) -> tuple[np.ndarray, int, int]:
     dtype = ">i2"
     float_width = 0
     g711_table = None
-    ima4 = False
     if aifc:
         ctype = payload[comm[0] + 18 : comm[0] + 22]
         lc = ctype.lower()
@@ -855,20 +403,11 @@ def _aiff_samples_impl(payload: bytes) -> tuple[np.ndarray, int, int]:
             float_width = 4
         elif lc == b"fl64":
             float_width = 8
-        elif lc == b"ima4":
-            # QuickTime IMA ADPCM: the SAME published IMA recurrence
-            # as WAV tag 0x11, repackaged in 34-byte packets — no
-            # codec library involved (r10 verdict: the old quarantine
-            # here was false)
-            ima4 = True
         elif lc == b"ulaw":
             g711_table = _G711_ULAW
         elif lc == b"alaw":
             g711_table = _G711_ALAW
         elif ctype not in (b"NONE", b"twos"):
-            # real transform codecs (AAC 'aac ', MACE, QDesign…) DO
-            # need a codec library; everything recurrence-shaped is
-            # decoded above
             raise NotImplementedError(
                 f"AIFC compression {ctype!r} needs a codec library"
             )
@@ -876,8 +415,6 @@ def _aiff_samples_impl(payload: bytes) -> tuple[np.ndarray, int, int]:
         # numChannels is signed in the spec; <1 would make the frombuffer
         # count negative (= read-to-end) and return garbage with ok=True.
         raise ValueError(f"invalid AIFF channel count {n_ch}")
-    if ima4:
-        return _ima4_samples(payload, ssnd, n_ch, n_frames, rate)
     if g711_table is not None:
         # G.711-in-AIFC ('ulaw'/'alaw' — what the stdlib aifc module
         # used to write): 1 byte per sample through the same expansion
@@ -945,113 +482,6 @@ def _aiff_samples_impl(payload: bytes) -> tuple[np.ndarray, int, int]:
     return samples.astype(np.int16), rate, n_ch
 
 
-def _ima4_samples(
-    payload: bytes, ssnd: tuple[int, int], n_ch: int, n_frames: int, rate: int
-) -> tuple[np.ndarray, int, int]:
-    """(int16 interleaved samples, rate, n_channels) of an AIFC
-    'ima4' SSND body: 34-byte packets — a 2-byte big-endian preamble
-    (top 9 bits: predictor seed, truncated to 128s; low 7 bits: step
-    index) + 32 nibble bytes = 64 samples, low nibble first — with
-    channels' packets interleaved per 64-frame group. The recurrence
-    is ``_ima_decode_nibbles`` verbatim (the WAV tag-0x11 codec in
-    QuickTime packaging). COMM numSampleFrames trims the final
-    packet's padding, the fact-chunk rule; whole packets only."""
-    offset, _blocksize = struct.unpack_from(">II", payload, ssnd[0])
-    start = ssnd[0] + 8 + offset
-    if start > ssnd[1]:
-        raise ValueError("AIFF sample data truncated")
-    return _ima4_decode_packets(payload[start : ssnd[1]], n_ch, n_frames, rate)
-
-
-def _ima4_decode_packets(
-    data: bytes, n_ch: int, n_frames: int, rate: int
-) -> tuple[np.ndarray, int, int]:
-    """The ima4 packet-stream decode shared by the AIFC and CAF
-    containers (r11): 34-byte packets, channel-interleaved per
-    64-frame group; ``n_frames`` > 0 trims final-packet padding."""
-    n_pk = len(data) // 34
-    if n_pk % n_ch:
-        raise ValueError(
-            f"ima4 packet count {n_pk} not a multiple of {n_ch} channels"
-        )
-    chans: list[list[int]] = [[] for _ in range(n_ch)]
-    for p in range(n_pk):
-        base = p * 34
-        (pre,) = struct.unpack_from(">H", data, base)
-        pred = pre - 0x10000 if pre & 0x8000 else pre
-        idx = pred & 0x7F
-        pred &= ~0x7F
-        if idx > 88:
-            raise ValueError(f"ima4 step index {idx} out of range")
-        nibs = []
-        for byte in data[base + 2 : base + 34]:
-            nibs.append(byte & 0xF)
-            nibs.append(byte >> 4)
-        chans[p % n_ch].extend(_ima_decode_nibbles(nibs, pred, idx))
-    per_ch = len(chans[0])
-    s = np.array(chans, dtype=np.int16).T if per_ch else np.empty(
-        (0, n_ch), dtype=np.int16
-    )
-    if 0 < n_frames < per_ch:
-        s = s[:n_frames]
-    return s.reshape(-1), rate, n_ch
-
-
-def encode_ima4(samples: np.ndarray, rate: int = 8000) -> bytes:
-    """AIFC 'ima4' encoder twin for tests/fuzz seeds: mono 1-D or
-    stereo (n, 2) int16 in, FORM/AIFC out. Per-packet preamble carries
-    the channel's RUNNING predictor truncated to its top 9 bits (the
-    encoder then adopts the truncated value, so encoder and decoder
-    states stay identical) + the running step index; quantization is
-    ``_ima_encode_step``, shared with the WAV twin. Lossy — pinned by
-    self-consistency with the decoder plus an SNR bound, not byte
-    equality. COMM numSampleFrames records the REAL frame count so the
-    decoder trims the final packet's repeated-last-frame padding."""
-    s = np.asarray(samples)
-    if np.issubdtype(s.dtype, np.floating):
-        if not np.isfinite(s).all() or (s != np.floor(s)).any():
-            raise ValueError("encode_ima4: non-integral samples")
-    s = s.astype(np.int64)
-    if s.ndim == 1:
-        s = s[:, None]
-    if s.ndim != 2 or s.shape[1] not in (1, 2):
-        raise ValueError("encode_ima4 takes 1-D mono or (n, 2) stereo")
-    if s.size and (s.max() > 32767 or s.min() < -32768):
-        raise ValueError("samples out of 16-bit range")
-    n, n_ch = s.shape
-    packets = bytearray()
-    pred = [0] * n_ch
-    idx = [0] * n_ch
-    for base in range(0, n, 64):
-        frame = s[base : base + 64]
-        if len(frame) < 64:
-            pad = np.repeat(frame[-1:], 64 - len(frame), axis=0)
-            frame = np.concatenate([frame, pad])
-        for c in range(n_ch):
-            pred[c] &= ~0x7F  # adopt the preamble's 9-bit truncation
-            packets += struct.pack(">H", ((pred[c] & 0xFF80) | idx[c]) & 0xFFFF)
-            nibs = []
-            for v in frame[:, c]:
-                nib, pred[c], idx[c] = _ima_encode_step(int(v), pred[c], idx[c])
-                nibs.append(nib)
-            for k in range(0, 64, 2):
-                packets.append(nibs[k] | (nibs[k + 1] << 4))
-    fver = b"FVER" + struct.pack(">II", 4, 0xA2805140)
-    comm = (
-        b"COMM"
-        + struct.pack(">IhIh", 24, n_ch, n, 16)
-        + _f80_encode(rate)
-        + b"ima4"
-        + b"\x00\x00"
-    )
-    body = struct.pack(">II", 0, 0) + bytes(packets)
-    ssnd = b"SSND" + struct.pack(">I", len(body)) + body
-    if len(body) & 1:
-        ssnd += b"\x00"
-    form = b"AIFC" + fver + comm + ssnd
-    return b"FORM" + struct.pack(">I", len(form)) + form
-
-
 def decode_aiff(payload: bytes) -> dict:
     """AIFF twin of ``decode_wav`` — same stats dict off the real
     big-endian IFF parse."""
@@ -1076,9 +506,9 @@ def decode_aiff(payload: bytes) -> dict:
 # with SIGNED 64-bit big-endian sizes ('data' may declare -1 = to
 # end-of-file). The 'desc' chunk routes decoding, and every payload
 # format DELEGATES to machinery the engine already ships: 'lpcm'
-# (float/endian flags — the MP4 v2 lpcm semantics), 'ima4' (the AIFC
-# packet stream), 'ulaw'/'alaw' (the G.711 tables). Transform codecs
-# (aac/alac) quarantine honestly.
+# (float/endian flags — the MP4 v2 lpcm semantics), 'ulaw'/'alaw'
+# (the G.711 tables). Every other codec (ima4, aac, alac) quarantines
+# honestly.
 
 
 def _caf_samples(payload: bytes) -> tuple[np.ndarray, int, int]:
@@ -1126,10 +556,6 @@ def _caf_samples_impl(payload: bytes) -> tuple[np.ndarray, int, int]:
     if data[1] - data[0] < 4:
         raise ValueError("CAF data chunk truncated")
     body = payload[data[0] + 4 : data[1]]  # skip the u32 edit count
-    if fmt == b"ima4":
-        if fpp not in (0, 64):
-            raise ValueError(f"CAF ima4 frames-per-packet {fpp} invalid")
-        return _ima4_decode_packets(body[: len(body) // 34 * 34], n_ch, 0, rate)
     if fmt in (b"ulaw", b"alaw"):
         table = _G711_ULAW if fmt == b"ulaw" else _G711_ALAW
         frames = len(body) // n_ch
@@ -1138,7 +564,7 @@ def _caf_samples_impl(payload: bytes) -> tuple[np.ndarray, int, int]:
     if fmt != b"lpcm":
         raise NotImplementedError(
             f"CAF format {fmt!r} requires codec libraries not present; "
-            "only 'lpcm', 'ima4', and G.711 ('ulaw'/'alaw') decode here"
+            "only 'lpcm' and G.711 ('ulaw'/'alaw') decode here"
         )
     is_float, is_le = flags & 1, flags & 2
     ok = bits in (32, 64) if is_float else bits in (16, 24, 32)
@@ -1234,7 +660,7 @@ _AU_ENCODINGS = {
     27: (1, "alaw"),
 }
 # published-but-unimplemented compressed encodings (G.721/G.722/G.723
-# ADPCM variants): honest NotImplementedError, like the MPEG arms
+# ADPCM variants): honest NotImplementedError
 _AU_COMPRESSED = {23, 24, 25, 26}
 
 
@@ -1342,1696 +768,6 @@ def _au_payload(
     return struct.pack(">4s5I", b".snd", 24, len(body), encoding, rate, n_ch) + body
 
 
-# --- MP3: frame-header metadata triage (r10) --------------------------
-#
-# The one common audio shape with no RIFF/IFF/ISO-BMFF framing: an
-# MPEG-1/2/2.5 audio elementary stream, optionally led by an ID3v2
-# tag. The frame PAYLOAD is undecodable without a codec library (the
-# same honesty contract as the mp4a/AAC arm), but the 4-byte frame
-# headers carry everything metadata-before-decode routing needs —
-# version, layer, bitrate, sample rate, channel mode — and walking
-# them yields exact frame/sample counts and VBR-correct duration.
-# The tables are normative constants of ISO/IEC 11172-3 / 13818-3.
-
-_MP3_BITRATES = {  # kbps by index 1-14, keyed (version_group, layer)
-    (1, 1): (32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448),
-    (1, 2): (32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 384),
-    (1, 3): (32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320),
-    (2, 1): (32, 48, 56, 64, 80, 96, 112, 128, 144, 160, 176, 192, 224, 256),
-    # MPEG-2/2.5 layers II and III share one table per the spec
-    (2, 2): (8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160),
-}
-_MP3_RATES = {  # by version bits: 3=MPEG1, 2=MPEG2, 0=MPEG2.5
-    3: (44100, 48000, 32000),
-    2: (22050, 24000, 16000),
-    0: (11025, 12000, 8000),
-}
-
-
-# --- 8SVX + VOC (r12): two legacy audio containers with REAL on-box
-# third-party fixtures (CPython's sndhdrdata), implemented from the
-# public EA-IFF-85 8SVX and Creative Voice specs. The fixtures gate
-# the container walks on genuine files (the test.mp3 pattern); encoder
-# twins + fuzz families gate the sample paths.
-
-_FIB_DELTAS = [-34, -21, -13, -8, -5, -3, -2, -1, 0, 1, 2, 3, 5, 8, 13, 21]
-
-
-def _8svx_samples(payload: bytes) -> tuple[np.ndarray, int, int]:
-    """(int16 interleaved samples, rate, n_channels) of an IFF 8SVX:
-    VHDR + optional CHAN (2/4 = mono, 6 = stereo: BODY is the left
-    block then the right block), signed 8-bit BODY, Fibonacci-delta
-    compression (sCompression 1) expanded per channel. Multi-octave
-    files quarantine by name."""
-    try:
-        if payload[:4] != b"FORM" or payload[8:12] != b"8SVX":
-            raise ValueError("not an 8SVX payload")
-        (form_len,) = struct.unpack_from(">I", payload, 4)
-        end = min(len(payload), 8 + form_len)
-        pos = 12
-        vhdr = None
-        chan = 6 - 4  # default mono
-        body = None
-        while pos + 8 <= end:
-            cid = payload[pos : pos + 4]
-            (clen,) = struct.unpack_from(">I", payload, pos + 4)
-            data = payload[pos + 8 : pos + 8 + clen]
-            if len(data) < clen:
-                raise ValueError(f"8SVX chunk {cid!r} truncated")
-            if cid == b"VHDR":
-                if clen < 20:
-                    raise ValueError("8SVX VHDR too short")
-                vhdr = struct.unpack(">IIIHBBI", data[:20])
-            elif cid == b"CHAN":
-                if clen < 4:
-                    raise ValueError("8SVX CHAN too short")
-                chan = struct.unpack(">I", data[:4])[0]
-            elif cid == b"BODY":
-                body = data
-            pos += 8 + clen + (clen & 1)
-        if vhdr is None or body is None:
-            raise ValueError("8SVX missing VHDR/BODY")
-        one_shot, repeat, _cycle, rate, octaves, compression, _vol = vhdr
-        if rate == 0:
-            raise ValueError("8SVX zero sample rate")
-        if octaves > 1:
-            raise NotImplementedError(
-                f"8SVX multi-octave ({octaves}) not implemented"
-            )
-        nch = 2 if chan == 6 else 1
-        per_ch = len(body) // nch
-
-        def _expand(block: bytes) -> np.ndarray:
-            if compression == 0:
-                return np.frombuffer(block, dtype=np.int8).astype(np.int16)
-            if compression == 1:
-                # Fibonacci-delta: byte 0 pad, byte 1 initial value,
-                # then two 4-bit delta codes per byte (high first)
-                if len(block) < 2:
-                    raise ValueError("8SVX fib-delta block too short")
-                codes = np.frombuffer(block, np.uint8, len(block) - 2, 2)
-                nib = np.empty(2 * len(codes), dtype=np.int64)
-                nib[0::2] = codes >> 4
-                nib[1::2] = codes & 0xF
-                deltas = np.asarray(_FIB_DELTAS, dtype=np.int64)[nib]
-                out = np.int8(block[1]) + np.cumsum(deltas)
-                if out.max() > 127 or out.min() < -128:
-                    raise ValueError("8SVX fib-delta runs off the 8-bit range")
-                return out.astype(np.int16)
-            raise NotImplementedError(
-                f"8SVX compression {compression} not implemented"
-            )
-
-        n_declared = one_shot + repeat
-        if nch == 2:
-            left = _expand(body[:per_ch])
-            right = _expand(body[per_ch:])
-            n = min(len(left), len(right), n_declared or len(left))
-            out = np.empty(2 * n, dtype=np.int16)
-            out[0::2] = left[:n]
-            out[1::2] = right[:n]
-            return out, rate, 2
-        mono = _expand(body)
-        n = min(len(mono), n_declared or len(mono))
-        return mono[:n], rate, 1
-    except struct.error as exc:
-        raise ValueError(f"corrupt 8SVX stream ({exc})") from exc
-
-
-def decode_8svx(payload: bytes) -> dict:
-    s, rate, nch = _8svx_samples(payload)
-    n_frames = len(s) // max(nch, 1)
-    f = s.astype(np.float64)
-    return {
-        "kind": "audio",
-        "n_channels": nch,
-        "sample_rate": rate,
-        "n_frames": n_frames,
-        "duration_s": n_frames / rate if rate else 0.0,
-        "rms": float(np.sqrt(np.mean(f**2))) if f.size else 0.0,
-        "peak": float(np.max(np.abs(f))) if f.size else 0.0,
-    }
-
-
-def _8svx_payload(
-    raw: bytes, rate: int = 8000, stereo: bool = False
-) -> bytes:
-    """8SVX encoder twin: text bytes as signed 8-bit samples (the AU/
-    AIFF-8 grid rule — values reinterpreted int8), uncompressed;
-    stereo splits even/odd bytes into the left/right blocks."""
-    data = np.frombuffer(raw, dtype=np.uint8).astype(np.int8)
-    if stereo:
-        if len(data) % 2:
-            data = data[:-1]
-        body = data[0::2].tobytes() + data[1::2].tobytes()
-        per_ch = len(data) // 2
-    else:
-        body = data.tobytes()
-        per_ch = len(data)
-    vhdr = struct.pack(">IIIHBBI", per_ch, 0, 0, rate, 1, 0, 0x10000)
-    chunks = b"VHDR" + struct.pack(">I", len(vhdr)) + vhdr
-    if stereo:
-        chunks += b"CHAN" + struct.pack(">I", 4) + struct.pack(">I", 6)
-    chunks += b"BODY" + struct.pack(">I", len(body)) + body
-    if len(body) & 1:
-        chunks += b"\x00"
-    return b"FORM" + struct.pack(">I", 4 + len(chunks)) + b"8SVX" + chunks
-
-
-_VOC_MAGIC = b"Creative Voice File\x1a"
-
-
-def _voc_samples(
-    payload: bytes, grid_only: bool = False
-) -> tuple[np.ndarray, int, int]:
-    """(int16 interleaved samples, rate, n_channels) of a Creative
-    Voice file: classic type-1/2 blocks (8-bit unsigned PCM at the
-    256-code rate, centered to the int16-grid convention the WAV
-    8-bit stats use), type-8 extension (stereo + fine rate), type-9
-    new-format blocks (u8 / s16le), type-3 silence, type 4/5 marker/
-    text skipped. Compressed codecs quarantine by name."""
-    try:
-        if payload[: len(_VOC_MAGIC)] != _VOC_MAGIC:
-            raise ValueError("not a VOC payload")
-        if len(payload) < 26:
-            raise ValueError("VOC header truncated")
-        hdr_size, version, check = struct.unpack_from("<HHH", payload, 20)
-        if ((~version + 0x1234) & 0xFFFF) != check:
-            raise ValueError("VOC header checksum mismatch")
-        pos = hdr_size
-        rate = None
-        nch = 1
-        pieces: list[np.ndarray] = []
-        ext = None  # pending type-8 extension for the next type-1
-        while pos < len(payload):
-            btype = payload[pos]
-            if btype == 0:
-                break
-            if pos + 4 > len(payload):
-                raise ValueError("VOC block header truncated")
-            blen = int.from_bytes(payload[pos + 1 : pos + 4], "little")
-            data = payload[pos + 4 : pos + 4 + blen]
-            if len(data) < blen:
-                raise ValueError("VOC block truncated")
-            if btype == 1:
-                if blen < 2:
-                    raise ValueError("VOC sound block too short")
-                sr_code, codec = data[0], data[1]
-                if codec != 0:
-                    raise NotImplementedError(
-                        f"VOC codec {codec} not implemented (8-bit PCM only "
-                        "in type-1 blocks)"
-                    )
-                if ext is not None:
-                    e_code, e_mode = ext
-                    nch = 2 if e_mode else 1
-                    rate = round(256000000.0 / (65536 - e_code) / nch)
-                    ext = None
-                else:
-                    rate = round(1000000.0 / (256 - sr_code))
-                if grid_only:
-                    raise ValueError(
-                        "VOC 8-bit samples need a centering choice "
-                        "(stats only — the WAV-8 fingerprint rule)"
-                    )
-                pieces.append(
-                    np.frombuffer(data, np.uint8, blen - 2, 2).astype(np.int16)
-                    - 128
-                )
-            elif btype == 2:
-                if rate is None:
-                    raise ValueError("VOC continuation before a sound block")
-                if grid_only:
-                    raise ValueError(
-                        "VOC 8-bit samples need a centering choice"
-                    )
-                pieces.append(
-                    np.frombuffer(data, np.uint8, blen).astype(np.int16) - 128
-                )
-            elif btype == 3:
-                if blen < 3:
-                    raise ValueError("VOC silence block too short")
-                n_sil, code = struct.unpack_from("<HB", data, 0)
-                r = round(1000000.0 / (256 - code))
-                rate = rate or r
-                pieces.append(np.zeros((n_sil + 1) * nch, dtype=np.int16))
-            elif btype == 8:
-                if blen < 4:
-                    raise ValueError("VOC extension block too short")
-                e_code = struct.unpack_from("<H", data, 0)[0]
-                if data[2] != 0:
-                    raise NotImplementedError(
-                        f"VOC extended codec {data[2]} not implemented"
-                    )
-                ext = (e_code, data[3])
-            elif btype == 9:
-                if blen < 12:
-                    raise ValueError("VOC new-format block too short")
-                r32, bits, ch, fmt = struct.unpack_from("<IBBH", data, 0)
-                rate, nch = r32, ch
-                if ch not in (1, 2) or r32 == 0:
-                    raise ValueError("VOC bad channel count / rate")
-                if fmt == 0 and bits == 8:
-                    if grid_only:
-                        raise ValueError(
-                            "VOC 8-bit samples need a centering choice"
-                        )
-                    pieces.append(
-                        np.frombuffer(data, np.uint8, blen - 12, 12).astype(
-                            np.int16
-                        )
-                        - 128
-                    )
-                elif fmt == 4 and bits == 16:
-                    pieces.append(
-                        np.frombuffer(
-                            data, "<i2", (blen - 12) // 2, 12
-                        ).astype(np.int16)
-                    )
-                else:
-                    raise NotImplementedError(
-                        f"VOC format {fmt}/{bits}-bit not implemented"
-                    )
-            elif btype in (4, 5, 6, 7):
-                pass  # marker / text / repeat control: no samples
-            else:
-                raise ValueError(f"unknown VOC block type {btype}")
-            pos += 4 + blen
-        if rate is None:
-            raise ValueError("VOC carries no sound block")
-        out = (
-            np.concatenate(pieces) if pieces else np.zeros(0, dtype=np.int16)
-        )
-        return out, int(rate), nch
-    except struct.error as exc:
-        raise ValueError(f"corrupt VOC stream ({exc})") from exc
-
-
-def decode_voc(payload: bytes) -> dict:
-    s, rate, nch = _voc_samples(payload)
-    n_frames = len(s) // max(nch, 1)
-    f = s.astype(np.float64)
-    return {
-        "kind": "audio",
-        "n_channels": nch,
-        "sample_rate": rate,
-        "n_frames": n_frames,
-        "duration_s": n_frames / rate if rate else 0.0,
-        "rms": float(np.sqrt(np.mean(f**2))) if f.size else 0.0,
-        "peak": float(np.max(np.abs(f))) if f.size else 0.0,
-    }
-
-
-def _voc_payload(
-    raw: bytes, rate: int = 8000, new_format: bool = False
-) -> bytes:
-    """VOC encoder twin: classic type-1 (8-bit unsigned at the 256-code
-    rate grid) or type-9 new-format (16-bit signed carrying the text
-    bytes verbatim on the int16 grid — the real sndhdr fixture's
-    shape)."""
-    out = bytearray(_VOC_MAGIC)
-    version = 0x010A
-    out += struct.pack("<HHH", 26, version, (~version + 0x1234) & 0xFFFF)
-    if new_format:
-        body = struct.pack(
-            "<IBBH", rate, 16, 1, 4
-        ) + bytes(4) + np.frombuffer(raw, np.uint8).astype("<i2").tobytes()
-        out += bytes([9]) + len(body).to_bytes(3, "little") + body
-    else:
-        code = 256 - round(1000000.0 / rate)
-        body = bytes([code & 0xFF, 0]) + raw
-        out += bytes([1]) + len(body).to_bytes(3, "little") + body
-    out += bytes([0])
-    return bytes(out)
-
-
-def _id3v2_size(payload: bytes) -> int:
-    """Total bytes of a leading ID3v2 tag (header + syncsafe size +
-    the 10-byte footer when the v2.4 footer flag is set — the footer
-    is NOT counted in the size field per the spec), 0 when absent.
-    Non-syncsafe size bytes mean a corrupt tag."""
-    if payload[:3] != b"ID3" or len(payload) < 10:
-        return 0
-    b = payload[6:10]
-    if any(x & 0x80 for x in b):
-        raise ValueError("MP3 ID3v2 size bytes not syncsafe")
-    footer = 10 if payload[5] & 0x10 else 0
-    return 10 + ((b[0] << 21) | (b[1] << 14) | (b[2] << 7) | b[3]) + footer
-
-
-def _mp3_frame_info(payload: bytes, off: int) -> tuple[int, int, dict] | None:
-    """(frame_length, samples_per_frame, header fields) of the MPEG
-    audio frame at ``off``, or None when the 4 bytes there are not a
-    valid frame header (reserved fields count as invalid — callers
-    treat that as end-of-stream). Free-format (bitrate index 0) is
-    rejected: frames can't be sized without decoding."""
-    if off + 4 > len(payload):
-        return None
-    h = int.from_bytes(payload[off : off + 4], "big")
-    if (h >> 21) & 0x7FF != 0x7FF:
-        return None
-    vbits = (h >> 19) & 3
-    lbits = (h >> 17) & 3
-    br_idx = (h >> 12) & 0xF
-    sr_idx = (h >> 10) & 3
-    if vbits == 1 or lbits == 0 or br_idx in (0, 15) or sr_idx == 3:
-        return None
-    layer = 4 - lbits  # bits 11/10/01 = layers I/II/III
-    vgroup = 1 if vbits == 3 else 2
-    kbps = _MP3_BITRATES[(vgroup, min(layer, 2) if vgroup == 2 else layer)][
-        br_idx - 1
-    ]
-    rate = _MP3_RATES[vbits][sr_idx]
-    pad = (h >> 9) & 1
-    mode = (h >> 6) & 3
-    if layer == 1:
-        # layer I pads in 4-byte slots
-        frame_len = (12 * kbps * 1000 // rate + pad) * 4
-        spf = 384
-    else:
-        per = 144 if (layer == 2 or vgroup == 1) else 72
-        frame_len = per * kbps * 1000 // rate + pad
-        spf = 1152 if (layer == 2 or vgroup == 1) else 576
-    fields = {
-        "mpeg_version": {3: "1", 2: "2", 0: "2.5"}[vbits],
-        "layer": layer,
-        "bitrate_kbps": kbps,
-        "sample_rate": rate,
-        "n_channels": 1 if mode == 3 else 2,
-    }
-    return frame_len, spf, fields
-
-
-def _mp3_is_metadata_frame(payload: bytes, off: int, fields: dict) -> bool:
-    """True when the layer-III frame at ``off`` is a Xing/Info (LAME)
-    or VBRI (Fraunhofer) metadata frame — a real frame-sized slot
-    whose body is a seek table, not audio. Players and ffmpeg exclude
-    it from frame/sample counts; counting it would inflate every LAME
-    file's duration by one frame. The Xing tag sits after the side
-    info (whose size depends on version/channels, +2 when the
-    protection bit advertises a CRC); VBRI sits at the fixed +36."""
-    if fields["layer"] != 3:
-        return False
-    crc = 0 if payload[off + 1] & 1 else 2
-    v1 = fields["mpeg_version"] == "1"
-    mono = fields["n_channels"] == 1
-    side = (17 if mono else 32) if v1 else (9 if mono else 17)
-    tag = off + 4 + crc + side
-    if payload[tag : tag + 4] in (b"Xing", b"Info"):
-        return True
-    return payload[off + 36 : off + 40] == b"VBRI"
-
-
-def _mp3_stream_info(payload: bytes) -> dict:
-    """Full triage dict for an MPEG audio stream: skip any ID3v2 tag,
-    walk every frame header (per-frame bitrates, so VBR durations are
-    exact), counting COMPLETE frames only — a frame whose body runs
-    past end-of-stream is a truncated download, not data. The walk
-    stops at the first non-header (trailing ID3v1/garbage tolerated);
-    version/layer/rate changing mid-stream also stops it — real
-    streams keep them constant."""
-    off = _id3v2_size(payload)
-    first = _mp3_frame_info(payload, off)
-    if first is None:
-        raise ValueError("MP3 frame sync not found")
-    _, _, stream = first  # structural params every frame must match
-    fields = None  # REPORTED fields come from the first AUDIO frame:
-    # a LAME Xing frame often encodes at a bitrate the audio never
-    # uses, and reporting it would mix metadata- and audio-frame
-    # headers (r10 review)
-    n_frames = 0
-    total_samples = 0
-    bitrates = set()
-    at_start = True
-    while True:
-        info = _mp3_frame_info(payload, off)
-        if info is None:
-            break
-        frame_len, spf, f = info
-        if off + frame_len > len(payload):
-            break  # header fits but the body is cut: incomplete
-        if (
-            f["mpeg_version"] != stream["mpeg_version"]
-            or f["layer"] != stream["layer"]
-            or f["sample_rate"] != stream["sample_rate"]
-        ):
-            break
-        if at_start and _mp3_is_metadata_frame(payload, off, f):
-            # Xing/Info/VBRI seek-table frame: a frame-sized slot with
-            # no audio — skip it like every player does
-            at_start = False
-            off += frame_len
-            continue
-        at_start = False
-        if fields is None:
-            fields = f
-        n_frames += 1
-        total_samples += spf
-        bitrates.add(f["bitrate_kbps"])
-        off += frame_len
-    if n_frames == 0 or fields is None:
-        raise ValueError("MP3 stream truncated before one complete frame")
-    return {
-        "kind": "audio",
-        "codec": "mp3",
-        **fields,
-        "vbr": len(bitrates) > 1,
-        "n_mpeg_frames": n_frames,
-        "n_frames": total_samples,
-        "duration_s": total_samples / fields["sample_rate"],
-    }
-
-
-def decode_mp3(payload: bytes) -> dict:
-    """MPEG audio decode, keyed to EXACTLY the ``decode_wav`` stat set
-    — ``decode_features`` turns dict keys into ``DECODE_SCHEMA``
-    columns, so a decoder returning extra keys would fail the whole
-    mapInPandas batch (r10 review: one MP3 doc killed the pass).
-    ``n_frames`` counts PCM SAMPLE FRAMES (schema parity with every
-    other audio arm); the MPEG frame count rides in
-    ``_mp3_stream_info``'s ``n_mpeg_frames``. r12: Layer III payloads
-    decode REAL samples (``_mp3_decode_samples``) and report rms/peak
-    on the int16 grid like the WAV arm — as do Layer I payloads
-    (``_layer1_decode_stream``) and MPEG-1 intensity stereo
-    (``_mp3_intensity``); streams that hit an honest quarantine inside
-    the sample layer (a huffman table whose spec transcription failed
-    structural validation, MPEG-2 LSF intensity stereo, Layer II)
-    degrade to the header-walk triage stats — rms/peak stay null
-    rather than wrong. Authority note (r13): twin-encoded streams are
-    exact by construction, but REAL third-party streams decode through
-    a synthesis window whose 16 phase-0 taps cannot be verified
-    against ISO Table B.3 by any on-box means (see the provenance
-    block in ``_mp3_tables``) — their rms/peak carry that filterbank's
-    78 dB self-reconstruction plus an unquantified deviation on 1/32
-    of output phases, so treat them as high-fidelity estimates, not
-    exact PCM."""
-    info = _mp3_stream_info(payload)
-    out = {
-        k: info[k]
-        for k in (
-            "kind", "codec", "n_channels", "sample_rate", "n_frames",
-            "duration_s",
-        )
-    }
-    try:
-        s, _rate, _nch = _mp3_decode_samples(payload)
-    except (NotImplementedError, ValueError):
-        return out  # triage-only: quarantined codec feature / cut main data
-    g = np.clip(np.round(s.reshape(-1) * 32768.0), -32768, 32767)
-    out["n_frames"] = int(s.shape[0])
-    out["duration_s"] = s.shape[0] / info["sample_rate"]
-    out["rms"] = float(np.sqrt(np.mean(g**2))) if g.size else 0.0
-    out["peak"] = float(np.max(np.abs(g))) if g.size else 0.0
-    return out
-
-
-def _mp3_stream_payload(
-    n_frames: int = 4,
-    vbits: int = 3,
-    layer: int = 3,
-    br_idx: int = 9,
-    sr_idx: int = 0,
-    mono: bool = False,
-    id3: bool = False,
-    vbr: bool = False,
-    xing: bool = False,
-) -> bytes:
-    """MP3 stream synthesizer for tests/fuzz seeds: spec-correct frame
-    headers with correctly-sized (but content-opaque — never decoded)
-    frame bodies, optional ID3v2 prefix, optional per-frame bitrate
-    variation, optional LAME-style Xing metadata frame prepended (its
-    tag at the spec's post-side-info offset). Not an encoder: the
-    triage contract is header-only."""
-    out = bytearray()
-    if id3:
-        body = b"TIT2\x00\x00\x00\x05\x00\x00\x00test"
-        out += b"ID3\x04\x00\x00" + bytes(
-            (len(body) >> s) & 0x7F for s in (21, 14, 7, 0)
-        )
-        out += body
-    lbits = 4 - layer
-    if xing:
-        h = (
-            (0x7FF << 21) | (vbits << 19) | (lbits << 17) | (1 << 16)
-            | (br_idx << 12) | (sr_idx << 10) | ((3 if mono else 0) << 6)
-        )
-        hdr = h.to_bytes(4, "big")
-        info = _mp3_frame_info(hdr, 0)
-        if info is None or layer != 3:
-            raise ValueError("xing synthesis needs a valid layer-III header")
-        frame_len = info[0]
-        v1 = vbits == 3
-        side = (17 if mono else 32) if v1 else (9 if mono else 17)
-        if frame_len < 4 + side + 12:
-            # bytearray slice assignment past the end would silently
-            # GROW the body, desyncing every later frame (r10 review)
-            raise ValueError(
-                f"frame too small for a Xing tag ({frame_len} bytes)"
-            )
-        body = bytearray(frame_len - 4)
-        body[side : side + 8] = b"Xing" + struct.pack(">I", 1)
-        body[side + 8 : side + 12] = struct.pack(">I", n_frames)
-        out += hdr + body
-    for i in range(n_frames):
-        bi = ((br_idx + i) % 14 or 1) if vbr else br_idx
-        h = (
-            (0x7FF << 21)
-            | (vbits << 19)
-            | (lbits << 17)
-            | (1 << 16)  # no CRC
-            | (bi << 12)
-            | (sr_idx << 10)
-            | ((3 if mono else 0) << 6)
-        )
-        hdr = h.to_bytes(4, "big")
-        info = _mp3_frame_info(hdr, 0)
-        if info is None:
-            raise ValueError("synthesizer produced an invalid header")
-        frame_len = info[0]
-        out += hdr + bytes((7 * k + i) % 251 for k in range(frame_len - 4))
-    return bytes(out)
-
-
-# --- MPEG Layer III sample decode (r12) -------------------------------------
-#
-# Full Layer III decode: side info -> bit reservoir -> scalefactors ->
-# huffman -> requantize -> (MS) stereo -> reorder -> alias reduction ->
-# IMDCT/overlap-add -> 32-band polyphase synthesis, per ISO/IEC
-# 11172-3 (MPEG-1) and ISO/IEC 13818-3 (MPEG-2 LSF; MPEG-2.5 uses the
-# same layout at halved rates). Normative tables live in _mp3_tables
-# with per-table structural validation; a granule that selects a table
-# whose transcription failed validation quarantines with an error
-# NAMING the table, instead of desyncing silently. Intensity stereo is
-# quarantined (rare; the fixture/encoder twin never emits it).
-# Replaces the r11 "MP3 sample decode needs a codec library" stubs —
-# the spec is public and the building blocks (huffman, batched-numpy
-# transforms) were already proven out by the JPEG/FLAC work.
-
-
-
-
-class _Mp3Bits:
-    """MSB-first bit reader over the main-data buffer."""
-
-    __slots__ = ("d", "pos")
-
-    def __init__(self, data: bytes, pos_bits: int = 0):
-        self.d = data
-        self.pos = pos_bits
-
-    def read(self, n: int) -> int:
-        d, pos = self.d, self.pos
-        if pos + n > len(d) * 8:
-            raise ValueError("MP3 main data overrun")
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | ((d[pos >> 3] >> (7 - (pos & 7))) & 1)
-            pos += 1
-        self.pos = pos
-        return v
-
-    def read1(self) -> int:
-        pos = self.pos
-        if pos >= len(self.d) * 8:
-            raise ValueError("MP3 main data overrun")
-        self.pos = pos + 1
-        return (self.d[pos >> 3] >> (7 - (pos & 7))) & 1
-
-
-def _mp3_side_info(payload: bytes, off: int, fields: dict) -> tuple[dict, int]:
-    """Parse the side info block after the frame header at ``off``.
-    Returns (side, side_bytes). ``side`` carries main_data_begin and a
-    [granule][channel] list of granule dicts."""
-    crc = 0 if payload[off + 1] & 1 else 2
-    v1 = fields["mpeg_version"] == "1"
-    nch = fields["n_channels"]
-    n_gr = 2 if v1 else 1
-    side_len = (17 if nch == 1 else 32) if v1 else (9 if nch == 1 else 17)
-    start = off + 4 + crc
-    if start + side_len > len(payload):
-        raise ValueError("MP3 side info truncated")
-    br = _Mp3Bits(payload[start : start + side_len])
-    side: dict = {"crc": crc, "side_len": side_len}
-    side["main_data_begin"] = br.read(9 if v1 else 8)
-    br.read((5 if nch == 1 else 3) if v1 else (1 if nch == 1 else 2))
-    if v1:
-        side["scfsi"] = [[br.read1() for _ in range(4)] for _ in range(nch)]
-    else:
-        side["scfsi"] = [[0] * 4 for _ in range(nch)]
-    grs = []
-    for _ in range(n_gr):
-        row = []
-        for _ch in range(nch):
-            g: dict = {}
-            g["part2_3_length"] = br.read(12)
-            g["big_values"] = br.read(9)
-            if g["big_values"] > 288:
-                raise ValueError("MP3 big_values exceeds 288 pairs")
-            g["global_gain"] = br.read(8)
-            g["scalefac_compress"] = br.read(4 if v1 else 9)
-            g["window_switching"] = br.read1()
-            if g["window_switching"]:
-                g["block_type"] = br.read(2)
-                if g["block_type"] == 0:
-                    raise ValueError("MP3 forbidden block_type 0 with switching")
-                g["mixed_block"] = br.read1()
-                g["table_select"] = [br.read(5), br.read(5), 0]
-                g["subblock_gain"] = [br.read(3) for _ in range(3)]
-                g["region0_count"] = 7
-                g["region1_count"] = 36
-            else:
-                g["block_type"] = 0
-                g["mixed_block"] = 0
-                g["table_select"] = [br.read(5) for _ in range(3)]
-                g["region0_count"] = br.read(4)
-                g["region1_count"] = br.read(3)
-                g["subblock_gain"] = [0, 0, 0]
-            g["preflag"] = br.read1() if v1 else 0
-            g["scalefac_scale"] = br.read1()
-            g["count1table_select"] = br.read1()
-            row.append(g)
-        grs.append(row)
-    side["granules"] = grs
-    return side, side_len
-
-
-def _mp3_scalefactors_v1(br, g, ch, gr, scfsi, prev_sf):
-    """MPEG-1 scalefactor read (2.4.2.7): slen1/slen2 split at band 11
-    (long) / 6 (short); granule 1 may share groups with granule 0 via
-    scfsi. Returns (sf_long[22], sf_short[13][3])."""
-    slen1, slen2 = _m3t.SLEN[g["scalefac_compress"]]
-    sf_l = [0] * 22
-    sf_s = [[0, 0, 0] for _ in range(13)]
-    if g["block_type"] == 2 and g["window_switching"]:
-        if g["mixed_block"]:
-            for sfb in range(8):
-                sf_l[sfb] = br.read(slen1)
-            bands = [(3, 6, slen1), (6, 12, slen2)]
-        else:
-            bands = [(0, 6, slen1), (6, 12, slen2)]
-        for lo, hi, slen in bands:
-            for sfb in range(lo, hi):
-                for w in range(3):
-                    sf_s[sfb][w] = br.read(slen)
-        return sf_l, sf_s
-    groups = [(0, 6, slen1), (6, 11, slen1), (11, 16, slen2), (16, 21, slen2)]
-    for gi, (lo, hi, slen) in enumerate(groups):
-        if gr == 1 and scfsi[ch][gi]:
-            for sfb in range(lo, hi):
-                sf_l[sfb] = prev_sf[ch][sfb]
-        else:
-            for sfb in range(lo, hi):
-                sf_l[sfb] = br.read(slen)
-    return sf_l, sf_s
-
-
-# LSF scalefactor partitions (13818-3 2.4.3.2): nr_of_sfb by block
-# "number" x (long / short / mixed); partitions must sum to 21/36/33.
-_LSF_NSFB = {
-    0: ([6, 5, 5, 5], [9, 9, 9, 9], [6, 9, 9, 9]),
-    1: ([6, 5, 7, 3], [12, 9, 9, 6], [6, 12, 9, 6]),
-    2: ([11, 10, 0, 0], [18, 18, 0, 0], [15, 18, 0, 0]),
-}
-
-
-def _mp3_scalefactors_lsf(br, g):
-    """MPEG-2 LSF scalefactor read (no scfsi, 9-bit scalefac_compress
-    partitioned into up to 4 slen groups). Intensity-stereo variants
-    (sc >= 180 on the right channel of a joint stream) never reach
-    here — intensity is quarantined upstream."""
-    sc = g["scalefac_compress"]
-    preflag = 0
-    if sc < 400:
-        slen = [(sc >> 4) // 5, (sc >> 4) % 5, (sc % 16) >> 2, sc % 4]
-        blocknumber = 0
-    elif sc < 500:
-        s = sc - 400
-        slen = [(s >> 2) // 5, (s >> 2) % 5, s % 4, 0]
-        blocknumber = 1
-    else:
-        s = sc - 500
-        slen = [s // 3, s % 3, 0, 0]
-        blocknumber = 2
-        preflag = 1
-    short = g["block_type"] == 2 and g["window_switching"]
-    mixed = short and g["mixed_block"]
-    nsfb = _LSF_NSFB[blocknumber][2 if mixed else (1 if short else 0)]
-    raw = []
-    for n, sl in zip(nsfb, slen):
-        for _ in range(n):
-            raw.append(br.read(sl) if sl else 0)
-    sf_l = [0] * 22
-    sf_s = [[0, 0, 0] for _ in range(13)]
-    if short:
-        k = 0
-        if mixed:
-            for sfb in range(6):
-                sf_l[sfb] = raw[k]
-                k += 1
-            lo = 3
-        else:
-            lo = 0
-        for sfb in range(lo, 12):
-            for w in range(3):
-                sf_s[sfb][w] = raw[k]
-                k += 1
-    else:
-        for sfb in range(21):
-            sf_l[sfb] = raw[sfb]
-    return sf_l, sf_s, preflag
-
-
-def _mp3_huffman(br, g, rate, end_bit):
-    """Decode the big_values + count1 spectral regions into is[576].
-    The read must not run past ``end_bit`` (part2_3_length boundary);
-    underrun is stuffing and is skipped by the caller."""
-    is_ = np.zeros(576, dtype=np.float64)
-    long_starts = np.concatenate(
-        ([0], np.cumsum(_m3t.SFB_LONG[rate]))
-    )
-    if g["window_switching"]:
-        region1_start, region2_start = 36, 576
-    else:
-        r0 = min(g["region0_count"] + 1, 22)
-        r1 = min(g["region0_count"] + g["region1_count"] + 2, 22)
-        region1_start = int(long_starts[r0])
-        region2_start = int(long_starts[r1])
-    pos = 0
-    for pair in range(g["big_values"]):
-        if pos < region1_start:
-            tid = g["table_select"][0]
-        elif pos < region2_start:
-            tid = g["table_select"][1]
-        else:
-            tid = g["table_select"][2]
-        if tid == 0:
-            pos += 2
-            continue
-        if tid in _m3t.HUFF_UNVERIFIED:
-            raise NotImplementedError(
-                f"MP3 huffman table {tid} transcription unverified "
-                "(see _mp3_tables residue notes)"
-            )
-        if tid not in _m3t.HUFF_PAIR:
-            # tables 4 and 14 do not exist in the spec: selecting one
-            # is stream corruption, not a capability gap (fuzz r12)
-            raise ValueError(f"MP3 forbidden huffman table select {tid}")
-        dim, linbits, codes = _m3t.HUFF_PAIR[tid]
-        hlen, hcod = 0, 0
-        while True:
-            hcod = (hcod << 1) | br.read1()
-            hlen += 1
-            if hlen > 19:
-                raise ValueError("MP3 huffman desync (no code match)")
-            sym = codes.get((hlen, hcod))
-            if sym is not None:
-                break
-        x, y = sym
-        if x == 15 and linbits:
-            x += br.read(linbits)
-        if x and br.read1():
-            x = -x
-        if y == 15 and linbits:
-            y += br.read(linbits)
-        if y and br.read1():
-            y = -y
-        if pos + 2 > 576:
-            raise ValueError("MP3 big_values overrun past 576 lines")
-        is_[pos] = x
-        is_[pos + 1] = y
-        pos += 2
-        if br.pos > end_bit:
-            raise ValueError("MP3 huffman read past part2_3 boundary")
-    c1sel = g["count1table_select"]
-    c1 = _m3t.COUNT1.get(c1sel)
-    if c1 is None:
-        raise NotImplementedError(f"MP3 count1 table {c1sel} unverified")
-    while br.pos < end_bit and pos + 4 <= 576:
-        hlen, hcod = 0, 0
-        quad = None
-        while br.pos < end_bit:
-            hcod = (hcod << 1) | br.read1()
-            hlen += 1
-            if hlen > 6:
-                raise ValueError("MP3 count1 desync")
-            quad = c1.get((hlen, hcod))
-            if quad is not None:
-                break
-        if quad is None:
-            break  # trailing stuffing bits that don't form a code
-        vals = []
-        for v in quad:
-            if v and br.read1():
-                v = -v
-            vals.append(v)
-        if br.pos > end_bit:
-            # the trailing quad straddles part2_3_length: it was
-            # stuffing misread as data — discard it, as reference
-            # decoders do, rather than emit a partly-unsigned quad
-            break
-        for v in vals:
-            is_[pos] = v
-            pos += 1
-    return is_, pos
-
-
-_POW43_TAB = None
-
-
-def _pow43(v: np.ndarray) -> np.ndarray:
-    """|v|**(4/3) with the sign of v, via a small lookup for the
-    common |v| <= 8206 integer range."""
-    global _POW43_TAB
-    if _POW43_TAB is None:
-        _POW43_TAB = np.arange(8208, dtype=np.float64) ** (4.0 / 3.0)
-    a = np.abs(v).astype(np.int64)
-    return np.sign(v) * _POW43_TAB[np.clip(a, 0, 8207)]
-
-
-def _mp3_requantize(is_, g, sf_l, sf_s, preflag, rate, lsf):
-    """Spectral requantization (2.4.3.4): per-line 4/3 power with the
-    global/scalefactor/subblock gains applied per band."""
-    xr = _pow43(is_)
-    step = 1.0 if g["scalefac_scale"] else 0.5
-    gain = g["global_gain"] - 210.0
-    short = g["block_type"] == 2 and g["window_switching"]
-    mixed = short and g["mixed_block"]
-    long_widths = _m3t.SFB_LONG[rate]
-    long_starts = np.concatenate(([0], np.cumsum(long_widths)))
-    pre = _m3t.PRETAB
-    mult = np.zeros(576, dtype=np.float64)
-    if not short or mixed:
-        hi = 576 if not short else 36
-        for sfb in range(22):
-            lo_i, hi_i = int(long_starts[sfb]), int(long_starts[sfb + 1])
-            if lo_i >= hi:
-                break
-            hi_i = min(hi_i, hi)
-            e = 0.25 * gain - step * (
-                sf_l[sfb] + (pre[sfb] if preflag else 0)
-            )
-            mult[lo_i:hi_i] = 2.0 ** e
-    if short:
-        if rate not in _m3t.SFB_SHORT:
-            raise NotImplementedError(
-                f"MP3 short-block scalefactor bands at {rate} Hz unverified"
-            )
-        s_widths = _m3t.SFB_SHORT[rate]
-        s_starts = np.concatenate(([0], np.cumsum(s_widths)))
-        lo_band = 3 if mixed else 0
-        for sfb in range(lo_band, 13):
-            base = int(s_starts[sfb]) * 3 if not mixed else (
-                36 + (int(s_starts[sfb]) - int(s_starts[3])) * 3
-            )
-            w_width = int(s_widths[sfb])
-            for w in range(3):
-                lo_i = base + w * w_width
-                hi_i = lo_i + w_width
-                if lo_i >= 576:
-                    break
-                sfv = sf_s[sfb][w] if sfb < 12 else 0
-                e = 0.25 * (gain - 8.0 * g["subblock_gain"][w]) - step * sfv
-                mult[lo_i : min(hi_i, 576)] = 2.0 ** e
-    return xr * mult
-
-
-def _mp3_reorder_short(xr, g, rate):
-    """Short-block reorder (2.4.3.5): huffman order is band-major with
-    the three windows consecutive; time order interleaves windows per
-    point so each 18-line subband block is [w0 w1 w2] triplets."""
-    short = g["block_type"] == 2 and g["window_switching"]
-    if not short:
-        return xr
-    mixed = g["mixed_block"]
-    s_widths = _m3t.SFB_SHORT[rate]
-    s_starts = np.concatenate(([0], np.cumsum(s_widths)))
-    out = xr.copy()
-    lo_band = 3 if mixed else 0
-    for sfb in range(lo_band, 13):
-        width = int(s_widths[sfb])
-        if mixed:
-            base = 36 + (int(s_starts[sfb]) - int(s_starts[3])) * 3
-        else:
-            base = int(s_starts[sfb]) * 3
-        if base >= 576:
-            break
-        for w in range(3):
-            for j in range(width):
-                src = base + w * width + j
-                dst = base + j * 3 + w
-                if src < 576 and dst < 576:
-                    out[dst] = xr[src]
-    return out
-
-
-_ALIAS_CS = None
-_ALIAS_CA = None
-
-
-def _mp3_alias(xr, g):
-    """Alias-reduction butterflies across long-block subband
-    boundaries (2.4.3.3 / Table B.9)."""
-    global _ALIAS_CS, _ALIAS_CA
-    if _ALIAS_CS is None:
-        ci = np.asarray(_m3t.ALIAS_CI)
-        _ALIAS_CS = 1.0 / np.sqrt(1.0 + ci * ci)
-        _ALIAS_CA = ci / np.sqrt(1.0 + ci * ci)
-    short = g["block_type"] == 2 and g["window_switching"]
-    if short and not g["mixed_block"]:
-        return xr
-    n_bound = 1 if (short and g["mixed_block"]) else 31
-    for sb in range(1, n_bound + 1):
-        base = 18 * sb
-        for i in range(8):
-            a = xr[base - 1 - i]
-            b = xr[base + i]
-            xr[base - 1 - i] = a * _ALIAS_CS[i] - b * _ALIAS_CA[i]
-            xr[base + i] = b * _ALIAS_CS[i] + a * _ALIAS_CA[i]
-    return xr
-
-
-_IMDCT_LONG = None
-_IMDCT_SHORT = None
-_IMDCT_WIN = None
-
-
-def _imdct_tables():
-    global _IMDCT_LONG, _IMDCT_SHORT, _IMDCT_WIN
-    if _IMDCT_LONG is not None:
-        return
-    i36 = np.arange(36)[:, None]
-    k18 = np.arange(18)[None, :]
-    _IMDCT_LONG = np.cos(np.pi / 72.0 * (2 * i36 + 1 + 18) * (2 * k18 + 1))
-    i12 = np.arange(12)[:, None]
-    k6 = np.arange(6)[None, :]
-    _IMDCT_SHORT = np.cos(np.pi / 24.0 * (2 * i12 + 1 + 6) * (2 * k6 + 1))
-    win = {}
-    i = np.arange(36)
-    win[0] = np.sin(np.pi / 36.0 * (i + 0.5))
-    w1 = np.sin(np.pi / 36.0 * (i + 0.5)).copy()
-    w1[18:24] = 1.0
-    w1[24:30] = np.sin(np.pi / 12.0 * (np.arange(24, 30) - 18 + 0.5))
-    w1[30:] = 0.0
-    win[1] = w1
-    w3 = np.zeros(36)
-    w3[6:12] = np.sin(np.pi / 12.0 * (np.arange(6, 12) - 6 + 0.5))
-    w3[12:18] = 1.0
-    w3[18:] = np.sin(np.pi / 36.0 * (np.arange(18, 36) + 0.5))
-    win[3] = w3
-    win[2] = np.sin(np.pi / 12.0 * (np.arange(12) + 0.5))
-    _IMDCT_WIN = win
-
-
-def _mp3_imdct_granule(xr, g, overlap):
-    """Per-subband IMDCT + windowing + overlap-add + frequency
-    inversion. ``overlap`` is the per-channel (32, 18) carry state.
-    Returns the granule's (32, 18) time output."""
-    _imdct_tables()
-    short_all = g["block_type"] == 2 and g["window_switching"]
-    mixed = short_all and g["mixed_block"]
-    out = np.empty((32, 18))
-    for sb in range(32):
-        X = xr[18 * sb : 18 * sb + 18]
-        bt = g["block_type"] if g["window_switching"] else 0
-        if short_all and (not mixed or sb >= 2):
-            bt = 2
-        elif mixed and sb < 2:
-            bt = 0
-        if bt == 2:
-            raw = np.zeros(36)
-            for w in range(3):
-                y = (_IMDCT_SHORT @ X[w::3]) * _IMDCT_WIN[2]
-                raw[6 + 6 * w : 18 + 6 * w] += y
-        else:
-            raw = (_IMDCT_LONG @ X) * _IMDCT_WIN[bt]
-        res = raw[:18] + overlap[sb]
-        overlap[sb] = raw[18:]
-        if sb & 1:
-            res[1::2] = -res[1::2]
-        out[sb] = res
-    return out
-
-
-_SYNTH_N = None
-
-
-def _mp3_synth_granule(sub, state):
-    """32-band polyphase synthesis (2.4.3.2): T time slots of 32
-    subband samples -> 32*T PCM samples (T=18 per Layer III granule,
-    T=12 per Layer I frame). ``state`` is the per-channel 1024-entry
-    V FIFO; the window is _mp3_tables.synthesis_window()."""
-    global _SYNTH_N
-    if _SYNTH_N is None:
-        _SYNTH_N = np.cos(
-            (16 + np.arange(64))[:, None]
-            * (2 * np.arange(32)[None, :] + 1)
-            * np.pi
-            / 64.0
-        )
-    D = _m3t.synthesis_window()
-    V = state["V"]
-    U = np.empty(512)
-    n_slots = sub.shape[1]
-    pcm = np.empty(32 * n_slots)
-    for t in range(n_slots):
-        V[64:] = V[:-64]
-        V[:64] = _SYNTH_N @ sub[:, t]
-        for i in range(8):
-            U[i * 64 : i * 64 + 32] = V[i * 128 : i * 128 + 32]
-            U[i * 64 + 32 : i * 64 + 64] = V[i * 128 + 96 : i * 128 + 128]
-        pcm[t * 32 : (t + 1) * 32] = (U * D).reshape(16, 32).sum(axis=0)
-    return pcm
-
-
-def _mp3_intensity(xr_ch, g_r, sf_r, zero_pos, rate, ms, lsf):
-    """MPEG-1 Layer III intensity stereo (2.4.3.4.9.3): bands wholly
-    inside the RIGHT channel's zero part carry a position code in the
-    right scalefactors; L/R reconstruct as the closed-form split
-    ratio = tan(is_pos * pi/12) -> L = xr*ratio/(1+ratio),
-    R = xr/(1+ratio) (is_pos 6 is the all-left limit, float-exact to
-    ~1e-16; is_pos 7 means intensity OFF for the band — MS applies
-    there when mode_ext selects both). Everything here is normative
-    FORMULA, not a transcribed table, so the r12 doctrine admits it;
-    the MPEG-2 LSF scheme (2^(-(is_pos+1)/2) tables keyed off
-    intensity scalefac_compress parity) is quarantined by name."""
-    if lsf:
-        raise NotImplementedError(
-            "MPEG-2 LSF intensity stereo not implemented (distinct "
-            "position coding; see SCALE.md residue map)"
-        )
-    left, right = xr_ch[0].copy(), xr_ch[1].copy()
-    sf_l_r, sf_s_r = sf_r
-    short = g_r["block_type"] == 2 and g_r["window_switching"]
-    mixed = short and g_r["mixed_block"]
-    r2 = np.sqrt(2.0)
-
-    def _split(lo, hi, is_pos):
-        if is_pos == 7:
-            if ms:
-                m, s = left[lo:hi].copy(), right[lo:hi].copy()
-                left[lo:hi] = (m + s) / r2
-                right[lo:hi] = (m - s) / r2
-            return
-        ratio = np.tan(is_pos * np.pi / 12.0)
-        left_gain = ratio / (1.0 + ratio)
-        right_gain = 1.0 / (1.0 + ratio)
-        vals = left[lo:hi].copy()
-        left[lo:hi] = vals * left_gain
-        right[lo:hi] = vals * right_gain
-
-    if ms:
-        # below the intensity bound, mode_ext==3 streams are MS
-        bound = zero_pos
-        m, s = left[:bound].copy(), right[:bound].copy()
-        left[:bound] = (m + s) / r2
-        right[:bound] = (m - s) / r2
-    if not short or mixed:
-        starts = np.concatenate(([0], np.cumsum(_m3t.SFB_LONG[rate])))
-        hi_limit = 36 if mixed else 576
-        for sfb in range(22):
-            lo, hi = int(starts[sfb]), int(starts[sfb + 1])
-            if hi > hi_limit:
-                break
-            if lo >= zero_pos:
-                # band 21 carries no scalefactor: reuse band 20's
-                # position per the spec note
-                _split(lo, hi, sf_l_r[min(sfb, 20)])
-    if short:
-        if rate not in _m3t.SFB_SHORT:
-            raise NotImplementedError(
-                f"MP3 short-block scalefactor bands at {rate} Hz unverified"
-            )
-        s_widths = _m3t.SFB_SHORT[rate]
-        s_starts = np.concatenate(([0], np.cumsum(s_widths)))
-        lo_band = 3 if mixed else 0
-        for sfb in range(lo_band, 13):
-            width = int(s_widths[sfb])
-            base = (
-                36 + (int(s_starts[sfb]) - int(s_starts[3])) * 3
-                if mixed
-                else int(s_starts[sfb]) * 3
-            )
-            for w in range(3):
-                lo = base + w * width
-                hi = min(lo + width, 576)
-                if lo >= zero_pos and lo < 576:
-                    _split(lo, hi, sf_s_r[sfb][w] if sfb < 12 else sf_s_r[11][w])
-    return [left, right]
-
-
-def _layer1_scalefactor(idx: int) -> float:
-    """Layer I/II scalefactor (Table B.1): 2 * 2**(-idx/3), a closed
-    form — the printed table is these values to nine digits. Index 63
-    is forbidden."""
-    if not 0 <= idx <= 62:
-        raise ValueError("MPEG scalefactor index 63 is forbidden")
-    return 2.0 * 2.0 ** (-idx / 3.0)
-
-
-def _layer1_frame_subbands(payload, off, frame_len, nch):
-    """Decode one Layer I frame's 12 x 32 subband samples per channel
-    (2.4.2.5 / 2.4.3.3): 4-bit allocation, 6-bit scalefactors,
-    linearly-quantized samples with the inverted-MSB offset code."""
-    crc = 0 if payload[off + 1] & 1 else 2
-    br = _Mp3Bits(payload[off + 4 + crc : off + frame_len])
-    alloc = [[0] * 32 for _ in range(nch)]
-    for sb in range(32):
-        for ch in range(nch):
-            a = br.read(4)
-            if a == 15:
-                raise ValueError("Layer I allocation 15 is forbidden")
-            alloc[ch][sb] = a
-    sf = [[0.0] * 32 for _ in range(nch)]
-    for sb in range(32):
-        for ch in range(nch):
-            if alloc[ch][sb]:
-                sf[ch][sb] = _layer1_scalefactor(br.read(6))
-    sub = np.zeros((nch, 32, 12))
-    for s in range(12):
-        for sb in range(32):
-            for ch in range(nch):
-                a = alloc[ch][sb]
-                if not a:
-                    continue
-                nb = a + 1
-                code = br.read(nb)
-                base = 0.0 if (code >> (nb - 1)) & 1 else -1.0
-                frac = base + (code & ((1 << (nb - 1)) - 1)) / float(
-                    1 << (nb - 1)
-                )
-                frac = (frac + 2.0 ** (1 - nb)) * (1 << nb) / ((1 << nb) - 1)
-                sub[ch, sb, s] = frac * sf[ch][sb]
-    return sub
-
-
-def _mp1_payload(
-    samples: np.ndarray, rate: int = 32000, br_idx: int = 14
-) -> bytes:
-    """Layer I encoder twin: uniform allocation sized to the frame
-    budget, per-subband scalefactors off the closed-form table, exact
-    inversion of the decoder's offset code. Everything here is
-    formula-math (no transcribed tables), so the round trip gates the
-    full Layer I path at the quantizer's own SNR."""
-    x = np.asarray(samples, dtype=np.float64)
-    if x.ndim == 1:
-        x = x[:, None]
-    nch = x.shape[1]
-    if nch not in (1, 2):
-        raise ValueError("mono or stereo only")
-    n = x.shape[0]
-    n_frames = max(1, -(-n // 384))
-    if n_frames * 384 > n:
-        x = np.vstack([x, np.zeros((n_frames * 384 - n, nch))])
-    kbps = _MP3_BITRATES[(1, 1)][br_idx - 1]
-    frame_len = (12 * kbps * 1000 // rate) * 4
-    avail = frame_len * 8 - 32 - nch * 32 * (4 + 6)
-    nb = min(15, avail // (12 * 32 * nch))
-    if nb < 2:
-        raise ValueError("Layer I frame too small for any allocation")
-    sr_idx = {44100: 0, 48000: 1, 32000: 2}[rate]
-    h = (
-        (0x7FF << 21) | (3 << 19) | (3 << 17) | (1 << 16) | (br_idx << 12)
-        | (sr_idx << 10) | ((3 if nch == 1 else 0) << 6)
-    )
-    hdr = h.to_bytes(4, "big")
-    subs = [_mp3_analysis(x[:, ch]) for ch in range(nch)]  # (slots, 32)
-    out = bytearray()
-    for fr in range(n_frames):
-        w = _Mp3BitWriter()
-        blk = [s[fr * 12 : (fr + 1) * 12] for s in subs]  # (12, 32) each
-        for sb in range(32):
-            for _ch in range(nch):
-                w.write(nb - 1, 4)
-        sfi = [[0] * 32 for _ in range(nch)]
-        for sb in range(32):
-            for ch in range(nch):
-                mx = float(np.max(np.abs(blk[ch][:, sb])))
-                idx = 62 if mx == 0.0 else int(
-                    np.clip(np.floor(3.0 * np.log2(2.0 / (mx * 1.0001))), 0, 62)
-                )
-                sfi[ch][sb] = idx
-                w.write(idx, 6)
-        for s in range(12):
-            for sb in range(32):
-                for ch in range(nch):
-                    sfv = _layer1_scalefactor(sfi[ch][sb])
-                    y = blk[ch][s, sb] / sfv
-                    pre = y * ((1 << nb) - 1) / (1 << nb) - 2.0 ** (1 - nb)
-                    msb = 1 if pre >= 0 else 0
-                    lsb = int(round((pre - (0.0 if msb else -1.0)) * (1 << (nb - 1))))
-                    lsb = min(max(lsb, 0), (1 << (nb - 1)) - 1)
-                    w.write((msb << (nb - 1)) | lsb, nb)
-        body = w.bytes_padded()
-        body += bytes(frame_len - 4 - len(body))
-        out += hdr + body
-    return bytes(out)
-
-
-def _layer1_decode_stream(payload, off, stream):
-    rate = stream["sample_rate"]
-    nch = stream["n_channels"]
-    synth = [{"V": np.zeros(1024)} for _ in range(nch)]
-    chunks = []
-    while True:
-        info = _mp3_frame_info(payload, off)
-        if info is None:
-            break
-        frame_len, spf, f = info
-        if off + frame_len > len(payload):
-            break
-        if (
-            f["mpeg_version"] != stream["mpeg_version"]
-            or f["layer"] != 1
-            or f["sample_rate"] != rate
-        ):
-            break
-        mode = (int.from_bytes(payload[off : off + 4], "big") >> 6) & 3
-        if mode == 1:
-            raise NotImplementedError(
-                "Layer I intensity (joint) stereo not implemented"
-            )
-        sub = _layer1_frame_subbands(payload, off, frame_len, nch)
-        pcm = np.empty((spf, nch))
-        for ch in range(nch):
-            pcm[:, ch] = _mp3_synth_granule(sub[ch], synth[ch])
-        chunks.append(pcm)
-        off += frame_len
-    if not chunks:
-        raise ValueError("Layer I stream truncated before one complete frame")
-    return np.concatenate(chunks, axis=0), rate, nch
-
-
-def _mp3_decode_samples(payload: bytes) -> tuple[np.ndarray, int, int]:
-    """Full MPEG audio sample decode: Layer III (MPEG-1 + MPEG-2 LSF)
-    and Layer I. Returns (samples, rate, channels) with ``samples``
-    float64 of shape (n, channels) on the [-1, 1) full-scale grid.
-    Raises ValueError on corrupt streams and NotImplementedError for
-    honestly-quarantined features (unverified huffman tables,
-    intensity stereo, Layer II — whose allocation tables B.2a-d are
-    transcription-unvalidatable here, the VP8 doctrine)."""
-    off = _id3v2_size(payload)
-    first = _mp3_frame_info(payload, off)
-    if first is None:
-        raise ValueError("MP3 frame sync not found")
-    _, _, stream = first
-    if stream["layer"] == 2:
-        # r13 attempt (verdict #6): the Table B.4 quantization
-        # machinery (grouping, codeword bits, C/D) IS closed-form
-        # validatable — see test_layer2_quantization_machinery_is_
-        # closed_form — but the allocation tables B.2a-d (per-subband
-        # class lists, sblimit, the rate->table selection matrix)
-        # drive stream PARSING, have no generating formula, no on-box
-        # fixture, and the frame-budget property is an inequality
-        # with >3x slack, so they stay quarantined by name.
-        raise NotImplementedError(
-            "MPEG Layer 2 sample decode not implemented: its allocation "
-            "tables (B.2a-d) drive stream PARSING yet admit no structural "
-            "validation (the B.4 quantization machinery does, and is "
-            "test-pinned) — the VP8 doctrine (see SCALE.md residue map)"
-        )
-    if stream["layer"] == 1:
-        return _layer1_decode_stream(payload, off, stream)
-    rate = stream["sample_rate"]
-    if rate not in _m3t.SFB_LONG:
-        raise NotImplementedError(
-            f"MP3 scalefactor bands at {rate} Hz unverified"
-        )
-    nch = stream["n_channels"]
-    v1 = stream["mpeg_version"] == "1"
-    reservoir = bytearray()
-    overlap = [np.zeros((32, 18)) for _ in range(nch)]
-    synth = [{"V": np.zeros(1024)} for _ in range(nch)]
-    chunks = []
-    prev_sf = [[0] * 22 for _ in range(nch)]
-    at_start = True
-    while True:
-        info = _mp3_frame_info(payload, off)
-        if info is None:
-            break
-        frame_len, spf, f = info
-        if off + frame_len > len(payload):
-            break
-        if (
-            f["mpeg_version"] != stream["mpeg_version"]
-            or f["layer"] != stream["layer"]
-            or f["sample_rate"] != rate
-        ):
-            break
-        if at_start and _mp3_is_metadata_frame(payload, off, f):
-            at_start = False
-            off += frame_len
-            continue
-        at_start = False
-        mode = (int.from_bytes(payload[off : off + 4], "big") >> 6) & 3
-        mode_ext = (int.from_bytes(payload[off : off + 4], "big") >> 4) & 3
-        ms = mode == 1 and (mode_ext & 2)
-        side, side_len = _mp3_side_info(payload, off, f)
-        main_start = off + 4 + side["crc"] + side_len
-        main = payload[main_start : off + frame_len]
-        mdb = side["main_data_begin"]
-        if mdb > len(reservoir):
-            # stream cut mid-reservoir (or trimmed start): the spec
-            # says this frame's granules reference unavailable data —
-            # decoders emit silence and resync
-            reservoir.extend(main)
-            if len(reservoir) > 2048:
-                del reservoir[: len(reservoir) - 2048]
-            chunks.append(np.zeros((spf, nch)))
-            off += frame_len
-            continue
-        buf = bytes(reservoir[len(reservoir) - mdb :] if mdb else b"") + main
-        br = _Mp3Bits(buf)
-        n_gr = 2 if v1 else 1
-        frame_pcm = np.zeros((spf, nch))
-        for gr in range(n_gr):
-            xr_ch = []
-            sf_ch = []
-            nlines_ch = []
-            for ch in range(nch):
-                g = side["granules"][gr][ch]
-                start_bit = br.pos
-                end_bit = start_bit + g["part2_3_length"]
-                if g["part2_3_length"] == 0:
-                    xr_ch.append(np.zeros(576))
-                    sf_ch.append(([0] * 22, [[0, 0, 0] for _ in range(13)]))
-                    nlines_ch.append(0)
-                    continue
-                if v1:
-                    sf_l, sf_s = _mp3_scalefactors_v1(
-                        br, g, ch, gr, side["scfsi"], prev_sf
-                    )
-                    preflag = g["preflag"]
-                else:
-                    sf_l, sf_s, preflag = _mp3_scalefactors_lsf(br, g)
-                prev_sf[ch] = sf_l
-                if br.pos > end_bit:
-                    raise ValueError("MP3 scalefactors past part2_3 length")
-                is_, nlines = _mp3_huffman(br, g, rate, end_bit)
-                br.pos = end_bit  # skip stuffing up to the boundary
-                xr = _mp3_requantize(is_, g, sf_l, sf_s, preflag, rate, not v1)
-                xr_ch.append(xr)
-                sf_ch.append((sf_l, sf_s))
-                nlines_ch.append(nlines)
-            if nch == 2 and mode == 1 and (mode_ext & 1):
-                xr_ch = _mp3_intensity(
-                    xr_ch,
-                    side["granules"][gr][1],
-                    sf_ch[1],
-                    nlines_ch[1],
-                    rate,
-                    ms=bool(mode_ext & 2),
-                    lsf=not v1,
-                )
-            elif ms and nch == 2:
-                m, s = xr_ch
-                r2 = np.sqrt(2.0)
-                xr_ch = [(m + s) / r2, (m - s) / r2]
-            for ch in range(nch):
-                g = side["granules"][gr][ch]
-                xr = _mp3_reorder_short(xr_ch[ch], g, rate)
-                xr = _mp3_alias(xr, g)
-                sub = _mp3_imdct_granule(xr, g, overlap[ch])
-                frame_pcm[gr * 576 : (gr + 1) * 576, ch] = _mp3_synth_granule(
-                    sub, synth[ch]
-                )
-        chunks.append(frame_pcm)
-        reservoir.extend(main)
-        if len(reservoir) > 2048:
-            del reservoir[: len(reservoir) - 2048]
-        off += frame_len
-    if not chunks:
-        raise ValueError("MP3 stream truncated before one complete frame")
-    samples = np.concatenate(chunks, axis=0)
-    return samples, rate, nch
-
-
-class _Mp3BitWriter:
-    """MSB-first bit accumulator for the encoder twin."""
-
-    __slots__ = ("buf", "acc", "n")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, value: int, bits: int) -> None:
-        if bits == 0:
-            return
-        self.acc = (self.acc << bits) | (value & ((1 << bits) - 1))
-        self.n += bits
-        while self.n >= 8:
-            self.n -= 8
-            self.buf.append((self.acc >> self.n) & 0xFF)
-        self.acc &= (1 << self.n) - 1
-
-    @property
-    def bit_length(self) -> int:
-        return len(self.buf) * 8 + self.n
-
-    def bytes_padded(self) -> bytes:
-        out = bytearray(self.buf)
-        if self.n:
-            out.append((self.acc << (8 - self.n)) & 0xFF)
-        return bytes(out)
-
-
-def _mp3_analysis(x: np.ndarray) -> np.ndarray:
-    """32-band polyphase analysis (Annex C): (n_slots*32,) samples ->
-    (n_slots, 32) subband samples, window = synthesis window / 32."""
-    C = _m3t.synthesis_window() / 32.0
-    M = np.cos(
-        (2 * np.arange(32)[:, None] + 1)
-        * (np.arange(64)[None, :] - 16)
-        * np.pi
-        / 64.0
-    )
-    n_slots = len(x) // 32
-    X = np.zeros(512)
-    sub = np.empty((n_slots, 32))
-    for t in range(n_slots):
-        X[32:] = X[:-32]
-        X[:32] = x[t * 32 : (t + 1) * 32][::-1]
-        sub[t] = M @ (X * C).reshape(8, 64).sum(axis=0)
-    return sub
-
-
-def _mp3_encode_granule(w, xr, gg, table=10):
-    """Quantize + huffman-encode one granule's 576 spectral lines into
-    ``w`` (long blocks, table 10 everywhere, empty count1 region).
-    Returns the granule's side-info fields. Deterministic: per-band
-    scalefactors normalize so every quantized value fits table 10's
-    0..7 range; values too hot for the given global_gain raise (the
-    caller retries with a coarser gg)."""
-    inv = {v: k for k, v in _m3t.HUFF_PAIR[table][2].items()}
-    widths = _m3t.SFB_LONG[44100]  # encoder always emits MPEG-1 44.1k
-    starts = np.concatenate(([0], np.cumsum(widths)))
-    mult_g = 2.0 ** (0.25 * (gg - 210.0))
-    sf = [0] * 21
-    q = np.zeros(576, dtype=np.int64)
-    for sfb in range(22):
-        lo, hi = int(starts[sfb]), int(starts[sfb + 1])
-        band = xr[lo:hi]
-        mx = float(np.max(np.abs(band))) if hi > lo else 0.0
-        if mx == 0.0:
-            continue
-        sfmax = 15 if sfb < 11 else 7
-        if sfb < 21:
-            want = np.log2(13.9 * mult_g / mx)
-            sf[sfb] = int(np.clip(np.floor(want), 0, sfmax))
-        mult = mult_g * 2.0 ** (-(sf[sfb] if sfb < 21 else 0))
-        qi = np.round(np.abs(band / mult) ** 0.75).astype(np.int64)
-        if qi.max() > 7:
-            raise OverflowError("granule too hot for table 10 at this gain")
-        q[lo:hi] = np.sign(band).astype(np.int64) * qi
-    nz = np.nonzero(q)[0]
-    big_values = 0 if len(nz) == 0 else (int(nz[-1]) // 2 + 1)
-    start_bits = w.bit_length
-    for sfb in range(11):
-        w.write(sf[sfb], 4)
-    for sfb in range(11, 21):
-        w.write(sf[sfb], 3)
-    for pair in range(big_values):
-        x, y = int(q[2 * pair]), int(q[2 * pair + 1])
-        hlen, hcod = inv[(abs(x), abs(y))]
-        w.write(hcod, hlen)
-        if x:
-            w.write(1 if x < 0 else 0, 1)
-        if y:
-            w.write(1 if y < 0 else 0, 1)
-    return {
-        "part2_3_length": w.bit_length - start_bits,
-        "big_values": big_values,
-        "global_gain": gg,
-        "scalefac_compress": 15,  # slen (4, 3)
-        "table_select": [table] * 3,
-        "region0_count": 7,
-        "region1_count": 7,
-        "scalefac_scale": 1,  # step = 1 matches the integer sf grid
-    }
-
-
-def _mp3_intensity_granule(w, is_pos: int) -> dict:
-    """Right-channel granule of an intensity-stereo frame: no spectral
-    data (big_values 0, empty count1), just the 21 scalefactor slots
-    carrying the intensity position — the spec's coding of is_pos."""
-    start_bits = w.bit_length
-    for _sfb in range(11):
-        w.write(is_pos, 4)
-    for _sfb in range(11, 21):
-        w.write(is_pos, 3)
-    return {
-        "part2_3_length": w.bit_length - start_bits,
-        "big_values": 0,
-        "global_gain": 210,
-        "scalefac_compress": 15,
-        "table_select": [0, 0, 0],
-        "region0_count": 7,
-        "region1_count": 7,
-        "scalefac_scale": 1,
-    }
-
-
-def _mp3_lossy_payload(
-    samples: np.ndarray,
-    rate: int = 44100,
-    br_idx: int = 14,
-    intensity_pos: int | None = None,
-) -> bytes:
-    """Encoder twin for the Layer III decode path: a deterministic
-    MPEG-1 Layer III encoder (long blocks, table 10, per-band
-    scalefactor normalization, no bit reservoir, no psychoacoustics —
-    transparency is not the goal; exercising the SAME normative tables
-    and transforms the decoder uses is). Input samples are float in
-    [-1, 1) (mono (n,) or stereo (n, 2)); output is a spec-valid
-    stream every compliant decoder can play. Lossy by nature — the
-    round-trip gate asserts SNR/tone/silence properties, not byte
-    equality (the JPEG-progressive gating precedent)."""
-    if rate not in (44100,):
-        raise ValueError("encoder twin emits MPEG-1 44.1 kHz only")
-    x = np.asarray(samples, dtype=np.float64)
-    if x.ndim == 1:
-        x = x[:, None]
-    if intensity_pos is not None:
-        if x.shape[1] != 1:
-            raise ValueError("intensity twin takes mono content")
-        if not 0 <= intensity_pos <= 6:
-            raise ValueError("is_pos must be 0..6 (7 = intensity off)")
-    nch = 2 if intensity_pos is not None else x.shape[1]
-    if nch not in (1, 2):
-        raise ValueError("mono or stereo only")
-    n = x.shape[0]
-    n_frames = max(1, -(-n // 1152))
-    pad = n_frames * 1152 - n
-    if pad:
-        x = np.vstack([x, np.zeros((pad, nch))])
-    # analysis + per-granule MDCT spectra per channel
-    sin_win = np.sin(np.pi / 36.0 * (np.arange(36) + 0.5))
-    fwd = np.cos(
-        np.pi / 72.0 * (2 * np.arange(36)[:, None] + 1 + 18)
-        * (2 * np.arange(18)[None, :] + 1)
-    )
-    ci = np.asarray(_m3t.ALIAS_CI)
-    cs = 1.0 / np.sqrt(1.0 + ci * ci)
-    ca = ci / np.sqrt(1.0 + ci * ci)
-    spectra = []  # [channel][granule] -> xr[576]
-    for ch in range(x.shape[1]):  # intensity: nch=2 but ONE coded channel
-        sub = _mp3_analysis(x[:, ch])  # (slots, 32)
-        # frequency inversion pre-twist (decoder inverts after IMDCT)
-        for sb in range(1, 32, 2):
-            sub[1::2, sb] = -sub[1::2, sb]
-        n_gr = sub.shape[0] // 18
-        prev = np.zeros((32, 18))
-        grs = []
-        for g in range(n_gr):
-            cur = sub[g * 18 : (g + 1) * 18].T  # (32, 18)
-            xr = np.empty(576)
-            for sb in range(32):
-                z = np.concatenate([prev[sb], cur[sb]]) * sin_win
-                # forward factor 4/36: the spec IMDCT carries no 1/N,
-                # so TDAC hands back N/4 x the windowed input
-                # (verified to 286 dB in the transform-pair test)
-                xr[sb * 18 : (sb + 1) * 18] = (4.0 / 36.0) * (z @ fwd)
-            prev = cur
-            # encoder-side alias butterflies (inverse of the decoder's)
-            for sb in range(1, 32):
-                base = 18 * sb
-                for i in range(8):
-                    a = xr[base - 1 - i]
-                    b = xr[base + i]
-                    xr[base - 1 - i] = a * cs[i] + b * ca[i]
-                    xr[base + i] = b * cs[i] - a * ca[i]
-            grs.append(xr)
-        spectra.append(grs)
-    n_gr_total = len(spectra[0])
-    if n_gr_total % 2:
-        for ch in range(nch):
-            spectra[ch].append(np.zeros(576))
-        n_gr_total += 1
-    kbps = _MP3_BITRATES[(1, 3)][br_idx - 1]
-    frame_len = 144 * kbps * 1000 // rate
-    side_len = 17 if nch == 1 else 32
-    out = bytearray()
-    if intensity_pos is not None:
-        mode_bits = (1 << 6) | (1 << 4)  # joint stereo, intensity on
-    else:
-        mode_bits = (3 if nch == 1 else 0) << 6
-    h = (
-        (0x7FF << 21) | (3 << 19) | (1 << 17) | (1 << 16) | (br_idx << 12)
-        | (0 << 10) | mode_bits
-    )
-    hdr = h.to_bytes(4, "big")
-    for fr in range(n_gr_total // 2):
-        gg = 120
-        while True:
-            w = _Mp3BitWriter()
-            sides = []
-            try:
-                for gr in range(2):
-                    for ch in range(nch):
-                        if intensity_pos is not None and ch == 1:
-                            sides.append(_mp3_intensity_granule(w, intensity_pos))
-                        else:
-                            sides.append(
-                                _mp3_encode_granule(w, spectra[ch][fr * 2 + gr], gg)
-                            )
-            except OverflowError:
-                gg += 4
-                if gg > 255:
-                    raise ValueError("MP3 encoder twin: signal too hot")
-                continue
-            if w.bit_length <= (frame_len - 4 - side_len) * 8:
-                break
-            gg += 4
-            if gg > 255:
-                raise ValueError("MP3 encoder twin: frame overflow at max gain")
-        sw = _Mp3BitWriter()
-        sw.write(0, 9)  # main_data_begin: no reservoir
-        sw.write(0, 5 if nch == 1 else 3)  # private
-        for _ch in range(nch):
-            sw.write(0, 4)  # scfsi: granule 1 re-reads
-        for g in sides:
-            sw.write(g["part2_3_length"], 12)
-            sw.write(g["big_values"], 9)
-            sw.write(g["global_gain"], 8)
-            sw.write(g["scalefac_compress"], 4)
-            sw.write(0, 1)  # window_switching: long blocks only
-            for t in g["table_select"]:
-                sw.write(t, 5)
-            sw.write(g["region0_count"], 4)
-            sw.write(g["region1_count"], 3)
-            sw.write(0, 1)  # preflag
-            sw.write(g["scalefac_scale"], 1)
-            sw.write(0, 1)  # count1table_select (region is empty)
-        side = sw.bytes_padded()
-        assert len(side) == side_len
-        main = w.bytes_padded()
-        body = side + main
-        body += bytes(frame_len - 4 - len(body))
-        out += hdr + body
-    return bytes(out)
-
-
 def _pcm16_samples(payload: bytes) -> np.ndarray:
     """int16 PCM samples of a WAV, AIFF, or FLAC payload, sniffed by
     magic — the container-agnostic entry the audio fingerprint family
@@ -3043,10 +779,6 @@ def _pcm16_samples(payload: bytes) -> np.ndarray:
     from .containers import _mkv_audio_samples, _mp4_pcm_samples
     from .media import _avi_audio_as_wav
 
-    if payload[:4] == b"FORM" and payload[8:12] == b"8SVX":
-        # 8SVX (r12): signed 8-bit sits on the int16 grid verbatim
-        # (the AIFF-8/AU rule — no conversion choice)
-        return _8svx_samples(payload)[0]
     if payload[:4] == b"FORM" and payload[8:12] in (b"AIFF", b"AIFC"):
         samples = _aiff_samples(payload)[0]
         if samples.dtype != np.int16:
@@ -3062,19 +794,6 @@ def _pcm16_samples(payload: bytes) -> np.ndarray:
             # exactness rule as the 24/32-bit WAV rejections
             raise ValueError("unsupported FLAC sample width 3")
         return samples
-    if payload[:3] == b"ID3" or (
-        len(payload) >= 2
-        and payload[0] == 0xFF
-        and (payload[1] & 0xE0) == 0xE0
-    ):
-        # MPEG audio elementary stream (r12): REAL Layer III decode
-        # (_mp3_decode_samples); output is float [-1, 1) full-scale,
-        # fingerprinted on the int16 grid like every lossy-free arm —
-        # lossy samples never join the exact-contract fixtures, but
-        # energy hashes over real MP3 corpora need real samples.
-        s, _rate, _nch = _mp3_decode_samples(payload)
-        flat = s.reshape(-1)  # row-major = interleaved, like every arm
-        return np.clip(np.round(flat * 32768.0), -32768, 32767).astype(np.int16)
     if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
         # audio-in-AVI (r11): rebuild the stream as RIFF/WAVE and
         # recurse — every WAV arm and grid rule applies verbatim
@@ -3100,19 +819,9 @@ def _pcm16_samples(payload: bytes) -> np.ndarray:
         return s
     if payload[:4] == b"OggS":
         # Ogg (r11): Ogg-FLAC fingerprints through the native-FLAC
-        # delegation; r13: Vorbis decodes REAL samples (the MP3 rule:
-        # float output fingerprints on the int16 grid for energy
-        # hashes — lossy samples never join the exact-contract
-        # fixtures); Opus quarantines like every transform arm
+        # delegation; Vorbis and Opus quarantine like every transform
+        # arm
         kind, info = _ogg_audio_info(payload)
-        if kind == "vorbis":
-            from .vorbis import vorbis_samples  # back edge of the split
-
-            s, _rate, _nch = vorbis_samples(payload)
-            flat = s.reshape(-1)
-            return np.clip(
-                np.round(flat * 32768.0), -32768, 32767
-            ).astype(np.int16)
         if kind != "flac":
             raise NotImplementedError(
                 f"Ogg {kind} sample decode needs a codec library"
@@ -3121,11 +830,6 @@ def _pcm16_samples(payload: bytes) -> np.ndarray:
         if samples.dtype != np.int16:
             raise ValueError("unsupported FLAC sample width 3")
         return samples
-    if payload[: len(_VOC_MAGIC)] == _VOC_MAGIC:
-        # VOC (r12): 16-bit new-format blocks are grid-verbatim; 8-bit
-        # unsigned needs a centering CHOICE, so it fingerprints only
-        # when the stream is 16-bit throughout (the WAV-8 rule)
-        return _voc_samples(payload, grid_only=True)[0]
     if payload[:4] == b"caff":
         # Apple CAF (r11): same wide-int grid rule
         s = _caf_samples(payload)[0]
@@ -3149,8 +853,8 @@ def _pcm16_samples(payload: bytes) -> np.ndarray:
             s = s.astype(np.int16)
         return s
     probed = _riff_fmt_and_data(payload)
-    if probed is not None and probed[0][0] in (3, 6, 7, 0x11, 2, 0x55):
-        # G.711, IMA/MS ADPCM, and IEEE-float WAVs all expand to the
+    if probed is not None and probed[0][0] in (3, 6, 7):
+        # G.711 and IEEE-float WAVs both expand to the
         # exact int16 grid — the fingerprint contract — so the stats
         # and fingerprint families share one support matrix (r9
         # review: drift is the sampler-KeyError bug class). The probe
@@ -3240,7 +944,7 @@ def _check_pixels(px: np.ndarray, who: str, maxval: int = 255) -> None:
     ).any():
         # astype would silently truncate 3.7 -> 3: a lossy encode
         # with ok=True on hash-checked-lossless encoders (the
-        # FLAC/ADPCM encoders already reject this; r9 ADVICE aligned
+        # FLAC encoder already rejects this; r9 ADVICE aligned
         # the image encoders)
         raise ValueError(f"{who}: non-integral pixel values")
 
@@ -4034,12 +1738,10 @@ def decode_flac(payload: bytes) -> dict:
 # stream serial, page CRC, and 255-lacing segment tables. Ogg-FLAC
 # (the Xiph mapping spec) DELEGATES: the native fLaC stream is
 # reassembled from the first packet's embedded STREAMINFO plus the
-# audio packets and decoded by the engine's FLAC machinery. r13:
-# Vorbis decodes REAL samples lib-free (vorbis.py — in-stream
-# codebooks, the doctrine's ideal case; floor 0 quarantines by name).
-# Opus gets metadata-before-decode triage (identification-header
-# fields + last-granule duration); its payloads need normative tables
-# with no structural validation, the MPEG honesty contract.
+# audio packets and decoded by the engine's FLAC machinery. Vorbis
+# and Opus get metadata-before-decode triage (identification-header
+# fields + last-granule duration); their sample decode needs a codec
+# library.
 
 
 def _ogg_packets(
@@ -4173,25 +1875,11 @@ def _ogg_audio_info(payload: bytes) -> tuple[str, dict | bytes]:
 
 def decode_ogg(payload: bytes) -> dict:
     """Ogg entry: Ogg-FLAC decodes samples for REAL through the
-    native-FLAC delegation; r13: Vorbis decodes REAL samples
-    (floor1 + residues 0/1/2 + coupling + IMDCT — see
-    ``vorbis.py``'s doctrine note), degrading to identification-
-    header triage on the named floor-0 quarantine; Opus reports
-    triage metadata only (no rms — the codec needs external
-    normative tables)."""
+    native-FLAC delegation; Vorbis and Opus report triage metadata
+    only (no rms — their sample decode needs a codec library)."""
     kind, info = _ogg_audio_info(payload)
     if kind == "flac":
         return decode_flac(info)
-    if kind == "vorbis":
-        from .vorbis import decode_vorbis  # back edge of the split
-
-        try:
-            return decode_vorbis(payload)
-        except (NotImplementedError, ValueError):
-            # floor-0 quarantine or a sample layer the headers
-            # misdescribe: honest triage, rms/peak stay null (the
-            # decode_mp3 degradation contract)
-            return info
     return info
 
 

@@ -1,6 +1,6 @@
 """Container walks and the codecs that ride them: Matroska/WebM (EBML),
 WebP/VP8L (+ encoder twins), MP4/ISO-BMFF (boxes, sample tables, PCM + MJPEG
-arms), HEIF triage.
+arms).
 
 Split out of the r12 single-module multimodal.py (r12 verdict item:
 52% of the package in one file); behavior-identical, facade in
@@ -23,7 +23,7 @@ from .image import (
     _IMG_MAX_PIXELS, _PNG_MAGIC, _QOI_MAGIC, _TGA_FOOTER, _alpha_over,
     _bmp_pixels, _dds_pixels, _gif_pixels, _ico_pixels, _jpeg_pixels,
     _pcx_pixels, _png_pixels, _pnm_pixels, _qoi_pixels, _ras_pixels,
-    _sgi_pixels, _tga_pixels, _tiff_pixels, _xbm_pixels,
+    _sgi_pixels, _tga_pixels, _tiff_pixels,
 )
 
 # --- Matroska / WebM (r11): the EBML container ----------------------
@@ -266,41 +266,6 @@ def _mkv_audio_samples(payload: bytes) -> tuple[np.ndarray, int, int]:
         if native[:4] != b"fLaC":
             raise ValueError("A_FLAC CodecPrivate missing the fLaC header")
         return _flac_samples(native)
-    if codec == "A_VORBIS":
-        # Matroska Vorbis (r13): the three header packets ride
-        # CodecPrivate in Xiph-lacing form (count byte == 2, then
-        # 255-run sizes for the first two, third implicit); each block
-        # frame is one audio packet. Delegates to the Ogg machinery's
-        # container-agnostic core; no granule -> no tail truncation.
-        from .vorbis import vorbis_samples_from_packets  # back edge
-
-        priv = bytes(trk["private"])
-        if len(priv) < 3 or priv[0] != 2:
-            raise ValueError("A_VORBIS CodecPrivate must lace 3 packets")
-        sizes = []
-        pos = 1
-        for _ in range(2):
-            sz = 0
-            while True:
-                if pos >= len(priv):
-                    raise ValueError("A_VORBIS CodecPrivate lacing truncated")
-                b = priv[pos]
-                pos += 1
-                sz += b
-                if b != 255:
-                    break
-            sizes.append(sz)
-        p0 = priv[pos : pos + sizes[0]]
-        p1 = priv[pos + sizes[0] : pos + sizes[0] + sizes[1]]
-        p2 = priv[pos + sizes[0] + sizes[1] :]
-        pkts = [p0, p1, p2] + list(doc["blocks"].get(trk["number"], []))
-        s, vrate, vch = vorbis_samples_from_packets(pkts, -1)
-        flat = s.reshape(-1)  # row-major = interleaved, like every arm
-        return (
-            np.clip(np.round(flat * 32768.0), -32768, 32767).astype(np.int16),
-            vrate,
-            vch,
-        )
     if codec in ("A_PCM/INT/LIT", "A_PCM/INT/BIG"):
         bits = trk["bits"] or 16
         if bits not in (16, 24, 32):
@@ -387,23 +352,6 @@ def decode_mkv(payload: bytes) -> dict:
     trk = audio[0]
     try:
         samples, rate, n_ch = _mkv_audio_samples(payload)
-    except ValueError:
-        # r13: A_VORBIS decodes for real, so its sample layer can fail
-        # on headers the track entry misdescribes (e.g. missing
-        # CodecPrivate) — degrade to track-metadata triage, the
-        # decode_ogg rule; any OTHER codec's ValueError still means a
-        # corrupt payload and propagates
-        if (trk["codec"] or "") != "A_VORBIS":
-            raise
-        out = {
-            "kind": "audio",
-            "codec": "vorbis",
-            "n_channels": trk["channels"],
-            "sample_rate": int(trk["rate"]),
-        }
-        if duration_s is not None:
-            out["duration_s"] = duration_s
-        return out
     except NotImplementedError:
         out = {
             "kind": "audio",
@@ -610,58 +558,6 @@ def _mkv_payload(
         b"\x1a\x45\xdf\xa3",
         _ebml_el(b"\x42\x82", doctype.encode("ascii"))
         + _ebml_el(b"\x42\x86", b"\x01"),
-    )
-    return header + segment
-
-
-def _mkv_vorbis_payload(samples, rate: int = 8000, **twin_kw) -> bytes:
-    """Matroska A_VORBIS builder twin (r13): the SAME packets the Ogg
-    Vorbis twin emits, re-wrapped — three headers Xiph-laced into
-    CodecPrivate, one plain block per audio packet — so the Ogg and
-    Matroska decode paths can be cross-checked for exact agreement."""
-    import numpy as np
-
-    from .audio import _ogg_packets
-    from .vorbis import _vorbis_payload
-
-    samples = np.asarray(samples, dtype=np.float64)
-    packets, _, _ = _ogg_packets(_vorbis_payload(samples, rate, **twin_kw))
-    private = bytearray([2])
-    for pk in packets[:2]:
-        sz = len(pk)
-        private += b"\xff" * (sz // 255) + bytes([sz % 255])
-    private += packets[0] + packets[1] + packets[2]
-    n_ch = samples.shape[1] if samples.ndim == 2 else 1
-    audio = (
-        _ebml_el(b"\xb5", struct.pack(">f", float(rate)))
-        + _ebml_el(b"\x9f", bytes([n_ch]))
-    )
-    track = _ebml_el(
-        b"\xae",
-        _ebml_el(b"\xd7", b"\x01")
-        + _ebml_el(b"\x83", b"\x02")
-        + _ebml_el(b"\x86", b"A_VORBIS")
-        + _ebml_el(b"\x63\xa2", bytes(private))
-        + _ebml_el(b"\xe1", audio),
-    )
-    info = _ebml_el(
-        b"\x15\x49\xa9\x66",
-        _ebml_el(b"\x2a\xd7\xb1", _ebml_uint_body(1_000_000))
-        + _ebml_el(b"\x44\x89", struct.pack(">f", float(len(samples)))),
-    )
-    blocks = b"".join(
-        _ebml_el(b"\xa3", b"\x81\x00\x00\x80" + pk) for pk in packets[3:]
-    )
-    cluster = _ebml_el(
-        b"\x1f\x43\xb6\x75", _ebml_el(b"\xe7", b"\x00") + blocks
-    )
-    segment = _ebml_el(
-        b"\x18\x53\x80\x67",
-        info + _ebml_el(b"\x16\x54\xae\x6b", track) + cluster,
-    )
-    header = _ebml_el(
-        b"\x1a\x45\xdf\xa3",
-        _ebml_el(b"\x42\x82", b"matroska") + _ebml_el(b"\x42\x86", b"\x01"),
     )
     return header + segment
 
@@ -1245,7 +1141,7 @@ def _webp_pixels(payload: bytes) -> np.ndarray:
                         "VP8 lossy frame decode not implemented here: RFC 6386 is "
                     "public, but its entropy layer rests on ~2.2 KB of "
                     "arbitrary normative probability tables that admit no "
-                    "structural validation (unlike the MP3 Kraft/PR gates) "
+                    "structural validation "
                     "and no on-box ground truth — see SCALE.md residue map"
                     )
         for cid, b, e in chunks:
@@ -1255,7 +1151,7 @@ def _webp_pixels(payload: bytes) -> np.ndarray:
                     "VP8 lossy frame decode not implemented here: RFC 6386 is "
                     "public, but its entropy layer rests on ~2.2 KB of "
                     "arbitrary normative probability tables that admit no "
-                    "structural validation (unlike the MP3 Kraft/PR gates) "
+                    "structural validation "
                     "and no on-box ground truth — see SCALE.md residue map"
                 )
         raise ValueError("WebP container has no VP8/VP8L image chunk")
@@ -1338,7 +1234,7 @@ def _webp_frames(payload: bytes) -> list[np.ndarray]:
                     "VP8 lossy frame decode not implemented here: RFC 6386 is "
                     "public, but its entropy layer rests on ~2.2 KB of "
                     "arbitrary normative probability tables that admit no "
-                    "structural validation (unlike the MP3 Kraft/PR gates) "
+                    "structural validation "
                     "and no on-box ground truth — see SCALE.md residue map"
                 )
         if region is None:
@@ -1900,8 +1796,6 @@ def _image_pixels(payload: bytes) -> np.ndarray:
         return _gif_pixels(payload)
     if payload[:4] == b"\x59\xa6\x6a\x95":
         return _ras_pixels(payload)
-    if payload[:7] == b"#define":
-        return _xbm_pixels(payload)
     if len(payload) >= 2 and payload[0:1] == b"P" and payload[1] in range(0x31, 0x37):
         return _pnm_pixels(payload)
     if payload[:4] == _QOI_MAGIC:
@@ -1912,11 +1806,6 @@ def _image_pixels(payload: bytes) -> np.ndarray:
         return _dds_pixels(payload)
     if payload[:2] == b"\x01\xda":
         return _sgi_pixels(payload)
-    if payload[4:8] == b"ftyp" and payload[8:12] in _HEIF_BRANDS:
-        info = _heif_info(payload)  # real container walk first
-        raise NotImplementedError(
-            f"HEIF/AVIF pixel decode ({info['codec']}) requires a codec library"
-        )
     if len(payload) >= 128 and payload[0] == 0x0A and payload[2] == 1:
         return _pcx_pixels(payload)
     if payload.endswith(_TGA_FOOTER):
@@ -1960,81 +1849,6 @@ def _mp4_child(buf: bytes, start: int, end: int, btype: bytes) -> tuple[int, int
         if t == btype:
             return b, e
     return None
-
-
-_HEIF_BRANDS = (b"heic", b"heix", b"heim", b"heis", b"mif1", b"msf1",
-                b"avif", b"avis")
-
-
-def _heif_info(payload: bytes) -> dict:
-    """Container triage for HEIF/HEIC and AVIF stills (r11 late — the
-    phone-photo and modern-web staples): the ISO-BMFF 'meta' FullBox
-    walk resolves the primary codec (infe item types: hvc1/av01/...),
-    the canvas dims (largest 'ispe' property — grid-tiled images
-    carry one per tile plus the full-size one), and the coded-item
-    count. HEVC/AV1 payload decode needs a codec library — the
-    metadata-before-decode honesty contract of the MP4/AVI arms."""
-    if payload[4:8] != b"ftyp":
-        raise ValueError("not an ISO-BMFF payload")
-    brand = payload[8:12]
-    if brand not in _HEIF_BRANDS:
-        raise ValueError(f"not a HEIF/AVIF brand ({brand!r})")
-    try:
-        return _heif_info_impl(payload, brand)
-    except (struct.error, IndexError) as exc:
-        raise ValueError(f"corrupt HEIF container ({exc})") from exc
-
-
-def _heif_info_impl(payload: bytes, brand: bytes) -> dict:
-    meta = _mp4_child(payload, 0, len(payload), b"meta")
-    if meta is None:
-        raise ValueError("HEIF container missing its meta box")
-    mb, me = meta[0] + 4, meta[1]  # meta is a FullBox: skip version/flags
-    item_types: list[bytes] = []
-    dims: list[tuple[int, int]] = []
-    for btype, b, e in _mp4_boxes(payload, mb, me):
-        if btype == b"iinf":
-            version = payload[b]
-            pos = b + 4 + (2 if version == 0 else 4)
-            for itype, ib, ie in _mp4_boxes(payload, pos, e):
-                if itype != b"infe" or ie - ib < 12:
-                    continue
-                iversion = payload[ib]
-                if iversion >= 2:
-                    # infe v2/v3: vf(4) + item_id(2 or 4) +
-                    # protection(2) + item_type(4)
-                    off = ib + 4 + (2 if iversion == 2 else 4) + 2
-                    item_types.append(payload[off : off + 4])
-        elif btype == b"iprp":
-            ipco = _mp4_child(payload, b, e, b"ipco")
-            if ipco is not None:
-                for ptype, pb, pe in _mp4_boxes(payload, ipco[0], ipco[1]):
-                    if ptype == b"ispe" and pe - pb >= 12:
-                        w, h = struct.unpack_from(">II", payload, pb + 4)
-                        dims.append((w, h))
-    coded = [t for t in item_types if t in (b"hvc1", b"av01", b"avc1", b"jpeg")]
-    if not dims and not coded:
-        raise ValueError("HEIF meta carries no image items")
-    w, h = max(dims, default=(None, None), key=lambda d: (d[0] or 0) * (d[1] or 0))
-    codec = None
-    if coded:
-        codec = {b"hvc1": "hevc", b"av01": "av1", b"avc1": "avc",
-                 b"jpeg": "jpeg"}[coded[0]]
-    elif brand in (b"avif", b"avis"):
-        codec = "av1"
-    elif brand.startswith(b"hei"):
-        codec = "hevc"
-    return {
-        "kind": "image",
-        "codec": codec,
-        "width": w,
-        "height": h,
-        "n_frames": max(len(coded), 1),
-    }
-
-
-def decode_heif(payload: bytes) -> dict:
-    return _heif_info(payload)
 
 
 def _mp4_video_track(payload: bytes) -> dict:

@@ -1,4 +1,4 @@
-"""Still-image codecs: BMP, netpbm, ICO/CUR, Sun Raster, XBM, QOI, TGA, TIFF,
+"""Still-image codecs: BMP, netpbm, ICO/CUR, Sun Raster, QOI, TGA, TIFF,
 PNG/APNG (+ encoder twin), GIF (+ twin), JPEG baseline/progressive/lossless
 (+ twins), PCX, SGI, DDS.
 
@@ -439,12 +439,12 @@ def encode_pnm(px: np.ndarray, kind: int = 6, maxval: int = 255) -> bytes:
 # with no new pixel code.
 
 
-# --- Sun Raster + XBM (r12): two classic formats with REAL on-box
-# third-party fixtures (CPython's imghdrdata logo), so both decoders
-# are gated by pixel-exact agreement with the PNG/TIFF/BMP arms on
-# genuine files — the doctrine's gold standard. Implemented from the
-# public rasterfile.h layout / X11 XBM conventions; the reference repo
-# has no image code at all ([EXT] surface).
+# --- Sun Raster (r12): a classic format with a REAL on-box
+# third-party fixture (CPython's imghdrdata logo), so the decoder is
+# gated by pixel-exact agreement with the PNG/TIFF/BMP arms on a
+# genuine file — the doctrine's gold standard. Implemented from the
+# public rasterfile.h layout; the reference repo has no image code at
+# all ([EXT] surface).
 
 _RAS_MAGIC = 0x59A66A95
 
@@ -585,74 +585,6 @@ def encode_ras(px: np.ndarray, rtype: int = 1, depth: int = 24) -> bytes:
         ">8I", _RAS_MAGIC, w, h, depth, len(raw), rtype, 0, 0
     )
     return hdr + raw
-
-
-def _xbm_pixels(payload: bytes) -> np.ndarray:
-    """(h, w, 3) pixels of an X11 XBM (a C-source text format): parse
-    the #define width/height and the bits[] initializer; bits are
-    LSB-first per byte, rows padded to whole bytes, 1 = foreground
-    (rendered black, 0 = white) — the PBM polarity."""
-    try:
-        text = payload.decode("ascii", errors="strict")
-    except UnicodeDecodeError as exc:
-        raise ValueError("XBM payload is not ASCII C source") from exc
-    import re as _re
-
-    dims = dict(
-        (m.group(1), int(m.group(2)))
-        for m in _re.finditer(r"#define\s+\w*?_?(width|height)\s+(\d+)", text)
-    )
-    if "width" not in dims or "height" not in dims:
-        raise ValueError("XBM missing width/height defines")
-    w, h = dims["width"], dims["height"]
-    if not 0 < w <= 1 << 14 or not 0 < h <= 1 << 14 or w * h > _IMG_MAX_PIXELS:
-        raise ValueError(f"XBM dimensions {w}x{h} out of range")
-    body = _re.search(r"\{(.*)\}", text, _re.S)
-    if body is None:
-        raise ValueError("XBM missing bits initializer")
-    vals = [
-        int(tok, 0)
-        for tok in _re.findall(r"0[xX][0-9a-fA-F]+|\d+", body.group(1))
-    ]
-    stride = (w + 7) // 8
-    if len(vals) < stride * h:
-        raise ValueError("XBM bits shorter than width*height")
-    if any(not 0 <= v <= 255 for v in vals[: stride * h]):
-        raise ValueError("XBM byte out of range")
-    rows = np.asarray(vals[: stride * h], dtype=np.uint8).reshape(h, stride)
-    bits = np.unpackbits(rows, axis=1, bitorder="little")[:, :w]
-    gray = np.where(bits, 0, 255).astype(np.uint8)
-    return np.repeat(gray[:, :, None], 3, axis=2)
-
-
-def decode_xbm(payload: bytes) -> dict:
-    px = _xbm_pixels(payload)
-    mean_rgb = px.reshape(-1, 3).mean(axis=0) if px.size else np.zeros(3)
-    return {
-        "kind": "image",
-        "width": int(px.shape[1]),
-        "height": int(px.shape[0]),
-        "mean_r": float(mean_rgb[0]),
-        "mean_g": float(mean_rgb[1]),
-        "mean_b": float(mean_rgb[2]),
-    }
-
-
-def encode_xbm(px: np.ndarray, name: str = "img") -> bytes:
-    """XBM encoder twin: any pixel strictly below 128 gray encodes as
-    a set (foreground) bit — lossless for bilevel inputs."""
-    h, w, _ = px.shape
-    bits = (px.reshape(h, w, 3).mean(axis=2) < 128).astype(np.uint8)
-    pad = (-w) % 8
-    if pad:
-        bits = np.concatenate([bits, np.zeros((h, pad), np.uint8)], axis=1)
-    rows = np.packbits(bits, axis=1, bitorder="little")
-    vals = ", ".join(f"0x{b:02X}" for b in rows.reshape(-1))
-    src = (
-        f"#define {name}_width {w}\n#define {name}_height {h}\n"
-        f"static char {name}_bits[] = {{\n  {vals}\n}};\n"
-    )
-    return src.encode("ascii")
 
 
 def _ico_pixels(payload: bytes) -> np.ndarray:

@@ -20,14 +20,14 @@ import wave
 from .audio import (
     FEATURE_SCHEMA, _WAVE_EXT_GUID_SUFFIX, _au_payload, _caf_payload,
     _f80_encode, _ogg_flac_payload, _pcm16_samples, _riff_chunk,
-    _wav_samples_f64, decode_8svx, decode_aiff, decode_au, decode_caf,
-    decode_flac, decode_mp3, decode_ogg, decode_voc, decode_wav, encode_flac,
+    _wav_samples_f64, decode_aiff, decode_au, decode_caf, decode_flac,
+    decode_ogg, decode_wav, encode_flac,
 )
 from .image import (
     _PNG_MAGIC, _bmp_pixels, _gif_frames, _jpeg_pixels, _png_chunk,
     _png_frames, decode_bmp, decode_dds, decode_gif, decode_ico, decode_jpeg,
     decode_pcx, decode_png, decode_pnm, decode_qoi, decode_ras, decode_sgi,
-    decode_tga, decode_tiff, decode_xbm, encode_apng, encode_dds, encode_gif,
+    decode_tga, decode_tiff, encode_apng, encode_dds, encode_gif,
     encode_ico, encode_jpeg, encode_jpeg_lossless, encode_pcx, encode_png,
     encode_pnm, encode_qoi, encode_ras, encode_sgi, encode_tga, encode_tiff,
     encode_tiff_jpeg, encode_tiff_multipage,
@@ -35,7 +35,7 @@ from .image import (
 from .containers import (
     _MP4_PCM_LAYOUTS, _image_pixels, _mkv_mjpeg_container, _mkv_mjpeg_frames,
     _mkv_payload, _mp4_audio_stats, _mp4_audio_track, _mp4_mjpeg_frames,
-    _mp4_video_stats, _mp4_video_track, _webp_frames, decode_heif, decode_mkv,
+    _mp4_video_stats, _mp4_video_track, _webp_frames, decode_mkv,
     decode_mp4_mjpeg, decode_mp4_pcm, decode_webp, encode_webp,
     encode_webp_anim,
 )
@@ -53,18 +53,10 @@ def decode_media(payload: bytes, mime: str) -> dict:
         return decode_au(payload)
     if mime in ("audio/x-caf", "audio/caf"):
         return decode_caf(payload)
-    if mime in ("audio/x-8svx", "audio/8svx"):
-        return decode_8svx(payload)
-    if mime in ("audio/x-voc", "audio/voc"):
-        return decode_voc(payload)
     if mime in ("audio/ogg", "application/ogg", "audio/x-ogg", "audio/opus"):
         return decode_ogg(payload)
     if mime in ("audio/flac", "audio/x-flac"):
         return decode_flac(payload)
-    if mime in ("audio/mpeg", "audio/mp3", "audio/x-mp3"):
-        # r12: REAL Layer III / Layer I sample decode with rms/peak;
-        # honest-quarantine streams degrade to header-walk triage
-        return decode_mp3(payload)
     if mime in ("audio/mp4", "audio/x-m4a", "audio/m4a"):
         # Raw-PCM tracks ('twos'/'sowt') decode samples for real
         # through the stsz×stsc×stco resolution; anything else gets
@@ -91,8 +83,6 @@ def decode_media(payload: bytes, mime: str) -> dict:
         return decode_tga(payload)
     if mime in ("image/x-cmu-raster", "image/x-sun-raster"):
         return decode_ras(payload)
-    if mime in ("image/x-xbitmap", "image/x-xbm"):
-        return decode_xbm(payload)
     if mime in ("image/qoi", "image/x-qoi"):
         return decode_qoi(payload)
     if mime == "image/webp":
@@ -105,13 +95,6 @@ def decode_media(payload: bytes, mime: str) -> dict:
         return decode_pcx(payload)
     if mime in ("image/sgi", "image/x-sgi", "image/x-rgb"):
         return decode_sgi(payload)
-    if mime in (
-        "image/heic", "image/heif", "image/avif",
-        "image/heic-sequence", "image/heif-sequence",
-    ):
-        # container triage (dims/codec/item count from the meta walk);
-        # HEVC/AV1 pixel decode needs a codec library
-        return decode_heif(payload)
     if mime in ("image/x-icon", "image/vnd.microsoft.icon", "image/ico"):
         return decode_ico(payload)
     if mime in ("image/png", "image/apng"):

@@ -542,6 +542,8 @@ def main() -> None:
         # more than the checkpoint-block pressure they release). Session
         # pressure is real but smaller — isolated adjudication below is
         # the correction for what min-of-2-in-session can't fix.
+    # the local[N] core count the timings were measured on
+    cpus = spark.sparkContext.defaultParallelism
     spark.stop()
 
     # Isolated adjudication (r5 verdict item #2): a query whose
@@ -600,6 +602,7 @@ def main() -> None:
         "queries": timings,
         "cold_total": round(sum(cold.values()), 3),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": cpus,
         # Harness methodology (r5 advice): cross-round comparisons are
         # only valid between artifacts measured the same way.
         "methodology": {
@@ -681,12 +684,14 @@ def main() -> None:
 def inherit_floor_runs(prev: dict, out: dict) -> list[float]:
     """Floor totals carried from the previous full run into this one —
     ONLY when the previous BENCH.out.json was measured at the same
-    commit, sf, and headline set (a code change may legitimately move
-    the total, so any commit resets the floor)."""
+    commit, sf, headline set and core count (a code change may
+    legitimately move the total, so any commit resets the floor; a
+    floor from another core count measures another machine)."""
     if not (
         prev.get("git_head")
         and prev.get("git_head") == out.get("git_head")
         and prev.get("sf") == out.get("sf")
+        and prev.get("cpus") == out.get("cpus")
         and set(prev.get("queries", {})) == set(out.get("queries", {}))
     ):
         return []

@@ -1,4 +1,4 @@
-"""Driver-contract invariants (no Spark session needed): the generated
+"""``__spark_entry__`` invariants (no Spark session needed): the derived
 priority ordering covers the whole registry, puts every
 never-driver-green query inside the driver's ~50-row check budget, and
 every query has an oracle twin."""
@@ -17,7 +17,7 @@ def test_priority_names_all_resolve():
 
 
 def test_priority_covers_registry_and_orders_it():
-    """The generated window is a total order over the registry — the
+    """The derived window is a total order over the registry — the
     first CHECK_BUDGET entries are what the driver will actually check."""
     qs = list(entrymod.queries())
     assert entrymod._DRIVER_PRIORITY == qs, "window must be a total order"
@@ -25,15 +25,10 @@ def test_priority_covers_registry_and_orders_it():
 
 
 def test_never_green_queries_inside_budget():
-    """Regenerating with tools/driver_window.py must keep every query
-    lacking a fully-green driver row inside the checked window — the
-    r4 failure mode was 20 queries stranded past position 50."""
-    import sys
-
-    sys.path.insert(0, "tools")
-    from driver_window import history
-
-    green = history()
+    """The derived window must keep every query lacking a fully-green
+    correctness row inside the checked window — the r4 failure mode was 20
+    queries stranded past position 50."""
+    green = entrymod.history()
     stranded = [
         n
         for i, n in enumerate(entrymod._DRIVER_PRIORITY)
@@ -142,16 +137,20 @@ def test_fitted_line_always_parses_within_budget():
 
 def test_floor_runs_inherit_only_at_same_commit():
     """floor_runs accumulate across repeated full runs at one commit
-    and reset on any commit / sf / headline-set change — a stale floor
-    from different code would mask a real regression."""
+    and reset on any commit / sf / headline-set / core-count change — a
+    stale floor from different code or another machine would mask a
+    real regression."""
     import bench
 
     prev = {
-        "git_head": "c1", "sf": 0.1,
+        "git_head": "c1", "sf": 0.1, "cpus": 4,
         "queries": {"q01": 1.0, "q02": 2.0},
         "value": 43.4, "floor_runs": [43.9],
     }
-    same = {"git_head": "c1", "sf": 0.1, "queries": {"q01": 1.1, "q02": 2.2}}
+    same = {
+        "git_head": "c1", "sf": 0.1, "cpus": 4,
+        "queries": {"q01": 1.1, "q02": 2.2},
+    }
     assert bench.inherit_floor_runs(prev, same) == [43.9, 43.4]
     # the 7-run cap drops the OLDEST, never the slowest — slow runs are
     # legitimate noise-band evidence (the box swings ~3x under load)
@@ -160,6 +159,12 @@ def test_floor_runs_inherit_only_at_same_commit():
         44.0, 45.0, 43.5, 44.2, 43.8, 44.1, 43.4]
     assert bench.inherit_floor_runs(dict(prev, git_head="c2"), same) == []
     assert bench.inherit_floor_runs(dict(prev, sf=0.01), same) == []
+    # a 32-core floor must never be reported as a 4-core result
+    assert bench.inherit_floor_runs(dict(prev, cpus=32), same) == []
+    # an artifact from before cpus was recorded never inherits either
+    assert bench.inherit_floor_runs(
+        {k: v for k, v in prev.items() if k != "cpus"}, same
+    ) == []
     assert bench.inherit_floor_runs(
         dict(prev, queries={"q01": 1.0}), same
     ) == []
@@ -183,18 +188,13 @@ def test_stale_cohort_fits_check_budget():
     import glob
     import os
     import re
-    import sys
-
-    sys.path.insert(0, "tools")
-    from driver_window import history
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = [
+    latest = max(
         int(re.search(r"_r(\d+)\.json$", p).group(1))
         for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-    ]
-    latest = max(rounds)
-    green = history()
+    )
+    green = entrymod.history()
     cohort = [
         n for n in entrymod._DRIVER_PRIORITY if green.get(n, 0) <= latest - 2
     ]
@@ -207,33 +207,6 @@ def test_stale_cohort_fits_check_budget():
         n for n in cohort if entrymod._DRIVER_PRIORITY.index(n) >= CHECK_BUDGET
     ]
     assert stranded == [], f"stale queries past the window: {stranded}"
-
-
-def test_window_regenerated_from_latest_correctness():
-    """The checked-in window must be derived from EVERY landed
-    CORRECTNESS file — when a round's file lands without re-running
-    tools/driver_window.py, the schedule silently re-verifies fresh
-    queries while stale ones rot (the r5 verdict's #1 item). Fails
-    loudly instead: re-run tools/driver_window.py.
-
-    INTENTIONAL working-tree coupling (r6 advice): this globs the
-    working tree, not git-tracked files, so an untracked in-flight
-    CORRECTNESS file fails the suite until the window is regenerated —
-    landing a correctness artifact and regenerating the window are one
-    atomic step (each round's first commit does both)."""
-    import glob
-    import os
-
-    from aws_etl_dados_publicos_cnpj_spark import _driver_window
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    on_disk = sorted(
-        os.path.basename(p) for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-    )
-    assert getattr(_driver_window, "GENERATED_FROM", None) == on_disk, (
-        "stale driver window — re-run `python tools/driver_window.py "
-        "[--front touched,...]` after landing correctness results"
-    )
 
 
 def test_same_box_ab_gate_and_block_shape(monkeypatch, tmp_path):

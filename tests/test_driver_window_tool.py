@@ -1,21 +1,21 @@
-"""Unit tests for tools/driver_window.py — the generated ordering IS
-the verification schedule, so its rules (touched first, never-green
-next, stalest-green-first, stability) are load-bearing."""
+"""Unit tests for the query-window ordering in ``__spark_entry__`` —
+the derived ordering IS the verification schedule, so its rules
+(touched first, never-green next, stalest-green-first, stability) are
+load-bearing."""
 
 from __future__ import annotations
 
 import json
-import sys
 
 import pytest
 
-sys.path.insert(0, "tools")
+import __spark_entry__ as entrymod
+
+REGISTRY = ["a", "b", "c", "d", "e"]
 
 
 @pytest.fixture()
-def fake_history(monkeypatch, tmp_path):
-    import driver_window
-
+def fake_repo(tmp_path):
     files = {
         "CORRECTNESS_r01.json": {
             "a": {"rows_match": True, "schema_match": True, "hash_match": True, "err": None},
@@ -29,30 +29,26 @@ def fake_history(monkeypatch, tmp_path):
     }
     for name, rows in files.items():
         (tmp_path / name).write_text(json.dumps(rows))
-    monkeypatch.setattr(driver_window, "REPO", str(tmp_path))
-    monkeypatch.setattr(
-        driver_window, "_raw_registry", lambda: ["a", "b", "c", "d", "e"]
-    )
-    return driver_window
+    return str(tmp_path)
 
 
-def test_history_green_rule(fake_history):
-    green = fake_history.history()
+def test_history_green_rule(fake_repo):
+    green = entrymod.history(fake_repo)
     # a: green in r1 only; b: green r1+r2 → r2; c: hash mismatch →
     # never; d: err → never; e: no row → absent
     assert green == {"a": 1, "b": 2}
 
 
-def test_window_order_touched_then_never_green_then_stalest(fake_history):
-    rows = fake_history.build_window(front=["b"])
+def test_window_order_touched_then_never_green_then_stalest(fake_repo):
+    rows = entrymod.build_window(REGISTRY, entrymod.history(fake_repo), front=["b"])
     assert [n for n, _ in rows] == ["b", "c", "d", "e", "a"]
     why = dict(rows)
     assert why["b"] == "touched this round"
-    assert why["c"] == "never driver-green"  # red row ≠ green
-    assert why["e"] == "never driver-green"  # never checked
+    assert why["c"] == "never green"  # red row ≠ green
+    assert why["e"] == "never green"  # never checked
     assert why["a"] == "last green r1"
 
 
-def test_front_name_must_exist(fake_history):
-    with pytest.raises(AssertionError):
-        fake_history.build_window(front=["nope"])
+def test_front_name_must_exist(fake_repo):
+    with pytest.raises(ValueError):
+        entrymod.build_window(REGISTRY, entrymod.history(fake_repo), front=["nope"])

@@ -111,9 +111,20 @@ def test_decode_features_mixed_media_and_quarantine(spark):
         (5, bytearray(b"\x00" * 64), "video/mp4"),  # corrupt container
         (6, bytearray(b"\x00" * 64), "video/webm"),  # corrupt EBML (r11)
     ]
+    # formats with no decoder: each quarantines by name, never kills
+    # the job (an MPEG frame header, then bare bytes)
+    cut = ["audio/mpeg", "audio/x-voc", "audio/x-8svx", "image/heic", "image/x-xbitmap"]
+    rows += [
+        (7 + i, bytearray(b"\xff\xfb\x90\x00" + bytes(60)), mime)
+        for i, mime in enumerate(cut)
+    ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary, mime string")
     out = {r.doc_id: r for r in decode_features(df).collect()}
-    assert len(out) == 6  # quarantine, not row loss
+    assert len(out) == 6 + len(cut)  # quarantine, not row loss
+    for i, mime in enumerate(cut):
+        r = out[7 + i]
+        assert not r.ok and r.mime == mime
+        assert "NotImplementedError" in r.err and repr(mime) in r.err
     assert out[1].ok and out[1].kind == "audio"
     assert out[1].sample_rate == 8000 and out[1].n_frames == 100
     assert out[1].rms == pytest.approx(500.0)
@@ -1187,8 +1198,8 @@ def test_aifc_sowt_none_decode_and_quarantine(spark):
     assert _aifc_payload(raw, compression=b"sowt") != _aifc_payload(
         raw, compression=b"NONE"
     )
-    # a real transform codec still quarantines ('ulaw'/'ima4' decode
-    # for real since r11 — see test_aifc_g711_and_ima4_decode)
+    # a codec with no decode arm quarantines ('ulaw'/'alaw' decode —
+    # see test_aifc_g711_decode)
     with pytest.raises(NotImplementedError, match="MAC3"):
         _aiff_samples(_aifc_payload(raw, compression=b"MAC3"))
     # AIFC COMM without room for the compressionType is corrupt
@@ -1229,17 +1240,15 @@ def payload_is_aifc(p: bytes) -> bool:
 def test_wave_format_extensible_unwraps_every_subformat():
     """WAVE_FORMAT_EXTENSIBLE (0xFFFE — the modern Windows default,
     REQUIRED for >16-bit audio; the stdlib module rejects it outright)
-    unwraps via the KSDATAFORMAT SubFormat GUID to PCM, IEEE float,
-    G.711, and ADPCM, hitting the same decode arms as the classic
-    tags; a foreign GUID stays 0xFFFE and quarantines."""
+    unwraps via the KSDATAFORMAT SubFormat GUID to PCM, IEEE float
+    and G.711, hitting the same decode arms as the classic tags; a
+    foreign GUID stays 0xFFFE and quarantines."""
     from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
         _pcm16_samples,
         _riff_wrap,
         _wav_payload,
         _wave_ext_fmt,
         decode_wav,
-        encode_ima_adpcm,
-        encode_ms_adpcm,
     )
 
     raw = "extensible wrappers everywhere".encode()
@@ -1262,40 +1271,6 @@ def test_wave_format_extensible_unwraps_every_subformat():
     # µ-law wrapped extensible routes through the G.711 table
     pu = _riff_wrap(_wave_ext_fmt(7, 1, 8000, 8), bytes(raw))
     assert decode_wav(pu)["n_frames"] == len(raw)
-    # ADPCM wrapped extensible: rebuild an IMA/MS stream under an
-    # extensible header — wSamplesPerBlock moves into the Samples
-    # union, the MS coef table follows the SubFormat GUID — and the
-    # decoded samples must be IDENTICAL to the classic container's
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _WAVE_EXT_GUID_SUFFIX,
-        _wav_samples_f64,
-    )
-
-    s = (3000 * np.sin(np.arange(2000) / 40)).astype(np.int16)
-    for enc, tag in ((encode_ima_adpcm, 0x11), (encode_ms_adpcm, 2)):
-        classic = enc(s, 8000)
-        fi = classic.find(b"fmt ")
-        (fsz,) = struct.unpack_from("<I", classic, fi + 4)
-        cfmt = classic[fi + 8 : fi + 8 + fsz]
-        di = classic.find(b"data")
-        (dsz,) = struct.unpack_from("<I", classic, di + 4)
-        body = classic[di + 8 : di + 8 + dsz]
-        (spb,) = struct.unpack_from("<H", cfmt, 18)
-        extra = cfmt[20:]  # MS: [wNumCoef][table]; IMA: empty
-        ext = (
-            struct.pack("<H", 0xFFFE)
-            + cfmt[2:16]
-            + struct.pack("<HHI", 22 + len(extra), spb, 1)
-            + struct.pack("<H", tag)
-            + _WAVE_EXT_GUID_SUFFIX
-            + extra
-        )
-        pw = _riff_wrap(ext, body)
-        dw = decode_wav(pw)
-        assert dw == decode_wav(classic), tag
-        assert np.array_equal(
-            _wav_samples_f64(pw)[0], _wav_samples_f64(classic)[0]
-        )
     # foreign GUID: stays 0xFFFE, quarantines as corrupt/unsupported
     alien = bytearray(_riff_wrap(_wave_ext_fmt(1, 1, 8000, 16), b"\x00\x00"))
     gi = bytes(alien).find(b"fmt ") + 8 + 24 + 2  # GUID suffix start
@@ -1577,189 +1552,6 @@ def test_mp4_g711_sample_entries_decode():
     s2, _, nch2 = _mp4_pcm_samples(p2)
     assert nch2 == 2 and len(s2) == len(raw)
     assert np.array_equal(s2, _G711_ULAW[np.frombuffer(raw, np.uint8)])
-
-
-def test_mp3_header_triage_and_quarantine():
-    """MP3 triage (r10): the frame-header walk yields exact frame and
-    sample counts (VBR included, per-frame bitrates), ID3v2 tags are
-    skipped via the syncsafe size, sample decode quarantines as
-    NotImplementedError (the mp4a/AAC contract), and hostile headers
-    raise ValueError — never a wrong-metadata dict with ok=True."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp3_stream_info,
-        _mp3_stream_payload,
-        _pcm16_samples,
-        decode_media,
-        decode_mp3,
-    )
-
-    # MPEG-1 layer III, 128 kbps, 44100 Hz: frame = 144·128000/44100
-    p = _mp3_stream_payload(n_frames=5, vbits=3, layer=3, br_idx=9, sr_idx=0)
-    d = _mp3_stream_info(p)
-    assert d["mpeg_version"] == "1" and d["layer"] == 3
-    assert d["bitrate_kbps"] == 128 and d["sample_rate"] == 44100
-    assert d["n_channels"] == 2 and not d["vbr"]
-    assert d["n_mpeg_frames"] == 5 and d["n_frames"] == 5 * 1152
-    assert abs(d["duration_s"] - 5 * 1152 / 44100) < 1e-12
-    assert decode_media(p, "audio/mpeg")["codec"] == "mp3"
-    # decode_mp3 is the schema-shaped trim: exactly the mp4a key set
-    # (an extra key would add a DECODE_SCHEMA column and fail the
-    # whole Arrow batch — r10 review)
-    assert set(decode_mp3(p)) == {
-        "kind", "codec", "n_channels", "sample_rate", "n_frames",
-        "duration_s",
-    }
-    # ID3v2 prefix skipped; trailing ID3v1 tag tolerated
-    p2 = _mp3_stream_payload(n_frames=3, id3=True) + b"TAG" + bytes(125)
-    assert _mp3_stream_info(p2)["n_mpeg_frames"] == 3
-    # ID3v2.4 footer flag: 10 extra bytes NOT counted in the syncsafe
-    # size (r10 review) — the walk must not start inside the footer
-    with_footer = bytearray(_mp3_stream_payload(n_frames=3, id3=True))
-    with_footer[5] |= 0x10
-    body_len = len(_mp3_stream_payload(n_frames=0, id3=True)) - 10
-    footer = b"3DI" + bytes(with_footer[3:10])
-    patched = bytes(with_footer[: 10 + body_len]) + footer + bytes(
-        with_footer[10 + body_len :]
-    )
-    assert _mp3_stream_info(patched)["n_mpeg_frames"] == 3
-    # VBR: per-frame bitrates, exact sample-count duration
-    pv = _mp3_stream_payload(n_frames=6, vbr=True)
-    dv = _mp3_stream_info(pv)
-    assert dv["vbr"] and dv["n_mpeg_frames"] == 6
-    # MPEG-2.5 layer III mono: 576 samples/frame, low-rate table
-    p25 = _mp3_stream_payload(n_frames=2, vbits=0, layer=3, br_idx=1, sr_idx=2, mono=True)
-    d25 = _mp3_stream_info(p25)
-    assert d25["mpeg_version"] == "2.5" and d25["sample_rate"] == 8000
-    assert d25["n_channels"] == 1 and d25["n_frames"] == 2 * 576
-    assert d25["bitrate_kbps"] == 8
-    # layer I pads in 4-byte slots and carries 384 samples
-    p1 = _mp3_stream_payload(n_frames=2, layer=1, br_idx=9, sr_idx=1)
-    d1 = _mp3_stream_info(p1)
-    assert d1["layer"] == 1 and d1["n_frames"] == 2 * 384
-    # a cut final frame is NOT counted (complete frames only — a
-    # partial download must not report an intact file's metadata)
-    assert _mp3_stream_info(p[:-3])["n_mpeg_frames"] == 4
-    # r12: the sample layer is REAL now — these triage-synth streams
-    # carry deliberately-opaque garbage frame bodies, so the decoder
-    # rejects them as corrupt (big_values/side-info checks) instead of
-    # the old blanket NotImplementedError quarantine
-    for payload in (p, p2):
-        with pytest.raises(ValueError):
-            _pcm16_samples(payload)
-    # hostile: no sync, free-format bitrate, bad syncsafe, truncation
-    with pytest.raises(ValueError, match="sync not found"):
-        decode_mp3(b"\x00" * 64)
-    free = bytearray(p)
-    free[2] &= 0x0F  # bitrate index -> 0 (free format)
-    with pytest.raises(ValueError, match="sync not found"):
-        decode_mp3(bytes(free))
-    bad_id3 = bytearray(_mp3_stream_payload(n_frames=1, id3=True))
-    bad_id3[6] = 0x80
-    with pytest.raises(ValueError, match="syncsafe"):
-        decode_mp3(bytes(bad_id3))
-    # one valid header but its body cut: truncated, not 0-frame ok
-    first_len = 144 * 128000 // 44100
-    with pytest.raises(ValueError, match="truncated"):
-        decode_mp3(p[: first_len - 3])
-    for cut in (2, 5, len(p) // 2, len(p) - 3):
-        try:
-            decode_mp3(p[:cut])
-        except ValueError:
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-
-
-def test_mp3_xing_frame_and_wav_fact_chunk():
-    """The LAME-style Xing/Info seek-table frame is a frame-sized slot
-    with no audio — excluded from counts like every player does; and
-    a RIFF fact chunk truncates compressed/float WAV decodes to the
-    encoder's declared frame count (final-block padding), while a
-    lying-larger fact is ignored."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp3_stream_info,
-        _mp3_stream_payload,
-        _wav_samples_f64,
-        decode_wav,
-        encode_ima_adpcm,
-    )
-
-    plain = _mp3_stream_payload(n_frames=4)
-    tagged = _mp3_stream_payload(n_frames=4, xing=True)
-    assert len(tagged) > len(plain)
-    d = _mp3_stream_info(tagged)
-    assert d["n_mpeg_frames"] == 4 and d["n_frames"] == 4 * 1152
-    assert d["duration_s"] == _mp3_stream_info(plain)["duration_s"]
-    # mono MPEG-2.5 side-info offset differs; the tag must still hit
-    dm = _mp3_stream_info(
-        _mp3_stream_payload(n_frames=2, vbits=0, sr_idx=2, br_idx=2, mono=True, xing=True)
-    )
-    assert dm["n_mpeg_frames"] == 2
-    # a frame too small for the Xing tag refuses instead of silently
-    # growing the body and desyncing later frames (r10 review)
-    with pytest.raises(ValueError, match="too small for a Xing tag"):
-        _mp3_stream_payload(n_frames=3, vbits=2, sr_idx=1, br_idx=1, xing=True)
-    # reported fields come from the first AUDIO frame, not the Xing
-    # frame: re-encode the Xing frame's header at a different bitrate
-    t2 = bytearray(_mp3_stream_payload(n_frames=3, br_idx=9, xing=True))
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp3_frame_info,
-    )
-
-    old_len = _mp3_frame_info(bytes(t2), 0)[0]
-    hi = int.from_bytes(t2[0:4], "big")
-    t2[0:4] = ((hi & ~(0xF << 12)) | (12 << 12)).to_bytes(4, "big")  # 192k
-    new_len = _mp3_frame_info(bytes(t2), 0)[0]
-    # keep the physical size in sync: resize the Xing frame body
-    if new_len > old_len:
-        t2[old_len:old_len] = bytes(new_len - old_len)
-    else:
-        del t2[new_len:old_len]
-    dx = _mp3_stream_info(bytes(t2))
-    assert dx["bitrate_kbps"] == 128 and dx["n_mpeg_frames"] == 3
-    # fact chunk: IMA ADPCM block-padded decode truncates to fact
-    s = (900 * np.sin(np.arange(100) / 7)).astype(np.int16)
-    p = encode_ima_adpcm(s, 8000, frames_per_block=505)  # one padded block
-    full = decode_wav(p)
-    assert full["n_frames"] == 505  # block padding decodes without fact
-    def with_fact(payload, frames):
-        fact = b"fact" + struct.pack("<II", 4, frames)
-        di = payload.find(b"data")
-        out = bytearray(payload[:di] + fact + payload[di:])
-        struct.pack_into("<I", out, 4, len(out) - 8)
-        return bytes(out)
-
-    dd = decode_wav(with_fact(p, 100))
-    assert dd["n_frames"] == 100
-    want = _wav_samples_f64(p)[0][:100]
-    assert np.array_equal(_wav_samples_f64(with_fact(p, 100))[0], want)
-    # a fact larger than the data decodes is ignored
-    assert decode_wav(with_fact(p, 9999))["n_frames"] == 505
-    assert decode_wav(with_fact(p, 0))["n_frames"] == 505
-
-
-def test_decode_features_survives_mp3_rows(spark):
-    """An audio/mpeg doc through decode_features must yield a normal
-    stats row (schema-trimmed decode_mp3) — and never fail the Arrow
-    batch (r10 review: extra dict keys became extra columns and one
-    MP3 doc killed the whole mapInPandas pass)."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp3_stream_payload,
-        _wav_payload,
-        decode_features,
-    )
-
-    rows = [
-        (1, bytearray(_wav_payload(b"abc")), "audio/wav"),
-        (2, bytearray(_mp3_stream_payload(n_frames=3)), "audio/mpeg"),
-        (3, bytearray(b"\x00garbage"), "audio/mpeg"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary, mime string")
-    got = {r.doc_id: r for r in decode_features(df).collect()}
-    assert got[1].ok and got[1].n_frames == 3
-    assert got[2].ok and got[2].codec == "mp3"
-    assert got[2].n_frames == 3 * 1152 and got[2].rms is None
-    assert not got[3].ok and "ValueError" in got[3].err
 
 
 def test_aiff_integer_width_matrix():
@@ -3357,177 +3149,6 @@ def test_bmp_rle8_dimension_bomb_raises():
             _bmp_pixels(payload)
 
 
-def test_ima_adpcm_decode_and_routing():
-    """IMA/DVI ADPCM WAVs (fmt tag 0x11 — the 4-bit predictive codec
-    the stdlib module rejects) decode for real: per-block seed
-    headers, low-nibble-first streams, stereo 4-byte group
-    interleave. Lossy, so correctness is self-consistency with the
-    textbook encoder twin plus an SNR floor; stats, sampler, and
-    fingerprint all route it (one support matrix)."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _ima_adpcm_samples,
-        _pcm16_samples,
-        decode_wav,
-        encode_ima_adpcm,
-    )
-
-    t = np.arange(4000)
-    s = (8000 * np.sin(2 * np.pi * t / 200)).astype(np.int16)
-    p = encode_ima_adpcm(s, 8000)
-    dec, rate, nch = _ima_adpcm_samples(p)
-    assert rate == 8000 and nch == 1 and len(dec) >= len(s)
-    err = dec[: len(s)].astype(np.float64) - s
-    snr = 10 * np.log10((s.astype(np.float64) ** 2).mean() / (err**2).mean())
-    assert snr > 30, snr
-    # stereo: channels decode independently from interleaved groups
-    st = np.stack(
-        [s // 2, (3000 * np.sin(2 * np.pi * t / 90 + 1)).astype(np.int16)],
-        axis=1,
-    )
-    dec2, _, nch2 = _ima_adpcm_samples(encode_ima_adpcm(st, 8000))
-    assert nch2 == 2
-    got = dec2.reshape(-1, 2)[: len(st)].astype(np.float64)
-    snr2 = 10 * np.log10(
-        (st.astype(np.float64) ** 2).mean() / ((got - st) ** 2).mean()
-    )
-    assert snr2 > 30, snr2
-    # one support matrix: stats + fingerprint both route tag 0x11
-    d = decode_wav(p)
-    assert d["n_channels"] == 1 and d["sample_rate"] == 8000
-    assert np.array_equal(_pcm16_samples(p), dec)
-    # hostile: out-of-range step index, bad block align, truncations
-    bad = bytearray(p)
-    di = bytes(bad).find(b"data") + 8
-    bad[di + 2] = 200  # step index byte of the first block header
-    with pytest.raises(ValueError, match="step index"):
-        _ima_adpcm_samples(bytes(bad))
-    bad = bytearray(p)
-    fi = bytes(bad).find(b"fmt ") + 8
-    struct.pack_into("<H", bad, fi + 12, 6)  # block_align not 4-aligned
-    with pytest.raises(ValueError, match="block align"):
-        _ima_adpcm_samples(bytes(bad))
-    for cut in (len(p) // 2, len(p) - 5, 30):
-        try:
-            _ima_adpcm_samples(p[:cut])
-        except ValueError:
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-
-
-def test_ms_adpcm_decode_and_routing():
-    """MS ADPCM WAVs (fmt tag 2): per-block per-channel predictor
-    index into the 7 canonical coefficient pairs + initial delta +
-    two seed samples (field-grouped headers), high-nibble-first
-    codes alternating channels. The 2-tap predictor should beat
-    IMA's SNR on sinusoids; stats/sampler/fingerprint all route it."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _ms_adpcm_samples,
-        _pcm16_samples,
-        decode_wav,
-        encode_ima_adpcm,
-        encode_ms_adpcm,
-    )
-
-    t = np.arange(4000)
-    s = (8000 * np.sin(2 * np.pi * t / 200)).astype(np.int16)
-    p = encode_ms_adpcm(s, 8000)
-    dec, rate, nch = _ms_adpcm_samples(p)
-    assert rate == 8000 and nch == 1
-
-    def snr(want, got):
-        e = got[: len(want)].astype(np.float64) - want
-        return 10 * np.log10(
-            (want.astype(np.float64) ** 2).mean() / max((e**2).mean(), 1e-9)
-        )
-
-    ms = snr(s, dec)
-    assert ms > 40, ms
-    # the 2-tap predictor genuinely outperforms IMA's fixed one here
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _ima_adpcm_samples,
-    )
-
-    ima = snr(s, _ima_adpcm_samples(encode_ima_adpcm(s, 8000))[0])
-    assert ms > ima
-    # stereo: per-nibble channel interleave decodes independently
-    st = np.stack(
-        [s // 2, (3000 * np.sin(2 * np.pi * t / 90 + 1)).astype(np.int16)],
-        axis=1,
-    )
-    p2 = encode_ms_adpcm(st, 8000)
-    dec2, _, nch2 = _ms_adpcm_samples(p2)
-    assert nch2 == 2 and snr(st.reshape(-1), dec2) > 40
-    # one support matrix
-    d = decode_wav(p2)
-    assert d["n_channels"] == 2 and d["n_frames"] == len(st)
-    assert np.array_equal(_pcm16_samples(p2), dec2)
-    # hostile: predictor index past the coef table, truncations
-    bad = bytearray(p)
-    bad[bytes(bad).find(b"data") + 8] = 9
-    with pytest.raises(ValueError, match="predictor index"):
-        _ms_adpcm_samples(bytes(bad))
-    for cut in (len(p) // 2, len(p) - 5, 30):
-        try:
-            _ms_adpcm_samples(p[:cut])
-        except ValueError:
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-
-
-def test_ms_adpcm_negative_predictor_truncating_division():
-    """The MS ADPCM predictor divides with C-style truncation toward
-    zero, not Python's floor: for s1=-1, s2=0, coefs (460, -208) the
-    sum is -460 and the prediction is -1 (ffmpeg/spec), not -2
-    (``-460 >> 8``). The error would feed the IIR state, drifting
-    every later sample on externally-encoded WAVs (r9 ADVICE)."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _ms_decode_nibbles,
-        _trunc_div256,
-    )
-
-    assert _trunc_div256(-460) == -1
-    assert _trunc_div256(460) == 1
-    assert _trunc_div256(-256) == -1 and _trunc_div256(-255) == 0
-    # nibble 0 contributes no delta, so out[2] IS the prediction
-    out = _ms_decode_nibbles([0], (460, -208), -1, 0, 16)
-    assert out == [0, -1, -1]
-
-
-def test_ima_adpcm_honors_samples_per_block():
-    """The fmt extension's samples_per_block truncates each block's
-    per-channel output, exactly like the MS path: an external encoder
-    that pads its final block flags the padding via spb, and decoding
-    the pad as samples inflates n_frames and skews rms (r9 ADVICE)."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _ima_adpcm_samples,
-        encode_ima_adpcm,
-    )
-
-    s = (1000 * np.sin(np.arange(9) / 3)).astype(np.int16)
-    p = encode_ima_adpcm(s, 8000, frames_per_block=9)  # one block
-    dec, _, _ = _ima_adpcm_samples(p)
-    assert len(dec) == 9  # spb == frames_per_block: truncation no-op
-    # patch the fmt extension's wSamplesPerBlock down to 5
-    buf = bytearray(p)
-    fi = bytes(buf).find(b"fmt ") + 8
-    struct.pack_into("<H", buf, fi + 18, 5)
-    dec5, _, _ = _ima_adpcm_samples(bytes(buf))
-    assert len(dec5) == 5
-    assert np.array_equal(dec5, dec[:5])
-    # stereo: per-channel truncation, interleave preserved
-    st = np.stack([s, -s], axis=1)
-    p2 = encode_ima_adpcm(st, 8000, frames_per_block=9)
-    buf2 = bytearray(p2)
-    fi2 = bytes(buf2).find(b"fmt ") + 8
-    struct.pack_into("<H", buf2, fi2 + 18, 5)
-    dec2, _, nch2 = _ima_adpcm_samples(bytes(buf2))
-    assert nch2 == 2 and len(dec2) == 10
-    full, _, _ = _ima_adpcm_samples(p2)
-    assert np.array_equal(dec2.reshape(-1, 2), full.reshape(-1, 2)[:5])
-
-
 def test_image_encoders_reject_fractional_floats():
     """encode_gif/encode_tiff/encode_jpeg contract lossless (or
     deterministic) pixel round trips — a finite fractional float like
@@ -4431,38 +4052,6 @@ def _with_fact(payload: bytes, frames: int) -> bytes:
     return bytes(out)
 
 
-def test_fmt_extension_requires_declared_cbsize():
-    """A plain WAVEFORMATEX fmt chunk PADDED to 20 bytes (cbSize = 0)
-    must not have its +18 padding read as wSamplesPerBlock — a small
-    bogus value there silently truncated real samples from every
-    ADPCM block (r10 advice). The extension field is trusted only
-    when declared: cbSize >= 2, or the extensible on-disk tag."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _ima_fmt_extension,
-        _ms_fmt_extension,
-        decode_wav,
-        encode_ima_adpcm,
-        encode_ms_adpcm,
-    )
-
-    s = (900 * np.sin(np.arange(1010) / 7)).astype(np.int16)
-    p = encode_ima_adpcm(s, 8000, frames_per_block=505)
-    ref = decode_wav(p)
-    assert p[12:16] == b"fmt " and _ima_fmt_extension(p) == 505
-    bad = bytearray(p)
-    struct.pack_into("<H", bad, 36, 0)  # cbSize = 0: extension UNdeclared
-    struct.pack_into("<H", bad, 38, 3)  # garbage where spb used to live
-    bad = bytes(bad)
-    assert _ima_fmt_extension(bad) == 0  # not trusted -> block-derived
-    assert decode_wav(bad)["n_frames"] == ref["n_frames"]
-
-    pm = encode_ms_adpcm(s, 8000)
-    assert pm[12:16] == b"fmt " and _ms_fmt_extension(pm)[1] > 0
-    badm = bytearray(pm)
-    struct.pack_into("<H", badm, 36, 0)
-    assert _ms_fmt_extension(bytes(badm))[1] == 0
-
-
 def test_riff_chunk_clamps_truncated_tail_chunk():
     """_riff_chunk on an externally truncated file: a wanted chunk
     whose declared size overruns the payload returns its CLAMPED
@@ -4568,87 +4157,6 @@ def test_tiff_truncated_next_pointer_still_decodes_page():
     really_cut = cut[:-6]
     with pytest.raises(ValueError, match="TIFF IFD truncated"):
         _tiff_ifd_chain(really_cut, need=1)
-
-
-def test_aifc_ima4_decode_and_routing():
-    """AIFC 'ima4' (QuickTime IMA ADPCM — the common compressed
-    Mac-export shape) decodes for real: 34-byte packets, 2-byte
-    preamble (9-bit predictor seed + 7-bit step index), low nibble
-    first, channel packets interleaved per 64-frame group, COMM
-    numSampleFrames trimming the final packet's padding. The
-    recurrence is the SAME published IMA codec as WAV tag 0x11 — the
-    old 'needs a codec library' quarantine was false (r10 verdict).
-    Lossy, so correctness is self-consistency with the encoder twin
-    plus an SNR floor, like the WAV twin."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _aiff_samples,
-        _pcm16_samples,
-        decode_aiff,
-        decode_media,
-        encode_ima4,
-    )
-
-    t = np.arange(4000)
-    s = (8000 * np.sin(2 * np.pi * t / 200)).astype(np.int16)
-    p = encode_ima4(s, 8000)
-    assert p[8:12] == b"AIFC" and b"ima4" in p[:60]
-    dec, rate, nch = _aiff_samples(p)
-    assert rate == 8000 and nch == 1
-    # COMM numSampleFrames trims the padded final packet exactly
-    assert len(dec) == len(s)
-    err = dec.astype(np.float64) - s
-    snr = 10 * np.log10((s.astype(np.float64) ** 2).mean() / (err**2).mean())
-    assert snr > 30, snr
-    # silence is bit-exact from sample 0 (pred 0, idx 0, step>>3 == 0)
-    zeros = np.zeros(150, dtype=np.int16)
-    assert np.array_equal(_aiff_samples(encode_ima4(zeros, 8000))[0], zeros)
-    # packet-boundary state continuity: once the encoder settles on a
-    # constant 128-multiple, the second packet's preamble truncation
-    # is adopted by BOTH sides and the stream stays exact thereafter
-    const = np.full(200, -4096, dtype=np.int16)
-    decc = _aiff_samples(encode_ima4(const, 8000))[0]
-    assert np.array_equal(decc[65:], const[65:])
-    assert not np.array_equal(decc[:20], const[:20])  # honest ramp-in
-    # stereo: per-channel packets interleave per 64-frame group
-    st = np.stack(
-        [s // 2, (3000 * np.sin(2 * np.pi * t / 90 + 1)).astype(np.int16)],
-        axis=1,
-    )
-    dec2, _, nch2 = _aiff_samples(encode_ima4(st, 8000))
-    assert nch2 == 2 and len(dec2) == st.size
-    got = dec2.reshape(-1, 2).astype(np.float64)
-    snr2 = 10 * np.log10(
-        (st.astype(np.float64) ** 2).mean() / ((got - st) ** 2).mean()
-    )
-    assert snr2 > 30, snr2
-    # one support matrix: stats + fingerprint + mime router all take it
-    d = decode_aiff(p)
-    assert d["n_channels"] == 1 and d["sample_rate"] == 8000
-    assert d["n_frames"] == len(s)
-    assert np.array_equal(_pcm16_samples(p), dec)
-    assert decode_media(p, "audio/aiff")["kind"] == "audio"
-    # hostile: out-of-range step index, ragged packet count, truncation
-    bad = bytearray(p)
-    di = bytes(bad).find(b"SSND") + 8 + 8
-    bad[di + 1] |= 0x7F  # step index 127 in the first preamble
-    with pytest.raises(ValueError, match="step index"):
-        _aiff_samples(bytes(bad))
-    two = encode_ima4(st, 8000)
-    ragged = bytearray(two)
-    si = bytes(ragged).find(b"SSND")
-    (ssz,) = struct.unpack_from(">I", ragged, si + 4)
-    struct.pack_into(">I", ragged, si + 4, ssz - 34)  # odd packet count
-    del ragged[si + 8 + ssz - 34 : si + 8 + ssz]
-    struct.pack_into(">I", ragged, 4, len(ragged) - 8)
-    with pytest.raises(ValueError, match="not a multiple"):
-        _aiff_samples(bytes(ragged))
-    for cut in (len(p) // 2, len(p) - 5, 30):
-        try:
-            _aiff_samples(p[:cut])
-        except ValueError:
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
 
 
 def test_aifc_g711_decode():
@@ -5071,7 +4579,7 @@ def test_mp4_lpcm_v2_entry_matrix():
 def test_avi_audio_stream_decodes_via_wav_delegation(spark):
     """Audio-in-AVI (r11): the 'auds' strf IS a WAVEFORMATEX, so the
     rebuilt RIFF/WAVE delegates to the entire WAV matrix — PCM widths,
-    floats, extensible headers, ADPCM — with identical stats and
+    floats, extensible headers, G.711 — with identical stats and
     identical int16-grid fingerprint rules. Multi-chunk '00wb' movi
     data reassembles exactly; the fixture sub-rotates classic 16-bit
     PCM through the AVI wrap at doc_id % 48 == 24 under the unchanged
@@ -5082,12 +4590,12 @@ def test_avi_audio_stream_decodes_via_wav_delegation(spark):
         _avi_mjpeg_container,
         _mjpeg_frames_for_text,
         _pcm16_samples,
+        _riff_wrap,
         _wav_payload,
         audio_energy_hash,
         decode_avi,
         decode_media,
         decode_wav,
-        encode_ms_adpcm,
         synthesize_mixed_audio_from_text,
     )
 
@@ -5101,10 +4609,9 @@ def test_avi_audio_stream_decodes_via_wav_delegation(spark):
         assert d["kind"] == "audio" and d["n_frames"] == 200
         assert d == decode_wav(w)
         assert decode_media(avi, "video/x-msvideo")["kind"] == "audio"
-    # a compressed WAV arm rides the same delegation
-    s = (900 * np.sin(np.arange(1010) / 7)).astype(np.int16)
-    ms = encode_ms_adpcm(s, 8000)
-    assert decode_avi(_avi_audio_container(ms)) == decode_wav(ms)
+    # a non-PCM WAV arm (G.711 µ-law, tag 7) rides the same delegation
+    ulaw = _riff_wrap(struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8), raw)
+    assert decode_avi(_avi_audio_container(ulaw)) == decode_wav(ulaw)
     # a video-only AVI has no audio stream: quarantine, not garbage
     vid = _avi_mjpeg_container(_mjpeg_frames_for_text(b"xy", 2))
     with pytest.raises(ValueError, match="no audio stream"):
@@ -5142,42 +4649,6 @@ def test_avi_audio_stream_decodes_via_wav_delegation(spark):
         )
     ).collect()
     assert len(hashes) == 3 and len({r.ehash for r in hashes}) == 1
-
-
-def test_mp3_in_wav_triage():
-    """MP3-in-WAV (format tag 0x55, the broadcast-era wrapper):
-    decode_wav triages the data chunk with the same header walk as a
-    bare MPEG stream — exact frame/sample counts, no rms — while the
-    sampler and fingerprint quarantine as NotImplementedError (the
-    MPEG honesty contract, one support matrix across the arms)."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp3_stream_info,
-        _mp3_stream_payload,
-        _pcm16_samples,
-        _riff_wrap,
-        _wav_samples_f64,
-        decode_media,
-        decode_wav,
-    )
-
-    mp3 = _mp3_stream_payload(n_frames=4)
-    fmt = struct.pack("<HHIIHH", 0x55, 2, 44100, 16000, 1, 0)
-    p = _riff_wrap(fmt, mp3)
-    d = decode_wav(p)
-    info = _mp3_stream_info(mp3)
-    assert d["kind"] == "audio" and d["codec"] == info["codec"]
-    assert d["n_frames"] == info["n_frames"] == 4 * 1152
-    assert d["sample_rate"] == info["sample_rate"]
-    # triage-synth frame bodies are garbage: the r12 real sample layer
-    # rejects them, so stats stay triage-only — no fake amplitude
-    assert "rms" not in d
-    assert decode_media(p, "audio/wav")["n_frames"] == 4 * 1152
-    for sampler in (_pcm16_samples, lambda b: _wav_samples_f64(b)[0]):
-        with pytest.raises(ValueError):
-            sampler(p)
-    # garbage data chunk quarantines through the MP3 walk's ValueError
-    with pytest.raises(ValueError):
-        decode_wav(_riff_wrap(fmt, b"not mpeg data at all"))
 
 
 def test_au_decode_matrix_and_fixture_rotation(spark):
@@ -5596,8 +5067,8 @@ def test_caf_decode_matrix_and_fixture_rotation(spark):
     """Apple CAF (r11): 'caff' header, signed-64-bit chunk sizes with
     the to-EOF -1 'data' sentinel, and per-format DELEGATION — 'lpcm'
     via the float/endian flags (int 16/24/32 both orders, float
-    32/64 to the grid), 'ima4' via the shared AIFC packet decoder,
-    'ulaw'/'alaw' via the G.711 tables; 'aac '/'alac' quarantine.
+    32/64 to the grid), 'ulaw'/'alaw' via the G.711 tables;
+    'ima4'/'aac '/'alac' quarantine.
     The mixed-audio fixture rides the 16-bit contract at doc_id % 96
     == 72 under the unchanged ehash oracle."""
     from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
@@ -5607,7 +5078,6 @@ def test_caf_decode_matrix_and_fixture_rotation(spark):
         audio_energy_hash,
         decode_caf,
         decode_media,
-        encode_ima4,
         synthesize_mixed_audio_from_text,
     )
 
@@ -5626,22 +5096,6 @@ def test_caf_decode_matrix_and_fixture_rotation(spark):
     d = decode_caf(_caf_payload(raw))
     assert d["n_frames"] == 200 and d["sample_rate"] == 8000
     assert decode_media(_caf_payload(raw), "audio/x-caf")["kind"] == "audio"
-    # ima4-in-CAF reuses the AIFC packet decoder verbatim
-    sin = (8000 * np.sin(2 * np.pi * np.arange(4000) / 200)).astype(np.int16)
-    aifc = encode_ima4(sin, 8000)
-    si = aifc.find(b"SSND")
-    (ssz,) = struct.unpack(">I", aifc[si + 4 : si + 8])
-    packets = aifc[si + 16 : si + 8 + ssz]
-    desc = struct.pack(">d4sIIIII", 8000.0, b"ima4", 0, 34, 64, 1, 0)
-    caf = (
-        b"caff" + struct.pack(">HH", 1, 0)
-        + b"desc" + struct.pack(">q", len(desc)) + desc
-        + b"data" + struct.pack(">q", -1) + bytes(4) + packets
-    )
-    s = _caf_samples(caf)[0]
-    err = s[: len(sin)].astype(np.float64) - sin
-    snr = 10 * np.log10((sin.astype(np.float64) ** 2).mean() / (err**2).mean())
-    assert snr > 30, snr
     # G.711-in-CAF pins the byte orientation
     desc = struct.pack(">d4sIIIII", 8000.0, b"ulaw", 0, 1, 1, 1, 16)
     caf = (
@@ -5650,15 +5104,16 @@ def test_caf_decode_matrix_and_fixture_rotation(spark):
         + b"data" + struct.pack(">q", -1) + bytes(4) + b"\xff\x7f"
     )
     assert _caf_samples(caf)[0][0] == 0
-    # transform codecs quarantine honestly
-    desc = struct.pack(">d4sIIIII", 8000.0, b"aac ", 0, 0, 1024, 2, 0)
-    caf = (
-        b"caff" + struct.pack(">HH", 1, 0)
-        + b"desc" + struct.pack(">q", len(desc)) + desc
-        + b"data" + struct.pack(">q", -1) + bytes(4)
-    )
-    with pytest.raises(NotImplementedError, match="codec libraries"):
-        _caf_samples(caf)
+    # codecs with no decode arm quarantine honestly
+    for fmt in (b"aac ", b"ima4"):
+        desc = struct.pack(">d4sIIIII", 8000.0, fmt, 0, 0, 1024, 2, 0)
+        caf = (
+            b"caff" + struct.pack(">HH", 1, 0)
+            + b"desc" + struct.pack(">q", len(desc)) + desc
+            + b"data" + struct.pack(">q", -1) + bytes(4)
+        )
+        with pytest.raises(NotImplementedError, match="codec libraries"):
+            _caf_samples(caf)
     good = _caf_payload(raw)
     for cut in (6, 20, 50):
         try:
@@ -5746,12 +5201,9 @@ def test_ogg_flac_delegation_and_vorbis_opus_triage(spark):
     reassembly across pages. Ogg-FLAC DECODES — the native fLaC
     stream is rebuilt from the first packet's embedded STREAMINFO
     (re-flagged last) plus the audio packets and delegated to the
-    FLAC machinery; Opus gets identification-header triage with
-    last-granule durations (48 kHz granules minus pre-skip); r13:
-    Vorbis decodes REAL samples, so the header-only synthetic stream
-    here exercises the DEGRADATION path — its junk packets fail the
-    sample layer and decode_ogg falls back to the same triage dict
-    (rms/peak null rather than wrong). The mixed-audio fixture
+    FLAC machinery; Vorbis and Opus get identification-header triage
+    with last-granule durations (Opus: 48 kHz granules minus
+    pre-skip), rms/peak null rather than wrong. The mixed-audio fixture
     ships mono FLAC docs at doc_id % 12 == 8 as Ogg-FLAC under the
     unchanged ehash oracle."""
     from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
@@ -6460,9 +5912,8 @@ def test_mkv_float_nan_samples_are_corruption():
 def test_mkv_video_triage_and_transform_codec_quarantine():
     """Video tracks get the metadata-before-decode shape: real dims,
     codec id, block-frame count, declared duration — no fake pixels.
-    r13: A_VORBIS decodes for real, so a headerless track exercises
-    the DEGRADATION path — decode_mkv falls back to track-metadata
-    triage while the sample layer raises the malformed-file error."""
+    Transform audio codecs (A_VORBIS here) get track-metadata triage
+    from decode_mkv while the sample layer quarantines by name."""
     from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
         _ebml_el,
         _ebml_uint_body,
@@ -6522,10 +5973,7 @@ def test_mkv_video_triage_and_transform_codec_quarantine():
     assert meta["kind"] == "audio" and meta["codec"] == "vorbis"
     assert meta["sample_rate"] == 48000 and meta["n_channels"] == 2
     assert "rms" not in meta
-    # r13: A_VORBIS decodes for real now, so a track with NO
-    # CodecPrivate headers is MALFORMED (ValueError), not a named
-    # codec quarantine — decode_mkv above degrades to triage
-    with pytest.raises(ValueError, match="lace 3 packets"):
+    with pytest.raises(NotImplementedError, match="A_VORBIS"):
         _mkv_audio_samples(payload)
 
 
@@ -7265,107 +6713,6 @@ def test_bmp_os2_core_header_decodes():
         _bmp_pixels(make_core(bgr)[:26].ljust(64, b"\x00")[:18] + struct.pack("<HHHH", 4, 4, 1, 4) + bytes(200))
 
 
-# ---------------------------------------------------------------- #
-# HEIF / HEIC / AVIF triage — r11                                    #
-# ---------------------------------------------------------------- #
-
-
-def _heif_fixture(brand=b"heic", item=b"hvc1", dims=((512, 512), (4032, 3024))):
-    def box(t, body):
-        return struct.pack(">I", len(body) + 8) + t + body
-
-    def full(t, body, version=0):
-        return box(t, bytes([version]) + bytes(3) + body)
-
-    infe = full(b"infe", struct.pack(">HH", 1, 0) + item + b"img\x00", version=2)
-    iinf = full(b"iinf", struct.pack(">H", 1) + infe)
-    ipco = box(b"ipco", b"".join(full(b"ispe", struct.pack(">II", *d)) for d in dims))
-    meta = full(
-        b"meta",
-        box(b"hdlr", bytes(4) + b"pict" + bytes(12)) + iinf + box(b"iprp", ipco),
-    )
-    return box(b"ftyp", brand + bytes(4) + b"mif1" + brand) + meta + box(
-        b"mdat", bytes(64)
-    )
-
-
-def test_heif_avif_container_triage(spark):
-    """HEIC/AVIF (the phone-photo and modern-web stills): the meta
-    FullBox walk resolves the codec from infe item types, the canvas
-    dims from the LARGEST ispe (grid-tiled photos carry per-tile
-    entries too), and the coded-item count — real metadata, honest
-    NotImplementedError on pixel access (HEVC/AV1 need codec libs),
-    per-row quarantine through decode_features."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _image_pixels,
-        decode_features,
-        decode_heif,
-    )
-
-    m = decode_heif(_heif_fixture())
-    assert m == {
-        "kind": "image", "codec": "hevc",
-        "width": 4032, "height": 3024, "n_frames": 1,
-    }
-    m = decode_heif(_heif_fixture(brand=b"avif", item=b"av01"))
-    assert m["codec"] == "av1" and m["width"] == 4032
-    with pytest.raises(NotImplementedError, match="codec library"):
-        _image_pixels(_heif_fixture())
-    good = _heif_fixture()
-    for cut in (6, 20, 40, len(good) - 10):
-        try:
-            decode_heif(good[:cut])
-        except (ValueError, NotImplementedError):
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-    with pytest.raises(ValueError, match="brand"):
-        decode_heif(b"\x00\x00\x00\x10ftypisom" + bytes(8))
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(_heif_fixture()), "image/heic"),
-            (2, bytearray(_heif_fixture(brand=b"avif", item=b"av01")), "image/avif"),
-            (3, bytearray(good[:25]), "image/heic"),
-        ],
-        "doc_id long, payload binary, mime string",
-    )
-    rows = {r.doc_id: r for r in decode_features(df).collect()}
-    assert rows[1].ok and rows[1].codec == "hevc" and rows[1].width == 4032
-    assert rows[2].ok and rows[2].codec == "av1"
-    assert not rows[3].ok
-
-
-# --- MPEG Layer III sample decode (r12) -------------------------------------
-# Gating model = the progressive-JPEG precedent for lossy paths: an
-# encoder twin exercises the same normative tables and transforms as
-# the decoder, and the round trip is gated on PCM property invariants
-# (silence->silence exact, SNR floor, tone frequency recovery, RMS
-# bounds) rather than byte equality, which lossy coding cannot give.
-# Reference parity: the reference repo has no audio code at all; this
-# is [EXT] surface (SURVEY.md section 2.3).
-
-from aws_etl_dados_publicos_cnpj_spark.operators import _mp3_tables as m3t
-from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-    _mp3_decode_samples,
-    _mp3_lossy_payload,
-    _Mp3BitWriter,
-    decode_mp3 as _decode_mp3,
-)
-
-_REAL_MP3 = (
-    "/usr/lib/google-cloud-sdk/platform/gsutil/gslib/tests/test_data/test.mp3"
-)
-
-
-def _bl_noise(n, seed=5, amp=0.4):
-    rng = np.random.default_rng(seed)
-    w = rng.standard_normal(n)
-    W = np.fft.rfft(w)
-    W[int(len(W) * 0.5):] = 0
-    x = np.fft.irfft(W, n)
-    return amp * x / np.abs(x).max()
-
-
 def _aligned_snr(x, y, search=3000, win=4000):
     best = (-99.0, 0, 0.0)
     for d in range(search):
@@ -7382,417 +6729,6 @@ def _aligned_snr(x, y, search=3000, win=4000):
         if snr > best[0]:
             best = (snr, d, a)
     return best
-
-
-def test_mp3_tables_structural_validation():
-    """Every activated huffman table passed Kraft-equality +
-    prefix-freeness; the quarantined set is exactly the documented
-    one; both count1 tables are live; scalefactor bands partition
-    576/192 by construction (module import enforces it)."""
-    assert set(m3t.HUFF_PAIR) == {1, 2, 3, 5, 6, 9, 10}
-    assert 0 not in m3t.HUFF_UNVERIFIED  # table 0 is the empty table
-    # 7 = Kraft-repaired but externally unverified (r13 quarantine)
-    assert {7, 8, 11, 12, 13, 15, 16, 24} <= m3t.HUFF_UNVERIFIED
-    assert set(m3t.COUNT1) == {0, 1}
-    for tid, (dim, linbits, codes) in m3t.HUFF_PAIR.items():
-        assert len(codes) == dim * dim
-    assert len(m3t.synthesis_window()) == 512
-
-
-def test_mp3_filterbank_near_perfect_reconstruction():
-    """The landed synthesis window reconstructs through the full
-    32-band polyphase at the spec filterbank's 481-sample delay. The
-    raw spec transcription measured ~27 dB (local errors); the
-    PR-refined landed table must hold >= 70 dB — a few wrong taps or
-    a wrong mirror measurably destroy this."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp3_analysis,
-        _mp3_synth_granule,
-    )
-
-    rng = np.random.default_rng(7)
-    n_slots = 720  # 40 granules
-    x = rng.standard_normal(n_slots * 32)
-    sub = _mp3_analysis(x)
-    state = {"V": np.zeros(1024)}
-    out = np.concatenate([
-        _mp3_synth_granule(sub[g * 18 : (g + 1) * 18].T, state)
-        for g in range(n_slots // 18)
-    ])
-    d = 481
-    y = out[d:]
-    xx = x[: len(y)]
-    a = np.dot(y, xx) / np.dot(y, y)
-    err = xx - a * y
-    snr = 10 * np.log10(np.dot(xx, xx) / np.dot(err, err))
-    assert snr > 70.0, f"filterbank PR degraded: {snr:.1f} dB"
-    assert abs(a - 1.0) < 0.01
-
-
-def test_mp3_window_obeys_normative_mirror_law():
-    """r13: the landed window sits exactly on the normative table's
-    mirror symmetry |D[i]| == |D[512-i]| at every non-phase-0 tap
-    (the r12 refit violated it by up to 5454/65536 — the r12 advice
-    finding). Phase-0 taps (i = 32m) are exempt: their values are
-    PR-unidentifiable and documented as such in the provenance
-    block."""
-    K = [int(round(v * 65536)) for v in m3t.synthesis_window()]
-    for i in range(1, 256):
-        if i % 32 == 0:
-            continue
-        assert abs(K[i]) == abs(K[512 - i]), (i, K[i], K[512 - i])
-
-
-def test_mp3_mdct_pair_is_exact():
-    """Encoder forward MDCT (factor 4/36) against the decoder's IMDCT
-    + sine window + overlap-add: TDAC must reconstruct to float
-    precision (no quantization in this pair)."""
-    sin_win = np.sin(np.pi / 36.0 * (np.arange(36) + 0.5))
-    cosm = np.cos(
-        np.pi / 72.0 * (2 * np.arange(36)[:, None] + 1 + 18)
-        * (2 * np.arange(18)[None, :] + 1)
-    )
-    rng = np.random.default_rng(1)
-    s = rng.standard_normal(18 * 8)
-    prev = np.zeros(18)
-    Xs = []
-    for g in range(8):
-        cur = s[g * 18 : (g + 1) * 18]
-        z = np.concatenate([prev, cur]) * sin_win
-        Xs.append((4.0 / 36.0) * (z @ cosm))
-        prev = cur
-    ov = np.zeros(18)
-    out = []
-    for X in Xs:
-        raw = (cosm @ X) * sin_win
-        out.append(raw[:18] + ov)
-        ov = raw[18:]
-    out = np.concatenate(out)
-    got, ref = out[18:], s[: len(out) - 18]
-    assert np.allclose(got, ref, atol=1e-9)
-
-
-def test_mp3_silence_round_trip_exact():
-    p = _mp3_lossy_payload(np.zeros(3 * 1152))
-    s, rate, nch = _mp3_decode_samples(p)
-    assert rate == 44100 and nch == 1
-    assert s.shape[0] == 3 * 1152
-    assert np.abs(s).max() == 0.0
-    d = _decode_mp3(p)
-    assert d["rms"] == 0.0 and d["peak"] == 0.0
-
-
-def test_mp3_round_trip_snr_and_rms():
-    """Band-limited noise through the encoder twin: SNR above the
-    table-10 quantization floor, unit scale, RMS preserved within the
-    lossy bound — mono and stereo."""
-    n = 6 * 1152
-    x = _bl_noise(n)
-    p = _mp3_lossy_payload(x)
-    s, rate, nch = _mp3_decode_samples(p)
-    assert (rate, nch) == (44100, 1)
-    snr, delay, a = _aligned_snr(x, s[:, 0])
-    assert snr > 14.0, f"round-trip SNR {snr:.1f} dB"
-    assert 0.9 < a < 1.1
-    # RMS bound on the decoded tail (skip the filterbank warm-up)
-    got = s[delay:, 0][: n - delay]
-    assert abs(np.sqrt(np.mean(got**2)) / np.sqrt(np.mean(x**2)) - 1) < 0.25
-    x2 = np.stack([x, -0.5 * x], axis=1)
-    s2, _, nch2 = _mp3_decode_samples(_mp3_lossy_payload(x2))
-    assert nch2 == 2
-    for ch, ref in ((0, x), (1, -0.5 * x)):
-        snr, _, a = _aligned_snr(ref, s2[:, ch])
-        assert snr > 14.0 and 0.8 < abs(a) < 1.25
-
-
-def test_mp3_tone_frequency_recovery():
-    n = 6 * 1152
-    t = np.arange(n)
-    x = 0.5 * np.sin(2 * np.pi * 1000 * t / 44100)
-    s, _, _ = _mp3_decode_samples(_mp3_lossy_payload(x))
-    y = s[1200 : 1200 + 4096, 0] * np.hanning(4096)
-    f = np.fft.rfftfreq(4096, 1 / 44100)
-    peak = f[np.argmax(np.abs(np.fft.rfft(y)))]
-    assert abs(peak - 1000.0) < 11.0  # one FFT bin
-
-
-def test_mp3_real_world_stream_decodes():
-    """The box carries one REAL third-party MP3 (gsutil's Apache-2.0
-    test fixture): MPEG-2 LSF, 22.05 kHz mono, ID3v2-prefixed, LAME
-    bit-reservoir layout (main_data_begin up to 255) — and silent, so
-    the full LSF side-info walk + reservoir + zero-spectrum DSP chain
-    must come back as EXACT digital silence at the triage-exact
-    sample count."""
-    import os
-
-    if not os.path.exists(_REAL_MP3):
-        pytest.skip("gsutil test fixture not on this box")
-    p = open(_REAL_MP3, "rb").read()
-    s, rate, nch = _mp3_decode_samples(p)
-    assert (rate, nch) == (22050, 1)
-    assert s.shape == (25920, 1)
-    assert np.abs(s).max() == 0.0
-    d = _decode_mp3(p)
-    assert d["n_frames"] == 25920 and d["rms"] == 0.0
-
-
-def test_mp3_unverified_table_quarantines_by_name():
-    """A granule selecting a huffman table whose transcription failed
-    structural validation must quarantine NAMING the table — never
-    desync silently. Crafted frame: table_select=13 with one
-    big_values pair."""
-    w = _Mp3BitWriter()
-    w.write(0, 9)  # main_data_begin
-    w.write(0, 5)  # private (mono)
-    w.write(0, 4)  # scfsi
-    for _gr in range(2):
-        w.write(100, 12)  # part2_3_length
-        w.write(1, 9)  # big_values
-        w.write(210, 8)  # global_gain
-        w.write(0, 4)  # scalefac_compress
-        w.write(0, 1)  # window_switching
-        for _ in range(3):
-            w.write(13, 5)  # table 13: quarantined
-        w.write(0, 4)
-        w.write(0, 3)
-        w.write(0, 1)
-        w.write(0, 1)
-        w.write(0, 1)
-    side = w.bytes_padded()
-    assert len(side) == 17
-    h = (0x7FF << 21) | (3 << 19) | (1 << 17) | (1 << 16) | (9 << 12) | (3 << 6)
-    hdr = h.to_bytes(4, "big")
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp3_frame_info,
-    )
-    frame_len = _mp3_frame_info(hdr, 0)[0]
-    payload = hdr + side + bytes(frame_len - 4 - len(side))
-    with pytest.raises(NotImplementedError, match="table 13"):
-        _mp3_decode_samples(payload)
-    # decode_mp3 degrades to triage stats instead of failing the doc
-    d = _decode_mp3(payload)
-    assert d["n_frames"] == 1152 and "rms" not in d
-
-
-def test_mp3_intensity_stereo_and_layer2_quarantine():
-    # r12: MPEG-1 intensity is IMPLEMENTED (closed-form split) — a
-    # dual-coded stream re-flagged joint+intensity still decodes: the
-    # right channel's data runs to its real zero boundary, so the
-    # intensity region is the trailing zeros and both channels
-    # round-trip at the usual twin SNR
-    x = _bl_noise(2 * 1152)
-    p = bytearray(_mp3_lossy_payload(np.stack([x, x], axis=1)))
-    p[3] = (p[3] & 0x0F) | (1 << 6) | (1 << 4)  # joint stereo + intensity
-    s, _, nch = _mp3_decode_samples(bytes(p))
-    assert nch == 2 and np.abs(s).max() > 0
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp3_stream_payload,
-    )
-    with pytest.raises(NotImplementedError, match="Layer 2"):
-        _mp3_decode_samples(_mp3_stream_payload(layer=2))
-
-
-def test_mp3_truncated_and_corrupt_streams_quarantine():
-    """Cut/garbled twin streams must raise ValueError (or the honest
-    NotImplementedError), never crash differently or loop."""
-    p = _mp3_lossy_payload(_bl_noise(2 * 1152))
-    with pytest.raises(ValueError):
-        _mp3_decode_samples(p[:2])
-    # cutting mid-frame drops that frame (complete-frames-only walk)
-    s_cut, _, _ = _mp3_decode_samples(p[: len(p) - 7])
-    assert s_cut.shape[0] == 1152
-    for off in (8, 23, 64, 301):
-        q = bytearray(p)
-        q[min(off, len(q) - 1)] ^= 0x55
-        try:
-            _mp3_decode_samples(bytes(q))
-        except (ValueError, NotImplementedError):
-            pass
-
-
-def test_mp3_in_wav_decodes_real_samples():
-    """The WAV format-tag-0x55 arm now routes its data chunk through
-    the real Layer III decoder (was: honest triage-only quarantine)."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _pcm16_samples,
-    )
-
-    x = _bl_noise(2 * 1152)
-    mpeg = _mp3_lossy_payload(x)
-    fmt = struct.pack("<HHIIHH", 0x55, 1, 44100, 16000, 1, 0)
-    wav = (
-        b"RIFF" + struct.pack("<I", 20 + len(fmt) + len(mpeg)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(mpeg)) + mpeg
-    )
-    s = _pcm16_samples(wav)
-    assert s.dtype == np.int16 and len(s) == 2 * 1152
-    bare = _pcm16_samples(mpeg)
-    assert np.array_equal(s, bare)
-
-
-def test_mpeg_layer1_round_trip():
-    """Layer I decode (r12): everything is closed-form math (the B.1
-    scalefactor table IS 2*2^(-i/3); the offset code is formulaic), so
-    the twin round trip gates the full path at the quantizer's own
-    SNR — near-transparent, unlike the table-10-limited Layer III
-    twin. Silence exact; noise >60 dB at unit scale; stereo."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp1_payload,
-    )
-
-    p = _mp1_payload(np.zeros(2 * 384))
-    s, rate, nch = _mp3_decode_samples(p)
-    assert (rate, nch) == (32000, 1) and np.abs(s).max() == 0.0
-    n = 12 * 384
-    x = _bl_noise(n, seed=2)
-    s, _, _ = _mp3_decode_samples(_mp1_payload(x))
-    snr, delay, a = _aligned_snr(x, s[:, 0], search=1500, win=3000)
-    assert snr > 60.0, f"Layer I round-trip SNR {snr:.1f} dB"
-    assert abs(a - 1.0) < 0.01
-    assert delay == 481  # pure filterbank delay: no MDCT stage in L1
-    x2 = np.stack([x, -x], axis=1)
-    s2, _, nch2 = _mp3_decode_samples(_mp1_payload(x2))
-    assert nch2 == 2
-    snr2, _, a2 = _aligned_snr(-x, s2[:, 1], search=1500, win=3000)
-    # stereo halves the per-channel budget: 448 kbps / 32 kHz / 2 ch
-    # leaves a 6-bit allocation -> the quantizer's own ~33 dB
-    assert snr2 > 25.0 and abs(a2 - 1.0) < 0.02
-    d = _decode_mp3(_mp1_payload(x))
-    assert d["rms"] > 0 and d["n_frames"] == n
-
-
-def test_mpeg_layer1_hostile_payloads():
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp1_payload,
-    )
-
-    p = bytearray(_mp1_payload(_bl_noise(384)))
-    # allocation 15 is forbidden: force the first 4 alloc bits to 1111
-    q = bytearray(p)
-    q[4] |= 0xF0
-    with pytest.raises(ValueError, match="allocation 15"):
-        _mp3_decode_samples(bytes(q))
-    # Layer I intensity (joint) stereo stays quarantined
-    x2 = np.stack([_bl_noise(384), _bl_noise(384)], axis=1)
-    j = bytearray(_mp1_payload(x2))
-    j[3] = (j[3] & 0x0F) | (1 << 6)
-    with pytest.raises(NotImplementedError, match="intensity"):
-        _mp3_decode_samples(bytes(j))
-    # Layer II quarantine wording carries the doctrine
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp3_stream_payload,
-    )
-    with pytest.raises(NotImplementedError, match="allocation tables"):
-        _mp3_decode_samples(_mp3_stream_payload(layer=2))
-
-
-def test_layer2_quantization_machinery_is_closed_form():
-    """r13 verdict item #6: the Layer II un-quarantine ATTEMPT
-    (documented in SCALE.md's residue map). Outcome: Table B.4 — the
-    per-class quantization machinery (grouping, codeword bits, the C/D
-    requantization coefficients) — is fully closed-form, derivable
-    from the uniform-midtread reconstruction through the inverted-MSB
-    offset code, exactly like the Layer I formula already shipped in
-    ``_layer1_frame_subbands``:
-
-        nb      = ceil(log2(steps + 1))          (code bits / sample)
-        grouped = 3-sample base-``steps`` packing strictly saves bits
-        bits    = ceil(log2(steps**3)) if grouped else 3 * 0 + nb
-        C       = 2**nb / steps
-        D       = 1 - (steps - 1) / 2**nb
-
-    which reduces, for steps = 2**nb - 1, to Layer I's inline
-    ``(frac + 2**(1-nb)) * 2**nb / (2**nb - 1)``.  The pinned decimals
-    below are the 11-digit values the spec prints for Table B.4; all
-    34 of them agree with the closed forms to <= 1e-10 (the spec's own
-    last-digit truncation), so the machinery is validated by
-    construction — the same gate class as the Layer I landing.
-
-    What this does NOT validate — and why Layer II sample decode stays
-    a named quarantine: tables B.2a-d (which class LIST each subband
-    uses per allocation table, sblimit per table, and the
-    (sample-rate, bitrate)->table selection matrix) are ~120
-    independent small integers that drive stream PARSING.  They have
-    no generating formula, no on-box fixture (the only real MPEG
-    stream on this box is Layer III), and the frame-budget property is
-    an inequality with >3x slack in both directions (a maximal B.2a
-    allocation would need ~32k bits against a 9216-bit 384 kbps frame,
-    while real frames route unused bits to ancillary data by design —
-    there is no exact-fill invariant to solve against).  A wrong B.2
-    entry desyncs or silently mis-decodes, so the doctrine says
-    quarantine by name."""
-    import math
-
-    # Table B.4, transcribed: steps -> (grouped, bits per codeword
-    # [triplet bits when grouped], C, D) at the spec's printed digits.
-    B4 = {
-        3: (True, 5, 1.33333333333, 0.50000000000),
-        5: (True, 7, 1.60000000000, 0.50000000000),
-        7: (False, 3, 1.14285714286, 0.25000000000),
-        9: (True, 10, 1.77777777777, 0.50000000000),
-        15: (False, 4, 1.06666666666, 0.12500000000),
-        31: (False, 5, 1.03225806452, 0.06250000000),
-        63: (False, 6, 1.01587301587, 0.03125000000),
-        127: (False, 7, 1.00787401575, 0.01562500000),
-        255: (False, 8, 1.00392156863, 0.00781250000),
-        511: (False, 9, 1.00195694716, 0.00390625000),
-        1023: (False, 10, 1.00097751711, 0.00195312500),
-        2047: (False, 11, 1.00048851979, 0.00097656250),
-        4095: (False, 12, 1.00024420024, 0.00048828125),
-        8191: (False, 13, 1.00012208522, 0.00024414063),
-        16383: (False, 14, 1.00006103888, 0.00012207031),
-        32767: (False, 15, 1.00003051851, 0.00006103516),
-        65535: (False, 16, 1.00001525902, 0.00003051758),
-    }
-    assert len(B4) == 17
-    for steps, (grouped, bits, c_pin, d_pin) in B4.items():
-        nb = math.ceil(math.log2(steps + 1))
-        grouped_cf = math.ceil(math.log2(steps**3)) < 3 * nb
-        bits_cf = math.ceil(math.log2(steps**3)) if grouped_cf else nb
-        c_cf = 2.0**nb / steps
-        d_cf = 1.0 - (steps - 1) / 2.0**nb
-        assert grouped_cf == grouped, steps
-        assert bits_cf == bits, steps
-        assert abs(c_cf - c_pin) <= 1e-10, steps
-        assert abs(d_cf - d_pin) <= 1e-10, steps
-        if steps == 2**nb - 1:
-            # the Layer I reduction: C, D as shipped in
-            # _layer1_frame_subbands' inline requantization
-            assert abs(c_cf - 2.0**nb / (2**nb - 1)) < 1e-15
-            assert abs(d_cf - 2.0 ** (1 - nb)) < 1e-15
-    # the grouping rule reproduces exactly the spec's grouped classes
-    assert {s for s, v in B4.items() if v[0]} == {3, 5, 9}
-    # grouped packing is tight: base-steps fits the triplet bits and
-    # one fewer bit would not hold steps**3 codewords
-    for steps in (3, 5, 9):
-        bits = B4[steps][1]
-        assert steps**3 <= 2**bits < 2 * steps**3
-
-
-def test_mp3_forbidden_table_select_is_corruption():
-    """Fuzz r12 finding: tables 4/14 do not exist in the spec — a
-    stream selecting one must raise ValueError (corruption), not leak
-    a KeyError through the Arrow batch."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp3_frame_info,
-    )
-
-    w = _Mp3BitWriter()
-    w.write(0, 9); w.write(0, 5); w.write(0, 4)
-    for _gr in range(2):
-        w.write(100, 12); w.write(1, 9); w.write(210, 8); w.write(0, 4)
-        w.write(0, 1)
-        for _ in range(3):
-            w.write(14, 5)  # forbidden table
-        w.write(0, 4); w.write(0, 3); w.write(0, 1); w.write(0, 1); w.write(0, 1)
-    side = w.bytes_padded()
-    h = (0x7FF << 21) | (3 << 19) | (1 << 17) | (1 << 16) | (9 << 12) | (3 << 6)
-    hdr = h.to_bytes(4, "big")
-    frame_len = _mp3_frame_info(hdr, 0)[0]
-    payload = hdr + side + bytes(frame_len - 4 - len(side))
-    with pytest.raises(ValueError, match="forbidden huffman table"):
-        _mp3_decode_samples(payload)
 
 
 def test_webp_animation_canvas_is_data_backed():
@@ -7957,16 +6893,6 @@ def test_real_world_cross_format_image_agreement():
         got = px(name, _image_pixels)
         assert np.array_equal(got, ref), f"{name} disagrees with python.png"
 
-    # r12: XBM (a real X11 C-source bitmap) must equal the PBM arm's
-    # bilevel rendering exactly — two text formats, two parsers
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _xbm_pixels,
-    )
-
-    assert np.array_equal(
-        px("python.xbm", _xbm_pixels), px("python.pbm", _pnm_pixels)
-    )
-
     gif = px("python.gif", _gif_pixels).astype(np.int64)
     assert gif.shape == ref.shape
     assert np.abs(gif - ref.astype(np.int64)).mean() < 20  # 8-bit palette
@@ -7987,17 +6913,14 @@ def test_real_world_cross_format_image_agreement():
         px("python.webp", _webp_pixels)
 
 
-def test_ras_and_xbm_twins_and_hostile_payloads():
-    """Sun Raster + XBM (r12): lossless encoder twins across the
-    type/depth matrix; corrupt payloads quarantine as ValueError;
-    unimplemented variants quarantine by name."""
+def test_ras_twins_and_hostile_payloads():
+    """Sun Raster (r12): lossless encoder twin across the type/depth
+    matrix; corrupt payloads quarantine as ValueError; unimplemented
+    variants quarantine by name."""
     from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
         _ras_pixels,
-        _xbm_pixels,
         decode_ras,
-        decode_xbm,
         encode_ras,
-        encode_xbm,
     )
 
     rng = np.random.RandomState(9)
@@ -8011,10 +6934,6 @@ def test_ras_and_xbm_twins_and_hostile_payloads():
     edge = np.full((2, 24, 3), 0x80, dtype=np.uint8)
     edge[0, 0] = (0x80, 1, 0x80)
     assert np.array_equal(_ras_pixels(encode_ras(edge, rtype=2)), edge)
-
-    bilevel = np.repeat((rng.randint(0, 2, (5, 11, 1)) * 255), 3, axis=2).astype(np.uint8)
-    assert np.array_equal(_xbm_pixels(encode_xbm(bilevel)), bilevel)
-    assert decode_xbm(encode_xbm(bilevel))["width"] == 11
 
     good = encode_ras(px)
     with pytest.raises(ValueError):
@@ -8030,461 +6949,6 @@ def test_ras_and_xbm_twins_and_hostile_payloads():
     odd[20:24] = struct.pack(">I", 5)  # rtype 5: not a real type
     with pytest.raises(NotImplementedError, match="type 5"):
         _ras_pixels(bytes(odd))
-
-    with pytest.raises(ValueError, match="width/height"):
-        _xbm_pixels(b"static char bits[] = {0x00};")
-    with pytest.raises(ValueError, match="shorter"):
-        _xbm_pixels(b"#define w_width 64\n#define w_height 64\n"
-                    b"static char b[] = {0x00};")
-    with pytest.raises(ValueError, match="ASCII"):
-        _xbm_pixels(b"#define \xff\xfe")
-
-
-def test_mp3_intensity_stereo_closed_form():
-    """MPEG-1 intensity stereo (r12): the split is the normative
-    FORMULA ratio = tan(is_pos*pi/12) — no transcribed table, so the
-    doctrine admits it — and everything after the split is linear, so
-    decoded L/R of an intensity twin stream must be exactly
-    proportional: L*(1/(1+r)) == R*(r/(1+r)) per sample."""
-    x = _bl_noise(3 * 1152, seed=4)
-    for pos in (0, 2, 3, 6):
-        p = _mp3_lossy_payload(x, intensity_pos=pos)
-        s, rate, nch = _mp3_decode_samples(p)
-        assert nch == 2
-        left, right = s[:, 0], s[:, 1]
-        ratio = np.tan(pos * np.pi / 12.0)
-        err = np.abs(left / (1.0 + ratio) - right * (ratio / (1.0 + ratio)))
-        assert err.max() < 1e-12
-        if pos == 0:
-            assert np.abs(left).max() == 0.0 and np.abs(right).max() > 0
-        if pos == 3:
-            assert np.array_equal(left, right)
-        if pos == 6:
-            assert np.abs(right).max() < 1e-12 and np.abs(left).max() > 0
-    # the content survives: the right channel at pos=0 carries the
-    # full mono signal at the usual twin SNR
-    x6 = _bl_noise(6 * 1152, seed=4)
-    s0, _, _ = _mp3_decode_samples(_mp3_lossy_payload(x6, intensity_pos=0))
-    snr, _, a = _aligned_snr(x6, s0[:, 1])
-    assert snr > 14.0 and 0.9 < a < 1.1
-
-
-def test_mp3_intensity_is_pos_7_and_lsf_quarantine():
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp3_intensity,
-    )
-
-    g = {"block_type": 0, "window_switching": 0, "mixed_block": 0}
-    xl = np.arange(576, dtype=np.float64)
-    xr = np.ones(576)
-    # is_pos 7 = intensity OFF for the band: with ms_stereo also on,
-    # those bands decode as MS
-    sf7 = ([7] * 22, [[0, 0, 0] for _ in range(13)])
-    L, R = _mp3_intensity([xl, xr], g, sf7, 0, 44100, ms=True, lsf=False)
-    r2 = np.sqrt(2.0)
-    assert np.allclose(L, (xl + xr) / r2) and np.allclose(R, (xl - xr) / r2)
-    # without ms, is_pos 7 leaves both channels untouched
-    L2, R2 = _mp3_intensity([xl, xr], g, sf7, 0, 44100, ms=False, lsf=False)
-    assert np.array_equal(L2, xl) and np.array_equal(R2, xr)
-    # the LSF position-coding scheme stays quarantined by name
-    with pytest.raises(NotImplementedError, match="LSF intensity"):
-        _mp3_intensity([xl, xr], g, sf7, 0, 44100, ms=False, lsf=True)
-    # bands below the right channel's zero boundary never split: with
-    # zero_pos past the end, intensity is a no-op
-    L3, R3 = _mp3_intensity(
-        [xl, xr], g, ([3] * 22, [[0, 0, 0]] * 13), 576, 44100,
-        ms=False, lsf=False,
-    )
-    assert np.array_equal(L3, xl) and np.array_equal(R3, xr)
-
-
-def test_8svx_and_voc_decode_real_fixtures_and_twins():
-    """8SVX + VOC (r12): CPython's sndhdrdata carries real third-party
-    fixtures — a STEREO 8SVX (CHAN 6: left block then right block) and
-    a type-9 16-bit stereo VOC — gating both container walks on
-    genuine files; encoder twins gate the sample paths exactly."""
-    import os
-    import struct as _struct
-
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _8svx_payload,
-        _8svx_samples,
-        _pcm16_samples,
-        _voc_payload,
-        _voc_samples,
-        decode_8svx,
-        decode_media,
-        decode_voc,
-    )
-
-    base = "/root/.pyenv/versions/3.7.16/lib/python3.7/test/sndhdrdata"
-    if os.path.isdir(base):
-        p8 = open(os.path.join(base, "sndhdr.8svx"), "rb").read()
-        d8 = decode_8svx(p8)
-        assert (d8["n_channels"], d8["sample_rate"], d8["n_frames"]) == (2, 44100, 5)
-        pv = open(os.path.join(base, "sndhdr.voc"), "rb").read()
-        dv = decode_voc(pv)
-        assert (dv["n_channels"], dv["sample_rate"], dv["n_frames"]) == (2, 44100, 3)
-        assert dv["rms"] == 0.0  # the fixture is silence
-        assert decode_media(p8, "audio/x-8svx")["n_frames"] == 5
-        assert decode_media(pv, "audio/x-voc")["n_frames"] == 3
-
-    raw = bytes(range(1, 41))
-    want = np.frombuffer(raw, np.int8).astype(np.int16)
-    assert np.array_equal(_8svx_samples(_8svx_payload(raw))[0], want)
-    assert np.array_equal(_pcm16_samples(_8svx_payload(raw)), want)
-    s2, rate2, nch2 = _8svx_samples(_8svx_payload(raw, stereo=True))
-    assert nch2 == 2
-    assert np.array_equal(s2[0::2], want[0::2]) and np.array_equal(s2[1::2], want[1::2])
-
-    # VOC type-1 centers 8-bit to the signed convention (stats path);
-    # the fingerprint sampler refuses the centering choice (WAV-8 rule)
-    v1, r1, _ = _voc_samples(_voc_payload(raw))
-    assert r1 == 8000 and np.array_equal(v1, want.astype(np.int64) + 0 * want) or True
-    assert np.array_equal(v1, np.frombuffer(raw, np.uint8).astype(np.int16) - 128)
-    with pytest.raises(ValueError, match="centering"):
-        _pcm16_samples(_voc_payload(raw))
-    # type-9 16-bit is grid-verbatim and fingerprints
-    assert np.array_equal(
-        _pcm16_samples(_voc_payload(raw, new_format=True)),
-        np.frombuffer(raw, np.uint8).astype(np.int16),
-    )
-
-    # Fibonacci-delta expansion: hand-built vector
-    codes = bytes([0, 10, (9 << 4) | 15, (0 << 4) | 11])
-    vhdr = _struct.pack(">IIIHBBI", 4, 0, 0, 8000, 1, 1, 0x10000)
-    body = b"VHDR" + _struct.pack(">I", 20) + vhdr
-    body += b"BODY" + _struct.pack(">I", len(codes)) + codes
-    p = b"FORM" + _struct.pack(">I", 4 + len(body)) + b"8SVX" + body
-    assert np.array_equal(_8svx_samples(p)[0], [11, 32, -2, 1])
-
-    # hostile payloads quarantine
-    with pytest.raises(ValueError):
-        _8svx_samples(b"FORM\x00\x00\x00\x048SVX")  # no VHDR/BODY
-    with pytest.raises(NotImplementedError, match="multi-octave"):
-        bad = bytearray(_8svx_payload(raw))
-        bad[bad.index(b"VHDR") + 8 + 14] = 3  # ctOctave = 3
-        _8svx_samples(bytes(bad))
-    with pytest.raises(ValueError, match="checksum"):
-        bad = bytearray(_voc_payload(raw))
-        bad[24] ^= 0xFF
-        _voc_samples(bytes(bad))
-    with pytest.raises(NotImplementedError, match="codec 1"):
-        bad = bytearray(_voc_payload(raw))
-        bad[31] = 1  # type-1 codec byte -> 4-bit ADPCM
-        _voc_samples(bytes(bad))
-
-
-# --- Vorbis (r13) -------------------------------------------------------------
-
-
-def _vb():
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import vorbis
-    return vorbis
-
-
-def _vb_snr(x, y):
-    x = np.asarray(x, dtype=np.float64).ravel()
-    y = np.asarray(y, dtype=np.float64).ravel()
-    e = x - y
-    return 10 * np.log10(np.dot(x, x) / max(np.dot(e, e), 1e-30))
-
-
-def test_vorbis_codeword_assignment_matches_spec_example():
-    """The Vorbis I spec section 3.2.1 works one codebook end to end:
-    lengths [2,4,4,4,4,2,3,3] must canonically assign codewords
-    00, 0100, 0101, 0110, 0111, 10, 110, 111 — an INDEPENDENT pin on
-    the assignment algorithm (not our encoder talking to our
-    decoder)."""
-    vb = _vb()
-    words = vb._canonical_codewords([2, 4, 4, 4, 4, 2, 3, 3])
-    assert words == [
-        (2, 0b00), (4, 0b0100), (4, 0b0101), (4, 0b0110),
-        (4, 0b0111), (2, 0b10), (3, 0b110), (3, 0b111),
-    ]
-
-
-def test_vorbis_codebook_structural_validation():
-    """Over- and under-specified length lists are hard errors (the
-    in-stream analogue of the MP3 Kraft gate)."""
-    vb = _vb()
-    with pytest.raises(ValueError, match="underspecified"):
-        vb._canonical_codewords([2, 2, 2])
-    with pytest.raises(ValueError, match="overspecified|collision"):
-        vb._canonical_codewords([1, 1, 1])
-    # complete code passes
-    vb._canonical_codewords([1, 2, 2])
-
-
-def test_vorbis_floor1_inverse_db_table_is_geometric():
-    """The floor1 inverse-dB table is the closed-form geometric
-    sequence 1.0649863e-07 * 1.0649863**i — ~140 dB over 256 steps;
-    endpoints and the constant ratio pin the transcription-free
-    derivation."""
-    vb = _vb()
-    t = vb.FLOOR1_INVERSE_DB
-    assert len(t) == 256
-    assert abs(t[0] - 1.0649863e-07) < 1e-13
-    ratios = t[1:] / t[:-1]
-    assert np.allclose(ratios, 1.0649863, rtol=1e-9)
-    # full-scale endpoint lands within 1% of unity (~0.09 dB); the
-    # module docstring records this as the one documented deviation
-    # bound vs the published rendering of the table
-    assert 0.99 < t[255] < 1.01
-
-
-def test_vorbis_round_trip_matrix():
-    """Twin round trip across the full config matrix: residue types
-    0/1/2, square-polar coupling, dual-blocksize window transitions,
-    ordered length lists, lookup type 2. SNR floors sit at the twin's
-    uniform-quantizer resolution (65 levels ~32 dB; coupling spends
-    ~6 dB of headroom; 9 levels ~17 dB)."""
-    vb = _vb()
-    t = 0.5 * np.sin(2 * np.pi * 440 * np.arange(4000) / 8000)
-    st = np.stack(
-        [t, 0.3 * np.cos(2 * np.pi * 220 * np.arange(4000) / 8000)], axis=1
-    )
-    cases = [
-        (dict(), 28.0),
-        (dict(res_type=1), 28.0),
-        (dict(res_type=2), 28.0),
-        (dict(res_type=0, couple=True), 20.0),
-        (dict(res_type=2, couple=True), 20.0),
-        (dict(dual=True), 24.0),
-        (dict(dual=True, res_type=2, couple=True), 18.0),
-        (dict(levels=9, lookup2=True), 14.0),
-        (dict(ordered=True), 28.0),
-    ]
-    for kw, floor_db in cases:
-        src = st if (kw.get("couple") or kw.get("res_type") == 2) else t
-        payload = vb._vorbis_payload(src, rate=8000, **kw)
-        out, rate, ch = vb.vorbis_samples(payload)
-        assert rate == 8000
-        want = src if src.ndim == 2 else src[:, None]
-        assert out.shape == (want.shape[0], want.shape[1]), kw
-        snr = _vb_snr(want, out)
-        assert snr > floor_db, f"{kw}: SNR {snr:.1f} < {floor_db}"
-
-
-def test_vorbis_silence_is_exact_and_granule_truncates():
-    """Silence round-trips EXACT through every config (class-0
-    partitions spend no bits and decode to true zeros), and the
-    granule position truncates to the requested frame count even when
-    it falls mid-block."""
-    vb = _vb()
-    for kw in (dict(), dict(res_type=2, couple=True), dict(dual=True)):
-        z = np.zeros((2777, 2))
-        payload = vb._vorbis_payload(z, rate=44100, **kw)
-        out, rate, ch = vb.vorbis_samples(payload)
-        assert out.shape == (2777, 2) and rate == 44100
-        assert np.max(np.abs(out), initial=0.0) == 0.0
-    # one silent channel: exact zeros on that side, signal on the other
-    z = np.zeros((2500, 2))
-    z[:, 0] = 0.4 * np.sin(2 * np.pi * 300 * np.arange(2500) / 8000)
-    payload = vb._vorbis_payload(z, rate=8000, res_type=2, couple=True)
-    out, _, _ = vb.vorbis_samples(payload)
-    assert np.max(np.abs(out[:, 1]), initial=0.0) == 0.0
-    assert _vb_snr(z[:, 0], out[:, 0]) > 20.0
-
-
-def test_vorbis_tone_recovery_within_one_bin():
-    """A pure tone survives the full chain with its spectral peak in
-    the right FFT bin — the MP3-twin gate, reused."""
-    vb = _vb()
-    rate, f0 = 8000, 440.0
-    t = 0.5 * np.sin(2 * np.pi * f0 * np.arange(8192) / rate)
-    out, _, _ = vb.vorbis_samples(vb._vorbis_payload(t, rate=rate))
-    spec = np.abs(np.fft.rfft(out[:, 0] * np.hanning(len(out))))
-    peak_hz = np.argmax(spec) * rate / len(out)
-    assert abs(peak_hz - f0) <= rate / len(out) + 1e-9
-
-
-def test_vorbis_decode_ogg_integration_and_quarantines():
-    """decode_ogg returns REAL rms/peak for Vorbis now; _pcm16_samples
-    fingerprints Vorbis on the int16 grid (the MP3 rule); Opus still
-    triages; corrupt packets quarantine with named errors."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _pcm16_samples,
-        decode_ogg,
-    )
-
-    vb = _vb()
-    t = 0.4 * np.sin(2 * np.pi * 500 * np.arange(3000) / 8000)
-    payload = vb._vorbis_payload(t, rate=8000)
-    d = decode_ogg(payload)
-    assert d["codec"] == "vorbis" and d["n_frames"] == 3000
-    assert d["rms"] > 0 and d["peak"] > 0
-    s = _pcm16_samples(payload)
-    assert s.dtype == np.int16 and len(s) == 3000
-    assert abs(int(np.abs(s).max()) - d["peak"]) == 0
-    # truncating the final page mid-body is a named container error
-    with pytest.raises(ValueError, match="truncated|overread|desync"):
-        vb.vorbis_samples(payload[:-1])
-    # flipping a setup-header byte must not decode silently: the
-    # codebook gates (sync/Kraft) or the packet walk catch it
-    broken = bytearray(payload)
-    broken[120] ^= 0xFF
-    try:
-        vb.vorbis_samples(bytes(broken))
-    except (ValueError, NotImplementedError):
-        pass
-
-
-def test_vorbis_reserved_and_floor0_quarantine_by_name():
-    """Reserved residue/floor types and floor 0 raise by name instead
-    of desyncing (the honest-quarantine contract)."""
-    vb = _vb()
-    t = np.zeros(600)
-    payload = vb._vorbis_payload(t, rate=8000)
-    # patch the setup packet's floor type bits: find packet 3 via the
-    # Ogg walk, flip floor type 1 -> 0 is brittle byte surgery, so
-    # instead drive the parser directly with a crafted reader
-    r = vb._VBitReader(b"\x00\x00\x00\x00")
-    with pytest.raises(ValueError):
-        vb._read_residue(r, 1)
-
-
-def test_vorbis_window_satisfies_princen_bradley():
-    """The closed-form window obeys w[j]^2 + w[j+n/2]^2 == 1 on the
-    lapped halves — the TDAC condition the overlap-add relies on."""
-    vb = _vb()
-    n = 512
-    w = vb._vorbis_window(n, n // 2, n // 2)
-    s = w[: n // 2] ** 2 + w[n // 2 :] ** 2
-    assert np.allclose(s, 1.0, atol=1e-12)
-
-
-def test_vorbis_decode_caps_bound_hostile_setup_headers():
-    """Fuzz r13 finding: one flipped setup byte declared a VQ table of
-    ~2G cells (16-bit dim x 24-bit entries) and the parse stalled for
-    >30 s. Both caps (entries, entries*dim) must quarantine by name in
-    bounded time."""
-    import time
-
-    vb = _vb()
-    t = np.zeros(600)
-    payload = bytearray(vb._vorbis_payload(t, rate=8000))
-    payload[176] ^= 0xFF  # the fuzz mutation, verbatim
-    t0 = time.time()
-    with pytest.raises(ValueError):
-        vb.vorbis_samples(bytes(payload))
-    assert time.time() - t0 < 2.0
-    # direct cap checks
-    r = vb._VBitReader(
-        (0x564342).to_bytes(3, "little") + b"\xff\xff" + (1 << 16).to_bytes(3, "little") + bytes(64)
-    )
-    with pytest.raises(ValueError, match="decode cap"):
-        vb._read_codebook(r)
-
-
-
-
-def test_vorbis_scalar_only_codebook_in_residue_is_corruption():
-    """Fuzz r13 finding (seed 777, bitflip@271): one flipped setup
-    byte made a residue reference a codebook with no value mapping —
-    decode_vq then subscripted vq=None and leaked a TypeError through
-    the Arrow batch. Spec 8.6.2 says maptype-0 books may not be used
-    as residue value books, so this is corruption twice over: the
-    setup parse now rejects it fail-fast, and decode_vq carries a
-    belt-and-braces ValueError. Pinned on the exact mutated stream."""
-    import base64
-    import zlib
-
-    vb = _vb()
-    payload = zlib.decompress(base64.b64decode(
-        "eNrzT08PZmBigAITIQgtGX81iVGOsSy/KCmzGCTA6LKGAQXMZPQH6WRA1skIpDeeeX2OUZ0Z"
-        "olMcKFBckFiUrZtelJhWogARVSgpz8wDG4ppBMgl/oLZ0YwtrBDFjE7OYUwMLAwMLQJMHLyR"
-        "nAwsTgwx9f4JQJEudoaGdkkHBwMFER52F6eNCSYy/B4uRgtDdMR93DY/LLGRD/AwUZrqox7i"
-        "tTVpa4x+hI/Z4qs55jF+2x9/rbFXANoENEQAYjcHww8QoYDiRxZM9zEDad/jBZ8YTays5x+8"
-        "lWirOaXB7kHzQ/G/jCIHHkrbMcrumCjcpCjwR1EASDKhIKDPIOYxIswDuoAhdinzWUaZsvLp"
-        "yYYiTOiaZPYs5IfpY0LoYwXSecd92hhlwsK/f1YyaHNSYEFBBhLOfDB9zAh9bEBabVaGHqNM"
-        "XPz2lffEG9HsOyid4wh3JwtCHzuQNp0gZgdy5/N998SZMPQ5IfSxIvRxAOmXBvosjDJBwext"
-        "/97XousT/+TICtPHhtDHCaS/Z/H0M5oEBfO7/nu/T1GgUVCAEYQkmBQlnBSlChrl/6AHFmo4"
-        "z0UyjwtIT7m4qoOxho+f3237wV7dTDtNEQbGCQx6M/boSeXvk3i2EGjek/2Cb4CoXvDJ/4Py"
-        "Tf+kD/6TdvxXzvKznqPF4UP7gv+uE0Co3YGDpZ7jVzwQsfyMZ2lzQMi2g9hgd/xRfFEPcivE"
-        "m/Kg1IDFXdxAWrpAMIaREYskD5D+f+fKTqySvEBaMLrCASbJgizJB6RfLzUWAEoCAIbY0Ow="
-    ))
-    with pytest.raises(ValueError, match="scalar-only codebook"):
-        vb.vorbis_samples(payload)
-    # unit guard: a VQ read on a mapless book is ValueError, not TypeError
-    book = vb._Codebook(2, 2, [1, 1], None, 0)
-    with pytest.raises(ValueError, match="scalar-only codebook"):
-        book.decode_vq(vb._VBitReader(b"\x00"))
-
-
-def test_decode_features_survives_vorbis_rows(spark):
-    """An audio/ogg Vorbis doc through decode_features yields a normal
-    stats row with REAL rms/peak (r13), Opus triages with null rms,
-    and garbage quarantines per payload — the MP3 Arrow-batch rule."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _ogg_pages,
-        _vorbis_payload,
-        decode_features,
-    )
-
-    tone = 0.4 * np.sin(2 * np.pi * 500 * np.arange(2000) / 8000)
-    opus_head = (
-        b"OpusHead" + bytes([1, 1]) + struct.pack("<H", 0)
-        + struct.pack("<I", 16000) + bytes(3)
-    )
-    rows = [
-        (1, bytearray(_vorbis_payload(tone, rate=8000)), "audio/ogg"),
-        (2, bytearray(_ogg_pages([opus_head, b"\xff"], granules=[0, 480])),
-         "audio/ogg"),
-        (3, bytearray(b"OggSgarbage-not-a-page"), "audio/ogg"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary, mime string")
-    got = {r.doc_id: r for r in decode_features(df).collect()}
-    assert got[1].ok and got[1].codec == "vorbis"
-    assert got[1].n_frames == 2000 and got[1].rms > 0 and got[1].peak > 0
-    assert got[2].ok and got[2].codec == "opus" and got[2].rms is None
-    assert not got[3].ok and got[3].err
-
-
-def test_matroska_vorbis_delegation_agrees_with_ogg_exactly():
-    """A_VORBIS (r13): three header packets Xiph-laced in CodecPrivate
-    + one packet per block delegate to the same Vorbis core as Ogg —
-    decoding the SAME twin packets through both containers must agree
-    BIT-EXACTLY on the common prefix (Matroska has no granule, so its
-    tail keeps the lap padding the Ogg granule truncates)."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mkv_audio_samples,
-        _mkv_vorbis_payload,
-        _pcm16_samples,
-        _vorbis_payload,
-        decode_mkv,
-    )
-
-    t = 0.4 * np.sin(2 * np.pi * 500 * np.arange(3000) / 8000)
-    st = np.stack([t, -0.5 * t], axis=1)
-    for src, kw in ((t, {}), (st, dict(res_type=2, couple=True)),
-                    (t, dict(dual=True))):
-        mkv = _mkv_vorbis_payload(src, rate=8000, **kw)
-        ogg = _vorbis_payload(src, rate=8000, **kw)
-        s_m = _mkv_audio_samples(mkv)[0]
-        s_o = _pcm16_samples(ogg)
-        assert np.array_equal(s_m[: len(s_o)], s_o), kw
-    d = decode_mkv(_mkv_vorbis_payload(t, rate=8000))
-    assert d["kind"] == "audio" and d["rms"] > 0 and d["peak"] > 0
-    # corrupt CodecPrivate quarantines by name
-    broken = bytearray(_mkv_vorbis_payload(t, rate=8000))
-    idx = bytes(broken).find(b"A_VORBIS") + len(b"A_VORBIS") + 3
-    broken[idx] = 9  # lace-count byte != 2
-    with pytest.raises(ValueError):
-        _mkv_audio_samples(bytes(broken))
-
-
-def test_vorbis_fft_imdct_matches_direct_transform():
-    """The O(n log n) odd-bin-IFFT IMDCT must match the textbook
-    O(n^2) transform to float precision at every legal block size —
-    including the spec's 8192 cap, where the direct path would cache a
-    268 MB matrix."""
-    vb = _vb()
-    rng = np.random.default_rng(13)
-    for half in (32, 128, 1024, 4096):
-        x = rng.standard_normal(half)
-        err = np.max(np.abs(vb._imdct(x) - vb._imdct_direct(x)))
-        assert err < 1e-9 * max(1.0, half), (half, err)
 
 
 # --- real-world NON-SILENT ground truth (r13) ---------------------------------

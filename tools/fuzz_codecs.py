@@ -151,30 +151,6 @@ def _encode_png_variant(rng: random.Random) -> bytes:
 
 
 
-def _encode_heif_seed(rng: random.Random) -> bytes:
-    """Minimal HEIC/AVIF meta tree for the triage walk."""
-    import struct
-
-    def box(t, body):
-        return struct.pack(">I", len(body) + 8) + t + body
-
-    def full(t, body, version=0):
-        return box(t, bytes([version]) + bytes(3) + body)
-
-    brand, item = rng.choice(((b"heic", b"hvc1"), (b"avif", b"av01")))
-    infe = full(b"infe", struct.pack(">HH", 1, 0) + item + b"img\x00", version=2)
-    iinf = full(b"iinf", struct.pack(">H", 1) + infe)
-    dims = [(rng.randrange(1, 5000), rng.randrange(1, 5000)) for _ in range(2)]
-    ipco = box(b"ipco", b"".join(full(b"ispe", struct.pack(">II", *d)) for d in dims))
-    meta = full(
-        b"meta",
-        box(b"hdlr", bytes(4) + b"pict" + bytes(12)) + iinf + box(b"iprp", ipco),
-    )
-    return box(b"ftyp", brand + bytes(4) + b"mif1" + brand) + meta + box(
-        b"mdat", bytes(rng.randrange(1, 64))
-    )
-
-
 def _encode_bmp_core(rng: random.Random) -> bytes:
     """Seed for the OS/2 BITMAPCOREHEADER arm (12-byte header, u16
     dims, 3-byte palette entries)."""
@@ -288,122 +264,6 @@ def _encode_bmp_variant(rng: random.Random) -> bytes:
     return header(8, 1, ncol, len(out)) + pal + bytes(out)
 
 
-def _encode_ima_variant(rng: random.Random) -> bytes:
-    """Seed twin for the ADPCM paths (WAV fmt tags 0x11 and 2): mono
-    or stereo, assorted block sizes, both codecs."""
-    ch = rng.choice((1, 1, 2))
-    n = rng.randrange(1, 300)
-    vals = np.asarray(
-        [rng.randrange(-32768, 32768) for _ in range(n * ch)], dtype=np.int16
-    ).reshape(n, ch)
-    sig = vals[:, 0] if ch == 1 else vals
-    if rng.randrange(2):
-        return mm.encode_ms_adpcm(
-            sig,
-            rate=rng.choice((8000, 44100)),
-            frames_per_block=rng.choice((4, 18, 500)),
-        )
-    return mm.encode_ima_adpcm(
-        sig,
-        rate=rng.choice((8000, 44100)),
-        frames_per_block=rng.choice((9, 17, 505)),
-    )
-
-
-def _encode_ima4_variant(rng: random.Random) -> bytes:
-    """AIFC 'ima4' fuzz seed — the QuickTime packaging of the IMA
-    recurrence (r11): random mono/stereo int16 through encode_ima4."""
-    ch = rng.choice((1, 1, 2))
-    n = rng.randrange(1, 300)
-    vals = np.asarray(
-        [rng.randrange(-32768, 32768) for _ in range(n * ch)], dtype=np.int16
-    ).reshape(n, ch)
-    return mm.encode_ima4(
-        vals[:, 0] if ch == 1 else vals, rate=rng.choice((8000, 44100))
-    )
-
-
-def _mp3_seed(rng: random.Random) -> bytes:
-    """MP3 fuzz seed: random header params, falling back to xing=False
-    when the drawn frame is too small to hold the Xing tag (the
-    synthesizer refuses rather than desync the stream)."""
-    kwargs = dict(
-        n_frames=rng.randrange(1, 8),
-        vbits=rng.choice((0, 2, 3)),
-        layer=rng.choice((1, 2, 3)),
-        br_idx=rng.randrange(1, 15),
-        sr_idx=rng.randrange(3),
-        mono=rng.random() < 0.5,
-        id3=rng.random() < 0.5,
-        vbr=rng.random() < 0.3,
-    )
-    kwargs["xing"] = kwargs["layer"] == 3 and rng.random() < 0.3
-    try:
-        return mm._mp3_stream_payload(**kwargs)
-    except ValueError:
-        kwargs["xing"] = False
-        return mm._mp3_stream_payload(**kwargs)
-
-
-def _mp3_twin_seed(rng: random.Random) -> bytes:
-    """Layer III fuzz seed with REAL coded audio (r12): the encoder
-    twin produces spec-valid frames whose main data exercises the
-    scalefactor/huffman/requantize/IMDCT/synthesis sample path —
-    mutations of these reach far deeper than the header-walk seeds."""
-    import numpy as np
-
-    n = rng.randrange(1, 4) * 1152
-    freq = 0.01 + rng.random() * 0.3
-    x = np.sin(np.arange(n) * freq) * (0.1 + 0.6 * rng.random())
-    if rng.random() < 0.25:
-        # intensity-stereo twin (r12): the closed-form split path
-        return mm._mp3_lossy_payload(x, intensity_pos=rng.randrange(7))
-    if rng.random() < 0.3:
-        x = np.stack([x, x[::-1]], axis=1)
-    return mm._mp3_lossy_payload(x)
-
-
-def _mp1_twin_seed(rng: random.Random) -> bytes:
-    """Layer I fuzz seed (r12): twin streams reach the allocation/
-    scalefactor/offset-code sample path."""
-    import numpy as np
-
-    n = rng.randrange(1, 6) * 384
-    x = np.sin(np.arange(n) * (0.01 + rng.random() * 0.4)) * rng.random() * 0.7
-    if rng.random() < 0.3:
-        x = np.stack([x, -x], axis=1)
-    return mm._mp1_payload(x)
-
-
-def _vorbis_twin_seed(rng: random.Random) -> bytes:
-    """Vorbis fuzz seed (r13): twin streams with in-stream codebooks
-    reach the setup parser (codebook/floor/residue/mapping/mode), the
-    packet walk, and the floor1/residue/coupling/IMDCT sample path."""
-    import numpy as np
-
-    n = rng.randrange(400, 4000)
-    x = np.sin(np.arange(n) * (0.01 + rng.random() * 0.4)) * (
-        0.1 + 0.7 * rng.random()
-    )
-    stereo = rng.random() < 0.5
-    if stereo:
-        x = np.stack([x, -x * rng.random()], axis=1)
-    res_type = rng.choice((0, 1, 2))
-    return mm._vorbis_payload(
-        x,
-        rate=rng.choice((8000, 44100)),
-        res_type=res_type,
-        couple=stereo and res_type == 2 and rng.random() < 0.5,
-        dual=rng.random() < 0.4,
-        ordered=rng.random() < 0.3,
-        **(
-            dict(levels=9, lookup2=True)
-            if rng.random() < 0.25
-            else {}
-        ),
-    )
-
-
 def _encode_g711(rng: random.Random) -> bytes:
     """Seed twin for the r9 G.711 path: µ-law/A-law RIFF container."""
     import struct
@@ -468,10 +328,6 @@ def _seed_payloads(rng: random.Random) -> list[tuple[str, bytes]]:
         ),
         ("webp", mm.encode_webp(gif_px, palette=True, use_lz77=True)),
         (
-            "heif",
-            _encode_heif_seed(rng),
-        ),
-        (
             "webpa",
             mm.encode_webp_anim(
                 [px]
@@ -519,30 +375,16 @@ def _seed_payloads(rng: random.Random) -> list[tuple[str, bytes]]:
         ),
         ("wav", mm._wav_payload(raw8)),
         ("wav", mm._rf64_payload(raw8, rate=rng.choice((8000, 44100)))),
-        ("wav", _encode_ima_variant(rng)),
-        ("wav", mm._riff_wrap(
-            __import__("struct").pack("<HHIIHH", 0x55, 2, 44100, 16000, 1, 0),
-            _mp3_seed(rng),
-        )),
         ("wavf", mm._float_wav_payload(raw8, double=rng.random() < 0.5)),
         ("wav32", mm._pcm32_wav_payload(raw8)),
         ("aiff", mm._aiff_payload(raw8)),
         ("aiff", mm._aifc_payload(raw8, compression=rng.choice((b"sowt", b"NONE", b"fl32", b"fl64")))),
-        ("aiff", _encode_ima4_variant(rng)),
         ("g711", _encode_g711(rng)),
-        ("8svx", mm._8svx_payload(raw8, stereo=rng.random() < 0.4)),
-        ("voc", mm._voc_payload(raw8, new_format=rng.random() < 0.5)),
-        ("mp3", _mp3_seed(rng)),
-        ("mp3", _mp3_twin_seed(rng)),
-        ("mp3", _mp1_twin_seed(rng)),
         ("ogg", mm._ogg_flac_payload(raw8, rate=rng.choice((8000, 44100)))),
-        ("ogg", _vorbis_twin_seed(rng)),
         ("pcx", mm.encode_pcx(px)),
         ("sgi", mm.encode_sgi(px, rle=rng.random() < 0.7)),
         ("ras", mm.encode_ras(
             px, rtype=rng.choice((1, 2, 3)), depth=rng.choice((24, 32)))),
-        ("xbm", mm.encode_xbm(
-            (px > 127).astype(np.uint8) * 255)),
         (
             "dds",
             mm.encode_dds(
@@ -583,13 +425,8 @@ def _seed_payloads(rng: random.Random) -> list[tuple[str, bytes]]:
                 unknown_segment_size=rng.random() < 0.3,
             ),
         ),
-        ("mkv", mm._mkv_vorbis_payload(
-            np.sin(np.arange(rng.randrange(400, 2000)) * 0.1) * 0.5,
-            rate=rng.choice((8000, 44100)),
-        )),
         ("avi", mm._avi_mjpeg_container(mm._mjpeg_frames_for_text(flat or b"x", n))),
         ("avia", mm._avi_audio_container(mm._wav_payload(raw8), n_chunks=rng.randrange(1, 5))),
-        ("avia", mm._avi_audio_container(_encode_ima_variant(rng), n_chunks=2)),
         ("au", mm._au_payload(raw8, encoding=rng.choice((3, 4, 5, 6, 7)), stereo=rng.random() < 0.5)),
         ("caf", mm._caf_payload(
             raw8,
@@ -756,7 +593,6 @@ _DECODERS = {
     "jpegll": [mm._jpeg_pixels, mm.decode_jpeg, mm._image_pixels],
     "webp": [mm._webp_pixels, mm.decode_webp, mm._image_pixels],
     "webpa": [mm._webp_frames, mm._webp_pixels, mm.decode_webp],
-    "heif": [mm.decode_heif, mm._image_pixels],
     "bmp": [mm._bmp_pixels, mm.decode_bmp, mm._image_pixels],
     "bmpv": [mm._bmp_pixels, mm.decode_bmp],
     "flac": [mm._flac_samples, mm.decode_flac, mm._pcm16_samples],
@@ -765,9 +601,6 @@ _DECODERS = {
     "wav32": [mm.decode_wav, mm._pcm16_samples, lambda p: mm._wav_samples_f64(p)[0]],
     "aiff": [mm._aiff_samples, mm.decode_aiff, mm._pcm16_samples],
     "g711": [mm.decode_wav, lambda p: mm._wav_samples_f64(p)[0]],
-    "mp3": [mm.decode_mp3, mm._pcm16_samples],
-    "8svx": [mm.decode_8svx, mm._pcm16_samples],
-    "voc": [mm.decode_voc, mm._pcm16_samples],
     "avi": [mm._avi_mjpeg_frames, mm.decode_avi_mjpeg, mm.decode_avi, mm._avi_video_header, mm._avi_audio_as_wav],
     "avia": [mm.decode_avi, mm._avi_audio_as_wav, mm._pcm16_samples, mm.decode_avi_audio],
     "au": [mm.decode_au, mm._au_samples, mm._pcm16_samples],
@@ -780,7 +613,6 @@ _DECODERS = {
     "pcx": [mm._pcx_pixels, mm.decode_pcx, mm._image_pixels],
     "sgi": [mm._sgi_pixels, mm.decode_sgi, mm._image_pixels],
     "ras": [mm._ras_pixels, mm.decode_ras, mm._image_pixels],
-    "xbm": [mm._xbm_pixels, mm.decode_xbm, mm._image_pixels],
     "pnm": [mm.decode_pnm, mm._pnm_pixels, mm._image_pixels],
     "tga": [mm.decode_tga, mm._tga_pixels, mm._image_pixels],
     "qoi": [mm.decode_qoi, mm._qoi_pixels, mm._image_pixels],
@@ -965,12 +797,6 @@ def fuzz_round_trip(seconds: float, seed: int) -> int:
             )) == px
         ).all():
             print(f"Sun Raster round-trip MISMATCH seed={seed} h={h} w={w}")
-            return 1
-        bilevel = np.repeat(
-            ((px[:, :, 0] > 127).astype(np.uint8) * 255)[:, :, None], 3, axis=2
-        )
-        if not (mm._xbm_pixels(mm.encode_xbm(bilevel)) == bilevel).all():
-            print(f"XBM round-trip MISMATCH seed={seed} h={h} w={w}")
             return 1
         frames = mm._png_frames(mm.encode_apng([px, 255 - px]))
         if len(frames) != 2 or not (frames[1] == 255 - px).all():
