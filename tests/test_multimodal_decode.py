@@ -1554,6 +1554,32 @@ def test_mp4_g711_sample_entries_decode():
     assert np.array_equal(s2, _G711_ULAW[np.frombuffer(raw, np.uint8)])
 
 
+def test_decode_features_survives_mp3_rows(spark):
+    """audio/mpeg docs through decode_features — a run of well-formed
+    MPEG-1 Layer III frame headers and bare garbage alike — must each
+    quarantine by name as one row, and never fail the Arrow batch the
+    neighbouring WAV doc decodes in."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        _wav_payload,
+        decode_features,
+    )
+
+    # 128 kbit/s, 44.1 kHz, no padding: 144 * 128000 // 44100 = 417 bytes
+    frame = b"\xff\xfb\x90\x00" + bytes(417 - 4)
+    rows = [
+        (1, bytearray(_wav_payload(b"abc")), "audio/wav"),
+        (2, bytearray(frame * 3), "audio/mpeg"),
+        (3, bytearray(b"\x00garbage"), "audio/mpeg"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, payload binary, mime string")
+    got = {r.doc_id: r for r in decode_features(df).collect()}
+    assert len(got) == 3  # quarantine, not row loss
+    assert got[1].ok and got[1].n_frames == 3
+    for i in (2, 3):
+        assert not got[i].ok and got[i].mime == "audio/mpeg"
+        assert "NotImplementedError" in got[i].err and "'audio/mpeg'" in got[i].err
+
+
 def test_aiff_integer_width_matrix():
     """AIFF integer widths beyond 16-bit (r10, WAV-matrix parity):
     signed 8-bit decodes verbatim onto the int16 grid (fingerprint
