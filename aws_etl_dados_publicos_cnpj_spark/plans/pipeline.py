@@ -8,12 +8,15 @@ The reference's execution graph (SURVEY.md §3.1):
 
 collapses to:
 
-    plan_updates(listing, catalog) → acquire (executor fan-out) →
-    read_cnpj_csv(all files) → write_snapshot → register_table
+    plan_updates(listing, catalog) → acquire_manifest (one manifest
+    collect, driver download pool) → read_cnpj_csv(all files) →
+    write_snapshot → register_table
 
-Per-table work is submitted concurrently from the driver
-(``ThreadPoolExecutor``); Spark's scheduler multiplexes the jobs across
-executor slots, replacing the INLINE Map concurrency
+The planner's inputs are local relations, so planning and acquisition
+execute the plan once and launch no Python-worker job; the unchanged
+week costs that one collect. Per-table work is submitted concurrently
+from the driver (``ThreadPoolExecutor``); Spark's scheduler multiplexes
+the jobs across executor slots, replacing the INLINE Map concurrency
 (``state_machine.asl:24-131``). Within a table, file-level parallelism
 is Spark's native file-split scan — no inner Map needed
 (``state_machine.asl:93-125``).

@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 
 from ..functions.scalar import normalize_table_key, yyyymmdd_int
 from ..schemas import ALLOWED_TABLE_NAMES
+from ..sources.listing import local_df
 
 CATALOG_SCHEMA = T.StructType(
     [
@@ -56,7 +57,7 @@ class CatalogState:
 
     def to_df(self, spark: SparkSession) -> DataFrame:
         rows = [(name, list(parts)) for name, parts in self.tables.items()]
-        return spark.createDataFrame(rows, CATALOG_SCHEMA)
+        return local_df(spark, rows, CATALOG_SCHEMA)
 
 
 def _planned_tables(

@@ -2,8 +2,9 @@
 directory scrape (S1–S3, ``lambdas/check_update/check_update.py:40-53,95-97``).
 
 The listing is tiny metadata (tens of rows), so parsing happens
-driver-side and the rows become a small DataFrame that feeds the
-pure-DataFrame planner (``plans/planner.py``). The HTML parser is gated
+driver-side and the rows become a small local relation (an Arrow-built
+``LocalTableScan``, no Python-worker job) that feeds the pure-DataFrame
+planner (``plans/planner.py``). The HTML parser is gated
 behind an import-try (bs4 may be absent); the planner itself only needs
 the parsed-row DataFrame, so tests inject rows directly
 (FIXTURES.md §A.6).
@@ -14,8 +15,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 from html.parser import HTMLParser
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 LISTING_SCHEMA = T.StructType(
     [
@@ -35,6 +38,20 @@ class ListingRow:
     is_folder: bool
 
 
+def local_df(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """Driver-side rows as a local relation.
+
+    ``createDataFrame(list)`` plans a pickled-RDD scan that runs through
+    Python workers every time the plan executes; an Arrow table plans
+    to ``LocalTableScan``, which the JVM evaluates without a job.
+    """
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, row, strict=True)) for row in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def listing_df(spark: SparkSession, rows: list[ListingRow] | list[tuple]) -> DataFrame:
     """Materialize parsed listing rows as the planner's input DataFrame."""
     data = [
@@ -43,7 +60,7 @@ def listing_df(spark: SparkSession, rows: list[ListingRow] | list[tuple]) -> Dat
         else tuple(r)
         for r in rows
     ]
-    return spark.createDataFrame(data, LISTING_SCHEMA)
+    return local_df(spark, data, LISTING_SCHEMA)
 
 
 class _IndexTableParser(HTMLParser):

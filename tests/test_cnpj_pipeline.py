@@ -88,6 +88,48 @@ def test_freshness_skip_and_stale(spark, fixture_zips):
     assert [(r.table_name, r.date) for r in manifest] == [("empresas", "20230506")]
 
 
+def test_unchanged_week_executes_the_plan_once(spark, fixture_zips):
+    """The unchanged week's ``run_pipeline`` submits exactly the jobs of
+    one ``plan_updates(...).collect()``: no count-then-rerun of the
+    manifest, no Python-worker job for zero rows. Counts jobs, times
+    nothing."""
+    listing = _listing(spark, fixture_zips)
+    fresh = CatalogState({"empresas": ["20230506"], "municipios": ["20230506"]})
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("unchanged-week-run", "run_pipeline on an unchanged week")
+        refreshed = run_pipeline(
+            spark, listing, fresh, str(fixture_zips / "warehouse"), str(fixture_zips / "scratch")
+        )
+        sc.setJobGroup("unchanged-week-plan", "one collect of the manifest")
+        manifest = plan_updates(spark, listing, fresh).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert refreshed == {} and manifest == []
+    tracker = sc.statusTracker()
+    assert len(tracker.getJobIdsForGroup("unchanged-week-run")) == len(
+        tracker.getJobIdsForGroup("unchanged-week-plan")
+    )
+
+
+def test_planner_inputs_are_local_relations(spark, fixture_zips):
+    """Listing and catalog rows plan to ``LocalTableScan`` (evaluated in
+    the JVM without a job), not a pickled-RDD scan through Python
+    workers — empty inputs included."""
+    inputs = [
+        _listing(spark, fixture_zips),
+        listing_df(spark, []),
+        CatalogState({"empresas": ["20230101", "20230506"], "municipios": []}).to_df(spark),
+        CatalogState({}).to_df(spark),
+    ]
+    for df in inputs:
+        assert df._jdf.queryExecution().executedPlan().toString().startswith("LocalTableScan")
+    assert inputs[2].collect()[0].partition_values == ["20230101", "20230506"]
+    with pytest.raises(ValueError):  # a row of the wrong width is refused, not padded
+        listing_df(spark, [("Empresas0.zip", "file://x", "2023-05-06 10:22")])
+
+
 def test_partition_overwrite_idempotent(spark, fixture_zips):
     """Dynamic partition overwrite: re-ingesting the same ref_date must
     not duplicate rows (the reference's blind PutObject can)."""
