@@ -6,26 +6,23 @@ metadata struct alongside (mime, n_bytes, checksum). Decode /
 feature-extraction runs as Arrow-batched ``mapInPandas``.
 
 Decode status — honest per format. The formats below are the ones the
-registered queries' fixtures synthesize (``media.synthesize_*``), so
-each decode path runs under an oracle gate; variants no fixture emits
-(BMP RLE, G.711, ...) are unit-tested. No external codec library is
-needed:
+registered queries' fixtures synthesize (``media.synthesize_*``, one
+container per rotation slot), so each decode path runs under an oracle
+gate; variants no fixture emits (BMP RLE, G.711, PNG palettes, ...)
+are unit-tested. No external codec library is needed:
 
 - **Images** (``image.py``, sniffed by magic in
   ``containers._image_pixels``): BMP (incl. RLE/palette/bitfields),
-  PNG/APNG, GIF (LZW), JPEG baseline, progressive and lossless
-  (+ JPEG-in-TIFF), TIFF (LZW/Deflate, planar, multi-page), TGA, PCX,
-  SGI, netpbm, QOI, ICO, DDS, Sun Raster, WebP VP8L (lossless + ANMF
-  animation; lossy VP8 gets dims-only triage).
+  PNG (every color type and depth, Adam7), GIF (LZW, first image),
+  baseline sequential JPEG.
 - **Audio** (``audio.py``): WAV/RIFF (8-32-bit PCM, float, G.711,
-  extensible, RF64), AIFF/AIFC, FLAC (+ encoder twin), Ogg-FLAC,
-  CAF, Sun AU, PCM-in-MP4, PCM and FLAC in Matroska, PCM in AVI.
+  extensible, RF64), AIFF/AIFC, FLAC (+ encoder twin).
 - **Video** (``containers.py``/``media.py``): the synthetic VID0
-  layout, Motion-JPEG in AVI, MP4 and Matroska; any other video
+  layout and Motion-JPEG in AVI and MP4; any other AVI/MP4 video
   codec gets container stats and frame access raises.
 
-Anything else — MP3, Vorbis and Opus samples, ADPCM, HEIF/AVIF,
-H.264/HEVC frames and every unlisted mime — raises
+Anything else — progressive and lossless JPEG, TIFF, WebP, Matroska,
+Ogg, MP4 audio, MP3 and every unlisted mime — raises
 ``NotImplementedError`` (or ``ValueError`` for corrupt bytes), and
 ``decode_features`` turns that into a quarantine row (``ok=false`` +
 the error) instead of failing the job, mirroring the engine's

@@ -1,10 +1,11 @@
-"""Audio codecs: WAV/RIFF matrix (PCM widths, G.711, float, RF64),
-AIFF/AIFC, CAF, AU delegation, FLAC (+ encoder twin), and the Ogg
-container walk (FLAC delegation).
+"""Audio codecs: the WAV/RIFF matrix (PCM widths, G.711, float,
+extensible, RF64), AIFF/AIFC and FLAC (+ encoder twin), plus the
+container-agnostic int16 sample entry (``_pcm16_samples``) the audio
+fingerprint uses.
 
 Split out of the r12 single-module multimodal.py (r12 verdict item:
-52% of the package in one file); behavior-identical, facade in
-``__init__``. See the package docstring for decode-status honesty.
+52% of the package in one file); facade in ``__init__``. See the
+package docstring for the decode status of each format.
 """
 
 from __future__ import annotations
@@ -32,8 +33,6 @@ def attach_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
             F.length(payload).alias("n_bytes"),
         ),
     )
-
-
 
 
 def _g711_tables() -> tuple[np.ndarray, np.ndarray]:
@@ -499,286 +498,11 @@ def decode_aiff(payload: bytes) -> dict:
     }
 
 
-# --- CAF (r11): Apple Core Audio Format --------------------------------
-#
-# The QuickTime-era containers' modern successor, from Apple's public
-# CAF File Format Specification: a 'caff' header, then typed chunks
-# with SIGNED 64-bit big-endian sizes ('data' may declare -1 = to
-# end-of-file). The 'desc' chunk routes decoding, and every payload
-# format DELEGATES to machinery the engine already ships: 'lpcm'
-# (float/endian flags — the MP4 v2 lpcm semantics), 'ulaw'/'alaw'
-# (the G.711 tables). Every other codec (ima4, aac, alac) quarantines
-# honestly.
-
-
-def _caf_samples(payload: bytes) -> tuple[np.ndarray, int, int]:
-    """(samples, rate, n_channels) of a CAF file; int16 where exact,
-    int32 for native wide ints (fingerprint grid-check applies),
-    floats expanded to the int16 grid."""
-    if payload[:4] != b"caff":
-        raise ValueError("not a CAF payload")
-    try:
-        return _caf_samples_impl(payload)
-    except (struct.error, IndexError) as exc:
-        raise ValueError(f"corrupt CAF container ({exc})") from exc
-
-
-def _caf_samples_impl(payload: bytes) -> tuple[np.ndarray, int, int]:
-    desc = data = None
-    pos = 8
-    while pos + 12 <= len(payload):
-        ctype = payload[pos : pos + 4]
-        (csz,) = struct.unpack_from(">q", payload, pos + 4)
-        body = pos + 12
-        if csz == -1:
-            end = len(payload)  # spec: only legal for a final 'data'
-        elif csz < 0 or body + csz > len(payload):
-            # clamp an externally truncated final chunk, the RIFF rule
-            end = len(payload)
-        else:
-            end = body + csz
-        if ctype == b"desc":
-            desc = (body, end)
-        elif ctype == b"data":
-            data = (body, end)
-        pos = end
-        if csz == -1:
-            break
-    if desc is None or data is None:
-        raise ValueError("CAF missing desc/data chunks")
-    if desc[1] - desc[0] < 32:
-        raise ValueError("CAF desc chunk truncated")
-    rate_f, fmt = struct.unpack_from(">d4s", payload, desc[0])
-    flags, _bpp, fpp, n_ch, bits = struct.unpack_from(">IIIII", payload, desc[0] + 12)
-    rate = int(round(rate_f)) if np.isfinite(rate_f) and 0 < rate_f < 1e7 else 0
-    if n_ch not in (1, 2):
-        raise ValueError(f"invalid CAF channel count {n_ch}")
-    if data[1] - data[0] < 4:
-        raise ValueError("CAF data chunk truncated")
-    body = payload[data[0] + 4 : data[1]]  # skip the u32 edit count
-    if fmt in (b"ulaw", b"alaw"):
-        table = _G711_ULAW if fmt == b"ulaw" else _G711_ALAW
-        frames = len(body) // n_ch
-        u = np.frombuffer(body[: frames * n_ch], dtype=np.uint8)
-        return table[u].astype(np.int16), rate, n_ch
-    if fmt != b"lpcm":
-        raise NotImplementedError(
-            f"CAF format {fmt!r} requires codec libraries not present; "
-            "only 'lpcm' and G.711 ('ulaw'/'alaw') decode here"
-        )
-    is_float, is_le = flags & 1, flags & 2
-    ok = bits in (32, 64) if is_float else bits in (16, 24, 32)
-    if not ok:
-        raise ValueError(f"unsupported CAF lpcm layout ({bits}-bit, flags={flags:#x})")
-    width = bits // 8
-    frames = len(body) // (width * n_ch)
-    body = body[: frames * width * n_ch]
-    e = "<" if is_le else ">"
-    if is_float:
-        v = np.frombuffer(body, dtype=f"{e}f{width}").astype(np.float64)
-        if v.size and not np.isfinite(v).all():
-            raise ValueError("CAF float samples non-finite")
-        return np.rint(np.clip(v, -1.0, 1.0) * 32767.0).astype(np.int16), rate, n_ch
-    if bits == 24:
-        b = np.frombuffer(body, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
-        v = (
-            (b[:, 0] << 16) | (b[:, 1] << 8) | b[:, 2]
-            if not is_le
-            else (b[:, 2] << 16) | (b[:, 1] << 8) | b[:, 0]
-        )
-        v = np.where(v >= 1 << 23, v - (1 << 24), v)
-        return v.astype(np.int32), rate, n_ch
-    s = np.frombuffer(body, dtype=f"{e}i{width}")
-    return s.astype(np.int16 if bits == 16 else np.int32), rate, n_ch
-
-
-def decode_caf(payload: bytes) -> dict:
-    """CAF twin of ``decode_wav`` — same stats dict."""
-    samples, rate, n_ch = _caf_samples(payload)
-    s = samples.astype(np.float64)
-    n_frames = len(samples) // n_ch if n_ch else 0
-    return {
-        "kind": "audio",
-        "n_channels": n_ch,
-        "sample_rate": rate,
-        "n_frames": n_frames,
-        "duration_s": n_frames / rate if rate else 0.0,
-        "rms": float(np.sqrt(np.mean(s**2))) if s.size else 0.0,
-        "peak": float(np.max(np.abs(s))) if s.size else 0.0,
-    }
-
-
-def _caf_payload(
-    raw: bytes,
-    rate: int = 8000,
-    bits: int = 16,
-    flags: int = 0,
-    stereo: bool = False,
-) -> bytes:
-    """Fixture/fuzz builder: the byte→sample contract inside a CAF
-    'lpcm' container. Default 16-bit big-endian signed (flags 0)
-    carries k directly; floats (flags&1) carry k/32767; 24/32-bit
-    ints carry k natively. ``data`` declares -1 (to end-of-file), the
-    streaming-write shape the spec calls out."""
-    samples = np.frombuffer(raw, dtype=np.uint8).astype(np.int16)
-    n_ch = 2 if stereo and len(samples) and len(samples) % 2 == 0 else 1
-    e = "<" if flags & 2 else ">"
-    if flags & 1:
-        body = (samples.astype(np.float64) / 32767.0).astype(
-            f"{e}f{bits // 8}"
-        ).tobytes()
-    elif bits == 24:
-        v = samples.astype(np.int64)
-        trip = [(v >> 16) & 0xFF, (v >> 8) & 0xFF, v & 0xFF]
-        if flags & 2:
-            trip = trip[::-1]
-        body = np.stack(trip, axis=1).astype(np.uint8).tobytes()
-    else:
-        body = samples.astype(f"{e}i{bits // 8}").tobytes()
-    width = bits // 8
-    desc = struct.pack(
-        ">d4sIIIII", float(rate), b"lpcm", flags, width * n_ch, 1, n_ch, bits
-    )
-    out = b"caff" + struct.pack(">HH", 1, 0)
-    out += b"desc" + struct.pack(">q", len(desc)) + desc
-    out += b"data" + struct.pack(">q", -1) + bytes(4) + body
-    return out
-
-
-# Sun/NeXT .au encodings this walk decodes: field 3 of the header →
-# (bytes per sample, kind). The G.711 and float/PCM expansion rules
-# are the WAV/AIFF ones, so all three legacy-audio containers share
-# one support matrix.
-_AU_ENCODINGS = {
-    1: (1, "ulaw"),
-    2: (1, "i8"),
-    3: (2, "i16"),
-    4: (3, "i24"),
-    5: (4, "i32"),
-    6: (4, "f32"),
-    7: (8, "f64"),
-    27: (1, "alaw"),
-}
-# published-but-unimplemented compressed encodings (G.721/G.722/G.723
-# ADPCM variants): honest NotImplementedError
-_AU_COMPRESSED = {23, 24, 25, 26}
-
-
-def _au_samples(payload: bytes) -> tuple[np.ndarray, int, int]:
-    """(samples, rate, n_channels) of a Sun/NeXT .au file (r11 — the
-    telephony-corpus staple alongside WAV G.711): ``.snd`` magic,
-    big-endian header (data offset/size, encoding, rate, channels).
-    µ/A-law expand through the shared G.711 tables; 8-bit is SIGNED
-    (int16 grid verbatim, the AIFF rule); 16-bit big-endian is the
-    int16 grid; 24/32-bit return native int32; floats expand via
-    round(clip(v)·32767). A declared size past the payload clamps
-    (external truncation, the RIFF rule)."""
-    if payload[:4] != b".snd":
-        raise ValueError("not an AU payload")
-    try:
-        off, dsz, enc, rate, n_ch = struct.unpack_from(">5I", payload, 4)
-    except struct.error as exc:
-        raise ValueError(f"corrupt AU header ({exc})") from exc
-    if off < 24 or off > len(payload):
-        raise ValueError("AU data offset out of bounds")
-    if n_ch not in (1, 2):
-        raise ValueError(f"invalid AU channel count {n_ch}")
-    if enc in _AU_COMPRESSED:
-        raise NotImplementedError(
-            f"AU ADPCM encoding {enc} needs a codec library"
-        )
-    if enc not in _AU_ENCODINGS:
-        raise ValueError(f"unsupported AU encoding {enc}")
-    width, kind = _AU_ENCODINGS[enc]
-    end = len(payload) if dsz == 0xFFFFFFFF else min(len(payload), off + dsz)
-    data = payload[off:end]
-    frames = len(data) // (width * n_ch)
-    data = data[: frames * width * n_ch]
-    if kind in ("ulaw", "alaw"):
-        table = _G711_ULAW if kind == "ulaw" else _G711_ALAW
-        s = table[np.frombuffer(data, dtype=np.uint8)].astype(np.int16)
-    elif kind == "i8":
-        s = np.frombuffer(data, dtype=np.int8).astype(np.int16)
-    elif kind == "i16":
-        s = np.frombuffer(data, dtype=">i2").astype(np.int16)
-    elif kind == "i24":
-        b = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
-        v = (b[:, 0] << 16) | (b[:, 1] << 8) | b[:, 2]
-        s = np.where(v >= 1 << 23, v - (1 << 24), v).astype(np.int32)
-    elif kind == "i32":
-        s = np.frombuffer(data, dtype=">i4").astype(np.int32)
-    else:
-        with np.errstate(invalid="ignore"):  # sNaN f4->f64 cast signals
-            v = np.frombuffer(
-                data, dtype=">f4" if kind == "f32" else ">f8"
-            ).astype(np.float64)
-        if v.size and not np.isfinite(v).all():
-            raise ValueError("AU float samples non-finite")
-        s = np.rint(np.clip(v, -1.0, 1.0) * 32767.0).astype(np.int16)
-    return s, rate, n_ch
-
-
-def decode_au(payload: bytes) -> dict:
-    """AU twin of ``decode_wav`` — same stats dict off the real
-    big-endian header parse."""
-    samples, rate, n_ch = _au_samples(payload)
-    s = samples.astype(np.float64)
-    n_frames = len(samples) // n_ch if n_ch else 0
-    return {
-        "kind": "audio",
-        "n_channels": n_ch,
-        "sample_rate": rate,
-        "n_frames": n_frames,
-        "duration_s": n_frames / rate if rate else 0.0,
-        "rms": float(np.sqrt(np.mean(s**2))) if s.size else 0.0,
-        "peak": float(np.max(np.abs(s))) if s.size else 0.0,
-    }
-
-
-def _au_payload(
-    raw: bytes, rate: int = 8000, encoding: int = 3, stereo: bool = False
-) -> bytes:
-    """Fixture/fuzz builder: the byte→sample contract inside an AU
-    container. Encoding 3 (16-bit big-endian) carries k directly on
-    the int16 grid; 6/7 carry k/32767 (the float trick); 4/5 carry k
-    natively; 2 carries k only for k ≤ 127 (8-bit signed). ``stereo``
-    de-interleaves even/odd bytes as L/R, the FLAC-arm rule."""
-    samples = np.frombuffer(raw, dtype=np.uint8).astype(np.int16)
-    n_ch = 2 if stereo and len(samples) and len(samples) % 2 == 0 else 1
-    if encoding == 3:
-        body = samples.astype(">i2").tobytes()
-    elif encoding == 4:
-        v = samples.astype(np.int64)
-        body = (
-            np.stack([(v >> 16) & 0xFF, (v >> 8) & 0xFF, v & 0xFF], axis=1)
-            .astype(np.uint8)
-            .tobytes()
-        )
-    elif encoding == 5:
-        body = samples.astype(">i4").tobytes()
-    elif encoding in (6, 7):
-        f = samples.astype(np.float64) / 32767.0
-        body = f.astype(">f4" if encoding == 6 else ">f8").tobytes()
-    elif encoding == 2:
-        if samples.size and samples.max() > 127:
-            raise ValueError("8-bit AU fixtures need bytes <= 127")
-        body = samples.astype(np.int8).tobytes()
-    else:
-        raise ValueError(f"unsupported AU fixture encoding {encoding}")
-    return struct.pack(">4s5I", b".snd", 24, len(body), encoding, rate, n_ch) + body
-
-
 def _pcm16_samples(payload: bytes) -> np.ndarray:
     """int16 PCM samples of a WAV, AIFF, or FLAC payload, sniffed by
     magic — the container-agnostic entry the audio fingerprint family
     uses, so fixtures can mix containers while the sample CONTRACT
     (and every SQL oracle built on it) stays identical."""
-    # call-site imports: the MP4/Matroska/AVI arms delegate to walks
-    # defined in later modules of the split (the only back edges in
-    # the package DAG); resolved at call time, after package init
-    from .containers import _mkv_audio_samples, _mp4_pcm_samples
-    from .media import _avi_audio_as_wav
-
     if payload[:4] == b"FORM" and payload[8:12] in (b"AIFF", b"AIFC"):
         samples = _aiff_samples(payload)[0]
         if samples.dtype != np.int16:
@@ -794,64 +518,6 @@ def _pcm16_samples(payload: bytes) -> np.ndarray:
             # exactness rule as the 24/32-bit WAV rejections
             raise ValueError("unsupported FLAC sample width 3")
         return samples
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        # audio-in-AVI (r11): rebuild the stream as RIFF/WAVE and
-        # recurse — every WAV arm and grid rule applies verbatim
-        return _pcm16_samples(_avi_audio_as_wav(payload))
-    if payload[:4] == b".snd":
-        # Sun/NeXT AU (r11): 24/32-bit fingerprint only when
-        # grid-sitting, the MP4 wide-int rule
-        s = _au_samples(payload)[0]
-        if s.dtype != np.int16:
-            if s.size and (s.max() > 32767 or s.min() < -32768):
-                raise ValueError("wide AU samples exceed the int16 grid")
-            s = s.astype(np.int16)
-        return s
-    if payload[:4] == b"\x1a\x45\xdf\xa3":
-        # Matroska/WebM (r11): PCM and A_FLAC decode through the
-        # delegation arms; wide ints fingerprint only when
-        # grid-sitting (the AU/MP4 rule)
-        s = _mkv_audio_samples(payload)[0]
-        if s.dtype != np.int16:
-            if s.size and (s.max() > 32767 or s.min() < -32768):
-                raise ValueError("wide Matroska samples exceed the int16 grid")
-            s = s.astype(np.int16)
-        return s
-    if payload[:4] == b"OggS":
-        # Ogg (r11): Ogg-FLAC fingerprints through the native-FLAC
-        # delegation; Vorbis and Opus quarantine like every transform
-        # arm
-        kind, info = _ogg_audio_info(payload)
-        if kind != "flac":
-            raise NotImplementedError(
-                f"Ogg {kind} sample decode needs a codec library"
-            )
-        samples = _flac_samples(info)[0]
-        if samples.dtype != np.int16:
-            raise ValueError("unsupported FLAC sample width 3")
-        return samples
-    if payload[:4] == b"caff":
-        # Apple CAF (r11): same wide-int grid rule
-        s = _caf_samples(payload)[0]
-        if s.dtype != np.int16:
-            if s.size and (s.max() > 32767 or s.min() < -32768):
-                raise ValueError("wide CAF samples exceed the int16 grid")
-            s = s.astype(np.int16)
-        return s
-    if payload[4:8] == b"ftyp":
-        # PCM-in-MP4 fingerprints for real; mp4a/AAC raises
-        # NotImplementedError and quarantines — the stats and
-        # fingerprint families keep one support matrix (r9 review).
-        # Wide integer entries ('in24'/'in32', r11) fingerprint only
-        # when every sample already sits on the int16 grid — the same
-        # exactness rule as the 32-bit WAV arm (downshifting would
-        # discard real bits).
-        s = _mp4_pcm_samples(payload)[0]
-        if s.dtype != np.int16:
-            if s.size and (s.max() > 32767 or s.min() < -32768):
-                raise ValueError("wide MP4 PCM samples exceed the int16 grid")
-            s = s.astype(np.int16)
-        return s
     probed = _riff_fmt_and_data(payload)
     if probed is not None and probed[0][0] in (3, 6, 7):
         # G.711 and IEEE-float WAVs both expand to the
@@ -928,8 +594,8 @@ def _check_pixels(px: np.ndarray, who: str, maxval: int = 255) -> None:
     outside [0, maxval] silently wrap, fractional floats silently
     truncate — any of which makes the encoder emit a garbage-but-valid
     stream with ok=True (r9 fuzz + review). ``maxval`` parameterizes
-    the grid: 255 for the uint8 encoders, 65535 for 16-bit TIFF (r10
-    review: one contract, not two hand-synced copies)."""
+    the grid: 255 for the uint8 encoders, 2^depth - 1 or the palette
+    size for PNG (r10 review: one contract, not hand-synced copies)."""
     if np.issubdtype(px.dtype, np.floating) and not np.isfinite(px).all():
         raise ValueError(f"{who}: non-finite pixel values")
     # the uint8 short-circuit is only sound when the grid covers the
@@ -1729,214 +1395,3 @@ def decode_flac(payload: bytes) -> dict:
         "rms": float(np.sqrt(np.mean(sf**2))) if sf.size else 0.0,
         "peak": float(np.max(np.abs(sf))) if sf.size else 0.0,
     }
-
-
-# --- Ogg (r11): the Xiph container --------------------------------------
-#
-# From the public RFC 3533 page structure: 'OggS' capture pattern,
-# version 0, continuation/BOS/EOS flags, 64-bit granule position,
-# stream serial, page CRC, and 255-lacing segment tables. Ogg-FLAC
-# (the Xiph mapping spec) DELEGATES: the native fLaC stream is
-# reassembled from the first packet's embedded STREAMINFO plus the
-# audio packets and decoded by the engine's FLAC machinery. Vorbis
-# and Opus get metadata-before-decode triage (identification-header
-# fields + last-granule duration); their sample decode needs a codec
-# library.
-
-
-def _ogg_packets(
-    payload: bytes, max_bytes: int = 1 << 26
-) -> tuple[list[bytes], int, int]:
-    """(packets of the FIRST stream, its last granule position, its
-    pre-skip-free page count) from an Ogg byte stream. Packets
-    reassemble across 255-lacing continuations and continued pages;
-    foreign-serial pages (chained/multiplexed streams) are skipped.
-    ``max_bytes`` bounds total reassembly (amplification cap)."""
-    if payload[:4] != b"OggS":
-        raise ValueError("not an Ogg payload")
-    packets: list[bytes] = []
-    cur = bytearray()
-    serial = None
-    last_granule = 0
-    n_pages = 0
-    pos = 0
-    total = 0
-    while pos + 27 <= len(payload):
-        if payload[pos : pos + 4] != b"OggS":
-            raise ValueError("Ogg page desync")
-        version = payload[pos + 4]
-        if version != 0:
-            raise ValueError(f"unsupported Ogg version {version}")
-        flags = payload[pos + 5]
-        (granule,) = struct.unpack_from("<q", payload, pos + 6)
-        (ser,) = struct.unpack_from("<I", payload, pos + 14)
-        nseg = payload[pos + 26]
-        table = payload[pos + 27 : pos + 27 + nseg]
-        if len(table) < nseg:
-            raise ValueError("Ogg segment table truncated")
-        body = pos + 27 + nseg
-        page_len = int(np.sum(np.frombuffer(table, np.uint8))) if nseg else 0
-        if body + page_len > len(payload):
-            raise ValueError("Ogg page body truncated")
-        if serial is None:
-            serial = ser
-        if ser == serial:
-            n_pages += 1
-            if granule >= 0:
-                last_granule = granule
-            if not flags & 0x01:  # not a continuation: flush any tail
-                if cur:
-                    packets.append(bytes(cur))
-                    cur = bytearray()
-            seg_pos = body
-            for lace in table:
-                cur += payload[seg_pos : seg_pos + lace]
-                seg_pos += lace
-                total += lace
-                if total > max_bytes:
-                    raise ValueError("Ogg stream exceeds the decode cap")
-                if lace < 255:
-                    packets.append(bytes(cur))
-                    cur = bytearray()
-        pos = body + page_len
-    if cur:
-        packets.append(bytes(cur))
-    if not packets:
-        raise ValueError("Ogg stream has no packets")
-    return packets, last_granule, n_pages
-
-
-def _ogg_flac_native(packets: list[bytes]) -> bytes:
-    """Native fLaC bytes from Ogg-FLAC packets (the Xiph mapping):
-    packet 0 is 0x7F 'FLAC' major minor n_headers(2BE) + the native
-    'fLaC' signature + STREAMINFO; the following n_headers packets
-    are metadata blocks (skipped — STREAMINFO is re-flagged as the
-    last block); everything after is raw FLAC frames."""
-    p0 = packets[0]
-    if len(p0) < 9 + 4 + 4 + 34 or p0[9:13] != b"fLaC":
-        raise ValueError("Ogg-FLAC first packet malformed")
-    n_headers = struct.unpack_from(">H", p0, 7)[0]
-    streaminfo = bytearray(p0[13 : 13 + 4 + 34])
-    streaminfo[0] |= 0x80  # mark STREAMINFO as the last metadata block
-    if (streaminfo[0] & 0x7F) != 0:
-        raise ValueError("Ogg-FLAC first block is not STREAMINFO")
-    out = bytearray(b"fLaC") + streaminfo
-    for pk in packets[1 + n_headers :] if n_headers else packets[1:]:
-        if pk[:1] == b"\xff":  # audio frames only; stray metadata skipped
-            out += pk
-    return bytes(out)
-
-
-def _ogg_audio_info(payload: bytes) -> tuple[str, dict | bytes]:
-    """('flac', native bytes) for Ogg-FLAC, or ('vorbis'/'opus',
-    triage dict) for the transform codecs."""
-    packets, last_granule, _ = _ogg_packets(payload)
-    p0 = packets[0]
-    if p0[:5] == b"\x7fFLAC":
-        return "flac", _ogg_flac_native(packets)
-    if p0[:7] == b"\x01vorbis":
-        if len(p0) < 30:
-            raise ValueError("Vorbis identification header truncated")
-        n_ch = p0[11]
-        (rate,) = struct.unpack_from("<I", p0, 12)
-        if n_ch < 1 or rate == 0:
-            raise ValueError("Vorbis identification header invalid")
-        return "vorbis", {
-            "kind": "audio",
-            "codec": "vorbis",
-            "n_channels": int(n_ch),
-            "sample_rate": int(rate),
-            "n_frames": int(last_granule),
-            "duration_s": last_granule / rate,
-        }
-    if p0[:8] == b"OpusHead":
-        if len(p0) < 19:
-            raise ValueError("OpusHead truncated")
-        n_ch = p0[9]
-        (pre_skip,) = struct.unpack_from("<H", p0, 10)
-        (in_rate,) = struct.unpack_from("<I", p0, 12)
-        if n_ch < 1:
-            raise ValueError("OpusHead invalid")
-        # granule positions are ALWAYS 48 kHz for Opus, minus pre-skip
-        frames = max(0, last_granule - pre_skip)
-        return "opus", {
-            "kind": "audio",
-            "codec": "opus",
-            "n_channels": int(n_ch),
-            "sample_rate": int(in_rate),
-            "n_frames": int(frames),
-            "duration_s": frames / 48000.0,
-        }
-    raise NotImplementedError(
-        "Ogg codec not decodable here (only Ogg-FLAC decodes; "
-        "Vorbis/Opus triage via decode_ogg)"
-    )
-
-
-def decode_ogg(payload: bytes) -> dict:
-    """Ogg entry: Ogg-FLAC decodes samples for REAL through the
-    native-FLAC delegation; Vorbis and Opus report triage metadata
-    only (no rms — their sample decode needs a codec library)."""
-    kind, info = _ogg_audio_info(payload)
-    if kind == "flac":
-        return decode_flac(info)
-    return info
-
-
-_OGG_CRC_TABLE = None
-
-
-def _ogg_crc(data: bytes) -> int:
-    """The Ogg page CRC: CRC-32 poly 0x04C11DB7, no reflection, zero
-    init and final xor (RFC 3533 appendix)."""
-    global _OGG_CRC_TABLE
-    if _OGG_CRC_TABLE is None:
-        table = np.zeros(256, dtype=np.uint32)
-        for i in range(256):
-            r = i << 24
-            for _ in range(8):
-                r = ((r << 1) ^ 0x04C11DB7 if r & 0x80000000 else r << 1) & 0xFFFFFFFF
-            table[i] = r
-        _OGG_CRC_TABLE = table
-    crc = 0
-    for b in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ int(_OGG_CRC_TABLE[((crc >> 24) ^ b) & 0xFF])
-    return crc
-
-
-def _ogg_pages(
-    packets: list[bytes], serial: int = 0x1234, granules: list[int] | None = None
-) -> bytes:
-    """Ogg byte stream from whole packets (builder twin): one packet
-    per page, 255-lacing, BOS on the first page, EOS + the declared
-    granule on the last, real page CRCs."""
-    out = bytearray()
-    for i, pk in enumerate(packets):
-        laces = [255] * (len(pk) // 255) + [len(pk) % 255]
-        granule = (granules[i] if granules else 0) if i else 0
-        flags = (0x02 if i == 0 else 0) | (0x04 if i == len(packets) - 1 else 0)
-        page = bytearray(b"OggS\x00")
-        page.append(flags)
-        page += struct.pack("<qIII", granule, serial, i, 0)
-        page.append(len(laces))
-        page += bytes(laces)
-        page += pk
-        struct.pack_into("<I", page, 22, _ogg_crc(bytes(page)))
-        out += page
-    return bytes(out)
-
-
-def _ogg_flac_payload(raw: bytes, rate: int = 8000) -> bytes:
-    """The SAME sample contract as ``_flac_payload`` in an Ogg-FLAC
-    wrapping (the Xiph mapping): first packet embeds the native
-    signature + STREAMINFO, audio frames follow one per packet."""
-    from .media import _flac_payload  # back edge: synthesizer lives later
-
-    native = _flac_payload(raw, rate)
-    streaminfo = bytearray(native[4 : 4 + 4 + 34])
-    streaminfo[0] &= 0x7F  # not-last: headers may follow per mapping
-    first = b"\x7fFLAC\x01\x00" + struct.pack(">H", 0) + b"fLaC" + bytes(streaminfo)
-    frames = native[4 + 4 + 34 :]
-    n = len(np.frombuffer(raw, np.uint8))
-    return _ogg_pages([first, frames], granules=[0, n])
-

@@ -47,9 +47,11 @@ def read_cnpj_csv(
     """Read one CNPJ table's CSV file(s) into a typed DataFrame.
 
     Column names are assigned positionally from the frozen schema
-    (``fetch_data.py:18-46`` applied at ``:71``); the column count is
-    asserted so a silent source-layout drift fails loudly instead of
-    misnaming columns (SURVEY.md §7.4).
+    (``fetch_data.py:18-46`` applied at ``:71``). The explicit schema
+    fixes the frame's columns, so a drifted source layout does not
+    change them: a short row reads its missing fields as null and a
+    long row's extra fields are dropped. ``quarantine_col`` is the
+    guard for such rows (SURVEY.md §7.4).
 
     With ``quarantine_col`` set, rows PERMISSIVE couldn't fully parse
     carry their raw text in that column (null for clean rows) — the
@@ -66,25 +68,15 @@ def read_cnpj_csv(
 
     options = dict(CNPJ_CSV_OPTIONS)
     if quarantine_col:
-        import copy
-
         from pyspark.sql import types as T
 
         raw_schema = T.StructType(
-            list(copy.deepcopy(RAW_SCHEMAS[table]).fields)
+            list(raw_schema.fields)
             + [T.StructField(quarantine_col, T.StringType(), True)]
         )
         options["columnNameOfCorruptRecord"] = quarantine_col
 
     df = spark.read.options(**options).schema(raw_schema).csv(paths)
-
-    # Assert layout: a drifted source (extra/missing columns) shows up as
-    # an all-null trailing column or non-null overflow; cheap sample check.
-    expected = len(RAW_SCHEMAS[table].fields) + (1 if quarantine_col else 0)
-    actual = len(df.columns)
-    if actual != expected:
-        raise ValueError(f"{table}: expected {expected} columns, read {actual}")
-
     for col in DECIMAL_COMMA_COLUMNS.get(table, []):
         df = df.withColumn(col, decimal_comma_to_double(F.col(col)))
     return df

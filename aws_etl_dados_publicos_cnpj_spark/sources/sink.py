@@ -86,6 +86,19 @@ def compact_partition(
     row-group pruning, so clustered tables must compact with the same
     keys."""
     part_path = f"{table_root}/{PARTITION_COLUMN}={ref_date}"
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = jvm_path(table_root).getFileSystem(spark._jsc.hadoopConfiguration())
+    old_path = f"{table_root}/.compact_old_{ref_date}"
+
+    def rename(src: str, dst: str) -> None:
+        # Hadoop reports a failed rename by returning false, not by raising
+        if not fs.rename(jvm_path(src), jvm_path(dst)):
+            raise OSError(f"rename {src} -> {dst} failed")
+
+    if not fs.exists(jvm_path(part_path)) and fs.exists(jvm_path(old_path)):
+        # a crash between the two renames below left the partition only
+        # in the aside, which readers skip (dot-directory): restore it
+        rename(old_path, part_path)
     df = spark.read.parquet(part_path)
     n = df.count()
     if cluster_by:
@@ -100,14 +113,11 @@ def compact_partition(
     # object stores would use a manifest commit instead): move the live
     # partition ASIDE first, install the compacted copy, then delete
     # the aside — every intermediate state retains one full copy, so a
-    # crash mid-swap never loses the partition (recover by renaming
-    # .compact_old_<date> back).
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(table_root).getFileSystem(spark._jsc.hadoopConfiguration())
-    old_path = f"{table_root}/.compact_old_{ref_date}"
+    # crash mid-swap never loses the partition (the next call renames
+    # .compact_old_<date> back when the live directory is missing).
     fs.delete(jvm_path(old_path), True)  # leftover aside from a prior crash
-    fs.rename(jvm_path(part_path), jvm_path(old_path))
-    fs.rename(jvm_path(tmp_path), jvm_path(part_path))
+    rename(part_path, old_path)
+    rename(tmp_path, part_path)
     fs.delete(jvm_path(old_path), True)
     return n
 

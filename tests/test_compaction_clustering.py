@@ -46,6 +46,25 @@ def test_compact_partition_recovers_from_stale_aside(spark, tmp_path):
     assert spark.read.parquet(root).count() == 1_000
 
 
+def test_compact_partition_restores_partition_left_aside(spark, tmp_path):
+    """A crash between the swap's two renames leaves the partition only
+    in the .compact_old aside, which readers skip; the next compaction
+    must rename it back, compact it, and leave no aside."""
+    root = str(tmp_path / "t")
+    df = spark.range(1_000).withColumnRenamed("id", "codigo")
+    write_snapshot(df, root, "20230506", target_partitions=4)
+    part = f"{root}/ref_date=20230506"
+    aside = f"{root}/.compact_old_20230506"
+    os.rename(part, aside)
+    n = compact_partition(spark, root, "20230506", target_files=1)
+    assert n == 1_000
+    assert not os.path.exists(aside)
+    assert len(glob.glob(f"{part}/*.parquet")) == 1
+    back = spark.read.parquet(root)
+    assert back.count() == 1_000
+    assert back.agg(F.sum("codigo")).collect()[0][0] == sum(range(1_000))
+
+
 def test_write_clustered_narrow_file_ranges(spark, tmp_path):
     root = str(tmp_path / "c")
     df = spark.range(10_000).withColumnRenamed("id", "codigo")

@@ -101,30 +101,55 @@ def test_wav_bmp_corrupt_payloads_quarantine_as_value_error():
 
 
 def test_decode_features_mixed_media_and_quarantine(spark):
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import encode_jpeg
+
     wav = make_wav([500] * 100)
     bmp = make_bmp(np.full((3, 5, 3), 128, dtype=np.uint8))
+    png = make_png(np.full((2, 4, 3), 64, dtype=np.uint8))
     rows = [
         (1, bytearray(wav), "audio/wav"),
         (2, bytearray(bmp), "image/bmp"),
         (3, bytearray(b"not really media"), "image/bmp"),  # corrupt
         (4, bytearray(b"\x00" * 64), "video/x-flv"),  # unsupported codec
         (5, bytearray(b"\x00" * 64), "video/mp4"),  # corrupt container
-        (6, bytearray(b"\x00" * 64), "video/webm"),  # corrupt EBML (r11)
+        (6, bytearray(png), "image/png"),
     ]
     # formats with no decoder: each quarantines by name, never kills
     # the job (an MPEG frame header, then bare bytes)
-    cut = ["audio/mpeg", "audio/x-voc", "audio/x-8svx", "image/heic", "image/x-xbitmap"]
+    cut = [
+        "audio/mpeg", "audio/x-voc", "audio/x-8svx", "image/heic",
+        "image/x-xbitmap", "image/tiff", "image/webp", "image/x-targa",
+        "image/x-pcx", "image/sgi", "image/x-portable-pixmap", "image/qoi",
+        "image/x-icon", "image/x-dds", "image/x-cmu-raster", "audio/x-caf",
+        "audio/basic", "audio/ogg", "audio/mp4", "audio/x-matroska",
+        "video/x-matroska", "video/webm",
+    ]
     rows += [
         (7 + i, bytearray(b"\xff\xfb\x90\x00" + bytes(60)), mime)
         for i, mime in enumerate(cut)
     ]
+    # progressive (SOF2) and lossless (SOF3) JPEGs quarantine by frame
+    # type: a baseline stream relabeled at its SOF marker
+    jpeg = encode_jpeg(np.full((8, 8), 99, dtype=np.uint8))
+    sof = jpeg.index(b"\xff\xc0")
+    frame_types = {}
+    for marker, name in ((0xC2, "SOF2"), (0xC3, "SOF3")):
+        relabeled = bytearray(jpeg)
+        relabeled[sof + 1] = marker
+        doc_id = 7 + len(cut) + len(frame_types)
+        frame_types[doc_id] = name
+        rows.append((doc_id, relabeled, "image/jpeg"))
     df = spark.createDataFrame(rows, "doc_id long, payload binary, mime string")
-    out = {r.doc_id: r for r in decode_features(df).collect()}
-    assert len(out) == 6 + len(cut)  # quarantine, not row loss
+    got = decode_features(df).collect()
+    out = {r.doc_id: r for r in got}
+    assert len(got) == len(out) == len(rows)  # quarantine, not row loss
     for i, mime in enumerate(cut):
         r = out[7 + i]
         assert not r.ok and r.mime == mime
         assert "NotImplementedError" in r.err and repr(mime) in r.err
+    for doc_id, name in frame_types.items():
+        r = out[doc_id]
+        assert not r.ok and "NotImplementedError" in r.err and name in r.err
     assert out[1].ok and out[1].kind == "audio"
     assert out[1].sample_rate == 8000 and out[1].n_frames == 100
     assert out[1].rms == pytest.approx(500.0)
@@ -134,7 +159,9 @@ def test_decode_features_mixed_media_and_quarantine(spark):
     assert not out[3].ok and "ValueError" in out[3].err
     assert not out[4].ok and "NotImplementedError" in out[4].err
     assert not out[5].ok and "ValueError" in out[5].err  # real walk, bad bytes
-    assert not out[6].ok and "ValueError" in out[6].err  # real walk, bad bytes
+    assert out[6].ok and out[6].kind == "image"
+    assert (out[6].width, out[6].height) == (4, 2)
+    assert out[6].mean_r == pytest.approx(64.0)
 
 
 def test_resize_bmp_exact_nearest_neighbor(spark):
@@ -384,12 +411,10 @@ def test_jpeg_restart_markers_round_trip():
 
 
 def test_jpeg_unsupported_variants_quarantine(spark):
-    """16-bit-quant JPEGs and streams relabeled to a mode their scan
-    headers contradict must raise — and through decode_features they
-    quarantine per row, never killing the job. A baseline stream
-    relabeled SOF3 is CORRUPT lossless (its scan's Ss=0 is not a
-    valid predictor) now that SOF3 decodes for real (r11); relabeled
-    SOF2 is CORRUPT progressive (its one scan has Ss=0,Se=63)."""
+    """16-bit-quant JPEGs and progressive (SOF2) or lossless (SOF3)
+    streams must raise — and through decode_features they quarantine
+    per row, never killing the job. Only baseline sequential decodes:
+    SOF2/SOF3 raise NotImplementedError naming the frame type."""
     from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
         _jpeg_pixels,
         decode_features,
@@ -400,11 +425,11 @@ def test_jpeg_unsupported_variants_quarantine(spark):
     sof = good.find(b"\xff\xc0")
     lossless = bytearray(good)
     lossless[sof + 1] = 0xC3
-    with pytest.raises(ValueError, match="predictor 0 out of range"):
+    with pytest.raises(NotImplementedError, match="SOF3"):
         _jpeg_pixels(bytes(lossless))
     fake_prog = bytearray(good)
     fake_prog[sof + 1] = 0xC2
-    with pytest.raises(ValueError, match="progressive DC scan"):
+    with pytest.raises(NotImplementedError, match="SOF2"):
         _jpeg_pixels(bytes(fake_prog))
     bad_quant = bytearray(good)
     dqt = good.find(b"\xff\xdb")
@@ -422,7 +447,7 @@ def test_jpeg_unsupported_variants_quarantine(spark):
     rows = {r.doc_id: r for r in decode_features(df).collect()}
     assert rows[1].ok and rows[1].kind == "image"
     assert rows[1].width == 8 and rows[1].height == 8
-    assert not rows[2].ok and "predictor" in rows[2].err
+    assert not rows[2].ok and "SOF3" in rows[2].err
     assert not rows[3].ok
 
 
@@ -667,31 +692,6 @@ def test_decode_media_avi_stats(spark):
     rows = decode_features(avi).collect()
     assert len(rows) == 1 and rows[0].ok and rows[0].kind == "video"
     assert rows[0].n_frames == 3
-
-
-def test_jpeg_progressive_decodes_identical_to_baseline():
-    """Progressive (SOF2, spectral selection + one level of successive
-    approximation) reconstructs the EXACT same quantized coefficients
-    as the baseline encoding of the same image — so decode must be
-    bit-identical, grayscale and color, odd dims, both quant tables."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _jpeg_pixels,
-        encode_jpeg,
-    )
-
-    rng = np.random.RandomState(42)
-    q1 = np.ones(64, dtype=np.int64)
-    for h, w, gray, qt in [
-        (16, 24, True, q1),
-        (13, 21, True, None),
-        (16, 24, False, q1),
-        (13, 29, False, None),
-        (1, 1, True, q1),
-    ]:
-        px = rng.randint(0, 256, (h, w) if gray else (h, w, 3)).astype(np.uint8)
-        base = _jpeg_pixels(encode_jpeg(px, qtable=qt))
-        prog = _jpeg_pixels(encode_jpeg(px, qtable=qt, progressive=True))
-        assert (base == prog).all(), (h, w, gray)
 
 
 # --- MP4 ISO-BMFF container walk (r8) -------------------------------
@@ -1448,13 +1448,11 @@ def test_avi_metadata_triage_for_non_mjpeg_codecs(spark):
     struct.pack_into("<I", padded, hl - 4, struct.unpack_from("<I", padded, hl - 4)[0] + len(extra))
     struct.pack_into("<I", padded, 4, len(padded) - 8)
     assert _avi_video_header(bytes(padded))["codec"] == "mjpg"
-    # an AVI whose only stream is 'auds' routes to the AUDIO arm
-    # since r11; this mutant carries '00dc' video chunks and no
-    # '00wb' audio data, so it quarantines there
+    # an AVI whose only stream is 'auds' has no video to decode
     auds = bytearray(avi)
     ai = bytes(auds).find(b"strh") + 8
     auds[ai : ai + 4] = b"auds"
-    with pytest.raises(ValueError, match="no audio data"):
+    with pytest.raises(ValueError, match="no video stream"):
         decode_avi(bytes(auds))
     # truncated strh quarantines
     short = bytearray(avi)
@@ -1521,37 +1519,6 @@ def test_flac_24bit_round_trips_and_fingerprint_gate():
     bad[fi + 3] = (hdr3 & ~0x0E) | (0b100 << 1)  # sample-size code -> 16
     with pytest.raises(ValueError):
         _flac_samples(bytes(bad))
-
-
-def test_mp4_g711_sample_entries_decode():
-    """'ulaw'/'alaw' AudioSampleEntries (r10, the QuickTime telephony
-    staple) decode through the same stsz×stsc×stco resolution and the
-    same CCITT tables as the WAV G.711 arm — byte-for-byte identical
-    expansions; mp4a still quarantines."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _G711_ALAW,
-        _G711_ULAW,
-        _m4a_pcm_payload,
-        _mp4_pcm_samples,
-        _pcm16_samples,
-        decode_media,
-    )
-
-    raw = bytes(range(200)) + bytes(reversed(range(56)))
-    for codec, table in ((b"ulaw", _G711_ULAW), (b"alaw", _G711_ALAW)):
-        p = _m4a_pcm_payload(raw, 8000, codec=codec)
-        s, rate, nch = _mp4_pcm_samples(p)
-        assert rate == 8000 and nch == 1
-        want = table[np.frombuffer(raw, np.uint8)].astype(np.int16)
-        assert np.array_equal(s, want)
-        assert np.array_equal(_pcm16_samples(p), want)
-        d = decode_media(p, "audio/mp4")
-        assert d["kind"] == "audio" and d["n_frames"] == len(raw)
-    # stereo ulaw: interleave preserved
-    p2 = _m4a_pcm_payload(raw, 8000, codec=b"ulaw", stereo=True)
-    s2, _, nch2 = _mp4_pcm_samples(p2)
-    assert nch2 == 2 and len(s2) == len(raw)
-    assert np.array_equal(s2, _G711_ULAW[np.frombuffer(raw, np.uint8)])
 
 
 def test_decode_features_survives_mp3_rows(spark):
@@ -1845,9 +1812,9 @@ def test_image_header_bombs_are_bounded_before_allocation():
 
 
 def test_mixed_image_fixture_same_pixels_both_containers(spark):
-    """BMP, GIF, and TIFF arms (r9) decode to IDENTICAL RGB pixels
-    for the same text, so ahash values (and the near-dup join's key
-    entropy) are container-independent."""
+    """BMP, GIF, and PNG arms decode to IDENTICAL RGB pixels for the
+    same text, so ahash values (and the near-dup join's key entropy)
+    are container-independent."""
     from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
         image_ahash,
         synthesize_mixed_image_from_text,
@@ -1860,9 +1827,41 @@ def test_mixed_image_fixture_same_pixels_both_containers(spark):
     mixed = synthesize_mixed_image_from_text(docs)
     mimes = {r.doc_id: r.mime for r in mixed.collect()}
     assert mimes[0] == "image/bmp" and mimes[1] == "image/gif"
-    assert mimes[2] == "image/tiff" and mimes[5] == "image/tiff"
+    assert mimes[2] == "image/png" and mimes[5] == "image/png"
     hashes = {r.doc_id: r.ahash for r in image_ahash(mixed).collect()}
     assert len(hashes) == 6 and len(set(hashes.values())) == 1
+
+
+def test_fixture_synthesizers_emit_only_kept_containers(spark):
+    """Over doc_id 0-191 (every sub-rotation period) the four
+    multi-container synthesizers emit exactly one container per slot:
+    WAV/AIFF/FLAC, BMP/GIF/PNG, baseline JPEG, VID0/AVI/MP4."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        synthesize_jpeg_from_text,
+        synthesize_mixed_audio_from_text,
+        synthesize_mixed_image_from_text,
+        synthesize_mixed_video_from_text,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"fixture text {i}") for i in range(192)], "doc_id long, text string"
+    )
+    expected = {
+        synthesize_mixed_audio_from_text: {"audio/wav", "audio/aiff", "audio/flac"},
+        synthesize_mixed_image_from_text: {"image/bmp", "image/gif", "image/png"},
+        synthesize_jpeg_from_text: {"image/jpeg"},
+        synthesize_mixed_video_from_text: {
+            "video/x-frames", "video/x-msvideo", "video/mp4",
+        },
+    }
+    for synth, mimes in expected.items():
+        rows = synth(docs).collect()
+        assert len(rows) == 192
+        assert {r.mime for r in rows} == mimes, synth.__name__
+    # every JPEG is baseline: its first (and only) SOF marker is SOF0
+    for r in synthesize_jpeg_from_text(docs).collect():
+        sofs = [m for m in (b"\xff\xc0", b"\xff\xc2", b"\xff\xc3") if m in bytes(r.payload)]
+        assert sofs == [b"\xff\xc0"], r.doc_id
 
 
 # --- FLAC (r8): rice + fixed predictors, fourth compression family ----
@@ -2444,123 +2443,6 @@ def test_video_frame_hashes_quarantines_per_payload(spark):
     assert set(by_doc) == {0, 1, 2} and all(v > 0 for v in by_doc.values())
 
 
-def _make_m4a(**kwargs) -> bytes:
-    """Canonical audio-only ISO-BMFF builder — shared engine-side
-    synthesizer (also the fuzz-seed corpus), see ``_m4a_payload``."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _m4a_payload,
-    )
-
-    return _m4a_payload(**kwargs)
-
-
-def test_mp4_audio_track_metadata_routing():
-    """decode_media routes audio/mp4 through the real 'soun' trak walk
-    (r9): AudioSampleEntry channel count, 16.16 sample rate, stsz
-    sample count, mdhd duration — metadata-before-decode triage; the
-    AAC sample payload itself stays undecodable (no codec libs)."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp4_audio_track,
-        _mp4_video_track,
-        decode_media,
-    )
-
-    out = decode_media(_make_m4a(), "audio/mp4")
-    assert out == {
-        "kind": "audio",
-        "n_channels": 2,
-        "sample_rate": 44100,
-        "n_frames": 44,
-        "codec": "mp4a",
-        "duration_s": 2.0,
-    }
-    # a short (pre-AudioSampleEntry-fields) entry degrades to zeros,
-    # never reads past the declared entry
-    short = decode_media(_make_m4a(entry_bytes=16), "audio/x-m4a")
-    assert short["codec"] == "mp4a" and short["n_channels"] == 0
-    # an audio-only MP4 still has NO video track; a video-only MP4 has
-    # no audio track — the walks don't cross-match handlers
-    with pytest.raises(ValueError, match="no video track"):
-        _mp4_video_track(_make_m4a())
-    with pytest.raises(ValueError, match="no audio track"):
-        _mp4_audio_track(_make_mp4())
-    # video+audio in one container: both walks find their own trak
-    soun_trak = _make_m4a()
-    moov_start = soun_trak.index(b"moov")
-    trak = soun_trak[moov_start + 4 : soun_trak.index(b"mdat") - 4]
-    both = _make_mp4(extra_trak=trak, n_frames=5)
-    assert _mp4_video_track(both)["n_frames"] == 5
-    assert _mp4_audio_track(both)["n_samples"] == 44
-
-
-def test_mp4_audio_corrupt_payloads_quarantine():
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mp4_audio_track,
-    )
-
-    with pytest.raises(ValueError, match="not an ISO-BMFF"):
-        _mp4_audio_track(b"\x00" * 32)
-    good = _make_m4a()
-    for cut in (len(good) - 30, len(good) // 2, 20):
-        try:
-            _mp4_audio_track(good[:cut])
-        except ValueError:
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-
-
-def test_mp4_pcm_round_trip_and_routing():
-    """PCM-in-MP4 (r9): 'twos'/'sowt' sample entries decode REAL
-    samples through the same stsz×stsc×stco resolution MJPEG video
-    uses — both endiannesses, mono and stereo, multi-chunk stsc —
-    while mp4a keeps the metadata-only stats and the sample layer's
-    NotImplementedError quarantine."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _m4a_pcm_payload,
-        _mp4_audio_track,
-        _mp4_pcm_samples,
-        _mp4_sample_ranges,
-        _pcm16_samples,
-        decode_media,
-    )
-
-    raw = b"0123456789" * 5 + b"abcdef"  # 56 bytes -> 7 chunks, 2 stsc runs
-    want = np.frombuffer(raw, np.uint8).astype(np.int16)
-    for codec in (b"twos", b"sowt"):
-        for stereo in (False, True):
-            p = _m4a_pcm_payload(raw, 8000, codec=codec, stereo=stereo)
-            s, rate, nch = _mp4_pcm_samples(p)
-            assert rate == 8000 and nch == (2 if stereo else 1)
-            assert np.array_equal(s, want)
-            # the container-agnostic fingerprint entry routes ftyp too
-            assert np.array_equal(_pcm16_samples(p), want)
-            d = decode_media(p, "audio/mp4")
-            assert d["codec"] == codec.decode() and "rms" in d
-            assert d["n_frames"] == len(raw) // (2 if stereo else 1)
-    # the fixture exercises a short final chunk and a 2-run stsc
-    p = _m4a_pcm_payload(raw, 8000)
-    trk = _mp4_audio_track(p)
-    assert len(_mp4_sample_ranges(p, trk)) == 56
-    # odd byte counts can't split into stereo frames: mono fallback
-    s, _, nch = _mp4_pcm_samples(_m4a_pcm_payload(raw[:-1], stereo=True))
-    assert nch == 1 and len(s) == 55
-    # mp4a: stats stay metadata-only, sample access quarantines
-    meta = decode_media(_make_m4a(), "audio/mp4")
-    assert meta["codec"] == "mp4a" and "rms" not in meta
-    with pytest.raises(NotImplementedError):
-        _pcm16_samples(_make_m4a())
-    # truncations/corruption stay in the quarantine exception family
-    good = _m4a_pcm_payload(raw, 8000)
-    for cut in (len(good) - 10, len(good) // 2, 40):
-        try:
-            _mp4_pcm_samples(good[:cut])
-        except (ValueError, NotImplementedError):
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-
-
 def test_mp4_stsz_total_amplification_bounded():
     """A hostile NON-uniform stsz whose chunks overlap resolves each
     sample in-bounds while the concatenated output grows quadratic in
@@ -2587,33 +2469,6 @@ def test_mp4_stsz_total_amplification_bounded():
     }
     with pytest.raises(ValueError, match="stsz total"):
         _mp4_sample_ranges(payload, trk)
-
-
-def test_mp4_pcm_in_mixed_audio_fixture(spark):
-    """doc_id % 6 == 3 audio-fixture rows are PCM-in-MP4 ('twos'
-    mono at % 12 == 3, 'sowt' stereo at % 12 == 9); the decoded
-    stream equals the byte contract so the energy hash matches every
-    other container."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        audio_energy_hash,
-        decode_media,
-        synthesize_mixed_audio_from_text,
-    )
-
-    text = "an even-length audio fixture text!"  # 34 bytes
-    docs = spark.createDataFrame(
-        [(i, text) for i in range(3, 15)], "doc_id long, text string"
-    )
-    mixed = synthesize_mixed_audio_from_text(docs)
-    rows = {r.doc_id: r for r in mixed.collect()}
-    assert rows[3].mime == "audio/mp4" and rows[9].mime == "audio/mp4"
-    assert rows[6].mime == "audio/wav" and rows[12].mime == "audio/wav"
-    d3 = decode_media(bytes(rows[3].payload), "audio/mp4")
-    assert d3["codec"] == "twos" and d3["n_channels"] == 1
-    d9 = decode_media(bytes(rows[9].payload), "audio/mp4")
-    assert d9["codec"] == "sowt" and d9["n_channels"] == 2
-    hashes = {r.doc_id: r.ehash for r in audio_energy_hash(mixed).collect()}
-    assert len(hashes) == 12 and len(set(hashes.values())) == 1
 
 
 def test_encoder_input_validation_fuzz_findings():
@@ -2653,189 +2508,6 @@ def test_encoder_input_validation_fuzz_findings():
     assert encode_flac(np.zeros(16, dtype=np.int16)).startswith(b"fLaC")
 
 
-# --- GIF animation playback (r9 depth on the r8 codec) ---------------
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    h=st.integers(2, 20),
-    w=st.integers(2, 20),
-    nf=st.integers(1, 5),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_gif_animation_round_trip_property(h, w, nf, seed):
-    """encode_gif_animation writes frame 2+ as bounding-box delta
-    patches with a transparent index for unchanged pixels — so equality
-    after decode proves the decoder's offset placement, transparency
-    compositing, and canvas carry-over are all correct."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _gif_frames,
-        encode_gif_animation,
-    )
-
-    rng = np.random.RandomState(seed)
-    base = (rng.randint(0, 4, (h, w, 3)) * 80).astype(np.uint8)
-    frames = [base]
-    for _ in range(nf - 1):
-        nxt = frames[-1].copy()
-        if rng.rand() < 0.8:  # mutate a sub-rectangle (sometimes none)
-            y0, x0 = rng.randint(0, h), rng.randint(0, w)
-            y1, x1 = rng.randint(y0, h) + 1, rng.randint(x0, w) + 1
-            nxt[y0:y1, x0:x1] = (rng.randint(0, 4, (y1 - y0, x1 - x0, 3)) * 80).astype(
-                np.uint8
-            )
-        frames.append(nxt)
-    got = _gif_frames(encode_gif_animation(frames))
-    assert len(got) == len(frames)
-    for i, (g, f) in enumerate(zip(got, frames)):
-        assert (g == f).all(), f"frame {i}"
-
-
-def test_gif_animation_disposal_and_first_frame_compat():
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _gif_frames,
-        _gif_pixels,
-        encode_gif,
-        encode_gif_animation,
-    )
-
-    # single-frame animation == the plain encoder's single image,
-    # and _gif_pixels (first-frame fast path) agrees with playback
-    px = (np.arange(48, dtype=np.uint8).reshape(4, 4, 3) * 5).astype(np.uint8)
-    anim = encode_gif_animation([px])
-    assert (_gif_frames(anim)[0] == px).all()
-    assert (_gif_frames(encode_gif(px))[0] == _gif_pixels(encode_gif(px))).all()
-
-    # disposal=2 (restore to background) between frames: craft a GIF
-    # whose frame 2 is a transparent 1x1 patch — after disposal the
-    # canvas region must show the BACKGROUND color, not frame 1
-    import struct as _s
-
-    pal = b"\x10\x20\x30" + b"\xaa\xbb\xcc" + b"\x00" * 6  # bg=idx0
-    out = bytearray(b"GIF89a")
-    out += _s.pack("<HHBBB", 2, 1, 0x80 | 0x01, 0, 0)  # 4-color global, bg=0
-    out += pal
-    # frame 1: both pixels color 1, disposal=2
-    out += b"\x21\xf9\x04" + bytes([(2 << 2) | 0]) + b"\x00\x00\x00\x00"
-    out += _s.pack("<BHHHHB", 0x2C, 0, 0, 2, 1, 0)
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _gif_lzw_encode,
-    )
-
-    out.append(2)
-    data = _gif_lzw_encode([1, 1], 2)
-    out += bytes([len(data)]) + data + b"\x00"
-    # frame 2: 1x1 patch at (0,0), transparent index 3 → shows what
-    # disposal left underneath (the background color)
-    out += b"\x21\xf9\x04" + bytes([(0 << 2) | 1]) + b"\x00\x00\x03\x00"
-    out += _s.pack("<BHHHHB", 0x2C, 0, 0, 1, 1, 0)
-    out.append(2)
-    data = _gif_lzw_encode([3], 2)
-    out += bytes([len(data)]) + data + b"\x00"
-    out += b"\x3b"
-    f = _gif_frames(bytes(out))
-    assert (f[0][0, 0] == [0xAA, 0xBB, 0xCC]).all()
-    assert (f[1][0, 0] == [0x10, 0x20, 0x30]).all()  # bg restored, transparent
-
-
-def test_gif_animation_hostile_payloads_quarantine():
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _gif_frames,
-        encode_gif_animation,
-    )
-
-    px = np.zeros((4, 4, 3), dtype=np.uint8)
-    good = encode_gif_animation([px, px])
-    # lying 65535x65535 logical screen must raise before the 12.8 GB
-    # canvas allocation
-    bad = bytearray(good)
-    struct.pack_into("<HH", bad, 6, 0xFFFF, 0xFFFF)
-    with pytest.raises(ValueError, match="screen dimensions"):
-        _gif_frames(bytes(bad))
-    # frame rectangle outside the screen must raise, not write OOB
-    idx = good.index(b"\x2c", 20)
-    bad = bytearray(good)
-    struct.pack_into("<HH", bad, idx + 1, 100, 100)
-    with pytest.raises(ValueError, match="outside the logical screen"):
-        _gif_frames(bytes(bad))
-    for cut in (len(good) - 3, len(good) // 2, 14):
-        try:
-            _gif_frames(good[:cut])
-        except ValueError:
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-
-
-def test_video_frame_hashes_accepts_animated_gif(spark):
-    """An animated GIF routes through the same frame-fingerprint path
-    as VID0/AVI/MP4 — one aHash row per composed playback frame."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        encode_gif_animation,
-        video_frame_hashes,
-    )
-
-    rng = np.random.RandomState(7)
-    frames = [
-        (rng.randint(0, 3, (8, 8, 3)) * 100).astype(np.uint8) for _ in range(3)
-    ]
-    payload = encode_gif_animation(frames)
-    df = spark.createDataFrame(
-        [(1, bytearray(payload), "image/gif")],
-        "doc_id long, payload binary, mime string",
-    )
-    rows = video_frame_hashes(df).collect()
-    assert len(rows) == 3
-    assert sorted(r.frame_id for r in rows) == [0, 1, 2]
-
-
-def test_gif_playback_resource_bounds_review_findings():
-    """r9 self-review regressions: (a) zero-area image blocks were a
-    free frame-amplification vector (24 KB payload -> 393 MB of
-    canvas copies) and now raise; (b) the data-backed screen bound is
-    loose by LZW's 4096x dictionary factor, so a large-but-plausible
-    payload declaring 65535x65535 must hit the ABSOLUTE canvas cap
-    before the 12.8 GB allocation; (c) a long animation's total
-    output is capped."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _gif_frames,
-        encode_gif_animation,
-    )
-
-    px = np.zeros((4, 4, 3), dtype=np.uint8)
-    good = encode_gif_animation([px, px])
-    # (a) zero-area block
-    idx = good.index(b"\x2c", 20)
-    bad = bytearray(good)
-    struct.pack_into("<HH", bad, idx + 5, 0, 0)  # w=h=0
-    with pytest.raises(ValueError, match="zero area"):
-        _gif_frames(bytes(bad))
-    # (b) 65535x65535 screen with enough trailing bytes to clear the
-    # data-backed bound must still raise on the absolute cap
-    big = bytearray(good) + bytes(400_000)
-    struct.pack_into("<HH", big, 6, 0xFFFF, 0xFFFF)
-    with pytest.raises(ValueError, match="decode cap"):
-        _gif_frames(bytes(big))
-    # (c) total-output cap: patch the cap down so the case stays fast
-    # while exercising the real guard (n_frames * canvas > cap).
-    # r13: the guard reads its OWN module's global, so patch the
-    # implementing submodule, not the facade.
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        image as mm_image,
-    )
-
-    frames = [np.zeros((64, 64, 3), dtype=np.uint8)] * 8  # 8 x 12 KB
-    payload = encode_gif_animation(frames)
-    saved = mm_image._GIF_MAX_OUTPUT_BYTES
-    try:
-        mm_image._GIF_MAX_OUTPUT_BYTES = 4 * 64 * 64 * 3
-        with pytest.raises(ValueError, match="output exceeds"):
-            _gif_frames(payload)
-    finally:
-        mm_image._GIF_MAX_OUTPUT_BYTES = saved
-    assert len(_gif_frames(payload)) == 8  # under the real cap: fine
-
-
 def test_encoders_reject_out_of_range_and_lossy_inputs():
     """r9 self-review: encode_gif wrapped finite out-of-range values
     via the uint8 cast (300 -> 44, -5.0 -> UB) and encode_flac
@@ -2843,15 +2515,12 @@ def test_encoders_reject_out_of_range_and_lossy_inputs():
     from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
         encode_flac,
         encode_gif,
-        encode_gif_animation,
     )
 
     with pytest.raises(ValueError, match=r"\[0, 255\]"):
         encode_gif(np.full((2, 2, 3), 300))
     with pytest.raises(ValueError, match=r"\[0, 255\]"):
         encode_gif(np.full((2, 2, 3), -5.0))
-    with pytest.raises(ValueError, match=r"\[0, 255\]"):
-        encode_gif_animation([np.full((2, 2, 3), 300)])
     with pytest.raises(ValueError, match="non-integral"):
         encode_flac(np.asarray([100.7, -3.9]))
     # integral floats remain accepted (lossless cast)
@@ -3176,22 +2845,21 @@ def test_bmp_rle8_dimension_bomb_raises():
 
 
 def test_image_encoders_reject_fractional_floats():
-    """encode_gif/encode_tiff/encode_jpeg contract lossless (or
-    deterministic) pixel round trips — a finite fractional float like
-    3.7 must raise, not silently truncate through astype(uint8),
-    matching the FLAC/ADPCM encoders' discipline (r9 ADVICE)."""
+    """encode_gif/encode_jpeg contract lossless (or deterministic)
+    pixel round trips — a finite fractional float like 3.7 must raise,
+    not silently truncate through astype(uint8), matching the FLAC
+    encoder's discipline (r9 ADVICE)."""
     from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
         encode_gif,
         encode_jpeg,
-        encode_tiff,
     )
 
     px = np.full((8, 8), 3.7)
-    for enc in (encode_gif, encode_tiff, encode_jpeg):
+    for enc in (encode_gif, encode_jpeg):
         with pytest.raises(ValueError, match="non-integral"):
             enc(px)
     # integral-valued floats still encode
-    for enc in (encode_gif, encode_tiff, encode_jpeg):
+    for enc in (encode_gif, encode_jpeg):
         enc(np.full((8, 8), 3.0))
 
 
@@ -3363,230 +3031,7 @@ def test_second_review_pass_regressions(spark):
     assert sorted(r.sample for r in rows) == sorted(float(v) for v in vals)
 
 
-# --- TIFF baseline (r9): fourth image container family ----------------
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    h=st.integers(1, 24),
-    w=st.integers(1, 24),
-    gray=st.booleans(),
-    comp=st.sampled_from([1, 5, 8, 32773]),
-    rps=st.integers(1, 25),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_tiff_round_trip_property(h, w, gray, comp, rps, seed):
-    """encode_tiff -> _tiff_pixels is lossless across compressions
-    (none / LZW early-change / PackBits), strip layouts, gray and
-    RGB — the encoder exercises real dictionary growth and runs."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        encode_tiff,
-    )
-
-    rng = np.random.RandomState(seed)
-    shape = (h, w) if gray else (h, w, 3)
-    # low-entropy patches so LZW/PackBits hit their run/dictionary paths
-    px = (rng.randint(0, 4, shape) * 80).astype(np.uint8)
-    t = encode_tiff(px, compression=comp, rows_per_strip=rps)
-    got = _tiff_pixels(t)
-    want = px if px.ndim == 3 else np.repeat(px[:, :, None], 3, axis=2)
-    assert (got == want).all()
-
-
-def _tiff_ifd(entries, e="<", data=b""):
-    """Hand-build a one-IFD TIFF: entries = [(tag, typ, vals)] with
-    values fitting inline; `data` appended after the IFD."""
-    out = bytearray((b"II*\x00" if e == "<" else b"MM\x00*"))
-    out += struct.pack(f"{e}I", 8)
-    out += struct.pack(f"{e}H", len(entries))
-    fmt = {3: "H", 4: "I"}
-    overflow = bytearray()
-    overflow_off = 8 + 2 + 12 * len(entries) + 4
-    fixed = bytearray()
-    for tag, typ, vals in sorted(entries):
-        fixed += struct.pack(f"{e}HHI", tag, typ, len(vals))
-        total = {3: 2, 4: 4}[typ] * len(vals)
-        if total <= 4:
-            fixed += struct.pack(f"{e}{len(vals)}{fmt[typ]}", *vals).ljust(4, b"\0")
-        else:
-            fixed += struct.pack(f"{e}I", overflow_off + len(overflow))
-            overflow += struct.pack(f"{e}{len(vals)}{fmt[typ]}", *vals)
-    out += fixed + struct.pack(f"{e}I", 0) + overflow + data
-    return bytes(out), overflow_off + len(overflow)
-
-
-def test_tiff_palette_bilevel_whitezero_and_bigendian():
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        decode_media,
-    )
-
-    # palette via bps 4 (ColorMap needs only 3*16 entries):
-    cmap16 = [(i << 12) for i in range(16)] * 3
-    nib = bytes([0x01, 0x32])  # indices 0,1 / 3,2
-    entries = [
-        (256, 4, [2]), (257, 4, [2]), (258, 3, [4]), (259, 3, [1]),
-        (262, 3, [3]), (277, 3, [1]), (278, 4, [2]), (279, 4, [2]),
-        (320, 3, cmap16),
-    ]
-    payload, data_off = _tiff_ifd(entries + [(273, 4, [0])])
-    # patch strip offset (tag 273 inline) to the data position
-    payload = bytearray(payload + nib)
-    # find the 273 entry and set its value to len(payload)-2
-    for i in range(struct.unpack_from("<H", payload, 8)[0]):
-        off = 10 + 12 * i
-        if struct.unpack_from("<H", payload, off)[0] == 273:
-            struct.pack_into("<I", payload, off + 8, len(payload) - 2)
-    px = _tiff_pixels(bytes(payload))
-    # index k maps to 16-bit (k<<12) -> 8-bit (k<<12)>>8 = k*16
-    assert px.shape == (2, 2, 3)
-    assert (px[0, 0] == [0, 0, 0]).all() and (px[0, 1] == [16, 16, 16]).all()
-    assert (px[1, 0] == [48, 48, 48]).all() and (px[1, 1] == [32, 32, 32]).all()
-
-    # 1-bit WhiteIsZero (photometric 0): bit 0 -> white 255
-    bits = bytes([0b10100000])  # row of 3 pixels: 1,0,1
-    entries = [
-        (256, 4, [3]), (257, 4, [1]), (258, 3, [1]), (259, 3, [1]),
-        (262, 3, [0]), (277, 3, [1]), (278, 4, [1]), (279, 4, [1]),
-        (273, 4, [0]),
-    ]
-    payload, _ = _tiff_ifd(entries)
-    payload = bytearray(payload + bits)
-    for i in range(struct.unpack_from("<H", payload, 8)[0]):
-        off = 10 + 12 * i
-        if struct.unpack_from("<H", payload, off)[0] == 273:
-            struct.pack_into("<I", payload, off + 8, len(payload) - 1)
-    px = _tiff_pixels(bytes(payload))
-    assert (px[0, :, 0] == [0, 255, 0]).all()  # 1->black, 0->white
-
-    # big-endian: same gray image via MM byte order
-    gray_row = bytes([10, 200])
-    entries = [
-        (256, 4, [2]), (257, 4, [1]), (258, 3, [8]), (259, 3, [1]),
-        (262, 3, [1]), (277, 3, [1]), (278, 4, [1]), (279, 4, [2]),
-        (273, 4, [0]),
-    ]
-    payload, _ = _tiff_ifd(entries, e=">")
-    payload = bytearray(payload + gray_row)
-    for i in range(struct.unpack_from(">H", payload, 8)[0]):
-        off = 10 + 12 * i
-        if struct.unpack_from(">H", payload, off)[0] == 273:
-            struct.pack_into(">I", payload, off + 8, len(payload) - 2)
-    px = _tiff_pixels(bytes(payload))
-    assert (px[0, :, 0] == [10, 200]).all()
-    out = decode_media(bytes(payload), "image/tiff")
-    assert out["kind"] == "image" and out["width"] == 2
-
-
-def test_tiff_hostile_payloads_quarantine():
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        encode_tiff,
-    )
-
-    with pytest.raises(ValueError, match="not a TIFF"):
-        _tiff_pixels(b"XX" * 8)
-    good = encode_tiff(np.zeros((4, 4, 3), dtype=np.uint8), compression=5)
-    # truncations must raise ValueError, never leak struct/IndexError
-    for cut in (5, 11, len(good) // 2, len(good) - 2):
-        try:
-            _tiff_pixels(good[:cut])
-        except ValueError:
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-    # dimension bomb past the absolute cap
-    bomb = bytearray(good)
-    for i in range(struct.unpack_from("<H", bomb, 8)[0]):
-        off = 10 + 12 * i
-        if struct.unpack_from("<H", bomb, off)[0] in (256, 257):
-            struct.pack_into("<I", bomb, off + 8, 100_000)
-    with pytest.raises(ValueError, match="decode cap"):
-        _tiff_pixels(bytes(bomb))
-    # implausible tag count must raise before allocating values
-    bomb = bytearray(good)
-    struct.pack_into("<I", bomb, 10 + 4, 1 << 28)  # first entry's count
-    with pytest.raises(ValueError, match="implausible|out of bounds|truncated|missing"):
-        _tiff_pixels(bytes(bomb))
-
-
-def test_tiff_lzw_early_change_across_width_bumps():
-    """r9 encoder-fuzz regression: the decoder's table lags the
-    encoder's by one add, so early change must widen one slot earlier
-    on the decode side — high-entropy images crossing the 511/1023/
-    2047 boundaries desynchronized ('code out of range') before the
-    fix. This image's stream crosses every width bump and the 4094
-    table reset."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        encode_tiff,
-    )
-
-    rng = np.random.RandomState(123)
-    px = rng.randint(0, 256, (120, 120, 3)).astype(np.uint8)
-    t = encode_tiff(px, compression=5)
-    assert (_tiff_pixels(t) == px).all()
-
-
-def test_tiff_lzw_accumulator_stays_bounded():
-    """r9 third-review regression: the MSB-first accumulator was never
-    masked, so acc grew with the stream and every shift went quadratic
-    (a 0.7 MB strip took hours). Large high-entropy strips must decode
-    in linear time — bound the wall clock generously."""
-    import time
-
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        encode_tiff,
-    )
-
-    rng = np.random.RandomState(11)
-    px = rng.randint(0, 256, (300, 300, 3)).astype(np.uint8)
-    t0 = time.perf_counter()
-    t = encode_tiff(px, compression=5)
-    assert (_tiff_pixels(t) == px).all()
-    assert time.perf_counter() - t0 < 30  # was minutes when quadratic
-    with pytest.raises(ValueError, match="rows_per_strip"):
-        encode_tiff(px, rows_per_strip=-1)
-
-
-# --- r9 batch 2: TIFF predictor, G.711 WAV, JPEG 4:2:2 ----------------
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    h=st.integers(1, 20),
-    w=st.integers(1, 20),
-    gray=st.booleans(),
-    comp=st.sampled_from([1, 5, 8, 32773]),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_tiff_predictor2_round_trip(h, w, gray, comp, seed):
-    """Horizontal differencing (tag 317, libtiff's default with LZW)
-    round-trips exactly through encode->decode and actually helps
-    compression on smooth content."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        encode_tiff,
-    )
-
-    rng = np.random.RandomState(seed)
-    shape = (h, w) if gray else (h, w, 3)
-    px = (np.cumsum(rng.randint(0, 3, shape), axis=1) % 256).astype(np.uint8)
-    t = encode_tiff(px, compression=comp, predictor=2, rows_per_strip=4)
-    got = _tiff_pixels(t)
-    want = px if px.ndim == 3 else np.repeat(px[:, :, None], 3, axis=2)
-    assert (got == want).all()
-
-
-def test_tiff_predictor2_compresses_gradients():
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import encode_tiff
-
-    grad = np.tile(np.arange(256, dtype=np.uint8), (64, 1))
-    assert len(encode_tiff(grad, 5, predictor=2)) < len(encode_tiff(grad, 5)) / 4
-    with pytest.raises(ValueError, match="predictor"):
-        encode_tiff(grad, 5, predictor=3)
+# --- r9 batch 2: G.711 WAV, JPEG 4:2:2 -------------------------------
 
 
 def _g711_wav(tag, data, n_ch=1, rate=8000):
@@ -3663,12 +3108,10 @@ def test_g711_consistency_review_regressions():
     """r9 fourth-review: (a) ragged stereo tails truncate to whole
     frames like the PCM arm; (b) the fingerprint family accepts G.711
     (it expands to exact int16) so the stats/fingerprint support
-    matrices can't drift; (c) encode_tiff rejects rows_per_strip=0
-    instead of silently defaulting."""
+    matrices can't drift."""
     from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
         _pcm16_samples,
         decode_wav,
-        encode_tiff,
     )
 
     ragged = _g711_wav(6, bytes([0x55, 0xD5, 0x2A, 0xAA, 0x55]), n_ch=2)
@@ -3677,396 +3120,6 @@ def test_g711_consistency_review_regressions():
     assert out["peak"] == 32256.0  # orphan byte excluded from stats
     s = _pcm16_samples(_g711_wav(7, bytes([0x00, 0xFF, 0x80])))
     assert s.dtype == np.int16 and list(s) == [-32124, 0, 32124]
-    with pytest.raises(ValueError, match="rows_per_strip"):
-        encode_tiff(np.zeros((4, 4, 3), dtype=np.uint8), rows_per_strip=0)
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    h=st.integers(1, 30),
-    w=st.integers(1, 30),
-    tw=st.sampled_from([1, 3, 5, 8, 12, 16]),
-    th=st.sampled_from([1, 3, 5, 8, 12, 16]),
-    comp=st.sampled_from([1, 5, 8, 32773]),
-    pred=st.sampled_from([1, 2]),
-    gray=st.booleans(),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_tiff_tiled_round_trip(h, w, tw, th, comp, pred, gray, seed):
-    """Tiled TIFFs (tags 322-325, the pyramidal layout): full-size
-    edge-padded tiles decode, crop, and assemble exactly, with the
-    predictor resetting per tile row — across every compression."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        encode_tiff,
-    )
-
-    rng = np.random.RandomState(seed)
-    shape = (h, w) if gray else (h, w, 3)
-    px = (rng.randint(0, 4, shape) * 80).astype(np.uint8)
-    # _nonspec_tiles: the DECODER is liberal about tile geometry (real
-    # files violate the multiple-of-16 rule); the encoder is strict by
-    # default so emitted fixtures stay libtiff-readable
-    t = encode_tiff(
-        px, compression=comp, predictor=pred, tile=(tw, th), _nonspec_tiles=True
-    )
-    got = _tiff_pixels(t)
-    want = px if px.ndim == 3 else np.repeat(px[:, :, None], 3, axis=2)
-    assert (got == want).all()
-
-
-def test_tiff_tiled_hostile_payloads():
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        encode_tiff,
-    )
-
-    # TIFF 6.0: tile dims must be multiples of 16 — strict by default
-    with pytest.raises(ValueError, match="multiples of 16"):
-        encode_tiff(np.zeros((8, 8, 3), dtype=np.uint8), tile=(5, 3))
-    good = encode_tiff(np.zeros((24, 24, 3), dtype=np.uint8), tile=(16, 16))
-    # lying huge tile size must hit the cap before the tile buffer
-    bomb = bytearray(good)
-    n = struct.unpack_from("<H", bomb, 8)[0]
-    for i in range(n):
-        off = 10 + 12 * i
-        if struct.unpack_from("<H", bomb, off)[0] in (322, 323):
-            struct.pack_into("<I", bomb, off + 8, 1 << 18)
-    with pytest.raises(ValueError, match="decode cap"):
-        _tiff_pixels(bytes(bomb))
-    # truncations stay in the ValueError family
-    for cut in (len(good) // 2, len(good) - 4, 30):
-        try:
-            _tiff_pixels(good[:cut])
-        except ValueError:
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-
-
-def test_tiff_16bit_round_trips_and_exact_rounding():
-    """16-bit TIFF samples (r10): encode_tiff(bits=16) emits real
-    16-bit strips/tiles; the decoder's RGB8 contract rounds 16→8 with
-    the exact v·255/65535 formula (the PNG depth-16 rule), so v·257
-    round-trips to v across every compression, predictor, and layout."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        decode_tiff,
-        encode_tiff,
-    )
-
-    rng = np.random.RandomState(41)
-    v8 = rng.randint(0, 256, (13, 9, 3))
-    for comp in (1, 5, 8, 32773):
-        for pred in (1, 2):
-            for tile in (None, (16, 16)):
-                for gray in (False, True):
-                    src = v8[:, :, 0] if gray else v8
-                    p = encode_tiff(
-                        src * 257, compression=comp, predictor=pred,
-                        tile=tile, bits=16, rows_per_strip=4,
-                    )
-                    want = (
-                        np.repeat(src[:, :, None], 3, axis=2) if gray else src
-                    ).astype(np.uint8)
-                    assert np.array_equal(_tiff_pixels(p), want), (
-                        comp, pred, tile, gray,
-                    )
-    # arbitrary 16-bit values round exactly (never >>8 truncation)
-    v16 = rng.randint(0, 65536, (5, 7, 3))
-    p = encode_tiff(v16, bits=16, compression=5, predictor=2)
-    assert np.array_equal(
-        _tiff_pixels(p), ((v16 * 255 + 32767) // 65535).astype(np.uint8)
-    )
-    assert decode_tiff(p)["width"] == 7
-    # encoder contract: range and integrality raise, not wrap/truncate
-    with pytest.raises(ValueError, match=r"outside \[0, 65535\]"):
-        encode_tiff(np.full((4, 4), 70000), bits=16)
-    with pytest.raises(ValueError, match="non-integral"):
-        encode_tiff(np.full((4, 4), 3.5), bits=16)
-    with pytest.raises(ValueError, match="bits-per-sample"):
-        encode_tiff(np.zeros((4, 4)), bits=12)
-
-
-def test_tiff_16bit_bigendian_and_whitezero():
-    """16-bit samples follow the FILE byte order; WhiteIsZero inverts
-    in the 16-bit domain before the exact 16→8 round."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-    )
-
-    # MM gray row: values 257 (→1) and 65535 (→255), big-endian
-    row = struct.pack(">2H", 257, 65535)
-    entries = [
-        (256, 4, [2]), (257, 4, [1]), (258, 3, [16]), (259, 3, [1]),
-        (262, 3, [1]), (277, 3, [1]), (278, 4, [1]), (279, 4, [4]),
-        (273, 4, [0]),
-    ]
-    payload, _ = _tiff_ifd(entries, e=">")
-    payload = bytearray(payload + row)
-    for i in range(struct.unpack_from(">H", payload, 8)[0]):
-        off = 10 + 12 * i
-        if struct.unpack_from(">H", payload, off)[0] == 273:
-            struct.pack_into(">I", payload, off + 8, len(payload) - 4)
-    px = _tiff_pixels(bytes(payload))
-    assert (px[0, :, 0] == [1, 255]).all()
-    # same image as WhiteIsZero: 257 → 65278 → 254; 65535 → 0
-    for i in range(struct.unpack_from(">H", payload, 8)[0]):
-        off = 10 + 12 * i
-        if struct.unpack_from(">H", payload, off)[0] == 262:
-            struct.pack_into(">H", payload, off + 8, 0)
-    px = _tiff_pixels(bytes(payload))
-    assert (px[0, :, 0] == [254, 0]).all()
-    # ragged 16-bit strip (3 bytes for a 2-sample row) quarantines
-    for i in range(struct.unpack_from(">H", payload, 8)[0]):
-        off = 10 + 12 * i
-        if struct.unpack_from(">H", payload, off)[0] == 279:
-            struct.pack_into(">I", payload, off + 8, 3)
-    with pytest.raises(ValueError, match="shorter than its rows"):
-        _tiff_pixels(bytes(payload[:-1]))
-
-
-def test_tiff_planar_configuration_2():
-    """PlanarConfiguration 2 (r10): the strip table holds
-    planes×strips entries plane-major; each plane decodes as a
-    one-channel image and channels stack — round trips across
-    compressions, predictors, strip heights, and 16-bit; tiled
-    planar and short strip tables quarantine."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        encode_tiff,
-    )
-
-    rng = np.random.RandomState(31)
-    px = rng.randint(0, 256, (11, 7, 3)).astype(np.uint8)
-    for comp in (1, 5, 8, 32773):
-        for pred in (1, 2):
-            for rps in (None, 3):
-                p = encode_tiff(
-                    px, compression=comp, predictor=pred,
-                    rows_per_strip=rps, planar=2,
-                )
-                assert np.array_equal(_tiff_pixels(p), px), (comp, pred, rps)
-    p16 = encode_tiff(
-        px.astype(np.uint16) * 257, bits=16, planar=2,
-        compression=5, predictor=2, rows_per_strip=4,
-    )
-    assert np.array_equal(_tiff_pixels(p16), px)
-    # planar + gray (spp 1) degenerates to chunky and still decodes
-    pg = encode_tiff(px[:, :, 0], planar=2, rows_per_strip=2)
-    assert np.array_equal(
-        _tiff_pixels(pg), np.repeat(px[:, :, :1], 3, axis=2)
-    )
-    with pytest.raises(ValueError, match="planar"):
-        encode_tiff(px, planar=2, tile=(16, 16))
-    # a planar file whose strip table is one plane short quarantines
-    p = encode_tiff(px, planar=2, rows_per_strip=4)
-    short = bytearray(p)
-    i = bytes(short).find(struct.pack("<HH", 273, 4))
-    assert i > 0
-    struct.pack_into("<I", short, i + 4, 8)  # claim 8 strips, not 9
-    with pytest.raises(ValueError):
-        _tiff_pixels(bytes(short))
-
-
-def test_tiff_cmyk_photometric_5():
-    """CMYK TIFFs (photometric 5 — scanned print) decode through the
-    documented multiplicative under-color removal
-    R = (smax−C)(smax−K)/smax²·255 with exact rounding, at 8 and 16
-    bits, chunky and planar, every compression; encode_tiff(cmyk=True)
-    emits the raw inks."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        decode_tiff,
-        encode_tiff,
-    )
-
-    rng = np.random.RandomState(43)
-    inks = rng.randint(0, 256, (9, 5, 4))
-
-    def want8(a):
-        return (
-            ((255 - a[:, :, :3]) * (255 - a[:, :, 3:4]) * 255 + 255 * 255 // 2)
-            // (255 * 255)
-        ).astype(np.uint8)
-
-    for comp in (1, 5, 8, 32773):
-        for pred in (1, 2):
-            for planar in (1, 2):
-                p = encode_tiff(
-                    inks, compression=comp, predictor=pred, planar=planar,
-                    cmyk=True, rows_per_strip=3,
-                )
-                assert np.array_equal(_tiff_pixels(p), want8(inks)), (
-                    comp, pred, planar,
-                )
-    # hand values: full K = black, no ink = white, pure C = cyan-ish
-    flat = np.zeros((1, 3, 4), np.int64)
-    flat[0, 0] = (0, 0, 0, 255)
-    flat[0, 1] = (0, 0, 0, 0)
-    flat[0, 2] = (255, 0, 0, 0)
-    px = _tiff_pixels(encode_tiff(flat, cmyk=True))
-    assert px[0, 0].tolist() == [0, 0, 0]
-    assert px[0, 1].tolist() == [255, 255, 255]
-    assert px[0, 2].tolist() == [0, 255, 255]
-    inks16 = rng.randint(0, 65536, (5, 4, 4))
-    p16 = encode_tiff(inks16, bits=16, cmyk=True)
-    want16 = (
-        (
-            (65535 - inks16[:, :, :3].astype(np.uint64))
-            * (65535 - inks16[:, :, 3:4])
-            * 255
-            + 65535 * 65535 // 2
-        )
-        // (65535 * 65535)
-    ).astype(np.uint8)
-    assert np.array_equal(_tiff_pixels(p16), want16)
-    assert decode_tiff(p16)["width"] == 4
-    with pytest.raises(ValueError, match="CMYK"):
-        encode_tiff(inks[:, :, :3], cmyk=True)
-
-
-def test_tiff_multipage_chain_decode():
-    """Multi-page TIFFs (r10): the IFD next-pointer chain yields every
-    page via _tiff_pixels(page=k); decode_tiff reports the page count
-    in n_frames; a cycling chain raises instead of looping."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        decode_tiff,
-        encode_tiff,
-    )
-
-    rng = np.random.RandomState(5)
-    pages = [rng.randint(0, 256, (4, 6, 3)).astype(np.uint8) for _ in range(3)]
-    singles = [encode_tiff(p) for p in pages]
-    # chain three single-page files: rebase each file's offsets, then
-    # patch each IFD's next pointer to the following page's IFD
-    blob = bytearray(singles[0])
-    ifd_offs = [struct.unpack_from("<I", singles[0], 4)[0]]
-    for s in singles[1:]:
-        base = len(blob)
-        part = bytearray(s)
-        (ifd,) = struct.unpack_from("<I", part, 4)
-        (n,) = struct.unpack_from("<H", part, ifd)
-        # rebase every LONG offset-bearing entry (strip offsets + any
-        # overflow value pointers) by `base`
-        for i in range(n):
-            off = ifd + 2 + 12 * i
-            tag, typ, cnt = struct.unpack_from("<HHI", part, off)
-            total = {3: 2, 4: 4}[typ] * cnt
-            if total > 4:
-                (ptr,) = struct.unpack_from("<I", part, off + 8)
-                struct.pack_into("<I", part, off + 8, ptr + base)
-            if tag == 273 and total <= 4:
-                (ptr,) = struct.unpack_from("<I", part, off + 8)
-                struct.pack_into("<I", part, off + 8, ptr + base)
-        # (single-strip encodes keep tag 273 inline, so no overflow
-        # ARRAY contents need per-element fixup — only the pointers)
-        ifd_offs.append(ifd + base)
-        blob += part
-    # patch next-IFD pointers (each IFD ends with a 4-byte next ptr)
-    for k in range(len(ifd_offs) - 1):
-        ifd = ifd_offs[k]
-        (n,) = struct.unpack_from("<H", blob, ifd)
-        struct.pack_into("<I", blob, ifd + 2 + 12 * n, ifd_offs[k + 1])
-    payload = bytes(blob)
-    d = decode_tiff(payload)
-    assert d["n_frames"] == 3
-    for k, want in enumerate(pages):
-        assert np.array_equal(_tiff_pixels(payload, page=k), want), k
-    with pytest.raises(ValueError, match="pages"):
-        _tiff_pixels(payload, page=3)
-    # a cycle in the chain: the lazy page walk raises when it must
-    # cross the cycle; the page COUNT stops at the readable prefix
-    loop = bytearray(payload)
-    ifd = ifd_offs[-1]
-    (n,) = struct.unpack_from("<H", loop, ifd)
-    struct.pack_into("<I", loop, ifd + 2 + 12 * n, ifd_offs[0])
-    assert decode_tiff(bytes(loop))["n_frames"] == 3
-    with pytest.raises(ValueError, match="cycles"):
-        _tiff_pixels(bytes(loop), page=5)
-    # a DANGLING next pointer (truncated multi-page scan) must not
-    # quarantine the intact pages before it (r10 review): page 0 and
-    # 1 decode, the count is the readable prefix, page 2 raises
-    dang = bytearray(payload)
-    ifd1 = ifd_offs[1]
-    (n1,) = struct.unpack_from("<H", dang, ifd1)
-    struct.pack_into("<I", dang, ifd1 + 2 + 12 * n1, len(dang) + 99)
-    assert np.array_equal(_tiff_pixels(bytes(dang), page=0), pages[0])
-    assert np.array_equal(_tiff_pixels(bytes(dang), page=1), pages[1])
-    assert decode_tiff(bytes(dang))["n_frames"] == 2
-    with pytest.raises(ValueError, match="out of bounds|pages"):
-        _tiff_pixels(bytes(dang), page=2)
-
-
-def test_tiff_deflate_legacy_tag_and_bomb_bound():
-    """Deflate strips (r9): compression 8 and the legacy 32946 alias
-    decode the same zlib stream, corrupt streams quarantine as
-    ValueError, and the inflate is bounded at the segment's geometry
-    so a deflate bomb cannot allocate past the strip size."""
-    import zlib
-
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        encode_tiff,
-    )
-
-    rng = np.random.RandomState(17)
-    px = rng.randint(0, 256, (6, 6, 3)).astype(np.uint8)
-    good = bytearray(encode_tiff(px, compression=8))
-    # retag 8 -> 32946 in place: same stream, older code
-    idx = good.find(struct.pack("<HH", 259, 3))
-    assert idx > 0 and good[idx + 8] == 8
-    struct.pack_into("<H", good, idx + 8, 32946)
-    assert (_tiff_pixels(bytes(good)) == px).all()
-    # corrupt the zlib stream -> ValueError, not zlib.error
-    bad = bytearray(encode_tiff(px, compression=8))
-    bad[-3] ^= 0xFF
-    with pytest.raises(ValueError):
-        _tiff_pixels(bytes(bad))
-    # a strip that inflates to 64 MiB is cut off at the strip's
-    # geometric size (want bytes), then rejected by the row check
-    # if short — never materialized whole
-    one_row = encode_tiff(np.zeros((1, 4), np.uint8), compression=8)
-    bomb_stream = zlib.compress(b"\x00" * (1 << 26))
-    # replace the single strip: find the original stream bytes
-    orig = zlib.compress(np.zeros((1, 4), np.uint8).tobytes(), 6)
-    assert one_row.endswith(orig)
-    patched = bytearray(one_row[: -len(orig)] + bomb_stream)
-    # fix the strip byte-count tag (279) to the new length
-    idx = patched.find(struct.pack("<HH", 279, 4))
-    assert idx > 0
-    struct.pack_into("<I", patched, idx + 8, len(bomb_stream))
-    got = _tiff_pixels(bytes(patched))  # decodes: first 4 bytes are rows
-    assert got.shape == (1, 4, 3) and (got == 0).all()
-
-
-def test_tiff_deflate_in_mixed_image_fixture(spark):
-    """doc_id % 6 == 5 image-fixture rows are Deflate TIFFs; decoded
-    pixels — and therefore the aHash oracle — match the LZW/BMP/GIF
-    arms exactly."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        image_ahash,
-        synthesize_mixed_image_from_text,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "same text for every image container") for i in range(6)],
-        "doc_id long, text string",
-    )
-    mixed = synthesize_mixed_image_from_text(docs)
-    rows = {r.doc_id: r for r in mixed.collect()}
-    assert rows[2].mime == "image/tiff" and rows[5].mime == "image/tiff"
-    # tag 259: LZW (5) for doc 2, Deflate (8) for doc 5
-    def comp_of(payload):
-        b = bytes(payload)
-        idx = b.find(struct.pack("<HH", 259, 3))
-        return b[idx + 8]
-
-    assert comp_of(rows[2].payload) == 5
-    assert comp_of(rows[5].payload) == 8
-    hashes = {r.doc_id: r.ahash for r in image_ahash(mixed).collect()}
-    assert len(hashes) == 6 and len(set(hashes.values())) == 1
 
 
 def _with_fact(payload: bytes, frames: int) -> bytes:
@@ -4143,48 +3196,6 @@ def test_fact_chunk_applies_to_pcm_arms_too():
     assert decode_wav(_with_fact(pe, 0))["n_frames"] == 200
 
 
-def _gray_tiff_ifd_last(w: int = 2, h: int = 2, next_ptr: bool = True) -> bytes:
-    """Hand-built data-before-IFD grayscale TIFF: pixel strip at
-    offset 8, IFD at the tail; ``next_ptr=False`` omits the 4-byte
-    next-IFD pointer entirely (a scan truncated exactly there)."""
-    data = bytes(range(w * h))
-    ifd_off = 8 + len(data)
-    entries = [
-        (256, 3, w), (257, 3, h), (258, 3, 8), (259, 3, 1), (262, 3, 1),
-        (273, 4, 8), (277, 3, 1), (278, 4, h), (279, 4, len(data)),
-    ]
-    out = bytearray(b"II*\x00" + struct.pack("<I", ifd_off)) + bytearray(data)
-    out += struct.pack("<H", len(entries))
-    for tag, typ, val in entries:
-        out += struct.pack("<HHI", tag, typ, 1)
-        out += struct.pack("<I", val) if typ == 4 else struct.pack("<HH", val, 0)
-    if next_ptr:
-        out += struct.pack("<I", 0)
-    return bytes(out)
-
-
-def test_tiff_truncated_next_pointer_still_decodes_page():
-    """A data-before-IFD single-page TIFF whose trailing next-IFD
-    pointer is cut off must still decode — the entry table is intact,
-    so the page is readable and the chain simply ends there (r10
-    advice: strict mode was quarantining the exact case the lazy walk
-    exists to save). The page-count path counts it too."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_ifd_chain,
-        _tiff_pixels,
-    )
-
-    full = _gray_tiff_ifd_last(next_ptr=True)
-    cut = _gray_tiff_ifd_last(next_ptr=False)
-    assert np.array_equal(_tiff_pixels(full), _tiff_pixels(cut))
-    assert _tiff_ifd_chain(cut, need=1) == [8 + 4]
-    assert _tiff_ifd_chain(cut, strict=False) == [8 + 4]
-    # an IFD whose ENTRY TABLE is itself cut still quarantines
-    really_cut = cut[:-6]
-    with pytest.raises(ValueError, match="TIFF IFD truncated"):
-        _tiff_ifd_chain(really_cut, need=1)
-
-
 def test_aifc_g711_decode():
     """AIFC 'ulaw'/'alaw' (what the stdlib aifc module used to write)
     expand through the SAME G.711 tables as the WAV tag-7/6 and MP4
@@ -4232,941 +3243,6 @@ def test_aifc_g711_decode():
     )
     with pytest.raises(ValueError, match="truncated"):
         _aiff_samples(cut)
-
-
-def test_mp4_wide_pcm_entries():
-    """QuickTime wide-PCM sample entries (r11, the MP4 twin of the
-    WAV width matrix): 'in24'/'in32' decode big-endian integer PCM in
-    their NATIVE domain (int32, like the 24/32-bit AIFF arms) and
-    fingerprint only when grid-sitting; 'fl32'/'fl64' expand to the
-    int16 grid via round(clip(v)·32767) so k/32767 rounds back to
-    exactly k. All four resolve through the same stsz×stsc×stco
-    machinery as 'twos'/'sowt'; 'lpcm' (v2 flags layout this walk
-    doesn't parse) quarantines honestly."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _m4a_pcm_payload,
-        _mp4_pcm_samples,
-        _pcm16_samples,
-        decode_media,
-    )
-
-    raw = b"0123456789" * 5 + b"abcdef"
-    want = np.frombuffer(raw, np.uint8).astype(np.int16)
-    for codec in (b"in24", b"in32", b"fl32", b"fl64"):
-        for stereo in (False, True):
-            p = _m4a_pcm_payload(raw, 8000, codec=codec, stereo=stereo)
-            s, rate, nch = _mp4_pcm_samples(p)
-            assert rate == 8000 and nch == (2 if stereo else 1)
-            assert np.array_equal(s, want), codec
-            assert s.dtype == (
-                np.int32 if codec in (b"in24", b"in32") else np.int16
-            )
-            # grid-sitting values fingerprint exactly on every entry
-            assert np.array_equal(_pcm16_samples(p), want)
-            d = decode_media(p, "audio/mp4")
-            assert d["codec"] == codec.decode() and "rms" in d
-            assert d["n_frames"] == len(raw) // (2 if stereo else 1)
-    # negative 24-bit values sign-extend (int16 round-trip is exact);
-    # the fixture builder only carries bytes, so swap real 24-bit
-    # samples into the mdat directly
-    neg = np.array([-1, -32768, 32767, -12345], dtype=np.int16)
-    v = neg.astype(np.int64)
-    b24 = np.stack([(v >> 16) & 0xFF, (v >> 8) & 0xFF, v & 0xFF], axis=1)
-    body = b24.astype(np.uint8).tobytes()
-    pn = bytearray(_m4a_pcm_payload(b"abcd", 8000, codec=b"in24"))
-    pn[-len(body):] = body  # same frame count, swap the mdat samples
-    sn = _mp4_pcm_samples(bytes(pn))[0]
-    assert np.array_equal(sn, neg.astype(np.int32))
-    assert np.array_equal(_pcm16_samples(bytes(pn)), neg)
-    # full-scale 24-bit audio exceeds the grid: stats decode natively,
-    # the fingerprint quarantines (the 32-bit WAV rule)
-    big = np.stack([[0x40, 0x00, 0x00]], axis=0).astype(np.uint8)  # 2^22
-    pb = bytearray(_m4a_pcm_payload(b"a", 8000, codec=b"in24"))
-    pb[-3:] = big.tobytes()
-    assert _mp4_pcm_samples(bytes(pb))[0][0] == 1 << 22
-    with pytest.raises(ValueError, match="int16 grid"):
-        _pcm16_samples(bytes(pb))
-    # non-finite floats refuse instead of poisoning rms
-    pf = bytearray(_m4a_pcm_payload(b"ab", 8000, codec=b"fl32"))
-    struct.pack_into(">f", pf, len(pf) - 8, float("inf"))
-    with pytest.raises(ValueError, match="non-finite"):
-        _mp4_pcm_samples(bytes(pf))
-    # 'lpcm' stays quarantined: its layout lives in v2 flags
-    pl = bytearray(_m4a_pcm_payload(raw, 8000, codec=b"in32"))
-    i = bytes(pl).find(b"in32")
-    pl[i : i + 4] = b"lpcm"
-    with pytest.raises(NotImplementedError, match="lpcm"):
-        _mp4_pcm_samples(bytes(pl))
-    # truncations stay in the quarantine family
-    good = _m4a_pcm_payload(raw, 8000, codec=b"fl64", stereo=True)
-    for cut in (len(good) - 10, len(good) // 2, 40):
-        try:
-            _mp4_pcm_samples(good[:cut])
-        except (ValueError, NotImplementedError):
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-
-
-def test_audio_fixture_rotation_covers_mp4_wide_pcm(spark):
-    """doc_id % 48 ∈ {3, 15, 39, 21, 45} routes 'twos', 'in24',
-    'in32', 'fl32', 'fl64' PCM-in-MP4; all five decode to the
-    identical byte→sample contract (same ehash), so the oracle gate
-    holds unchanged while the driver exercises the QuickTime wide-PCM
-    matrix."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        audio_energy_hash,
-        synthesize_mixed_audio_from_text,
-    )
-
-    ids = (3, 15, 39, 21, 45, 9, 87)
-    docs = spark.createDataFrame(
-        [(i, "identical text for every row!") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = synthesize_mixed_audio_from_text(docs).collect()
-    assert {r.mime for r in rows} == {"audio/mp4"}
-    fourccs = {}
-    for r in rows:
-        p = bytes(r.payload)
-        i = p.find(b"stsd")
-        fourccs[r.doc_id] = p[i + 16 : i + 20]
-    assert fourccs == {
-        3: b"twos", 15: b"in24", 39: b"in32",
-        21: b"fl32", 45: b"fl64", 9: b"sowt", 87: b"lpcm",
-    }
-    hashes = audio_energy_hash(
-        synthesize_mixed_audio_from_text(
-            spark.createDataFrame(
-                [(i, "identical text for every row!") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == len(ids) and len({r.ehash for r in hashes}) == 1
-
-
-def test_tiff_jpeg_compression7_round_trip():
-    """New-style JPEG-in-TIFF (compression 7, TIFF TechNote #2): each
-    strip/tile is its own JPEG datastream through the engine's
-    decoder; JPEGTables (tag 347) holds shared DQT/DHT merged into
-    every abbreviated segment. Block-constant grayscale strips are
-    exactly lossless (the encode_jpeg DC-divisor-8 property), RGB
-    rides the YCbCr transform (lossy-bounded), photometric 0 inverts,
-    and old-style compression 6 quarantines honestly."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _jpeg_split_tables,
-        _tiff_pixels,
-        decode_tiff,
-        encode_tiff_jpeg,
-    )
-
-    vals = np.array([10, 200, 50, 99, 140, 7, 255, 0], dtype=np.uint8)
-    px = np.tile(np.repeat(vals, 8), (16, 1)).astype(np.uint8)
-    for prog in (False, True):
-        for shared in (False, True):
-            p = encode_tiff_jpeg(
-                px, rows_per_strip=8, progressive=prog, shared_tables=shared
-            )
-            assert (b"\xff\xc2" in p) == prog  # SOF2 only when progressive
-            got = _tiff_pixels(p)
-            assert got.shape == (16, 64, 3)
-            for c in range(3):
-                assert np.array_equal(got[:, :, c], px), (prog, shared)
-    # shared tables genuinely abbreviate: DQT/DHT leave the strips
-    full = encode_tiff_jpeg(px, rows_per_strip=8)
-    shared = encode_tiff_jpeg(px, rows_per_strip=8, shared_tables=True)
-    assert len(shared) < len(full)
-    # tiled variant through the same decoder
-    assert np.array_equal(
-        _tiff_pixels(encode_tiff_jpeg(px, tile=(16, 16)))[:, :, 0], px
-    )
-    # RGB photometric 6: YCbCr is lossy-bounded, never exact-required
-    rgb = np.zeros((8, 64, 3), np.uint8)
-    for b in range(8):
-        rgb[:, b * 8 : (b + 1) * 8] = (vals[b], vals[(b + 3) % 8], vals[(b + 5) % 8])
-    got = _tiff_pixels(encode_tiff_jpeg(rgb))
-    assert np.abs(got.astype(int) - rgb.astype(int)).max() <= 2
-    d = decode_tiff(encode_tiff_jpeg(rgb))
-    assert (d["width"], d["height"], d["n_frames"]) == (64, 8, 1)
-    # photometric 0 (WhiteIsZero) inverts the decoded gray
-    p0 = bytearray(encode_tiff_jpeg(px))
-    i = bytes(p0).find(struct.pack("<HHI", 262, 3, 1))
-    struct.pack_into("<H", p0, i + 8, 0)
-    assert np.array_equal(
-        _tiff_pixels(bytes(p0))[:, :, 0], 255 - px
-    )
-    # split/merge are inverses on a real stream
-    t, a = _jpeg_split_tables(full[full.find(b"\xff\xd8"):])
-    assert t[:2] == b"\xff\xd8" and t[-2:] == b"\xff\xd9"
-    assert b"\xff\xdb" in t and b"\xff\xc4" in t
-    assert a[:2] == b"\xff\xd8" and b"\xff\xda" in a
-
-
-def test_tiff_jpeg_hostile_payloads_quarantine():
-    """Compression-7 hostile cases stay in the ValueError/
-    NotImplementedError quarantine family: corrupt JPEGTables,
-    non-JPEG segments, undersized strips, photometric 2 (RGB kept in
-    JPEG — needs the BT.601 conversion skipped), and old-style
-    compression 6."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        encode_tiff,
-        encode_tiff_jpeg,
-    )
-
-    px = np.tile(np.repeat(np.arange(8, dtype=np.uint8) * 30, 8), (8, 1))
-    good = encode_tiff_jpeg(px, shared_tables=True)
-    # JPEGTables not an SOI..EOI stream
-    bad = bytearray(good)
-    i = bytes(bad).find(b"\xff\xd8")  # the 347 payload comes first
-    bad[i] = 0x00
-    with pytest.raises(ValueError, match="JPEGTables"):
-        _tiff_pixels(bytes(bad))
-    # a strip that is not a JPEG datastream
-    nostream = bytearray(encode_tiff_jpeg(px))
-    j = bytes(nostream).rfind(b"\xff\xd8")
-    nostream[j] = 0x00
-    with pytest.raises(ValueError, match="not a JPEG datastream"):
-        _tiff_pixels(bytes(nostream))
-    # photometric 2 + compression 7 is rejected, not mis-colored
-    p2 = bytearray(encode_tiff_jpeg(np.zeros((8, 8, 3), np.uint8)))
-    i = bytes(p2).find(struct.pack("<HHI", 262, 3, 1))
-    struct.pack_into("<H", p2, i + 8, 2)
-    with pytest.raises(ValueError, match="unsupported TIFF JPEG"):
-        _tiff_pixels(bytes(p2))
-    # old-style JPEG (compression 6) quarantines honestly
-    p6 = bytearray(encode_tiff(px, compression=1))
-    i = bytes(p6).find(struct.pack("<HHI", 259, 3, 1))
-    struct.pack_into("<H", p6, i + 8, 6)
-    with pytest.raises(NotImplementedError, match="old-style"):
-        _tiff_pixels(bytes(p6))
-    # truncations stay in the quarantine family
-    for cut in (len(good) - 10, len(good) // 2, 30):
-        try:
-            _tiff_pixels(good[:cut])
-        except (ValueError, NotImplementedError):
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-
-
-def test_jpeg_fixture_rotation_covers_tiff_jpeg(spark):
-    """doc_id % 6 ∈ {2, 5} ships the block-constant JPEG fixture as
-    new-style JPEG-in-TIFF (two strips; % 6 == 5 adds the JPEGTables
-    abbreviation + progressive) — same decoded row 0, same ahash, so
-    the oracle gate holds unchanged while the driver exercises
-    compression 7 at corpus scale."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        image_ahash,
-        synthesize_jpeg_from_text,
-    )
-
-    ids = (0, 1, 2, 5, 6, 11)
-    docs = spark.createDataFrame(
-        [(i, "same text for every row") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = synthesize_jpeg_from_text(docs).collect()
-    mimes = {r.doc_id: r.mime for r in rows}
-    assert mimes == {
-        0: "image/jpeg", 1: "image/jpeg", 2: "image/tiff",
-        5: "image/tiff", 6: "image/jpeg", 11: "image/tiff",
-    }
-    tiffs = {r.doc_id: bytes(r.payload) for r in rows if r.mime == "image/tiff"}
-    assert all(p[:4] == b"II*\x00" for p in tiffs.values())
-    # the % 6 == 5 docs carry the JPEGTables abbreviation
-    assert struct.pack("<HH", 347, 7) in tiffs[5]
-    assert struct.pack("<HH", 347, 7) not in tiffs[2]
-    hashes = image_ahash(
-        synthesize_jpeg_from_text(
-            spark.createDataFrame(
-                [(i, "same text for every row") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == len(ids) and len({r.ahash for r in hashes}) == 1
-
-
-def test_tiff_multipage_encoder_and_fixture_rotation(spark):
-    """encode_tiff_multipage chains one IFD per page; page 0 keeps the
-    single-page byte contract so the mixed-image fixture's doc_id %
-    12 == 11 two-page sub-rotation (page 1 = inverted pixels) holds
-    the unchanged oracle while n_frames reports the real chain length
-    and page 1 decodes to genuinely different pixels."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tiff_pixels,
-        decode_tiff,
-        encode_tiff_multipage,
-        image_ahash,
-        synthesize_mixed_image_from_text,
-    )
-
-    rgb0 = (np.arange(8 * 8 * 3, dtype=np.uint8) % 251).reshape(8, 8, 3)
-    rgb1 = 255 - rgb0
-    p = encode_tiff_multipage([rgb0, rgb1], compression=5, predictor=2)
-    assert np.array_equal(_tiff_pixels(p, page=0), rgb0)
-    assert np.array_equal(_tiff_pixels(p, page=1), rgb1)
-    assert decode_tiff(p)["n_frames"] == 2
-    with pytest.raises(ValueError, match="reachable pages"):
-        _tiff_pixels(p, page=2)
-    with pytest.raises(ValueError, match="at least one page"):
-        encode_tiff_multipage([])
-    # fixture: 11 ships 2 pages, 5 stays single Deflate, 8 planar LZW
-    ids = (5, 8, 11, 2)
-    docs = spark.createDataFrame(
-        [(i, "same text for every row") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: bytes(r.payload) for r in synthesize_mixed_image_from_text(docs).collect()}
-    assert decode_tiff(rows[11])["n_frames"] == 2
-    assert decode_tiff(rows[5])["n_frames"] == 1
-    assert decode_tiff(rows[8])["n_frames"] == 1
-    # page 1 differs, page 0 carries the contract -> one shared ahash
-    assert not np.array_equal(
-        _tiff_pixels(rows[11], page=1), _tiff_pixels(rows[11], page=0)
-    )
-    hashes = image_ahash(
-        synthesize_mixed_image_from_text(
-            spark.createDataFrame(
-                [(i, "same text for every row") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == len(ids) and len({r.ahash for r in hashes}) == 1
-
-
-def test_mp4_lpcm_v2_entry_matrix():
-    """The v2 'lpcm' SoundDescription (r11 — QuickTime's fully-general
-    PCM entry): float64 rate, u32 channels/bits, and the formatSpecific
-    flags word (isFloat/isBigEndian/isSignedInteger) replace the v0
-    placeholder fields. Signed 16/24/32-bit ints in either byte order
-    and 32/64-bit floats all decode through the shared sample-table
-    machinery; unsigned ints quarantine; a v0 'lpcm' entry (no parsed
-    flags) quarantines as NotImplementedError; a NaN rate reports 0."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _m4a_pcm_payload,
-        _mp4_audio_track,
-        _mp4_pcm_samples,
-        _pcm16_samples,
-        decode_media,
-    )
-
-    raw = b"0123456789" * 3 + b"ab"
-    want = np.frombuffer(raw, np.uint8).astype(np.int16)
-    for bits, flags in (
-        (24, 6), (24, 4), (16, 6), (16, 4), (32, 6), (32, 4),
-        (32, 1), (32, 3), (64, 3),
-    ):
-        for stereo in (False, True):
-            p = _m4a_pcm_payload(
-                raw, 44100, codec=b"lpcm", stereo=stereo,
-                lpcm_bits=bits, lpcm_flags=flags,
-            )
-            trk = _mp4_audio_track(p)
-            assert (trk["sample_size"], trk["lpcm_flags"]) == (bits, flags)
-            assert trk["sample_rate"] == 44100
-            s, rate, nch = _mp4_pcm_samples(p)
-            assert np.array_equal(s, want), (bits, flags)
-            assert s.dtype == (np.int16 if bits == 16 or flags & 1 else np.int32)
-            assert np.array_equal(_pcm16_samples(p), want)
-            assert decode_media(p, "audio/mp4")["codec"] == "lpcm"
-    # unsigned integer layout quarantines (real lpcm is signed)
-    pu = _m4a_pcm_payload(raw, 8000, codec=b"lpcm", lpcm_bits=16, lpcm_flags=2)
-    with pytest.raises(ValueError, match="lpcm layout"):
-        _mp4_pcm_samples(pu)
-    # a v0-shaped lpcm entry (declared size 36) has no flags layout
-    p0 = bytearray(_m4a_pcm_payload(raw, 8000, codec=b"lpcm"))
-    i = bytes(p0).find(b"lpcm") - 4
-    struct.pack_into(">I", p0, i, 36)  # entry claims v0 size
-    struct.pack_into(">H", p0, i + 16, 0)  # version 0
-    trk0 = _mp4_audio_track(bytes(p0))
-    assert trk0["lpcm_flags"] is None
-    with pytest.raises(NotImplementedError, match="lpcm"):
-        _mp4_pcm_samples(bytes(p0))
-    # non-finite declared rate reports 0 instead of poisoning stats
-    pn = bytearray(_m4a_pcm_payload(raw, 8000, codec=b"lpcm"))
-    i = bytes(pn).find(b"lpcm") - 4
-    struct.pack_into(">d", pn, i + 40, float("nan"))
-    assert _mp4_audio_track(bytes(pn))["sample_rate"] == 0
-    # truncations stay in the quarantine family
-    good = _m4a_pcm_payload(raw, 8000, codec=b"lpcm", stereo=True)
-    for cut in (len(good) - 10, len(good) // 2, 40):
-        try:
-            _mp4_pcm_samples(good[:cut])
-        except (ValueError, NotImplementedError):
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-
-
-def test_avi_audio_stream_decodes_via_wav_delegation(spark):
-    """Audio-in-AVI (r11): the 'auds' strf IS a WAVEFORMATEX, so the
-    rebuilt RIFF/WAVE delegates to the entire WAV matrix — PCM widths,
-    floats, extensible headers, G.711 — with identical stats and
-    identical int16-grid fingerprint rules. Multi-chunk '00wb' movi
-    data reassembles exactly; the fixture sub-rotates classic 16-bit
-    PCM through the AVI wrap at doc_id % 48 == 24 under the unchanged
-    ehash oracle."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _avi_audio_as_wav,
-        _avi_audio_container,
-        _avi_mjpeg_container,
-        _mjpeg_frames_for_text,
-        _pcm16_samples,
-        _riff_wrap,
-        _wav_payload,
-        audio_energy_hash,
-        decode_avi,
-        decode_media,
-        decode_wav,
-        synthesize_mixed_audio_from_text,
-    )
-
-    raw = bytes(range(200))
-    want = np.frombuffer(raw, np.uint8).astype(np.int16)
-    w = _wav_payload(raw)
-    for n_chunks in (1, 3, 7):
-        avi = _avi_audio_container(w, n_chunks=n_chunks)
-        assert np.array_equal(_pcm16_samples(avi), want)
-        d = decode_avi(avi)
-        assert d["kind"] == "audio" and d["n_frames"] == 200
-        assert d == decode_wav(w)
-        assert decode_media(avi, "video/x-msvideo")["kind"] == "audio"
-    # a non-PCM WAV arm (G.711 µ-law, tag 7) rides the same delegation
-    ulaw = _riff_wrap(struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8), raw)
-    assert decode_avi(_avi_audio_container(ulaw)) == decode_wav(ulaw)
-    # a video-only AVI has no audio stream: quarantine, not garbage
-    vid = _avi_mjpeg_container(_mjpeg_frames_for_text(b"xy", 2))
-    with pytest.raises(ValueError, match="no audio stream"):
-        _avi_audio_as_wav(vid)
-    with pytest.raises(ValueError):
-        _pcm16_samples(vid)
-    # ... and decode_avi still routes it as video
-    assert decode_avi(vid)["kind"] == "video"
-    # truncations stay in the quarantine family
-    good = _avi_audio_container(w)
-    for cut in (len(good) - 10, len(good) // 2, 30):
-        try:
-            _pcm16_samples(good[:cut])
-        except (ValueError, NotImplementedError):
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-    # fixture rotation: % 48 == 24 ships the AVI wrap, same ehash
-    # (48 is the AU slot, 96 wraps back to plain WAV)
-    ids = (0, 24, 96)
-    docs = spark.createDataFrame(
-        [(i, "identical text for every row") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in synthesize_mixed_audio_from_text(docs).collect()}
-    assert rows[24].mime == "video/x-msvideo"
-    assert bytes(rows[24].payload)[8:12] == b"AVI "
-    assert rows[0].mime == "audio/wav" and rows[96].mime == "audio/wav"
-    hashes = audio_energy_hash(
-        synthesize_mixed_audio_from_text(
-            spark.createDataFrame(
-                [(i, "identical text for every row") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == 3 and len({r.ehash for r in hashes}) == 1
-
-
-def test_au_decode_matrix_and_fixture_rotation(spark):
-    """Sun/NeXT .au (r11 — the third legacy audio container): µ/A-law
-    through the shared G.711 tables, signed 8-bit verbatim, 16-bit BE
-    on the int16 grid, 24/32-bit native int32 with the fingerprint
-    grid-check, floats via round(clip·32767); compressed encodings
-    (G.721-family ADPCM) quarantine as NotImplementedError; a
-    declared size past the payload clamps like a truncated RIFF. The
-    mixed-audio fixture rides the 16-bit contract at doc_id % 96 ==
-    48 under the unchanged ehash oracle."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _G711_ALAW,
-        _G711_ULAW,
-        _au_payload,
-        _au_samples,
-        _pcm16_samples,
-        audio_energy_hash,
-        decode_au,
-        decode_media,
-        synthesize_mixed_audio_from_text,
-    )
-
-    raw = bytes(range(200))
-    want = np.frombuffer(raw, np.uint8).astype(np.int16)
-    for enc in (3, 4, 5, 6, 7):
-        p = _au_payload(raw, encoding=enc, stereo=True)
-        s, rate, nch = _au_samples(p)
-        assert nch == 2 and np.array_equal(s, want), enc
-        assert s.dtype == (np.int32 if enc in (4, 5) else np.int16)
-        assert np.array_equal(_pcm16_samples(p), want)
-        d = decode_au(p)
-        assert d["n_frames"] == 100 and d["sample_rate"] == 8000
-    # 8-bit signed carries small bytes verbatim
-    small = bytes(range(100))
-    p8 = _au_payload(small, encoding=2)
-    assert np.array_equal(
-        _au_samples(p8)[0], np.frombuffer(small, np.uint8).astype(np.int16)
-    )
-    # G.711 byte orientation survives the AU wrap
-    hdr = struct.pack(">4s5I", b".snd", 24, 2, 1, 8000, 1)
-    assert np.array_equal(_au_samples(hdr + b"\xff\x7f")[0], _G711_ULAW[[255, 127]])
-    hdr = struct.pack(">4s5I", b".snd", 24, 2, 27, 8000, 1)
-    assert np.array_equal(_au_samples(hdr + b"\x55\xd5")[0], _G711_ALAW[[0x55, 0xD5]])
-    # unknown-size sentinel (0xFFFFFFFF) reads to end-of-file
-    sent = bytearray(_au_payload(raw))
-    struct.pack_into(">I", sent, 8, 0xFFFFFFFF)
-    assert np.array_equal(_au_samples(bytes(sent))[0], want)
-    # declared size past the payload clamps to whole frames
-    over = bytearray(_au_payload(raw))
-    struct.pack_into(">I", over, 8, 10_000)
-    assert np.array_equal(_au_samples(bytes(over))[0], want)
-    # full-scale 32-bit exceeds the grid: stats native, fingerprint
-    # quarantines (the MP4 wide-int rule)
-    big = struct.pack(">4s5I", b".snd", 24, 4, 5, 8000, 1) + struct.pack(">i", 1 << 22)
-    assert _au_samples(big)[0][0] == 1 << 22
-    with pytest.raises(ValueError, match="int16 grid"):
-        _pcm16_samples(big)
-    # compressed encodings quarantine honestly; unknown ones refuse
-    adpcm = struct.pack(">4s5I", b".snd", 24, 4, 23, 8000, 1) + bytes(4)
-    with pytest.raises(NotImplementedError, match="codec library"):
-        _au_samples(adpcm)
-    weird = struct.pack(">4s5I", b".snd", 24, 4, 99, 8000, 1) + bytes(4)
-    with pytest.raises(ValueError, match="unsupported AU encoding"):
-        _au_samples(weird)
-    with pytest.raises(ValueError, match="offset out of bounds"):
-        _au_samples(struct.pack(">4s5I", b".snd", 4096, 0, 3, 8000, 1))
-    for cut in (10, 20):
-        try:
-            _au_samples(_au_payload(raw)[:cut])
-        except (ValueError, NotImplementedError):
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-    assert decode_media(_au_payload(raw), "audio/basic")["kind"] == "audio"
-    # fixture: % 96 == 48 ships AU, same ehash as the WAV siblings
-    ids = (0, 24, 48, 96)
-    docs = spark.createDataFrame(
-        [(i, "identical text for every row") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in synthesize_mixed_audio_from_text(docs).collect()}
-    assert rows[48].mime == "audio/basic"
-    assert bytes(rows[48].payload)[:4] == b".snd"
-    assert rows[96].mime == "audio/wav"
-    hashes = audio_energy_hash(
-        synthesize_mixed_audio_from_text(
-            spark.createDataFrame(
-                [(i, "identical text for every row") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == 4 and len({r.ehash for r in hashes}) == 1
-
-
-def test_pnm_decode_matrix_and_fixture_rotation(spark):
-    """netpbm (r11): P1/P4 bitmaps (1 = black), P2/P5 grayscale,
-    P3/P6 RGB, ASCII + binary, comment-tolerant headers, and 16-bit
-    (maxval > 255) big-endian samples through the engine's exact
-    v·255/maxval round. The mixed-image fixture rotates the BMP slot
-    through P6 at doc_id % 12 == 9 and 16-bit P6 at % 24 == 18 under
-    the unchanged text-byte ahash oracle."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _image_pixels,
-        _pnm_pixels,
-        decode_media,
-        decode_pnm,
-        encode_pnm,
-        image_ahash,
-        synthesize_mixed_image_from_text,
-    )
-
-    rgb = (np.arange(8 * 8 * 3, dtype=np.uint8) % 251).reshape(8, 8, 3)
-    gray = rgb[:, :, 0]
-    for kind, px in ((6, rgb), (3, rgb), (5, gray), (2, gray)):
-        for mv in (255, 65535):
-            p = encode_pnm(px, kind=kind, maxval=mv)
-            want = px if px.ndim == 3 else np.repeat(px[:, :, None], 3, axis=2)
-            assert np.array_equal(_pnm_pixels(p), want), (kind, mv)
-            assert np.array_equal(_image_pixels(p), want)
-    d = decode_pnm(encode_pnm(rgb))
-    assert (d["kind"], d["width"], d["height"]) == ("image", 8, 8)
-    assert decode_media(encode_pnm(rgb), "image/x-portable-pixmap")["kind"] == "image"
-    # P1 with unseparated digits and comments; P4 row byte-padding
-    p1 = b"P1\n# c\n8 2\n" + b"01" * 8 + b"\n" + b"10" * 8
-    px1 = _pnm_pixels(p1)
-    assert px1.shape == (2, 8, 3)
-    assert px1[0, 0, 0] == 255 and px1[0, 1, 0] == 0  # 0=white, 1=black
-    bits = np.zeros((2, 8), np.uint8)
-    bits[0, ::2] = 1
-    px4 = _pnm_pixels(b"P4\n8 2\n" + np.packbits(bits, axis=1).tobytes())
-    assert px4[0, 0, 0] == 0 and px4[0, 1, 0] == 255 and px4[1, 0, 0] == 255
-    # hostile: short data, zero maxval, sample > maxval, bad dims
-    for bad in (
-        b"P6\n8 8\n255\n" + bytes(10),
-        b"P6\n8 8\n0\n",
-        b"P5\n2 2\n10\n\x0b\x0b\x0b\x0b",
-        b"P3\n1 1\n5\n9\n",
-        b"P6\n0 8\n255\n",
-        b"P6\n99999 99999\n255\n",
-    ):
-        with pytest.raises(ValueError):
-            _pnm_pixels(bad)
-    for cut in (3, 8, 14):
-        try:
-            _pnm_pixels(encode_pnm(rgb)[:cut])
-        except ValueError:
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-    # fixture: 9 ships P6, 18 ships 16-bit P6, 0 stays BMP, 6 ships
-    # lossless JPEG (r11) — one ahash
-    ids = (0, 6, 9, 18)
-    docs = spark.createDataFrame(
-        [(i, "same text for every row") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in synthesize_mixed_image_from_text(docs).collect()}
-    assert rows[9].mime == "image/x-portable-pixmap"
-    assert bytes(rows[9].payload)[:2] == b"P6"
-    assert b"65535" in bytes(rows[18].payload)[:20]
-    assert rows[0].mime == "image/bmp" and rows[6].mime == "image/jpeg"
-    hashes = image_ahash(
-        synthesize_mixed_image_from_text(
-            spark.createDataFrame(
-                [(i, "same text for every row") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == 4 and len({r.ahash for r in hashes}) == 1
-
-
-def test_tga_decode_matrix_and_fixture_rotation(spark):
-    """Truevision TGA (r11 — the game/graphics-corpus staple):
-    gray/truecolor/color-mapped, raw + RLE packets, 15/16-bit 5:5:5
-    via the exact (v·255+15)//31 round, both vertical origins and the
-    right-to-left bit, firstEntryIndex-based map lookups. TGA has no
-    leading magic, so the sniffed entry accepts only v2-footer files;
-    the mixed-image fixture rotates the GIF slot through raw TGA at
-    doc_id % 12 == 7 and RLE at % 24 == 22 under the unchanged
-    oracle."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _image_pixels,
-        _tga_pixels,
-        decode_media,
-        decode_tga,
-        encode_tga,
-        image_ahash,
-        synthesize_mixed_image_from_text,
-    )
-
-    rgb = (np.arange(8 * 8 * 3, dtype=np.uint8) % 251).reshape(8, 8, 3)
-    gray = rgb[:, :, 1]
-    for rle in (False, True):
-        for px in (rgb, gray):
-            p = encode_tga(px, rle=rle)
-            want = px if px.ndim == 3 else np.repeat(px[:, :, None], 3, axis=2)
-            assert np.array_equal(_tga_pixels(p), want), (rle, px.ndim)
-            assert np.array_equal(_image_pixels(p), want)
-    # bottom-up default flips; right-to-left mirrors
-    pb = bytearray(encode_tga(rgb))
-    pb[17] = 0x00
-    assert np.array_equal(_tga_pixels(bytes(pb)), rgb[::-1])
-    pb[17] = 0x30
-    assert np.array_equal(_tga_pixels(bytes(pb)), rgb[:, ::-1])
-    # 16-bit 5:5:5 and color-mapped (firstEntryIndex honored)
-    v = (10 << 10) | (21 << 5) | 31
-    head16 = struct.pack("<BBBHHBHHHHBB", 0, 0, 2, 0, 0, 0, 0, 0, 2, 1, 16, 0x20)
-    px16 = _tga_pixels(head16 + struct.pack("<HH", v, 0))
-    assert list(px16[0, 0]) == [(10 * 255 + 15) // 31, (21 * 255 + 15) // 31, 255]
-    cmap = bytes([255, 0, 0, 0, 255, 0])  # BGR entries: blue, green
-    headm = struct.pack("<BBBHHBHHHHBB", 0, 1, 1, 4, 2, 24, 0, 0, 2, 1, 8, 0x20)
-    pxm = _tga_pixels(headm + cmap + bytes([4, 5]))  # indices offset by 4
-    assert list(pxm[0, 0]) == [0, 0, 255] and list(pxm[0, 1]) == [0, 255, 0]
-    with pytest.raises(ValueError, match="outside the color map"):
-        _tga_pixels(headm + cmap + bytes([3, 4]))
-    d = decode_media(encode_tga(rgb), "image/x-tga")
-    assert (d["kind"], d["width"], d["height"]) == ("image", 8, 8)
-    # no leading magic: a footer-less TGA is NOT magic-sniffable but
-    # still decodes via the mime route
-    v1 = encode_tga(rgb)[: -len(b"TRUEVISION-XFILE.\x00") - 8]
-    assert np.array_equal(_tga_pixels(v1), rgb)
-    # a truecolor TGA's 00 00 02 00 prefix doubles as the CUR magic,
-    # so the sniffed entry quarantines it THERE once the footer is
-    # gone — still ValueError, still no mis-decode
-    with pytest.raises(ValueError, match="unsupported image container|not an ICO"):
-        _image_pixels(v1)
-    # hostile: truncations and header lies quarantine
-    good = encode_tga(rgb, rle=True)
-    for cut in (10, 25, len(good) // 2):
-        try:
-            _tga_pixels(good[:cut])
-        except ValueError:
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-    # fixture: 7 raw TGA, 22 RLE TGA, 1/4 stay GIF — one shared ahash
-    ids = (1, 4, 7, 22)
-    docs = spark.createDataFrame(
-        [(i, "same text for every row") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in synthesize_mixed_image_from_text(docs).collect()}
-    assert rows[7].mime == "image/x-targa" and rows[22].mime == "image/x-targa"
-    assert bytes(rows[7].payload)[2] == 2 and bytes(rows[22].payload)[2] == 10
-    assert rows[1].mime == "image/gif" and rows[4].mime == "image/gif"
-    hashes = image_ahash(
-        synthesize_mixed_image_from_text(
-            spark.createDataFrame(
-                [(i, "same text for every row") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == 4 and len({r.ahash for r in hashes}) == 1
-
-
-def test_qoi_decode_round_trip_and_fixture_rotation(spark):
-    """QOI (r11, the public-domain spec): full RGBA state machine —
-    RGB/RGBA ops, the 64-slot (3r+5g+7b+11a)%64 index, 2-bit DIFF,
-    green-anchored LUMA, and 1..62 RUNs — with the encoder twin using
-    the spec's reference strategy. Lossless; the mixed-image fixture
-    rotates the BMP slot through QOI at doc_id % 24 == 15 under the
-    unchanged ahash oracle."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _image_pixels,
-        _qoi_pixels,
-        decode_media,
-        decode_qoi,
-        encode_qoi,
-        image_ahash,
-        synthesize_mixed_image_from_text,
-    )
-
-    rng = np.random.default_rng(7)
-    for h, w in ((8, 8), (1, 1), (3, 300), (64, 5)):
-        px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-        p = encode_qoi(px)
-        assert np.array_equal(_qoi_pixels(p), px)
-        assert np.array_equal(_image_pixels(p), px)
-    # every op class in one image: >62-runs, diff, luma, rgb, index
-    px = np.zeros((2, 200, 3), np.uint8)
-    px[0, 100:] = (1, 1, 1)
-    px[1, :50] = (5, 40, 10)
-    px[1, 50] = (200, 10, 99)
-    px[1, 51] = (5, 40, 10)
-    p = encode_qoi(px)
-    assert np.array_equal(_qoi_pixels(p), px)
-    d = decode_qoi(p)
-    assert (d["kind"], d["width"], d["height"]) == ("image", 200, 2)
-    assert decode_media(p, "image/qoi")["kind"] == "image"
-    # an RGBA op keys the index with its alpha and drops it on output
-    rgba = (
-        b"qoif" + struct.pack(">II", 2, 1) + bytes([4, 0])
-        + bytes([0xFF, 9, 8, 7, 100])      # RGBA
-        + bytes([(9 * 3 + 8 * 5 + 7 * 7 + 100 * 11) % 64])  # INDEX hit
-        + bytes(7) + b"\x01"
-    )
-    got = _qoi_pixels(rgba)
-    assert np.array_equal(got[0, 0], [9, 8, 7]) and np.array_equal(
-        got[0, 1], [9, 8, 7]
-    )
-    # hostile: zero dims, bad channels, pixel bombs, truncation, run
-    # overruns all quarantine
-    for bad in (
-        b"qoif" + struct.pack(">II", 0, 5) + bytes([3, 0]) + bytes(8),
-        b"qoif" + struct.pack(">II", 8, 8) + bytes([5, 0]) + bytes(8),
-        b"qoif" + struct.pack(">II", 99999, 99999) + bytes([3, 0]) + bytes(8),
-        encode_qoi(np.ones((4, 4, 3), np.uint8))[:20],
-        b"qoif" + struct.pack(">II", 1, 1) + bytes([3, 0])
-        + bytes([0xC0 | 61]) + bytes(7) + b"\x01",
-    ):
-        with pytest.raises(ValueError):
-            _qoi_pixels(bad)
-    # fixture: 15/39 ship QOI, 0 stays BMP, 6 ships lossless JPEG
-    # (r11) — one shared ahash
-    ids = (0, 15, 6, 39)
-    docs = spark.createDataFrame(
-        [(i, "same text for every row") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in synthesize_mixed_image_from_text(docs).collect()}
-    assert rows[15].mime == "image/qoi" and rows[39].mime == "image/qoi"
-    assert bytes(rows[15].payload)[:4] == b"qoif"
-    assert rows[0].mime == "image/bmp" and rows[6].mime == "image/jpeg"
-    assert bytes(rows[6].payload)[:3] == b"\xff\xd8\xff"
-    hashes = image_ahash(
-        synthesize_mixed_image_from_text(
-            spark.createDataFrame(
-                [(i, "same text for every row") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == 4 and len({r.ahash for r in hashes}) == 1
-
-
-def test_ico_decodes_by_delegation_and_fixture_rotation(spark):
-    """ICO/CUR (r11): a directory of images where PNG entries route
-    through the PNG decoder and classic DIB entries get a synthetic
-    BMP file header (biHeight halved off the doubled XOR+AND layout)
-    — both existing decoders' matrices apply to icons with no new
-    pixel code. Decode reads the LARGEST entry; n_frames reports the
-    directory count. The mixed-image fixture rotates the BMP slot
-    through ICO-DIB at doc_id % 48 == 12 and ICO-PNG at % 48 == 36
-    under the unchanged ahash oracle."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _ico_pixels,
-        _image_pixels,
-        decode_ico,
-        decode_media,
-        encode_ico,
-        image_ahash,
-        synthesize_mixed_image_from_text,
-    )
-
-    rng = np.random.default_rng(3)
-    rgb = rng.integers(0, 256, (8, 8, 3), dtype=np.uint8)
-    for png in (False, True):
-        p = encode_ico([rgb], png=png)
-        assert np.array_equal(_ico_pixels(p), rgb)
-        assert np.array_equal(_image_pixels(p), rgb)
-    # multi-size: the largest entry wins; n_frames = directory count
-    small = rng.integers(0, 256, (4, 4, 3), dtype=np.uint8)
-    big = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
-    p = encode_ico([small, big, rgb])
-    assert np.array_equal(_ico_pixels(p), big)
-    assert decode_ico(p)["n_frames"] == 3
-    # 256-wide entries store a 0 width byte per the spec
-    w256 = rng.integers(0, 256, (2, 256, 3), dtype=np.uint8)
-    p = encode_ico([w256])
-    assert p[6] == 0 and np.array_equal(_ico_pixels(p), w256)
-    assert decode_media(encode_ico([rgb]), "image/x-icon")["kind"] == "image"
-    # hostile: truncated directories, out-of-bounds data, bad magic
-    for bad in (
-        b"\x00\x00\x01\x00",  # 4-byte fragment: r11 fuzz leak, now pinned
-        struct.pack("<HHH", 0, 1, 2) + bytes(10),
-        struct.pack("<HHH", 0, 1, 1)
-        + struct.pack("<BBBBHHII", 8, 8, 0, 0, 1, 24, 4096, 22),
-        struct.pack("<HHH", 1, 1, 1) + bytes(16),
-    ):
-        with pytest.raises(ValueError):
-            _ico_pixels(bad)
-    for cut in (10, 30, 60):
-        try:
-            _ico_pixels(encode_ico([rgb])[:cut])
-        except ValueError:
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-    # fixture: 12 ships ICO-DIB, 36 ICO-PNG, 0 stays BMP — one ahash
-    ids = (0, 12, 36)
-    docs = spark.createDataFrame(
-        [(i, "same text for every row") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in synthesize_mixed_image_from_text(docs).collect()}
-    assert rows[12].mime == "image/x-icon" and rows[36].mime == "image/x-icon"
-    assert b"\x89PNG" in bytes(rows[36].payload)
-    assert b"\x89PNG" not in bytes(rows[12].payload)
-    assert rows[0].mime == "image/bmp"
-    hashes = image_ahash(
-        synthesize_mixed_image_from_text(
-            spark.createDataFrame(
-                [(i, "same text for every row") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == 3 and len({r.ahash for r in hashes}) == 1
-
-
-def test_caf_decode_matrix_and_fixture_rotation(spark):
-    """Apple CAF (r11): 'caff' header, signed-64-bit chunk sizes with
-    the to-EOF -1 'data' sentinel, and per-format DELEGATION — 'lpcm'
-    via the float/endian flags (int 16/24/32 both orders, float
-    32/64 to the grid), 'ulaw'/'alaw' via the G.711 tables;
-    'ima4'/'aac '/'alac' quarantine.
-    The mixed-audio fixture rides the 16-bit contract at doc_id % 96
-    == 72 under the unchanged ehash oracle."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _caf_payload,
-        _caf_samples,
-        _pcm16_samples,
-        audio_energy_hash,
-        decode_caf,
-        decode_media,
-        synthesize_mixed_audio_from_text,
-    )
-
-    raw = bytes(range(200))
-    want = np.frombuffer(raw, np.uint8).astype(np.int16)
-    for bits, flags in (
-        (16, 0), (16, 2), (24, 0), (24, 2), (32, 0), (32, 2),
-        (32, 1), (32, 3), (64, 1), (64, 3),
-    ):
-        p = _caf_payload(raw, 44100, bits=bits, flags=flags, stereo=True)
-        s, rate, nch = _caf_samples(p)
-        assert rate == 44100 and nch == 2
-        assert np.array_equal(s, want), (bits, flags)
-        assert s.dtype == (np.int32 if bits in (24, 32) and not flags & 1 else np.int16)
-        assert np.array_equal(_pcm16_samples(p), want)
-    d = decode_caf(_caf_payload(raw))
-    assert d["n_frames"] == 200 and d["sample_rate"] == 8000
-    assert decode_media(_caf_payload(raw), "audio/x-caf")["kind"] == "audio"
-    # G.711-in-CAF pins the byte orientation
-    desc = struct.pack(">d4sIIIII", 8000.0, b"ulaw", 0, 1, 1, 1, 16)
-    caf = (
-        b"caff" + struct.pack(">HH", 1, 0)
-        + b"desc" + struct.pack(">q", len(desc)) + desc
-        + b"data" + struct.pack(">q", -1) + bytes(4) + b"\xff\x7f"
-    )
-    assert _caf_samples(caf)[0][0] == 0
-    # codecs with no decode arm quarantine honestly
-    for fmt in (b"aac ", b"ima4"):
-        desc = struct.pack(">d4sIIIII", 8000.0, fmt, 0, 0, 1024, 2, 0)
-        caf = (
-            b"caff" + struct.pack(">HH", 1, 0)
-            + b"desc" + struct.pack(">q", len(desc)) + desc
-            + b"data" + struct.pack(">q", -1) + bytes(4)
-        )
-        with pytest.raises(NotImplementedError, match="codec libraries"):
-            _caf_samples(caf)
-    good = _caf_payload(raw)
-    for cut in (6, 20, 50):
-        try:
-            _caf_samples(good[:cut])
-        except (ValueError, NotImplementedError):
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-    # fixture: % 96 == 72 ships CAF, 24 stays AVI — one shared ehash
-    ids = (0, 24, 72, 96)
-    docs = spark.createDataFrame(
-        [(i, "identical text for every row") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in synthesize_mixed_audio_from_text(docs).collect()}
-    assert rows[72].mime == "audio/x-caf"
-    assert bytes(rows[72].payload)[:4] == b"caff"
-    assert rows[24].mime == "video/x-msvideo"
-    hashes = audio_energy_hash(
-        synthesize_mixed_audio_from_text(
-            spark.createDataFrame(
-                [(i, "identical text for every row") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == 4 and len({r.ehash for r in hashes}) == 1
 
 
 def test_rf64_wav_decodes_and_fixture_rotation(spark):
@@ -5222,1355 +3298,6 @@ def test_rf64_wav_decodes_and_fixture_rotation(spark):
     assert len({(d["n_frames"], d["rms"]) for d in stats.values()}) == 1
 
 
-def test_ogg_flac_delegation_and_vorbis_opus_triage(spark):
-    """Ogg (r11, RFC 3533): page walk with 255-lacing packet
-    reassembly across pages. Ogg-FLAC DECODES — the native fLaC
-    stream is rebuilt from the first packet's embedded STREAMINFO
-    (re-flagged last) plus the audio packets and delegated to the
-    FLAC machinery; Vorbis and Opus get identification-header triage
-    with last-granule durations (Opus: 48 kHz granules minus
-    pre-skip), rms/peak null rather than wrong. The mixed-audio fixture
-    ships mono FLAC docs at doc_id % 12 == 8 as Ogg-FLAC under the
-    unchanged ehash oracle."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _flac_payload,
-        _ogg_flac_payload,
-        _ogg_packets,
-        _ogg_pages,
-        _pcm16_samples,
-        audio_energy_hash,
-        decode_flac,
-        decode_media,
-        decode_ogg,
-        synthesize_mixed_audio_from_text,
-    )
-
-    raw = bytes(range(200))
-    want = np.frombuffer(raw, np.uint8).astype(np.int16)
-    p = _ogg_flac_payload(raw)
-    assert p[:4] == b"OggS"
-    assert decode_ogg(p) == decode_flac(_flac_payload(raw))
-    assert np.array_equal(_pcm16_samples(p), want)
-    assert decode_media(p, "audio/ogg")["kind"] == "audio"
-    # packets longer than 255 bytes reassemble across laces
-    pk = bytes(range(256)) * 3
-    vhead = (
-        b"\x01vorbis" + bytes(4) + bytes([2]) + struct.pack("<I", 44100)
-        + bytes(14)
-    )
-    pages = _ogg_pages([vhead, pk], granules=[0, 88200])
-    packets, granule, _ = _ogg_packets(pages)
-    assert packets[1] == pk and granule == 88200
-    dv = decode_ogg(pages)
-    assert (dv["codec"], dv["n_channels"], dv["sample_rate"]) == ("vorbis", 2, 44100)
-    assert dv["n_frames"] == 88200 and "rms" not in dv
-    # Opus: 48 kHz granules minus pre-skip
-    oh = (
-        b"OpusHead" + bytes([1, 2]) + struct.pack("<H", 312)
-        + struct.pack("<I", 16000) + bytes(3)
-    )
-    pages_o = _ogg_pages([oh, b"\xff\xff"], granules=[0, 48312])
-    do = decode_ogg(pages_o)
-    assert do["codec"] == "opus" and do["n_frames"] == 48000
-    assert abs(do["duration_s"] - 1.0) < 1e-9
-    # transform codecs quarantine in the sample layer
-    with pytest.raises(NotImplementedError, match="codec library"):
-        _pcm16_samples(pages_o)
-    for cut in (3, 20, 60, len(p) // 2):
-        try:
-            decode_ogg(p[:cut])
-        except (ValueError, NotImplementedError):
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-    # fixture: % 12 == 8 ships Ogg-FLAC, 2 stays native, 5 stereo FLAC
-    ids = (2, 5, 8)
-    docs = spark.createDataFrame(
-        [(i, "identical text for every row") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in synthesize_mixed_audio_from_text(docs).collect()}
-    assert rows[8].mime == "audio/ogg" and bytes(rows[8].payload)[:4] == b"OggS"
-    assert rows[2].mime == "audio/flac" and rows[5].mime == "audio/flac"
-    hashes = audio_energy_hash(
-        synthesize_mixed_audio_from_text(
-            spark.createDataFrame(
-                [(i, "identical text for every row") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == 3 and len({r.ehash for r in hashes}) == 1
-
-
-# ---------------------------------------------------------------- #
-# lossless JPEG (SOF3, T.81 Annex H) — r11                          #
-# ---------------------------------------------------------------- #
-
-
-def test_jpeg_lossless_round_trips_exactly_all_predictors():
-    """SOF3 is the only exactly-lossless member of the JPEG family:
-    every one of the seven Annex-H predictors must round-trip random
-    8-bit content bit-exactly, gray and RGB (no color transform —
-    3-component lossless is direct RGB)."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _jpeg_first_sof,
-        _jpeg_pixels,
-        encode_jpeg_lossless,
-    )
-
-    rng = np.random.RandomState(17)
-    gray = rng.randint(0, 256, (13, 17)).astype(np.uint8)
-    rgb = rng.randint(0, 256, (9, 11, 3)).astype(np.uint8)
-    for pred in range(1, 8):
-        stream = encode_jpeg_lossless(gray, predictor=pred)
-        assert _jpeg_first_sof(stream) == 0xC3
-        assert (_jpeg_pixels(stream) == np.stack([gray] * 3, axis=-1)).all()
-        assert (_jpeg_pixels(encode_jpeg_lossless(rgb, predictor=pred)) == rgb).all()
-
-
-def test_jpeg_lossless_restart_markers_round_trip():
-    """DRI/RSTn in a lossless scan: segment boundaries byte-align the
-    stream and reset prediction to the 2^(P-Pt-1) default; decode must
-    equal the no-restart encode exactly."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _jpeg_pixels,
-        encode_jpeg_lossless,
-    )
-
-    rng = np.random.RandomState(23)
-    rgb = rng.randint(0, 256, (12, 7, 3)).astype(np.uint8)
-    plain = _jpeg_pixels(encode_jpeg_lossless(rgb, predictor=4))
-    restarted = _jpeg_pixels(
-        encode_jpeg_lossless(rgb, predictor=4, restart_interval=5)
-    )
-    assert (plain == restarted).all() and (plain == rgb).all()
-
-
-def test_jpeg_lossless_point_transform_and_wide_precision():
-    """Pt shifts samples down at encode and back up at decode (H.2.2),
-    so decode equals (v>>Pt)<<Pt; 12/16-bit precision scales to the
-    uint8 grid by the exact v*255/(2^P-1) rounding (the 16-bit TIFF
-    rule). The 16-bit case includes a 32768 jump — the huffman
-    category-16 code that carries no extend bits."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _jpeg_pixels,
-        encode_jpeg_lossless,
-    )
-
-    rng = np.random.RandomState(29)
-    g = rng.randint(0, 256, (6, 9)).astype(np.uint8)
-    dec = _jpeg_pixels(encode_jpeg_lossless(g, predictor=5, point_transform=2))
-    exp = (g.astype(np.int64) >> 2) << 2
-    assert (dec == np.stack([exp.astype(np.uint8)] * 3, axis=-1)).all()
-
-    g12 = rng.randint(0, 4096, (7, 5)).astype(np.int64)
-    dec12 = _jpeg_pixels(encode_jpeg_lossless(g12, predictor=6, precision=12))
-    exp12 = ((g12 * 255 + 4095 // 2) // 4095).astype(np.uint8)
-    assert (dec12 == np.stack([exp12] * 3, axis=-1)).all()
-
-    g16 = np.array([[0, 65535, 0, 32768], [65535, 0, 32767, 1]], dtype=np.int64)
-    dec16 = _jpeg_pixels(encode_jpeg_lossless(g16, predictor=1, precision=16))
-    exp16 = ((g16 * 255 + 65535 // 2) // 65535).astype(np.uint8)
-    assert (dec16 == np.stack([exp16] * 3, axis=-1)).all()
-
-
-def test_jpeg_lossless_corrupt_payloads_quarantine():
-    """Malformed lossless streams surface ValueError (the uniform
-    quarantine contract), never IndexError/struct.error: truncated
-    entropy data, scan header defects (predictor 0, Pt >= P), a scan
-    referencing an undefined huffman table, subsampled multi-component
-    layouts, and header-bomb dimensions the stream can't back."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _jpeg_pixels,
-        encode_jpeg_lossless,
-    )
-
-    rng = np.random.RandomState(31)
-    g = rng.randint(0, 256, (8, 8)).astype(np.uint8)
-    good = encode_jpeg_lossless(g, predictor=7)
-    for cut in (4, 10, 30, len(good) - 6):
-        with pytest.raises(ValueError):
-            _jpeg_pixels(good[:cut])
-    sos = good.find(b"\xff\xda")
-    # predictor 0 (Ss byte of the scan header)
-    bad = bytearray(good)
-    bad[sos + 7] = 0
-    with pytest.raises(ValueError, match="predictor 0"):
-        _jpeg_pixels(bytes(bad))
-    # point transform >= precision
-    bad = bytearray(good)
-    bad[sos + 9] = 8
-    with pytest.raises(ValueError, match="corrupt lossless"):
-        _jpeg_pixels(bytes(bad))
-    # scan references an undefined table (Td=1, only Th=0 defined)
-    bad = bytearray(good)
-    bad[sos + 6] = 0x10
-    with pytest.raises(ValueError, match="undefined huffman"):
-        _jpeg_pixels(bytes(bad))
-    # subsampled 3-component lossless is rejected, not misdecoded
-    rgb = rng.randint(0, 256, (8, 8, 3)).astype(np.uint8)
-    c3 = bytearray(encode_jpeg_lossless(rgb))
-    sof = c3.find(b"\xff\xc3")
-    c3[sof + 11] = 0x21  # comp 1 factors 2x1
-    with pytest.raises(ValueError, match="1x1 factors"):
-        _jpeg_pixels(bytes(c3))
-    # header bomb: SOF3 claims 65535x65535 — bounded before allocation
-    bomb = bytearray(good)
-    sofg = bomb.find(b"\xff\xc3")
-    bomb[sofg + 5 : sofg + 9] = b"\xff\xff\xff\xff"
-    with pytest.raises(ValueError, match="exceed"):
-        _jpeg_pixels(bytes(bomb))
-
-
-def test_jpeg_lossless_routes_through_spark_feature_path(spark):
-    """A lossless JPEG travels the same mapInPandas feature/aHash
-    plumbing as every other image: decode_features returns real dims
-    and image_ahash matches a BMP of the SAME pixels exactly."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        decode_features,
-        encode_jpeg_lossless,
-        image_ahash,
-    )
-
-    rng = np.random.RandomState(37)
-    rgb = rng.randint(0, 256, (16, 16, 3)).astype(np.uint8)
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(encode_jpeg_lossless(rgb, predictor=4)), "image/jpeg"),
-            (2, bytearray(make_bmp(rgb)), "image/bmp"),
-        ],
-        "doc_id long, payload binary, mime string",
-    )
-    feats = {r.doc_id: r for r in decode_features(df).collect()}
-    assert feats[1].ok and feats[1].width == 16 and feats[1].height == 16
-    hashes = {r.doc_id: r.ahash for r in image_ahash(df.drop("mime")).collect()}
-    assert hashes[1] == hashes[2]
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    h=st.integers(1, 12),
-    w=st.integers(1, 12),
-    pred=st.integers(1, 7),
-    rst=st.integers(0, 6),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_jpeg_lossless_round_trip_property(h, w, pred, rst, seed):
-    """Property pin: ANY uint8 image, ANY predictor, with or without
-    restarts, round-trips bit-exactly through encode_jpeg_lossless →
-    _jpeg_pixels (including 1-pixel rows/columns, where the Annex-H
-    border rules do all the predicting)."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _jpeg_pixels,
-        encode_jpeg_lossless,
-    )
-
-    rng = np.random.RandomState(seed)
-    g = rng.randint(0, 256, (h, w)).astype(np.uint8)
-    dec = _jpeg_pixels(encode_jpeg_lossless(g, predictor=pred, restart_interval=rst))
-    assert (dec == np.stack([g] * 3, axis=-1)).all()
-
-
-# ---------------------------------------------------------------- #
-# WebP / VP8L (RFC 9649) — r11                                      #
-# ---------------------------------------------------------------- #
-
-
-def test_webp_vp8l_round_trips_full_matrix():
-    """VP8L is always lossless: every decoder path the encoder twin
-    can drive must round-trip bit-exactly — all 14 predictor modes,
-    cross-color multipliers, subtract-green, color cache, LZ77 runs,
-    palette at every sub-byte packing, and their composition."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _webp_pixels,
-        decode_webp,
-        encode_webp,
-    )
-
-    rng = np.random.RandomState(41)
-    px = rng.randint(0, 256, (11, 9, 3)).astype(np.uint8)
-    for mode in range(14):
-        assert (_webp_pixels(encode_webp(px, predictor=mode)) == px).all()
-    for cc in ((3, -5, 7), (-128, 127, 1), (0, 0, 0)):
-        assert (_webp_pixels(encode_webp(px, cross_color=cc)) == px).all()
-    assert (_webp_pixels(encode_webp(px, subtract_green=True)) == px).all()
-    comp = np.repeat(rng.randint(0, 256, (6, 4, 3)).astype(np.uint8), 3, axis=1)
-    dec = _webp_pixels(
-        encode_webp(
-            comp,
-            subtract_green=True,
-            cross_color=(2, -3, 4),
-            predictor=7,
-            use_lz77=True,
-        )
-    )
-    assert (dec == comp).all()
-    tiled = np.tile(rng.randint(0, 256, (2, 2, 3)).astype(np.uint8), (4, 5, 1))
-    for bits in (1, 4, 11):
-        assert (
-            _webp_pixels(encode_webp(tiled, color_cache_bits=bits)) == tiled
-        ).all()
-    for ncol, shape in ((2, (7, 11)), (4, (5, 9)), (16, (6, 10)), (200, (16, 16))):
-        vals = rng.randint(0, 256, (ncol, 3)).astype(np.uint8)
-        img = vals[rng.randint(0, ncol, shape)]
-        assert (_webp_pixels(encode_webp(img, palette=True)) == img).all()
-    gray = rng.randint(0, 256, (5, 7)).astype(np.uint8)
-    assert (
-        _webp_pixels(encode_webp(gray)) == np.stack([gray] * 3, axis=-1)
-    ).all()
-    one = np.array([[[1, 2, 3]]], dtype=np.uint8)
-    assert (_webp_pixels(encode_webp(one)) == one).all()
-    meta = decode_webp(encode_webp(px))
-    assert meta["codec"] == "vp8l" and (meta["width"], meta["height"]) == (9, 11)
-
-
-def test_webp_vp8l_meta_prefix_groups():
-    """Meta prefix codes: a hand-built stream whose 2x1 entropy image
-    routes the left half of each row to group 0 and the right half to
-    group 1, with single-symbol codes per group — the decoder must
-    select per-block code groups, not just group 0."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _Vp8lWriter,
-        _vp8l_emit_literal_image,
-        _webp_pixels,
-    )
-
-    w, h = 8, 4
-    wtr = _Vp8lWriter()
-    wtr.write(8, 0x2F)
-    wtr.write(14, w - 1)
-    wtr.write(14, h - 1)
-    wtr.write(1, 0)
-    wtr.write(3, 0)
-    wtr.write(1, 0)  # no transforms
-    wtr.write(1, 0)  # no color cache
-    wtr.write(1, 1)  # meta prefix codes present
-    wtr.write(3, 2 - 2)  # 4-pixel blocks -> 2x1 entropy image
-    # entropy image pixels: (r<<8)|g = group index 0 then 1
-    _vp8l_emit_literal_image(wtr, [0xFF000000, 0xFF000100])
-
-    def _group(pixel: int) -> None:
-        # a code GROUP is five bare prefix codes (no cache bit —
-        # that's what distinguishes it from a sub-image stream)
-        for sym in (
-            (pixel >> 8) & 0xFF,
-            (pixel >> 16) & 0xFF,
-            pixel & 0xFF,
-            (pixel >> 24) & 0xFF,
-            0,
-        ):
-            wtr.write(1, 1)  # simple
-            wtr.write(1, 0)  # one symbol
-            wtr.write(1, 1)  # 8-bit
-            wtr.write(8, sym)
-
-    # group 0: constant ARGB(255, 10, 20, 30); group 1: (255, 40, 50, 60)
-    _group(0xFF0A141E)
-    _group(0xFF28323C)
-    data = wtr.flush()
-    chunk = b"VP8L" + struct.pack("<I", len(data)) + data
-    if len(data) & 1:
-        chunk += b"\x00"
-    riff = b"WEBP" + chunk
-    px = _webp_pixels(b"RIFF" + struct.pack("<I", len(riff)) + riff)
-    assert px.shape == (4, 8, 3)
-    assert (px[:, :4] == [10, 20, 30]).all()
-    assert (px[:, 4:] == [40, 50, 60]).all()
-
-
-def test_webp_vp8l_code_length_repeats():
-    """The 16/17/18 repeat codes of the code-length code (the
-    encoder twin caps symbols instead, so these are decoder-only):
-    a hand-built green code using 17/18 zero runs and a 16
-    previous-length repeat must decode to the canonical assignment."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _Vp8lReader,
-        _Vp8lWriter,
-        _vp8l_read_prefix_code,
-    )
-
-    # green tree: symbols 0 and 255 at length 1, via 18+18 zero runs
-    wtr = _Vp8lWriter()
-    wtr.write(1, 0)  # normal form
-    wtr.write(4, 19 - 4)
-    clc = {1: 1, 18: 1}  # two CLC symbols, 1 bit each
-    order = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
-    for s in order:
-        wtr.write(3, clc.get(s, 0))
-    # canonical CLC: sym 1 -> code 0, sym 18 -> code 1 (1 bit each)
-    wtr.write(1, 0)  # no max_symbol cap
-    wtr.write_code(1, 0)  # symbol 0: length 1
-    wtr.write_code(1, 1)  # 18: zero run
-    wtr.write(7, 138 - 11)
-    wtr.write_code(1, 1)  # 18: zero run
-    wtr.write(7, 116 - 11)
-    wtr.write_code(1, 0)  # symbol 255: length 1
-    table = _vp8l_read_prefix_code(_Vp8lReader(wtr.flush()), 256)
-    codes, single = table
-    assert single is None
-    assert codes == {(1, 0): 0, (1, 1): 255}
-
-    # lengths [2,2,2,2] via one literal + a 16-repeat of 3, with the
-    # explicit max_symbol cap implying the remaining 252 zeros
-    wtr = _Vp8lWriter()
-    wtr.write(1, 0)
-    wtr.write(4, 19 - 4)
-    clc = {2: 1, 16: 1}
-    for s in order:
-        wtr.write(3, clc.get(s, 0))
-    wtr.write(1, 1)  # use max_symbol: a cap on CODES READ, so 2
-    wtr.write(3, 0)  # 2-bit field
-    wtr.write(2, 2 - 2)  # one literal + one repeat = 2 codes
-    wtr.write_code(1, 0)  # symbol 0: length 2 (CLC sym 2 -> code 0)
-    wtr.write_code(1, 1)  # 16: repeat previous length
-    wtr.write(2, 3 - 3)  # 3 repeats
-    codes, single = _vp8l_read_prefix_code(_Vp8lReader(wtr.flush()), 256)
-    assert single is None
-    assert codes == {(2, 0): 0, (2, 1): 1, (2, 2): 2, (2, 3): 3}
-
-
-def _vp8_keyframe_chunk(w: int, h: int) -> bytes:
-    """Minimal VP8 lossy keyframe header (frame tag + start code +
-    14-bit dims) — enough for the triage path; not a decodable frame."""
-    tag = (0 << 0) | (3 << 1) | (1 << 4) | (64 << 5)  # keyframe, v3, shown
-    body = (
-        tag.to_bytes(3, "little")
-        + b"\x9d\x01\x2a"
-        + struct.pack("<HH", w, h)
-        + bytes(16)
-    )
-    return b"VP8 " + struct.pack("<I", len(body)) + body
-
-
-def test_webp_lossy_and_extended_metadata(spark):
-    """VP8 lossy gets metadata-before-decode routing: real dims from
-    the keyframe header, NotImplementedError (not a wrong answer) on
-    pixel access, per-row quarantine through decode_features. VP8X +
-    ANIM containers report canvas dims and ANMF frame count, and an
-    animation's first VP8L frame decodes for real."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _webp_pixels,
-        decode_features,
-        decode_webp,
-        encode_webp,
-    )
-
-    lossy_body = _vp8_keyframe_chunk(320, 240)
-    lossy = b"RIFF" + struct.pack("<I", 4 + len(lossy_body)) + b"WEBP" + lossy_body
-    meta = decode_webp(lossy)
-    assert meta["codec"] == "vp8" and (meta["width"], meta["height"]) == (320, 240)
-    assert "mean_r" not in meta
-    # r12 wording: VP8 lossy is quarantined on the measured
-    # unverifiability of its ~2.2 KB probability tables, not on a
-    # library dependency (see SCALE.md residue map)
-    with pytest.raises(NotImplementedError, match="probability tables"):
-        _webp_pixels(lossy)
-
-    # VP8X + ANIM + two ANMF frames, the first wrapping a real VP8L
-    rng = np.random.RandomState(43)
-    px = rng.randint(0, 256, (6, 5, 3)).astype(np.uint8)
-    inner = encode_webp(px)
-    vp8l_chunk = inner[12:]  # the VP8L chunk (incl. header + padding)
-    vp8x = b"VP8X" + struct.pack("<I", 10) + bytes([0x02]) + bytes(3) \
-        + (5 - 1).to_bytes(3, "little") + (6 - 1).to_bytes(3, "little")
-    anim = b"ANIM" + struct.pack("<I", 6) + bytes(6)
-    frames = b""
-    for _ in range(2):
-        body = bytes(16) + vp8l_chunk
-        frames += b"ANMF" + struct.pack("<I", len(body)) + body
-    payload = b"WEBP" + vp8x + anim + frames
-    animated = b"RIFF" + struct.pack("<I", len(payload)) + payload
-    meta = decode_webp(animated)
-    assert meta["n_frames"] == 2 and meta["codec"] == "vp8l"
-    assert (_webp_pixels(animated) == px).all()
-
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(encode_webp(px)), "image/webp"),
-            (2, bytearray(lossy), "image/webp"),
-            (3, bytearray(encode_webp(px)[:20]), "image/webp"),
-        ],
-        "doc_id long, payload binary, mime string",
-    )
-    rows = {r.doc_id: r for r in decode_features(df).collect()}
-    assert rows[1].ok and rows[1].width == 5 and rows[1].height == 6
-    assert rows[2].ok and rows[2].codec == "vp8" and rows[2].width == 320
-    assert not rows[3].ok
-
-
-def test_webp_corrupt_payloads_quarantine():
-    """Malformed WebP/VP8L bytes surface ValueError (or the honest
-    NotImplementedError for lossy frames), never IndexError or
-    struct.error: truncations, a bad signature byte, a nonzero
-    version, out-of-range cache bits, and header-bomb dimensions."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _Vp8lWriter,
-        _webp_pixels,
-        encode_webp,
-    )
-
-    rng = np.random.RandomState(47)
-    good = encode_webp(rng.randint(0, 256, (8, 8, 3)).astype(np.uint8))
-    for cut in (3, 8, 11, 15, 21, 30, len(good) - 3):
-        try:
-            _webp_pixels(good[:cut])
-        except (ValueError, NotImplementedError):
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-    bad_sig = bytearray(good)
-    bad_sig[20] ^= 0xFF  # VP8L signature byte
-    with pytest.raises(ValueError):
-        _webp_pixels(bytes(bad_sig))
-
-    def _wrap(data: bytes) -> bytes:
-        chunk = b"VP8L" + struct.pack("<I", len(data)) + data
-        if len(data) & 1:
-            chunk += b"\x00"
-        riff = b"WEBP" + chunk
-        return b"RIFF" + struct.pack("<I", len(riff)) + riff
-
-    # nonzero version
-    wtr = _Vp8lWriter()
-    wtr.write(8, 0x2F)
-    wtr.write(14, 0)
-    wtr.write(14, 0)
-    wtr.write(1, 0)
-    wtr.write(3, 5)
-    with pytest.raises(ValueError, match="version"):
-        _webp_pixels(_wrap(wtr.flush()))
-    # cache bits out of range
-    wtr = _Vp8lWriter()
-    wtr.write(8, 0x2F)
-    wtr.write(14, 3)
-    wtr.write(14, 3)
-    wtr.write(1, 0)
-    wtr.write(3, 0)
-    wtr.write(1, 0)  # no transforms
-    wtr.write(1, 1)
-    wtr.write(4, 14)
-    with pytest.raises(ValueError, match="color-cache"):
-        _webp_pixels(_wrap(wtr.flush()))
-    # header bomb: 16383x16383 from a tiny stream
-    wtr = _Vp8lWriter()
-    wtr.write(8, 0x2F)
-    wtr.write(14, 16382)
-    wtr.write(14, 16382)
-    wtr.write(1, 0)
-    wtr.write(3, 0)
-    wtr.write(1, 0)
-    with pytest.raises(ValueError, match="exceed"):
-        _webp_pixels(_wrap(wtr.flush()))
-
-
-def test_webp_routes_through_spark_paths_and_fixture(spark):
-    """WebP rides the shared image plumbing: image_ahash matches a
-    BMP of the SAME pixels, and the image fixture ships VP8L at
-    doc_id%24==3 (plain at %48==3, subtract-green + predictor + cache
-    at %48==27) under the unchanged text-byte oracle."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        encode_webp,
-        image_ahash,
-        synthesize_mixed_image_from_text,
-    )
-
-    rng = np.random.RandomState(53)
-    rgb = rng.randint(0, 256, (16, 16, 3)).astype(np.uint8)
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(encode_webp(rgb, subtract_green=True))),
-            (2, bytearray(make_bmp(rgb))),
-        ],
-        "doc_id long, payload binary",
-    )
-    hashes = {r.doc_id: r.ahash for r in image_ahash(df).collect()}
-    assert hashes[1] == hashes[2]
-    ids = (0, 3, 27)
-    docs = spark.createDataFrame(
-        [(i, "same text for every row") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in synthesize_mixed_image_from_text(docs).collect()}
-    assert rows[0].mime == "image/bmp"
-    assert rows[3].mime == "image/webp" and rows[27].mime == "image/webp"
-    assert bytes(rows[3].payload)[:4] == b"RIFF"
-    assert bytes(rows[3].payload) != bytes(rows[27].payload)  # different paths
-    hashes = image_ahash(
-        synthesize_mixed_image_from_text(
-            spark.createDataFrame(
-                [(i, "same text for every row") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == 3 and len({r.ahash for r in hashes}) == 1
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    h=st.integers(1, 10),
-    w=st.integers(1, 10),
-    sg=st.booleans(),
-    pred=st.one_of(st.none(), st.integers(0, 13)),
-    cache=st.sampled_from([0, 0, 3]),
-    lz=st.booleans(),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_webp_vp8l_round_trip_property(h, w, sg, pred, cache, lz, seed):
-    """Property pin: ANY uint8 image through ANY encoder option mix
-    round-trips bit-exactly (1-pixel rows/columns included — the
-    flat-array top-right wrap does the predicting there)."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _webp_pixels,
-        encode_webp,
-    )
-
-    rng = np.random.RandomState(seed)
-    px = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
-    dec = _webp_pixels(
-        encode_webp(
-            px,
-            subtract_green=sg,
-            predictor=pred,
-            color_cache_bits=cache,
-            use_lz77=lz,
-        )
-    )
-    assert (dec == px).all()
-
-
-def test_tga_unused_color_map_entry_size_validated():
-    """r11 fuzz find: a truecolor/gray TGA carrying an (unused) color
-    map skipped the entry-size check, so cm_bits 0-7 reached the
-    entry parser with a zero/one-column array and leaked IndexError.
-    Now every present map validates its entry size up front."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _tga_pixels,
-        encode_tga,
-    )
-
-    rng = np.random.RandomState(59)
-    rgb = rng.randint(0, 256, (4, 5, 3)).astype(np.uint8)
-    good = bytearray(encode_tga(rgb))
-    good[1] = 1  # claim a color map is present
-    good[5:7] = struct.pack("<H", 3)  # cm_len = 3
-    for bad_bits in (0, 1, 7):
-        hdr = bytearray(good)
-        hdr[7] = bad_bits
-        with pytest.raises(ValueError, match="entry size"):
-            _tga_pixels(bytes(hdr))
-
-
-# ---------------------------------------------------------------- #
-# Matroska / WebM (EBML) — r11                                       #
-# ---------------------------------------------------------------- #
-
-
-def test_mkv_audio_decodes_across_codecs_and_lacings():
-    """The EBML walk + block layer decode the audio-fixture contract
-    bit-exactly for A_PCM/INT/LIT, A_PCM/INT/BIG, A_PCM/FLOAT/IEEE
-    (int16-grid round) and A_FLAC (native reassembly from
-    CodecPrivate + frames), across plain blocks, a BlockGroup, Xiph
-    and EBML lacing, and an unknown-size segment (the streamed-file
-    shape)."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mkv_audio_samples,
-        _mkv_payload,
-        _pcm16_samples,
-        decode_mkv,
-        decode_wav,
-        _wav_payload,
-    )
-
-    raw = b"matroska sample contract bytes! 0123456789" * 3
-    exp = np.frombuffer(raw, np.uint8).astype(np.int16)
-    for codec in ("pcm", "pcm_be", "float", "flac"):
-        s, rate, ch = _mkv_audio_samples(_mkv_payload(raw, codec=codec))
-        assert (s == exp).all() and rate == 8000 and ch == 1, codec
-    for lac in ("xiph", "ebml"):
-        s, _, _ = _mkv_audio_samples(_mkv_payload(raw, lacing=lac))
-        assert (s == exp).all(), lac
-    s, _, _ = _mkv_audio_samples(
-        _mkv_payload(raw, unknown_segment_size=True)
-    )
-    assert (s == exp).all()
-    # fixed lacing repeats one frame three times — structural check
-    sfx, _, _ = _mkv_audio_samples(_mkv_payload(raw, lacing="fixed"))
-    third = len(sfx) // 3
-    assert third and (sfx[:third] == sfx[third : 2 * third]).all()
-    # stats parity with the WAV twin of the same bytes
-    dm = decode_mkv(_mkv_payload(raw))
-    dw = decode_wav(_wav_payload(raw))
-    assert dm["kind"] == "audio" and dm["codec"] == "pcm/int/lit"
-    assert dm["n_frames"] == dw["n_frames"]
-    assert abs(dm["rms"] - dw["rms"]) < 1e-9
-    # fingerprint routing sniffs the EBML magic
-    assert (_pcm16_samples(_mkv_payload(raw, codec="flac")) == exp).all()
-
-
-def test_mkv_float_nan_samples_are_corruption():
-    """r13 fuzz-campaign warning: the Matroska A_PCM/FLOAT/IEEE arm
-    pushed NaN through astype(int16), whose result is platform-
-    defined — stats would be silently nondeterministic. The arm now
-    carries the same contract as the WAV/AU float arms: non-finite
-    samples raise ValueError by name."""
-    import struct
-
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mkv_audio_samples,
-        _mkv_payload,
-    )
-
-    raw = b"matroska nan contract bytes 0123"
-    p = _mkv_payload(raw, codec="float")
-    needle = struct.pack("<f", raw[0] / 32767.0)
-    assert needle in p
-    bad = p.replace(needle, struct.pack("<f", float("nan")), 1)
-    with pytest.raises(ValueError, match="non-finite"):
-        _mkv_audio_samples(bad)
-    # inf is the same corruption class
-    bad = p.replace(needle, struct.pack("<f", float("inf")), 1)
-    with pytest.raises(ValueError, match="non-finite"):
-        _mkv_audio_samples(bad)
-
-
-def test_mkv_video_triage_and_transform_codec_quarantine():
-    """Video tracks get the metadata-before-decode shape: real dims,
-    codec id, block-frame count, declared duration — no fake pixels.
-    Transform audio codecs (A_VORBIS here) get track-metadata triage
-    from decode_mkv while the sample layer quarantines by name."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _ebml_el,
-        _ebml_uint_body,
-        _mkv_audio_samples,
-        decode_mkv,
-    )
-
-    def _mkv_container(track: bytes, blocks: bytes) -> bytes:
-        info = _ebml_el(
-            b"\x15\x49\xa9\x66",
-            _ebml_el(b"\x2a\xd7\xb1", _ebml_uint_body(1_000_000))
-            + _ebml_el(b"\x44\x89", struct.pack(">f", 2000.0)),
-        )
-        cluster = _ebml_el(b"\x1f\x43\xb6\x75", _ebml_el(b"\xe7", b"\x00") + blocks)
-        segment = _ebml_el(
-            b"\x18\x53\x80\x67",
-            info + _ebml_el(b"\x16\x54\xae\x6b", track) + cluster,
-        )
-        header = _ebml_el(
-            b"\x1a\x45\xdf\xa3", _ebml_el(b"\x42\x82", b"webm")
-        )
-        return header + segment
-
-    video_track = _ebml_el(
-        b"\xae",
-        _ebml_el(b"\xd7", b"\x01")
-        + _ebml_el(b"\x83", b"\x01")
-        + _ebml_el(b"\x86", b"V_VP8")
-        + _ebml_el(
-            b"\xe0",
-            _ebml_el(b"\xb0", _ebml_uint_body(640))
-            + _ebml_el(b"\xba", _ebml_uint_body(360)),
-        ),
-    )
-    blocks = b"".join(
-        _ebml_el(b"\xa3", b"\x81\x00\x00\x80" + bytes(12)) for _ in range(5)
-    )
-    meta = decode_mkv(_mkv_container(video_track, blocks))
-    assert meta["kind"] == "video" and meta["codec"] == "vp8"
-    assert (meta["width"], meta["height"]) == (640, 360)
-    assert meta["n_frames"] == 5
-    assert abs(meta["duration_s"] - 2.0) < 1e-9
-
-    vorbis_track = _ebml_el(
-        b"\xae",
-        _ebml_el(b"\xd7", b"\x01")
-        + _ebml_el(b"\x83", b"\x02")
-        + _ebml_el(b"\x86", b"A_VORBIS")
-        + _ebml_el(
-            b"\xe1",
-            _ebml_el(b"\xb5", struct.pack(">f", 48000.0))
-            + _ebml_el(b"\x9f", b"\x02"),
-        ),
-    )
-    payload = _mkv_container(vorbis_track, blocks)
-    meta = decode_mkv(payload)
-    assert meta["kind"] == "audio" and meta["codec"] == "vorbis"
-    assert meta["sample_rate"] == 48000 and meta["n_channels"] == 2
-    assert "rms" not in meta
-    with pytest.raises(NotImplementedError, match="A_VORBIS"):
-        _mkv_audio_samples(payload)
-
-
-def test_mkv_corrupt_payloads_quarantine():
-    """Malformed EBML surfaces ValueError (never IndexError or
-    struct.error): truncations at every stage, lying lacing tables,
-    blocks for the wrong track tolerated, missing tracks rejected."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mkv_audio_samples,
-        _mkv_payload,
-        decode_mkv,
-    )
-
-    raw = b"0123456789abcdef" * 4
-    good = _mkv_payload(raw, lacing="xiph")
-    for cut in (2, 5, 12, 30, 60, len(good) - 5):
-        try:
-            decode_mkv(good[:cut])
-            _mkv_audio_samples(good[:cut])
-        except (ValueError, NotImplementedError):
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-    with pytest.raises(ValueError, match="EBML"):
-        decode_mkv(b"\x00\x01\x02\x03")
-    # a Xiph lacing whose declared sizes overrun the block
-    bad = bytearray(good)
-    i = bad.find(b"\xa3")  # first SimpleBlock id
-    # blunt instrument: corrupt the lacing count byte upward
-    bad[i + 6] = 0xFE
-    try:
-        _mkv_audio_samples(bytes(bad))
-    except (ValueError, NotImplementedError):
-        pass
-    except Exception as exc:  # noqa: BLE001
-        raise AssertionError(f"lacing bomb leaked {type(exc).__name__}: {exc}")
-
-
-def test_mkv_fixture_rotation_and_spark_path(spark):
-    """doc_id%24==19 ships the 16-bit contract as A_PCM-in-Matroska
-    (Xiph lacing), %24==14 the FLAC stream as A_FLAC — both decode to
-    the identical ehash as their WAV/FLAC siblings, so the oracle
-    gate holds while the EBML walk runs at driver scale; per-row
-    quarantine through decode_features."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mkv_payload,
-        audio_energy_hash,
-        decode_features,
-        synthesize_mixed_audio_from_text,
-    )
-
-    ids = (0, 19, 14, 2)
-    docs = spark.createDataFrame(
-        [(i, "identical text for every row") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in synthesize_mixed_audio_from_text(docs).collect()}
-    assert rows[19].mime == "audio/x-matroska"
-    assert rows[14].mime == "audio/x-matroska"
-    assert bytes(rows[19].payload)[:4] == b"\x1a\x45\xdf\xa3"
-    assert b"A_FLAC" in bytes(rows[14].payload)
-    assert rows[0].mime == "audio/wav" and rows[2].mime == "audio/flac"
-    hashes = audio_energy_hash(
-        synthesize_mixed_audio_from_text(
-            spark.createDataFrame(
-                [(i, "identical text for every row") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == 4 and len({r.ehash for r in hashes}) == 1
-
-    raw = b"features path bytes"
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(_mkv_payload(raw)), "audio/x-matroska"),
-            (2, bytearray(_mkv_payload(raw)[:15]), "audio/x-matroska"),
-        ],
-        "doc_id long, payload binary, mime string",
-    )
-    feats = {r.doc_id: r for r in decode_features(df).collect()}
-    assert feats[1].ok and feats[1].kind == "audio"
-    assert feats[1].n_frames == len(raw)
-    assert not feats[2].ok
-
-
-def test_mkv_mjpeg_video_frames_match_avi(spark):
-    """V_MJPEG-in-Matroska: blocks carry whole JPEG frames, so the
-    EBML walk + existing JPEG codec decode the same pixels as the AVI
-    twin of the SAME frames — identical frame hashes through the
-    Spark path. The video fixture sub-rotates MKV at doc_id%12==7;
-    non-MJPEG video codecs quarantine at the frame layer (no rows)
-    while decode_mkv still returns container stats."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _avi_mjpeg_container,
-        _mjpeg_frames_for_text,
-        _mkv_mjpeg_container,
-        synthesize_mixed_video_from_text,
-        video_frame_hashes,
-    )
-
-    raw = b"same frames in two containers"
-    frames = _mjpeg_frames_for_text(raw, 4)
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(_mkv_mjpeg_container(frames))),
-            (2, bytearray(_avi_mjpeg_container(frames))),
-        ],
-        "doc_id long, payload binary",
-    )
-    rows = video_frame_hashes(df).collect()
-    mkv_h = sorted((r.frame_id, r.fhash) for r in rows if r.doc_id == 1)
-    avi_h = sorted((r.frame_id, r.fhash) for r in rows if r.doc_id == 2)
-    assert len(mkv_h) == 4 and mkv_h == avi_h
-
-    ids = (1, 7, 19)
-    docs = spark.createDataFrame(
-        [(i, "one text for every doc") for i in ids],
-        "doc_id long, text string",
-    )
-    mixed = {r.doc_id: r for r in synthesize_mixed_video_from_text(docs).collect()}
-    assert mixed[1].mime == "video/x-msvideo"
-    assert mixed[7].mime == "video/x-matroska"
-    assert mixed[19].mime == "video/x-matroska"
-    fh = video_frame_hashes(
-        synthesize_mixed_video_from_text(
-            spark.createDataFrame(
-                [(i, "one text for every doc") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    by_doc = {}
-    for r in fh:
-        by_doc.setdefault(r.doc_id, []).append((r.frame_id, r.fhash))
-    assert sorted(by_doc[1]) == sorted(by_doc[7]) == sorted(by_doc[19])
-
-
-# ---------------------------------------------------------------- #
-# APNG — r11                                                        #
-# ---------------------------------------------------------------- #
-
-
-def test_apng_frames_compose_and_metadata():
-    """encode_apng → _png_frames round-trips full frames exactly,
-    composes region updates over the running canvas, reports acTL
-    n_frames through decode_png, and keeps the default image (frame
-    0) decoding through the plain-PNG path unchanged."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _png_frames,
-        _png_pixels,
-        decode_png,
-        encode_apng,
-        encode_png,
-    )
-
-    rng = np.random.RandomState(61)
-    f0 = rng.randint(0, 256, (8, 10, 3)).astype(np.uint8)
-    f1 = rng.randint(0, 256, (8, 10, 3)).astype(np.uint8)
-    sub = rng.randint(0, 256, (3, 4, 3)).astype(np.uint8)
-    frames = _png_frames(encode_apng([f0, f1]))
-    assert len(frames) == 2
-    assert (frames[0] == f0).all() and (frames[1] == f1).all()
-    frames = _png_frames(encode_apng([f0, (2, 3, sub)]))
-    exp = f0.copy()
-    exp[3:6, 2:6] = sub
-    assert (frames[1] == exp).all()
-    meta = decode_png(encode_apng([f0, f1]))
-    assert meta["n_frames"] == 2 and meta["width"] == 10
-    assert (_png_pixels(encode_apng([f0, f1])) == f0).all()
-    assert len(_png_frames(encode_png(f0))) == 1  # plain PNG: 1 frame
-
-
-def test_apng_dispose_and_blend_ops():
-    """The decoder-only composition ops, hand-built on an RGBA
-    canvas: OVER blending with a semi-transparent region (integer
-    alpha math pinned), dispose PREVIOUS reverting the region, and
-    dispose BACKGROUND clearing it to transparent black."""
-    import zlib
-
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _PNG_MAGIC,
-        _png_chunk,
-        _png_frames,
-    )
-
-    def _rgba_idat(arr: np.ndarray) -> bytes:
-        rows = b"".join(b"\x00" + arr[y].tobytes() for y in range(arr.shape[0]))
-        return zlib.compress(rows)
-
-    cw = ch = 4
-    base = np.zeros((ch, cw, 4), np.uint8)
-    base[:, :] = (100, 150, 200, 255)
-    overlay = np.zeros((2, 2, 4), np.uint8)
-    overlay[:, :] = (30, 60, 90, 128)
-    ihdr = struct.pack(">IIBBBBB", cw, ch, 8, 6, 0, 0, 0)
-
-    def _fctl(seq, w, h, x, y, dispose, blend):
-        return _png_chunk(
-            b"fcTL",
-            struct.pack(">IIIIIHHBB", seq, w, h, x, y, 1, 100, dispose, blend),
-        )
-
-    stream = _PNG_MAGIC + _png_chunk(b"IHDR", ihdr)
-    stream += _png_chunk(b"acTL", struct.pack(">II", 3, 0))
-    stream += _fctl(0, cw, ch, 0, 0, 0, 0)
-    stream += _png_chunk(b"IDAT", _rgba_idat(base))
-    # frame 1: OVER-blend a semi-transparent 2x2 at (1,1), dispose
-    # PREVIOUS so frame 2 starts from the base again
-    stream += _fctl(1, 2, 2, 1, 1, 2, 1)
-    stream += _png_chunk(b"fdAT", struct.pack(">I", 2) + _rgba_idat(overlay))
-    # frame 2: SOURCE-replace the same region, dispose BACKGROUND
-    stream += _fctl(3, 2, 2, 1, 1, 1, 0)
-    stream += _png_chunk(b"fdAT", struct.pack(">I", 4) + _rgba_idat(overlay))
-    stream += _png_chunk(b"IEND", b"")
-
-    frames = _png_frames(stream)
-    assert len(frames) == 3
-    assert (frames[0] == [100, 150, 200]).all()
-    # integer OVER math: out_a = 128 + 255*127//255; rgb =
-    # (src*128 + dst*255*127//255) // out_a
-    out_a = 128 + 255 * 127 // 255
-    exp_px = [
-        (s * 128 + d * (255 * 127 // 255)) // out_a
-        for s, d in ((30, 100), (60, 150), (90, 200))
-    ]
-    assert (frames[1][1:3, 1:3] == exp_px).all()
-    assert (frames[1][0, :] == [100, 150, 200]).all()  # outside region
-    # dispose PREVIOUS restored the base before frame 2's SOURCE blend
-    assert (frames[2][1:3, 1:3] == [30, 60, 90]).all()
-    assert (frames[2][3, 3] == [100, 150, 200]).all()
-
-
-def test_apng_corrupt_payloads_quarantine():
-    """Malformed APNG structure surfaces ValueError: non-contiguous
-    sequence numbers, an acTL/frame-count mismatch, out-of-canvas
-    regions, fdAT before any fcTL, and truncations."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _png_frames,
-        encode_apng,
-    )
-
-    rng = np.random.RandomState(67)
-    f0 = rng.randint(0, 256, (6, 6, 3)).astype(np.uint8)
-    f1 = rng.randint(0, 256, (6, 6, 3)).astype(np.uint8)
-    good = encode_apng([f0, f1])
-    for cut in (10, 40, 80, len(good) - 10):
-        try:
-            _png_frames(good[:cut])
-        except ValueError:
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-    # acTL declares 3 frames, stream has 2
-    bad = bytearray(good)
-    i = bad.find(b"acTL")
-    bad[i + 4 : i + 8] = struct.pack(">I", 3)
-    with pytest.raises(ValueError, match="declares"):
-        _png_frames(bytes(bad))
-    # fcTL sequence corrupted
-    bad = bytearray(good)
-    i = bad.find(b"fcTL")
-    bad[i + 4 : i + 8] = struct.pack(">I", 9)
-    with pytest.raises(ValueError, match="sequence"):
-        _png_frames(bytes(bad))
-    # region escapes the canvas
-    with pytest.raises(ValueError, match="canvas"):
-        encode_apng([f0, (4, 4, f1)])
-
-
-def test_apng_video_fixture_matches_vid0(spark):
-    """doc_id%12==9 ships the VID0 frame contract as an APNG — the
-    per-frame channel-sum hashes are order-invariant, so the fixture
-    swap keeps the oracle unchanged while APNG playback composition
-    runs at driver scale."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        synthesize_mixed_video_from_text,
-        video_frame_hashes,
-    )
-
-    ids = (0, 9, 21)
-    docs = spark.createDataFrame(
-        [(i, "one text for every doc") for i in ids],
-        "doc_id long, text string",
-    )
-    mixed = {r.doc_id: r for r in synthesize_mixed_video_from_text(docs).collect()}
-    assert mixed[0].mime == "video/x-frames"
-    assert mixed[9].mime == "image/apng" and mixed[21].mime == "image/apng"
-    assert bytes(mixed[9].payload)[:8] == b"\x89PNG\r\n\x1a\n"
-    fh = video_frame_hashes(
-        synthesize_mixed_video_from_text(
-            spark.createDataFrame(
-                [(i, "one text for every doc") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    by_doc = {}
-    for r in fh:
-        by_doc.setdefault(r.doc_id, []).append((r.frame_id, r.fhash))
-    assert sorted(by_doc[0]) == sorted(by_doc[9]) == sorted(by_doc[21])
-
-
-def test_apng_mutated_fdat_quarantines_as_value_error():
-    """r11 fuzz find: a mutated fdAT body reached the zlib inflater
-    through the rebuilt frame stream and leaked raw zlib.error; the
-    region decode now maps it to the uniform ValueError contract."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _png_frames,
-        encode_apng,
-    )
-
-    rng = np.random.RandomState(71)
-    f0 = rng.randint(0, 256, (6, 6, 3)).astype(np.uint8)
-    good = bytearray(encode_apng([f0, f0]))
-    i = good.find(b"fdAT")
-    good[i + 12] ^= 0xFF  # corrupt the deflate body, keep the walk intact
-    with pytest.raises(ValueError):
-        _png_frames(bytes(good))
-
-
-# ---------------------------------------------------------------- #
-# DDS (BC1-BC3) — r11                                                #
-# ---------------------------------------------------------------- #
-
-
-def _lattice(c):
-    """Project an RGB triple onto the RGB565 expansion lattice."""
-    r = ((c[0] * 31 + 127) // 255 * 255 + 15) // 31
-    g = ((c[1] * 63 + 127) // 255 * 255 + 31) // 63
-    b = ((c[2] * 31 + 127) // 255 * 255 + 15) // 31
-    return np.array([r, g, b], np.uint8)
-
-
-def test_dds_round_trips_and_block_modes():
-    """Uncompressed masked-RGB DDS round-trips ANY pixels exactly;
-    DXT1/3/5 round-trip exactly when block colors sit on the 565
-    lattice (the encoder twin's contract, including odd dims via
-    edge-padded blocks); the interpolated 2/3-color palette entries
-    follow the documented floor formulas; DXT2/4 decode as their
-    non-premultiplied twins (alpha is dropped); DX10 headers route
-    BC1-BC3 and quarantine other DXGI formats honestly."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _dds_pixels,
-        decode_dds,
-        encode_dds,
-    )
-
-    rng = np.random.RandomState(73)
-    px = rng.randint(0, 256, (9, 13, 3)).astype(np.uint8)
-    assert (_dds_pixels(encode_dds(px, fourcc=None)) == px).all()
-    ca, cb = _lattice((10, 200, 99)), _lattice((250, 3, 77))
-    img = np.zeros((8, 12, 3), np.uint8)
-    img[:, :] = ca
-    img[2:6, 3:9] = cb
-    for fc in (b"DXT1", b"DXT3", b"DXT5"):
-        assert (_dds_pixels(encode_dds(img, fourcc=fc)) == img).all(), fc
-    odd = np.zeros((5, 7, 3), np.uint8)
-    odd[:, :] = ca
-    odd[1:3, 2:5] = cb
-    assert (_dds_pixels(encode_dds(odd)) == odd).all()
-    meta = decode_dds(encode_dds(img, fourcc=b"DXT5"))
-    assert meta["codec"] == "dxt5" and (meta["width"], meta["height"]) == (12, 8)
-
-    hdr = encode_dds(np.zeros((4, 4, 3), np.uint8))[:128]
-    # 4-color mode (c0 > c1): indexes 2 and 3 hit the floor interps
-    block = struct.pack("<HHI", 0xFFFF, 0x0000, 0b1110)
-    dec = _dds_pixels(hdr + block)
-    assert tuple(dec[0, 0]) == (2 * 255 // 3,) * 3
-    assert tuple(dec[0, 1]) == (255 // 3,) * 3
-    # 3-color mode (c0 <= c1): index 2 = average, index 3 = black
-    block3 = struct.pack("<HHI", 0x0000, 0xFFFF, 0b1110)
-    dec3 = _dds_pixels(hdr + block3)
-    assert tuple(dec3[0, 0]) == (127, 127, 127)
-    assert tuple(dec3[0, 1]) == (0, 0, 0)
-    # DXT2 aliases DXT3 here (premultiplied alpha is dropped anyway)
-    d3 = bytearray(encode_dds(img, fourcc=b"DXT3"))
-    d3[84:88] = b"DXT2"
-    assert (_dds_pixels(bytes(d3)) == img).all()
-    # DX10 header: BC1_UNORM routes to the same block decode
-    plain = encode_dds(img, fourcc=b"DXT1")
-    dx10 = bytearray(plain[:128])
-    dx10[84:88] = b"DX10"
-    dx10 += struct.pack("<5I", 71, 3, 0, 1, 0) + plain[128:]
-    assert (_dds_pixels(bytes(dx10)) == img).all()
-    dx10[128:132] = struct.pack("<I", 98)  # BC7: codec-library land
-    with pytest.raises(NotImplementedError, match="DXGI"):
-        _dds_pixels(bytes(dx10))
-
-
-def test_dds_corrupt_payloads_quarantine():
-    """Malformed DDS bytes raise ValueError (or the honest
-    NotImplementedError for foreign fourCCs), never IndexError:
-    truncations, a lying header size, zero dims, short block data."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _dds_pixels,
-        encode_dds,
-    )
-
-    ca = _lattice((10, 200, 99))
-    img = np.tile(ca, (8, 8, 1))
-    good = encode_dds(img, fourcc=b"DXT1")
-    for cut in (3, 10, 100, 127, len(good) - 3):
-        try:
-            _dds_pixels(good[:cut])
-        except (ValueError, NotImplementedError):
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-    bad = bytearray(good)
-    bad[4] = 100  # header size != 124
-    with pytest.raises(ValueError, match="header size"):
-        _dds_pixels(bytes(bad))
-    bad = bytearray(good)
-    bad[84:88] = b"ATI2"
-    with pytest.raises(NotImplementedError, match="fourCC"):
-        _dds_pixels(bytes(bad))
-    with pytest.raises(ValueError, match="2 distinct"):
-        rng = np.random.RandomState(79)
-        encode_dds(rng.randint(0, 256, (8, 8, 3)).astype(np.uint8), b"DXT1")
-
-
-def test_dds_fixture_rotation_shares_the_ahash(spark):
-    """doc_id%48==24 ships the fixture pixels as an uncompressed
-    masked-RGB DDS — exact decode, so the shared text-byte aHash
-    oracle holds while the surface-header walk runs at driver
-    scale."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        image_ahash,
-        synthesize_mixed_image_from_text,
-    )
-
-    ids = (0, 24, 72)
-    docs = spark.createDataFrame(
-        [(i, "same text for every row") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in synthesize_mixed_image_from_text(docs).collect()}
-    assert rows[0].mime == "image/bmp"
-    assert rows[24].mime == "image/x-dds" and rows[72].mime == "image/x-dds"
-    assert bytes(rows[24].payload)[:4] == b"DDS "
-    hashes = image_ahash(
-        synthesize_mixed_image_from_text(
-            spark.createDataFrame(
-                [(i, "same text for every row") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == 3 and len({r.ahash for r in hashes}) == 1
-
-
-def test_apng_canvas_bomb_bounded_before_allocation():
-    """r11 fuzz find: a mutated IHDR width demanded a 171 GiB canvas
-    in _png_frames before the per-frame pixel cap could fire; the
-    canvas is now bounded up front."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _png_frames,
-        encode_apng,
-    )
-
-    rng = np.random.RandomState(83)
-    f0 = rng.randint(0, 256, (16, 16, 3)).astype(np.uint8)
-    bomb = bytearray(encode_apng([f0, f0]))
-    bomb[16:20] = struct.pack(">I", 0xAB000010)  # IHDR width
-    with pytest.raises(ValueError, match="decode cap"):
-        _png_frames(bytes(bomb))
-
-
-# ---------------------------------------------------------------- #
-# PCX + SGI RGB — r11                                                #
-# ---------------------------------------------------------------- #
-
-
-def test_pcx_and_sgi_round_trip_and_fixture(spark):
-    """Two legacy-archive staples: PCX (per-scanline per-plane byte
-    RLE, truecolor planes + the VGA palette trailer + bilevel) and
-    SGI RGB (verbatim + RLE storage with per-(row,channel) tables,
-    bottom-up rows). Both encoder twins are lossless; the GIF fixture
-    slot sub-rotates PCX at doc_id%24==16 and SGI at %24==13 under
-    the unchanged aHash oracle."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _pcx_pixels,
-        _sgi_pixels,
-        decode_pcx,
-        decode_sgi,
-        encode_pcx,
-        encode_sgi,
-        image_ahash,
-        synthesize_mixed_image_from_text,
-    )
-
-    rng = np.random.RandomState(89)
-    px = rng.randint(0, 256, (9, 13, 3)).astype(np.uint8)
-    assert (_pcx_pixels(encode_pcx(px)) == px).all()
-    runs = np.repeat(rng.randint(180, 256, (4, 3, 3)).astype(np.uint8), 4, axis=1)
-    assert (_pcx_pixels(encode_pcx(runs)) == runs).all()  # >=0xC0 singles
-    for rle in (True, False):
-        assert (_sgi_pixels(encode_sgi(px, rle=rle)) == px).all()
-    g = rng.randint(0, 256, (5, 6)).astype(np.uint8)
-    assert (_sgi_pixels(encode_sgi(g)) == np.stack([g] * 3, axis=-1)).all()
-    assert decode_pcx(encode_pcx(px))["width"] == 13
-    assert decode_sgi(encode_sgi(px))["height"] == 9
-
-    # 8-bit paletted PCX with the 0x0C trailer, hand-built
-    pal = rng.randint(0, 256, (256, 3)).astype(np.uint8)
-    idx = rng.randint(0, 256, (4, 6)).astype(np.uint8)
-    hdr = struct.pack("<BBBBHHHHHH", 0x0A, 5, 1, 8, 0, 0, 5, 3, 72, 72)
-    hdr += bytes(48) + bytes(1) + bytes([1]) + struct.pack("<H", 6)
-    hdr += struct.pack("<H", 1) + bytes(58)
-    body = b""
-    for y in range(4):
-        for v in idx[y]:
-            body += bytes([0xC1, v]) if v >= 0xC0 else bytes([v])
-    p8 = hdr + body + b"\x0c" + pal.tobytes()
-    assert (_pcx_pixels(p8) == pal[idx]).all()
-
-    ids = (1, 16, 13)
-    docs = spark.createDataFrame(
-        [(i, "same text for every row") for i in ids],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in synthesize_mixed_image_from_text(docs).collect()}
-    assert rows[1].mime == "image/gif"
-    assert rows[16].mime == "image/x-pcx" and bytes(rows[16].payload)[0] == 0x0A
-    assert rows[13].mime == "image/sgi"
-    assert bytes(rows[13].payload)[:2] == b"\x01\xda"
-    hashes = image_ahash(
-        synthesize_mixed_image_from_text(
-            spark.createDataFrame(
-                [(i, "same text for every row") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    assert len(hashes) == 3 and len({r.ahash for r in hashes}) == 1
-
-
-def test_pcx_and_sgi_corrupt_payloads_quarantine():
-    """Truncations and lying tables raise ValueError, never
-    IndexError: cut streams, missing palette trailer, RLE rows
-    overrunning their width, oversized offset tables."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _pcx_pixels,
-        _sgi_pixels,
-        encode_pcx,
-        encode_sgi,
-    )
-
-    rng = np.random.RandomState(97)
-    px = rng.randint(0, 256, (8, 8, 3)).astype(np.uint8)
-    for enc, dec in ((encode_pcx, _pcx_pixels), (encode_sgi, _sgi_pixels)):
-        good = enc(px)
-        for cut in (3, 64, 130, 300, len(good) - 3):
-            try:
-                dec(good[:cut])
-            except ValueError:
-                pass
-            except Exception as exc:  # noqa: BLE001
-                raise AssertionError(
-                    f"{dec.__name__} cut={cut} leaked {type(exc).__name__}: {exc}"
-                )
-    # SGI RLE count escaping the row width
-    good = bytearray(encode_sgi(px, rle=True))
-    tab_at = 512
-    start = struct.unpack_from(">I", good, tab_at)[0]
-    good[start] = 0x7F  # repeat 127 > width 8
-    with pytest.raises(ValueError, match="overruns"):
-        _sgi_pixels(bytes(good))
-
-
 def test_flac_full_width_matrix_and_rice2():
     """Late-r11: the complete RFC 9639 sample-size matrix
     (8/12/16/20/24/32) round-trips bit-exactly, mono and all four
@@ -6608,97 +3335,6 @@ def test_flac_full_width_matrix_and_rice2():
     assert np.array_equal(
         _pcm16_samples(encode_flac(small, bits=8)).astype(np.int64), small
     )
-
-
-def test_mkv_single_frame_ebml_lace_has_no_size_field():
-    """r11 review find: an EBML-laced block with ONE frame carries no
-    size fields at all — the decoder was reading a nonexistent vint
-    and desyncing. The whole remainder is the frame."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _mkv_block_frames,
-    )
-
-    frame = b"\x81\x02\x03\x04"  # leading byte would parse as a vint
-    block = b"\x81\x00\x00" + bytes([0x80 | 0x06]) + b"\x00" + frame
-    tn, frames = _mkv_block_frames(block, 0, len(block))
-    assert tn == 1 and frames == [frame]
-
-
-def test_webp_animation_playback_and_video_fixture(spark):
-    """Animated WebP (r11 late): ANMF regions decode with their VP8L
-    alpha and compose per the container's B/D flags — no-blend
-    replacement, alpha-blend OVER, dispose-to-background — on the
-    VP8X canvas; routed through video_frame_hashes like APNG/GIF.
-    The VID0 fixture slot sub-rotates animated WebP at doc_id%12==6
-    with hashes pinned identical to the raw-frames twin."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _webp_frames,
-        decode_webp,
-        encode_webp_anim,
-        synthesize_mixed_video_from_text,
-        video_frame_hashes,
-    )
-
-    rng = np.random.RandomState(103)
-    f0 = rng.randint(0, 256, (8, 10, 3)).astype(np.uint8)
-    f1 = rng.randint(0, 256, (8, 10, 3)).astype(np.uint8)
-    sub = rng.randint(0, 256, (3, 4, 3)).astype(np.uint8)
-    frames = _webp_frames(encode_webp_anim([f0, f1]))
-    assert len(frames) == 2
-    assert (frames[0] == f0).all() and (frames[1] == f1).all()
-    frames = _webp_frames(encode_webp_anim([f0, (2, 4, sub)]))
-    exp = f0.copy()
-    exp[4:7, 2:6] = sub
-    assert (frames[1] == exp).all()
-    assert decode_webp(encode_webp_anim([f0, f1]))["n_frames"] == 2
-
-    # hand-flip flags: D=1 disposes the region to transparent black,
-    # B=0 alpha-blends (VP8L regions are opaque -> equals replacement)
-    p = bytearray(encode_webp_anim([f0, (2, 4, sub), f1]))
-    i = p.find(b"ANMF", p.find(b"ANMF") + 4)  # second frame's header
-    p[i + 8 + 15] = 0x01  # B=0 blend, D=1 background
-    frames = _webp_frames(bytes(p))
-    assert (frames[1] == exp).all()  # opaque OVER == replacement
-    assert (frames[2] == f1).all()  # full frame 3 repaints everything
-
-    # corrupt structure quarantines
-    import pytest as _pytest
-
-    good = encode_webp_anim([f0, f1])
-    for cut in (14, 30, 60, len(good) - 5):
-        try:
-            _webp_frames(good[:cut])
-        except (ValueError, NotImplementedError):
-            pass
-        except Exception as exc:  # noqa: BLE001
-            raise AssertionError(f"cut={cut} leaked {type(exc).__name__}: {exc}")
-    bomb = bytearray(good)
-    i = bomb.find(b"VP8X") + 8 + 4
-    bomb[i : i + 3] = (1 << 23).to_bytes(3, "little")
-    with _pytest.raises(ValueError, match="cap|exceed"):
-        _webp_frames(bytes(bomb))
-
-    ids = (0, 6, 18)
-    docs = spark.createDataFrame(
-        [(i, "one text for every doc") for i in ids],
-        "doc_id long, text string",
-    )
-    mixed = {r.doc_id: r for r in synthesize_mixed_video_from_text(docs).collect()}
-    assert mixed[0].mime == "video/x-frames"
-    assert mixed[6].mime == "image/webp" and mixed[18].mime == "image/webp"
-    assert bytes(mixed[6].payload)[:4] == b"RIFF"
-    fh = video_frame_hashes(
-        synthesize_mixed_video_from_text(
-            spark.createDataFrame(
-                [(i, "one text for every doc") for i in ids],
-                "doc_id long, text string",
-            )
-        )
-    ).collect()
-    by_doc = {}
-    for r in fh:
-        by_doc.setdefault(r.doc_id, []).append((r.frame_id, r.fhash))
-    assert sorted(by_doc[0]) == sorted(by_doc[6]) == sorted(by_doc[18])
 
 
 def test_bmp_os2_core_header_decodes():
@@ -6739,68 +3375,6 @@ def test_bmp_os2_core_header_decodes():
         _bmp_pixels(make_core(bgr)[:26].ljust(64, b"\x00")[:18] + struct.pack("<HHHH", 4, 4, 1, 4) + bytes(200))
 
 
-def _aligned_snr(x, y, search=3000, win=4000):
-    best = (-99.0, 0, 0.0)
-    for d in range(search):
-        yy = y[d : d + win]
-        if len(yy) < win * 0.8:
-            break
-        xx = x[: len(yy)]
-        den = float(np.dot(yy, yy))
-        if den < 1e-12:
-            continue
-        a = float(np.dot(yy, xx)) / den
-        err = xx - a * yy
-        snr = 10 * np.log10(np.dot(xx, xx) / max(np.dot(err, err), 1e-30))
-        if snr > best[0]:
-            best = (snr, d, a)
-    return best
-
-
-def test_webp_animation_canvas_is_data_backed():
-    """Fuzz r12 finding: a 796-byte animated WebP declared a
-    4194328x8 canvas — inside the absolute pixel cap, but every
-    composed playback frame copies the canvas, amplifying a sub-KB
-    payload by ~1e5. The canvas must now be payload-backed (the GIF
-    screen rule / VP8L image guard shape)."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _webp_frames,
-    )
-
-    vp8x = b"VP8X" + struct.pack("<I", 10) + bytes([0x02, 0, 0, 0]) + (
-        (4194327).to_bytes(3, "little") + (7).to_bytes(3, "little")
-    )
-    anmf_hdr = bytes(12) + bytes(3) + bytes([0])
-    anmf = b"ANMF" + struct.pack("<I", len(anmf_hdr)) + anmf_hdr
-    body = b"WEBP" + vp8x + anmf
-    payload = b"RIFF" + struct.pack("<I", len(body)) + body
-    with pytest.raises(ValueError, match="payload can back"):
-        _webp_frames(payload)
-
-
-def test_webp_large_uniform_canvas_is_legitimate():
-    """r12 advice: VP8L encodes a large uniform canvas in far fewer
-    bytes than 1 B / 2040 px (a ~90-byte 1000x1000 animation is
-    valid), so the composed-volume guard scales by ANMF frame count
-    and the VP8L level guard floors at 1M pixels — neither may
-    classify these as corrupt."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _webp_frames,
-        _webp_pixels,
-        encode_webp,
-        encode_webp_anim,
-    )
-
-    big = np.full((1000, 1000, 3), 77, np.uint8)
-    anim = encode_webp_anim([big])
-    assert len(anim) < 1000 * 1000 // 2040  # the old guard's reject zone
-    frames = _webp_frames(anim)
-    assert len(frames) == 1 and frames[0].shape == (1000, 1000, 3)
-    assert np.array_equal(np.unique(frames[0]), [77])
-    still = encode_webp(big)
-    assert np.array_equal(_webp_pixels(still), big)
-
-
 # --- real-world cross-container agreement (r12) ------------------------------
 
 _CPY_AUDIO = "/root/.pyenv/versions/3.7.16/lib/python3.7/test/audiodata"
@@ -6817,63 +3391,51 @@ def _cpy(name):
 
 def test_real_world_cross_container_agreement():
     """CPython's test suite ships the SAME plucked-string recording in
-    WAV, AIFF, and AU at several widths — real third-party files, so
-    three INDEPENDENT container decoders can be checked against each
-    other with no fixture of ours in the loop. The 24/32-bit variants
-    are bit-identical across containers (one master); the 16-bit and
+    WAV and AIFF at several widths — real third-party files, so two
+    INDEPENDENT container decoders can be checked against each other
+    with no fixture of ours in the loop. The 24/32-bit variants are
+    bit-identical across containers (one master); the 16-bit and
     G.711 variants are independent transcodes, equal within a few LSB."""
     from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _au_samples,
         _pcm16_samples,
         decode_aiff,
-        decode_au,
         decode_wav,
     )
 
-    # stereo 16-bit: same audio through three container decoders
+    # stereo 16-bit: same audio through two container decoders
     w = _pcm16_samples(_cpy("pluck-pcm16.wav")).astype(np.int64)
     a = _pcm16_samples(_cpy("pluck-pcm16.aiff")).astype(np.int64)
-    u = _pcm16_samples(_cpy("pluck-pcm16.au")).astype(np.int64)
-    assert len(w) == len(a) == len(u) == 6614  # 3307 frames x 2 ch
+    assert len(w) == len(a) == 6614  # 3307 frames x 2 ch
     assert np.abs(w - a).max() <= 16  # independent transcodes: LSB dither
-    assert np.abs(w - u).max() <= 16
     dw = decode_wav(_cpy("pluck-pcm16.wav"))
     assert dw["n_channels"] == 2 and dw["sample_rate"] == 11025
     assert dw["n_frames"] == 3307
 
-    # 24/32-bit: one master, three containers, bit-identical stats
+    # 24/32-bit: one master, two containers, bit-identical stats
     for width in ("pcm24", "pcm32"):
         stats = [
             decode_wav(_cpy(f"pluck-{width}.wav")),
             decode_aiff(_cpy(f"pluck-{width}.aiff")),
-            decode_au(_cpy(f"pluck-{width}.au")),
         ]
         for k in ("n_frames", "sample_rate", "rms", "peak"):
             vals = {round(s[k], 9) if isinstance(s[k], float) else s[k] for s in stats}
             assert len(vals) == 1, f"{width} {k} disagrees across containers: {vals}"
 
-    # native 24-bit AU samples sit 8 bits above the 16-bit master
-    s24 = _au_samples(_cpy("pluck-pcm24.au"))[0].astype(np.int64)
-    assert np.abs((s24 >> 8) - u).max() <= 16
-
-    # G.711: u-law (AU + AIFC) and A-law (AIFC) expand through the
-    # spec tables to ~37 dB of the linear original — the real-world
+    # G.711: u-law and A-law (AIFC) expand through the spec tables to ~37 dB of the linear original — the real-world
     # companding bound
     def snr(x, y):
         x = x.astype(np.float64)
         y = y.astype(np.float64)
         return 10 * np.log10(np.dot(x, x) / np.dot(x - y, x - y))
 
-    for name in ("pluck-ulaw.au", "pluck-ulaw.aifc", "pluck-alaw.aifc"):
+    for name in ("pluck-ulaw.aifc", "pluck-alaw.aifc"):
         g = _pcm16_samples(_cpy(name)).astype(np.int64)
         assert len(g) == 6614
         s = snr(w, g)
         assert 30.0 < s < 45.0, f"{name}: companded SNR {s:.1f} dB off-band"
 
-    # 8-bit AIFF/AU (signed linear): same audio at 8-bit precision
+    # 8-bit AIFF (signed linear): same audio at 8-bit precision
     e8a = _pcm16_samples(_cpy("pluck-pcm8.aiff")).astype(np.int64)
-    e8u = _pcm16_samples(_cpy("pluck-pcm8.au")).astype(np.int64)
-    assert np.abs(e8a - e8u).max() <= 2
     assert snr(w, e8a * 256) > 25.0
 
 
@@ -6882,12 +3444,10 @@ _CPY_IMG = "/root/.pyenv/versions/3.7.16/lib/python3.7/test/imghdrdata"
 
 def test_real_world_cross_format_image_agreement():
     """CPython's imghdrdata ships the same 16x16 logo in every classic
-    image format — real third-party encodes, so five independent
-    decoders (PNG, BMP, PPM, SGI RLE, TIFF) can be required to agree
-    PIXEL-EXACTLY with no home-made fixture in the loop; GIF agrees
-    through its 8-bit palette, JPEG through its quantization, and the
-    real VP8-lossy WebP exercises the verification-boundary
-    quarantine on a genuine bitstream."""
+    image format — real third-party encodes, so the PNG and BMP
+    decoders can be required to agree PIXEL-EXACTLY with no home-made
+    fixture in the loop; GIF agrees through its 8-bit palette and
+    JPEG through its quantization."""
     import os
 
     if not os.path.isdir(_CPY_IMG):
@@ -6901,23 +3461,17 @@ def test_real_world_cross_format_image_agreement():
         _image_pixels,
         _jpeg_pixels,
         _png_pixels,
-        _pnm_pixels,
-        _webp_pixels,
     )
 
     ref = px("python.png", _png_pixels)
     assert ref.shape == (16, 16, 3)
-    # the format-agnostic surface must agree PIXEL-EXACTLY across four
-    # more decoders — this also proves the BMP stored-BGR convention
-    # is converted at the _image_pixels boundary on a real file (the
-    # first draft of this test compared _bmp_pixels raw and caught the
-    # channel swap that sum-invariant oracles can never see)
-    for name in (
-        "python.bmp", "python.ppm", "python.sgi", "python.tiff",
-        "python.ras",  # r12: Sun Raster, gated by this real file
-    ):
-        got = px(name, _image_pixels)
-        assert np.array_equal(got, ref), f"{name} disagrees with python.png"
+    # the format-agnostic surface must agree PIXEL-EXACTLY — this also
+    # proves the BMP stored-BGR convention is converted at the
+    # _image_pixels boundary on a real file (the first draft of this
+    # test compared _bmp_pixels raw and caught the channel swap that
+    # sum-invariant oracles can never see)
+    got = px("python.bmp", _image_pixels)
+    assert np.array_equal(got, ref), "python.bmp disagrees with python.png"
 
     gif = px("python.gif", _gif_pixels).astype(np.int64)
     assert gif.shape == ref.shape
@@ -6931,51 +3485,6 @@ def test_real_world_cross_format_image_agreement():
     # above 20; a channel swap or dequant error would crater it
     assert psnr > 20.0, f"JPEG logo PSNR {psnr:.1f} dB"
 
-    pbm = px("python.pbm", _pnm_pixels)
-    assert set(np.unique(pbm)) <= {0, 255}  # bilevel
-
-    # a REAL lossy-VP8 bitstream hits the documented quarantine
-    with pytest.raises(NotImplementedError, match="probability tables"):
-        px("python.webp", _webp_pixels)
-
-
-def test_ras_twins_and_hostile_payloads():
-    """Sun Raster (r12): lossless encoder twin across the type/depth
-    matrix; corrupt payloads quarantine as ValueError; unimplemented
-    variants quarantine by name."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _ras_pixels,
-        decode_ras,
-        encode_ras,
-    )
-
-    rng = np.random.RandomState(9)
-    px = rng.randint(0, 256, (7, 9, 3)).astype(np.uint8)
-    for rtype in (1, 2, 3):
-        for depth in (24, 32):
-            assert np.array_equal(_ras_pixels(encode_ras(px, rtype=rtype, depth=depth)), px)
-    d = decode_ras(encode_ras(px))
-    assert (d["width"], d["height"]) == (9, 7)
-    # RLE literal-0x80 escape and run-of-0x80 both round-trip
-    edge = np.full((2, 24, 3), 0x80, dtype=np.uint8)
-    edge[0, 0] = (0x80, 1, 0x80)
-    assert np.array_equal(_ras_pixels(encode_ras(edge, rtype=2)), edge)
-
-    good = encode_ras(px)
-    with pytest.raises(ValueError):
-        _ras_pixels(good[:20])  # truncated header
-    bomb = bytearray(good)
-    bomb[4:12] = struct.pack(">II", 1 << 14, 1 << 14)  # 256M-pixel lie
-    with pytest.raises(ValueError, match="out of range|truncated"):
-        _ras_pixels(bytes(bomb))
-    rle = bytearray(encode_ras(px, rtype=2))
-    with pytest.raises(ValueError):
-        _ras_pixels(bytes(rle[:-10]))  # cut mid-RLE
-    odd = bytearray(good)
-    odd[20:24] = struct.pack(">I", 5)  # rtype 5: not a real type
-    with pytest.raises(NotImplementedError, match="type 5"):
-        _ras_pixels(bytes(odd))
-
 
 # --- real-world NON-SILENT ground truth (r13) ---------------------------------
 
@@ -6983,36 +3492,28 @@ def test_ras_twins_and_hostile_payloads():
 def test_real_world_nonsilent_tone_and_voice():
     """Every real-fixture gate before this one decoded digital silence
     or a 3-5 frame snippet — regimes where most of a decoder is a
-    no-op (the r12-advice circularity critique). The two non-silent
-    third-party recordings on this box close that hole with signal
-    PHYSICS no header check can fake:
-
-    - CPython 2.7's ``Sine-1000Hz-300ms.aif`` is a labelled pure tone.
-      The AIFF-PCM path must reproduce the label (48 kHz stereo,
-      14400 frames = 300 ms) and the waveform: a windowed FFT peak
-      within one bin of 1000 Hz on EACH de-interleaved channel, >99%
-      of AC spectral energy inside peak±3 bins (a byte-swap, channel
-      smear, or sign error scatters energy broadband), and the pure-
-      sine rms/peak ratio 1/sqrt(2) to three decimals.
-    - CPython 3.7's ``audiotest.au`` is the classic Sun µ-law voice
-      clip: header geometry (mono, 8012 Hz, 28110 frames) plus a peak
-      of EXACTLY 32124 — the µ-law table maximum, so the clip's
-      clipped syllable pins the table's top rung — and voice-level rms.
+    no-op (the r12-advice circularity critique). CPython 2.7's
+    ``Sine-1000Hz-300ms.aif`` is a labelled pure tone, so it closes
+    that hole with signal PHYSICS no header check can fake: the
+    AIFF-PCM path must reproduce the label (48 kHz stereo, 14400
+    frames = 300 ms) and the waveform: a windowed FFT peak within one
+    bin of 1000 Hz on EACH de-interleaved channel, >99% of AC spectral
+    energy inside peak±3 bins (a byte-swap, channel smear, or sign
+    error scatters energy broadband), and the pure-sine rms/peak ratio
+    1/sqrt(2) to three decimals.
     """
     import os
 
     from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
         _aiff_samples,
         decode_aiff,
-        decode_au,
     )
 
     sine_path = (
         "/root/.pyenv/versions/2.7.18/lib/python2.7/test/Sine-1000Hz-300ms.aif"
     )
-    au_path = "/root/.pyenv/versions/3.7.16/lib/python3.7/test/audiotest.au"
-    if not (os.path.exists(sine_path) and os.path.exists(au_path)):
-        pytest.skip("CPython non-silent audio fixtures not on this box")
+    if not os.path.exists(sine_path):
+        pytest.skip("CPython non-silent audio fixture not on this box")
 
     p = open(sine_path, "rb").read()
     d = decode_aiff(p)
@@ -7030,9 +3531,3 @@ def test_real_world_nonsilent_tone_and_voice():
         ac = spec[1:] ** 2
         window = ac[max(k - 4, 0) : k + 3]  # peak±3 bins in AC indexing
         assert window.sum() > 0.99 * ac.sum()
-
-    a = open(au_path, "rb").read()
-    da = decode_au(a)
-    assert (da["n_channels"], da["sample_rate"], da["n_frames"]) == (1, 8012, 28110)
-    assert da["peak"] == 32124.0  # the µ-law expansion-table maximum
-    assert 1000 < da["rms"] < 10000

@@ -403,31 +403,3 @@ def test_jpeg_round_trip_property(w, h, gray, restart, seed):
         assert np.abs(dec.astype(int) - px.astype(int)).max() <= 6
 
 
-@settings(**_SETTINGS)
-@given(
-    w=st.integers(1, 20),
-    h=st.integers(1, 20),
-    gray=st.booleans(),
-    q8=st.booleans(),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_jpeg_progressive_equals_baseline_property(w, h, gray, q8, seed):
-    """Property over the progressive JPEG path: for ANY content, size,
-    grayscale/color, and quant table, the progressive scan script
-    (interleaved DC first + refinement, per-component AC bands with
-    EOB runs + refinement) decodes BIT-IDENTICAL to the baseline
-    encoding — both carry the same quantized coefficients, so any
-    divergence is an entropy-coding bug on one side."""
-    import numpy as np
-
-    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
-        _jpeg_pixels,
-        encode_jpeg,
-    )
-
-    rng = np.random.default_rng(seed)
-    qt = None if q8 else np.ones(64, dtype=np.int64)
-    px = rng.integers(0, 256, (h, w) if gray else (h, w, 3)).astype(np.uint8)
-    base = _jpeg_pixels(encode_jpeg(px, qtable=qt))
-    prog = _jpeg_pixels(encode_jpeg(px, qtable=qt, progressive=True))
-    assert (base == prog).all()
