@@ -3531,3 +3531,848 @@ def test_real_world_nonsilent_tone_and_voice():
         ac = spec[1:] ** 2
         window = ac[max(k - 4, 0) : k + 3]  # peak±3 bins in AC indexing
         assert window.sum() > 0.99 * ac.sum()
+
+
+# --- formats cut from the fixtures -----------------------------------------
+# TIFF, WebP, Matroska, MP4 audio, DDS, PCX, SGI, lossless JPEG, APNG
+# playback and animated GIF no longer decode. Their payloads must still
+# quarantine on every surface, the still-image decoders read an APNG or
+# an animated GIF as its first image, and every fixture slot that used
+# to carry one of these containers hashes exactly as its base container
+# does. The payloads below are built by hand: their encoders are gone.
+
+_KEPT_MIMES = (
+    "image/bmp", "image/png", "image/gif", "image/jpeg",
+    "audio/wav", "audio/aiff", "audio/flac", "video/x-msvideo", "video/mp4",
+)
+
+
+def _assert_cut_format_quarantines(payload: bytes, mime: str) -> None:
+    """A payload in a format with no decoder quarantines everywhere:
+    under its own mime ``decode_media`` raises NotImplementedError
+    naming the mime; mislabeled as any kept mime, or sniffed by the
+    image and audio fingerprint paths, it raises ValueError."""
+    import re
+
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        _image_pixels,
+        _pcm16_samples,
+        decode_media,
+    )
+
+    with pytest.raises(NotImplementedError, match=re.escape(repr(mime))):
+        decode_media(payload, mime)
+    for kept in _KEPT_MIMES:
+        with pytest.raises(ValueError):
+            decode_media(payload, kept)
+    for sniff in (_image_pixels, _pcm16_samples):
+        with pytest.raises(ValueError):
+            sniff(payload)
+
+
+def _assert_truncations_quarantine(payload: bytes, mime: str, cuts) -> None:
+    for cut in cuts:
+        _assert_cut_format_quarantines(payload[:cut], mime)
+
+
+def _tiff(px: np.ndarray, compression: int = 1, strip: bytes | None = None,
+          extra: tuple = ()) -> bytes:
+    """A little-endian one-strip RGB TIFF: IFD entries (tag, type,
+    value), strip offset patched to the data after the IFD."""
+    h, w = px.shape[:2]
+    data = px.tobytes() if strip is None else strip
+    entries = sorted(
+        [
+            (256, 4, w), (257, 4, h), (258, 3, 8), (259, 3, compression),
+            (262, 3, 2), (273, 4, 0), (277, 3, 3), (278, 4, h),
+            (279, 4, len(data)),
+        ]
+        + list(extra)
+    )
+    data_off = 8 + 2 + 12 * len(entries) + 4
+    out = bytearray(b"II*\x00" + struct.pack("<IH", 8, len(entries)))
+    for tag, typ, val in entries:
+        val = data_off if tag == 273 else val
+        fmt = "<HHIH2x" if typ == 3 else "<HHII"
+        out += struct.pack(fmt, tag, typ, 1, val)
+    return bytes(out + struct.pack("<I", 0) + data)
+
+
+def _tiff_entry_at(payload: bytes, tag: int) -> int:
+    (n,) = struct.unpack_from("<H", payload, 8)
+    for i in range(n):
+        if struct.unpack_from("<H", payload, 10 + 12 * i)[0] == tag:
+            return 10 + 12 * i
+    raise KeyError(tag)
+
+
+def _riff_webp(*chunks: tuple[bytes, bytes]) -> bytes:
+    body = b"WEBP" + b"".join(
+        cc + struct.pack("<I", len(d)) + d + b"\x00" * (len(d) & 1)
+        for cc, d in chunks
+    )
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def _vp8l(w: int, h: int, version: int = 0, body: bytes = bytes(16)) -> bytes:
+    """A VP8L chunk body: signature 0x2f, 14-bit w-1 and h-1, alpha
+    bit, 3-bit version, then the (here opaque) bitstream."""
+    return b"\x2f" + struct.pack("<I", (w - 1) | (h - 1) << 14 | version << 29) + body
+
+
+def _ebml(eid: bytes, body: bytes) -> bytes:
+    """One EBML element with an 8-byte size field."""
+    return eid + ((1 << 56) | len(body)).to_bytes(8, "big") + body
+
+
+def _mkv(track: bytes, blocks: bytes, doctype: bytes = b"matroska") -> bytes:
+    header = _ebml(b"\x1a\x45\xdf\xa3", _ebml(b"\x42\x82", doctype))
+    info = _ebml(b"\x15\x49\xa9\x66", _ebml(b"\x2a\xd7\xb1", b"\x0f\x42\x40"))
+    cluster = _ebml(b"\x1f\x43\xb6\x75", _ebml(b"\xe7", b"\x00") + blocks)
+    tracks = _ebml(b"\x16\x54\xae\x6b", track)
+    return header + _ebml(b"\x18\x53\x80\x67", info + tracks + cluster)
+
+
+def _mkv_track(number: int, codec: bytes, settings: bytes = b"") -> bytes:
+    return _ebml(
+        b"\xae",
+        _ebml(b"\xd7", bytes([number]))
+        + _ebml(b"\x86", codec)
+        + settings,
+    )
+
+
+def _mkv_blocks(frames: list[bytes], track: int = 1) -> bytes:
+    return b"".join(
+        _ebml(b"\xa3", bytes([0x80 | track]) + b"\x00\x00\x80" + f) for f in frames
+    )
+
+
+def _m4a(codec: bytes = b"sowt", pcm: bytes = bytes(64)) -> bytes:
+    """An audio-only ISO-BMFF file: one 'soun' trak with a sound
+    sample entry (mono, 16-bit, 8 kHz) and its samples in mdat."""
+    hdlr = _box(b"hdlr", bytes(8) + b"soun" + bytes(12))
+    mdhd = _box(b"mdhd", bytes(12) + struct.pack(">II", 8000, len(pcm) // 2) + bytes(4))
+    entry = codec + bytes(6) + struct.pack(">H", 1) + bytes(8)
+    entry += struct.pack(">HHHHI", 1, 16, 0, 0, 8000 << 16)
+    stsd = _box(b"stsd", bytes(4) + struct.pack(">I", 1) + struct.pack(">I", 8 + len(entry)) + entry)
+    stsz = _box(b"stsz", bytes(4) + struct.pack(">II", 2, len(pcm) // 2))
+    stbl = _box(b"stbl", stsd + stsz)
+    trak = _box(b"trak", _box(b"mdia", mdhd + hdlr + _box(b"minf", stbl)))
+    return _box(b"ftyp", b"M4A " + bytes(4) + b"M4A isom") + _box(b"moov", trak) + _box(b"mdat", pcm)
+
+
+def _dds(w: int, h: int, fourcc: bytes = b"", data: bytes = b"") -> bytes:
+    """A DDS surface: 'DDS ' + the 124-byte header (a fourCC pixel
+    format when given, else 24-bit masked RGB) + the surface bytes."""
+    if fourcc:
+        pf = struct.pack("<II4sIIIII", 32, 0x4, fourcc, 0, 0, 0, 0, 0)
+    else:
+        pf = struct.pack("<II4sIIIII", 32, 0x40, bytes(4), 24, 0xFF0000, 0xFF00, 0xFF, 0)
+    head = struct.pack("<IIIIIII", 124, 0x100F, h, w, w * 3, 0, 1) + bytes(44) + pf
+    head += struct.pack("<IIIII", 0x1000, 0, 0, 0, 0)
+    return b"DDS " + head + (data or bytes(w * h * 3))
+
+
+def _apng(frames: list[np.ndarray]) -> bytes:
+    """An APNG of full-canvas frames: IHDR, acTL, then fcTL + IDAT for
+    the default image and fcTL + fdAT for each later frame, every
+    frame's zlib stream taken from ``encode_png``."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        _PNG_MAGIC,
+        _png_chunk,
+        encode_png,
+    )
+
+    def chunks(png: bytes) -> list[tuple[bytes, bytes]]:
+        pos, out = 8, []
+        while pos < len(png):
+            (n,) = struct.unpack_from(">I", png, pos)
+            out.append((png[pos + 4 : pos + 8], png[pos + 8 : pos + 8 + n]))
+            pos += 12 + n
+        return out
+
+    h, w = frames[0].shape[:2]
+    out = bytearray(_PNG_MAGIC)
+    out += _png_chunk(b"IHDR", chunks(encode_png(frames[0]))[0][1])
+    out += _png_chunk(b"acTL", struct.pack(">II", len(frames), 0))
+    seq = 0
+    for i, f in enumerate(frames):
+        out += _png_chunk(b"fcTL", struct.pack(">IIIIIHHBB", seq, w, h, 0, 0, 1, 10, 0, 0))
+        seq += 1
+        idat = b"".join(d for t, d in chunks(encode_png(f)) if t == b"IDAT")
+        if i == 0:
+            out += _png_chunk(b"IDAT", idat)
+        else:
+            out += _png_chunk(b"fdAT", struct.pack(">I", seq) + idat)
+            seq += 1
+    return bytes(out + _png_chunk(b"IEND", b""))
+
+
+def _animated_gif(frames: list[np.ndarray]) -> bytes:
+    """A multi-image GIF stacked from ``encode_gif`` stills: the first
+    still's header and image block, then each later still's image
+    block (local color table + LZW data), then the trailer."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import encode_gif
+
+    out = bytearray(encode_gif(frames[0])[:-1])
+    for f in frames[1:]:
+        out += encode_gif(f)[13:-1]
+    return bytes(out + b"\x3b")
+
+
+def test_tiff_hostile_payloads_quarantine():
+    """TIFF decode is gone: a baseline strip TIFF, its truncations, a
+    dimension bomb and an implausible tag count all quarantine by
+    name under image/tiff and as ValueError everywhere else."""
+    good = _tiff(np.zeros((4, 4, 3), dtype=np.uint8))
+    _assert_cut_format_quarantines(good, "image/tiff")
+    _assert_truncations_quarantine(good, "image/tiff", (5, 11, len(good) // 2, len(good) - 2))
+    bomb = bytearray(good)
+    for tag in (256, 257):
+        struct.pack_into("<I", bomb, _tiff_entry_at(good, tag) + 8, 100_000)
+    _assert_cut_format_quarantines(bytes(bomb), "image/tiff")
+    bomb = bytearray(good)
+    struct.pack_into("<I", bomb, 10 + 4, 1 << 28)  # first entry's count
+    _assert_cut_format_quarantines(bytes(bomb), "image/tiff")
+
+
+def test_tiff_jpeg_hostile_payloads_quarantine():
+    """JPEG-in-TIFF (compression 7) stores abbreviated JPEG strips with
+    the tables in tag 347. The TIFF quarantines by name; lifted out of
+    it, the abbreviated strip is refused by the baseline JPEG decoder
+    (no quant or huffman tables) while the full stream decodes."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        _jpeg_pixels,
+        encode_jpeg,
+    )
+
+    px = np.tile(np.repeat(np.arange(8, dtype=np.uint8) * 30, 8), (8, 1))
+    full = encode_jpeg(px)
+    sos = full.index(b"\xff\xda")
+    tables = full[:sos] + b"\xff\xd9"  # SOI + DQT/SOF/DHT + EOI
+    strip = b"\xff\xd8" + full[sos:]  # SOI + scan + EOI
+    tiff = _tiff(px[:, :, None].repeat(3, axis=2), compression=7, strip=strip,
+                 extra=((347, 4, 0),))
+    _assert_cut_format_quarantines(tiff, "image/tiff")
+    _assert_truncations_quarantine(tiff, "image/tiff", (30, len(tiff) // 2, len(tiff) - 10))
+    for abbreviated in (strip, tables):
+        with pytest.raises(ValueError):
+            _jpeg_pixels(abbreviated)
+    assert (_jpeg_pixels(full)[:, :, 0] == px).all()
+    # old-style JPEG (compression 6) quarantines the same way
+    old = bytearray(tiff)
+    struct.pack_into("<H", old, _tiff_entry_at(tiff, 259) + 8, 6)
+    _assert_cut_format_quarantines(bytes(old), "image/tiff")
+
+
+def test_tiff_tiled_hostile_payloads():
+    """A tiled TIFF (tags 322-325) and one whose tile size lies past
+    any cap quarantine by name, as do its truncations."""
+    px = np.zeros((24, 24, 3), dtype=np.uint8)
+    tiled = _tiff(px, extra=((322, 4, 16), (323, 4, 16), (324, 4, 0), (325, 4, 0)))
+    _assert_cut_format_quarantines(tiled, "image/tiff")
+    bomb = bytearray(tiled)
+    for tag in (322, 323):
+        struct.pack_into("<I", bomb, _tiff_entry_at(tiled, tag) + 8, 1 << 18)
+    _assert_cut_format_quarantines(bytes(bomb), "image/tiff")
+    _assert_truncations_quarantine(tiled, "image/tiff", (30, len(tiled) // 2, len(tiled) - 4))
+
+
+def test_tiff_deflate_legacy_tag_and_bomb_bound():
+    """Deflate TIFFs under both compression codes (8 and the legacy
+    32946) quarantine by name, and so does a strip that would inflate
+    to 16 MiB: with no TIFF decoder the stream is never inflated."""
+    import zlib
+
+    px = np.arange(108, dtype=np.uint8).reshape(6, 6, 3)
+    for code in (8, 32946):
+        deflate = _tiff(px, compression=code, strip=zlib.compress(px.tobytes()))
+        _assert_cut_format_quarantines(deflate, "image/tiff")
+    bomb = _tiff(px[:1, :4], compression=8, strip=zlib.compress(bytes(1 << 24)))
+    _assert_cut_format_quarantines(bomb, "image/tiff")
+
+
+def test_tiff_deflate_in_mixed_image_fixture(spark):
+    """The image fixture's old TIFF slot (doc_id % 3 == 2) now carries
+    a PNG — the same Deflate compression, lossless — so all six docs of
+    one text decode to the same pixels."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        _image_pixels,
+        synthesize_mixed_image_from_text,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, "same text for every image container") for i in range(6)],
+        "doc_id long, text string",
+    )
+    rows = {r.doc_id: r for r in synthesize_mixed_image_from_text(docs).collect()}
+    for d in (2, 5):
+        png = bytes(rows[d].payload)
+        assert rows[d].mime == "image/png" and png[:4] == b"\x89PNG"
+        idat = png.index(b"IDAT")
+        assert png[idat + 4] & 0x0F == 8  # zlib CM: deflate
+    ref = _image_pixels(bytes(rows[0].payload))
+    for r in rows.values():
+        assert np.array_equal(_image_pixels(bytes(r.payload)), ref), r.doc_id
+
+
+def test_webp_corrupt_payloads_quarantine():
+    """WebP decode is gone: a VP8L image, its truncations, a bad
+    signature byte, a nonzero version and a 16383x16383 header bomb
+    all quarantine by name under image/webp."""
+    good = _riff_webp((b"VP8L", _vp8l(8, 8)))
+    _assert_cut_format_quarantines(good, "image/webp")
+    _assert_truncations_quarantine(good, "image/webp", (8, 11, 15, 21, len(good) - 3))
+    bad_sig = bytearray(good)
+    bad_sig[20] ^= 0xFF
+    _assert_cut_format_quarantines(bytes(bad_sig), "image/webp")
+    _assert_cut_format_quarantines(
+        _riff_webp((b"VP8L", _vp8l(8, 8, version=5))), "image/webp"
+    )
+    _assert_cut_format_quarantines(
+        _riff_webp((b"VP8L", _vp8l(16383, 16383))), "image/webp"
+    )
+
+
+def test_webp_animation_canvas_is_data_backed():
+    """An animated WebP declaring a 4194328x8 canvas from a few bytes
+    quarantines by name: nothing allocates a canvas for it now."""
+    vp8x = bytes([0x02, 0, 0, 0]) + (4194327).to_bytes(3, "little") + (7).to_bytes(3, "little")
+    anmf = bytes(12) + bytes(3) + bytes([0])
+    _assert_cut_format_quarantines(
+        _riff_webp((b"VP8X", vp8x), (b"ANMF", anmf)), "image/webp"
+    )
+
+
+def test_webp_routes_through_spark_paths_and_fixture(spark):
+    """Through the Spark paths a WebP doc quarantines as one
+    ``decode_features`` row naming image/webp and gets no aHash row,
+    while the BMP beside it decodes; the old WebP slots of the image
+    fixture (doc_id 3 and 27) now carry the slot's BMP and share the
+    aHash of doc 0."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        image_ahash,
+        synthesize_mixed_image_from_text,
+    )
+
+    rng = np.random.RandomState(53)
+    rgb = rng.randint(0, 256, (16, 16, 3)).astype(np.uint8)
+    df = spark.createDataFrame(
+        [
+            (101, bytearray(_riff_webp((b"VP8L", _vp8l(16, 16)))), "image/webp"),
+            (102, bytearray(make_bmp(rgb)), "image/bmp"),
+        ],
+        "doc_id long, payload binary, mime string",
+    )
+    feats = {r.doc_id: r for r in decode_features(df).collect()}
+    assert len(feats) == 2 and feats[102].ok
+    assert not feats[101].ok and "NotImplementedError" in feats[101].err
+    assert "'image/webp'" in feats[101].err
+
+    docs = spark.createDataFrame(
+        [(i, "same text for every row") for i in (0, 3, 27)],
+        "doc_id long, text string",
+    )
+    mixed = synthesize_mixed_image_from_text(docs).unionByName(df)
+    hashes = {r.doc_id: r.ahash for r in image_ahash(mixed).collect()}
+    assert set(hashes) == {0, 3, 27, 102}
+    assert hashes[0] == hashes[3] == hashes[27]
+
+
+def test_webp_animation_playback_and_video_fixture(spark):
+    """Animated-WebP playback is gone: ``video_frame_hashes`` emits no
+    frame rows for one. The old animated-WebP slots of the video
+    fixture (doc_id 6 and 18) now carry VID0 and hash frame for frame
+    like doc 0."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        synthesize_mixed_video_from_text,
+        video_frame_hashes,
+    )
+
+    anim = _riff_webp(
+        (b"VP8X", bytes([0x02, 0, 0, 0]) + (7).to_bytes(3, "little") * 2),
+        (b"ANMF", bytes(16) + _vp8l(8, 8)),
+    )
+    _assert_cut_format_quarantines(anim, "image/webp")
+    docs = spark.createDataFrame(
+        [(i, "one text for every doc") for i in (0, 6, 18)],
+        "doc_id long, text string",
+    )
+    anim_df = spark.createDataFrame(
+        [(99, bytearray(anim), "image/webp")],
+        "doc_id long, payload binary, mime string",
+    )
+    mixed = synthesize_mixed_video_from_text(docs).unionByName(anim_df)
+    by_doc = {}
+    for r in video_frame_hashes(mixed).collect():
+        by_doc.setdefault(r.doc_id, []).append((r.frame_id, r.fhash))
+    assert set(by_doc) == {0, 6, 18} and len(by_doc[0]) == 6
+    assert sorted(by_doc[0]) == sorted(by_doc[6]) == sorted(by_doc[18])
+
+
+def test_mkv_corrupt_payloads_quarantine():
+    """Matroska decode is gone: an A_PCM file, its truncations at every
+    stage, a lacing table that overruns its block and a bare non-EBML
+    payload all quarantine by name under audio/x-matroska."""
+    raw = b"0123456789abcdef" * 4
+    good = _mkv(_mkv_track(1, b"A_PCM/INT/LIT"), _mkv_blocks([raw[:32], raw[32:]]))
+    _assert_cut_format_quarantines(good, "audio/x-matroska")
+    _assert_truncations_quarantine(good, "audio/x-matroska", (5, 12, 30, 60, len(good) - 5))
+    bad = bytearray(good)
+    i = bad.find(b"\xa3\x01", bad.find(b"\x1f\x43\xb6\x75"))  # first SimpleBlock
+    bad[i + 9 + 3] = 0x82  # flags: Xiph lacing, with no lace table
+    _assert_cut_format_quarantines(bytes(bad), "audio/x-matroska")
+    _assert_cut_format_quarantines(b"\x00\x01\x02\x03", "audio/x-matroska")
+
+
+def test_mkv_video_triage_and_transform_codec_quarantine():
+    """With the EBML walk gone there is no metadata triage either: a
+    V_VP8 WebM and an A_VORBIS Matroska quarantine by name under each
+    Matroska/WebM mime."""
+    video = _mkv(_mkv_track(1, b"V_VP8"), _mkv_blocks([bytes(12)] * 5), b"webm")
+    for mime in ("video/webm", "video/x-matroska"):
+        _assert_cut_format_quarantines(video, mime)
+    vorbis = _mkv(_mkv_track(2, b"A_VORBIS"), _mkv_blocks([bytes(12)], track=2))
+    for mime in ("audio/webm", "audio/x-matroska"):
+        _assert_cut_format_quarantines(vorbis, mime)
+
+
+def test_mkv_fixture_rotation_and_spark_path(spark):
+    """The audio fixture's old Matroska slots (doc_id 19 and 14) now
+    carry AIFF and FLAC and hash like the WAV and FLAC docs of the same
+    text; a Matroska doc and its truncation each quarantine as one
+    ``decode_features`` row naming the mime and get no energy hash."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        audio_energy_hash,
+        synthesize_mixed_audio_from_text,
+    )
+
+    mkv = _mkv(_mkv_track(1, b"A_PCM/INT/LIT"), _mkv_blocks([b"features path bytes!"]))
+    df = spark.createDataFrame(
+        [
+            (101, bytearray(mkv), "audio/x-matroska"),
+            (102, bytearray(mkv[:15]), "audio/x-matroska"),
+        ],
+        "doc_id long, payload binary, mime string",
+    )
+    feats = decode_features(df).collect()
+    assert sorted(r.doc_id for r in feats) == [101, 102]
+    for r in feats:
+        assert not r.ok and "'audio/x-matroska'" in r.err
+
+    docs = spark.createDataFrame(
+        [(i, "identical text for every row") for i in (0, 19, 14, 2)],
+        "doc_id long, text string",
+    )
+    mixed = synthesize_mixed_audio_from_text(docs).unionByName(df)
+    hashes = {r.doc_id: r.ehash for r in audio_energy_hash(mixed).collect()}
+    assert set(hashes) == {0, 19, 14, 2} and len(set(hashes.values())) == 1
+
+
+def test_mkv_mjpeg_video_frames_match_avi(spark):
+    """The same MJPEG frames hash identically in AVI and MP4, and a
+    V_MJPEG Matroska of them emits no frame rows. The video fixture's
+    old Matroska slots (doc_id 7 and 19) now carry the AVI of doc 1."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        _avi_mjpeg_container,
+        _mjpeg_frames_for_text,
+        _mp4_mjpeg_container,
+        synthesize_mixed_video_from_text,
+        video_frame_hashes,
+    )
+
+    frames = _mjpeg_frames_for_text(b"same frames in three containers", 4)
+    twins = spark.createDataFrame(
+        [
+            (101, bytearray(_avi_mjpeg_container(frames)), "video/x-msvideo"),
+            (102, bytearray(_mp4_mjpeg_container(frames)), "video/mp4"),
+            (
+                103,
+                bytearray(_mkv(_mkv_track(1, b"V_MJPEG"), _mkv_blocks(frames))),
+                "video/x-matroska",
+            ),
+        ],
+        "doc_id long, payload binary, mime string",
+    )
+    docs = spark.createDataFrame(
+        [(i, "one text for every doc") for i in (1, 7, 19)],
+        "doc_id long, text string",
+    )
+    mixed = synthesize_mixed_video_from_text(docs).unionByName(twins)
+    by_doc = {}
+    for r in video_frame_hashes(mixed).collect():
+        by_doc.setdefault(r.doc_id, []).append((r.frame_id, r.fhash))
+    assert set(by_doc) == {1, 7, 19, 101, 102}
+    assert len(by_doc[101]) == 4 and sorted(by_doc[101]) == sorted(by_doc[102])
+    assert sorted(by_doc[1]) == sorted(by_doc[7]) == sorted(by_doc[19])
+
+
+def test_mp4_audio_corrupt_payloads_quarantine():
+    """MP4 audio decode is gone: an M4A and its truncations quarantine
+    by name under audio/mp4; labeled video/mp4, the box walk finds no
+    video track and raises ValueError."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import decode_media
+
+    good = _m4a()
+    _assert_cut_format_quarantines(good, "audio/mp4")
+    with pytest.raises(ValueError, match="no video track"):
+        decode_media(good, "video/mp4")
+    _assert_truncations_quarantine(good, "audio/mp4", (20, len(good) // 2, len(good) - 30))
+    _assert_cut_format_quarantines(b"\x00" * 32, "audio/mp4")
+
+
+def test_mp4_pcm_in_mixed_audio_fixture(spark):
+    """The audio fixture's old PCM-in-MP4 slots (doc_id % 6 == 3) now
+    carry the WAV of their doc_id % 3 == 0 slot; all twelve docs of
+    one text decode to the same int16 samples."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        _pcm16_samples,
+        decode_media,
+        synthesize_mixed_audio_from_text,
+    )
+
+    text = "an even-length audio fixture text!"  # 34 bytes
+    docs = spark.createDataFrame(
+        [(i, text) for i in range(3, 15)], "doc_id long, text string"
+    )
+    rows = {r.doc_id: r for r in synthesize_mixed_audio_from_text(docs).collect()}
+    assert len(rows) == 12
+    for d in (3, 9):
+        assert rows[d].mime == "audio/wav"
+        got = decode_media(bytes(rows[d].payload), "audio/wav")
+        assert got["n_channels"] == 1 and got["n_frames"] == len(text)
+    ref = _pcm16_samples(bytes(rows[3].payload))
+    for r in rows.values():
+        assert np.array_equal(_pcm16_samples(bytes(r.payload)), ref), r.doc_id
+
+
+def test_dds_corrupt_payloads_quarantine():
+    """DDS decode is gone: uncompressed and DXT1 surfaces, truncations,
+    a lying header size and a foreign fourCC all quarantine by name
+    under image/x-dds."""
+    good = _dds(8, 8)
+    _assert_cut_format_quarantines(good, "image/x-dds")
+    dxt1 = _dds(8, 8, b"DXT1", bytes(32))
+    _assert_cut_format_quarantines(dxt1, "image/x-dds")
+    _assert_truncations_quarantine(dxt1, "image/x-dds", (3, 10, 100, 127, len(dxt1) - 3))
+    bad = bytearray(dxt1)
+    bad[4] = 100  # header size != 124
+    _assert_cut_format_quarantines(bytes(bad), "image/x-dds")
+    bad = bytearray(dxt1)
+    bad[84:88] = b"ATI2"
+    _assert_cut_format_quarantines(bytes(bad), "image/x-dds")
+
+
+def test_dds_fixture_rotation_shares_the_ahash(spark):
+    """The image fixture's old DDS slots (doc_id 24 and 72) now carry
+    the slot's BMP — byte for byte the BMP of doc 0 — so they share
+    its aHash."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        synthesize_mixed_image_from_text,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, "same text for every row") for i in (0, 24, 72)],
+        "doc_id long, text string",
+    )
+    rows = synthesize_mixed_image_from_text(docs).collect()
+    assert {r.mime for r in rows} == {"image/bmp"}
+    assert len({bytes(r.payload) for r in rows}) == 1
+    assert bytes(rows[0].payload)[:2] == b"BM"
+
+
+def test_pcx_and_sgi_corrupt_payloads_quarantine():
+    """PCX and SGI decode are gone: an RLE PCX and an RLE SGI image,
+    their truncations and an SGI offset table pointing past the file
+    quarantine by name under image/x-pcx and image/sgi."""
+    w = h = 8
+    pcx_head = struct.pack("<BBBBHHHH", 0x0A, 5, 1, 8, 0, 0, w - 1, h - 1)
+    pcx_head += bytes(4 + 48 + 1) + struct.pack("<BHH", 3, w, 1) + bytes(58)
+    pcx = pcx_head + (b"\xc8\x00" * (3 * h))  # one 8-byte run per plane row
+    sgi_head = struct.pack(">hBBHHHH", 474, 1, 1, 3, w, h, 3) + bytes(500)
+    starts = [512 + 2 * 4 * 3 * h + 2 * i for i in range(3 * h)]
+    table = struct.pack(f">{3 * h}I", *starts) + struct.pack(f">{3 * h}I", *[2] * (3 * h))
+    sgi = sgi_head + table + b"\x88\x00" * (3 * h)  # repeat 8 zeros, stop
+    for payload, mime in ((pcx, "image/x-pcx"), (sgi, "image/sgi")):
+        _assert_cut_format_quarantines(payload, mime)
+        _assert_truncations_quarantine(payload, mime, (3, 64, 130, 300, len(payload) - 3))
+    bad = bytearray(sgi)
+    struct.pack_into(">I", bad, 512, 1 << 30)
+    _assert_cut_format_quarantines(bytes(bad), "image/sgi")
+
+
+def test_jpeg_lossless_corrupt_payloads_quarantine():
+    """Lossless (SOF3) JPEG decode is gone. The baseline decoder's
+    marker walk still reads such a stream: cut before its SOF it
+    raises ValueError (no frame header), from the SOF on it raises
+    NotImplementedError naming SOF3 — a 65535x65535 header bomb
+    included, before any allocation."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        _jpeg_pixels,
+        encode_jpeg,
+    )
+
+    rng = np.random.RandomState(31)
+    good = bytearray(encode_jpeg(rng.randint(0, 256, (8, 8)).astype(np.uint8)))
+    sof = good.index(b"\xff\xc0")
+    good[sof + 1] = 0xC3
+    good = bytes(good)
+    for cut in (4, 10, sof):
+        with pytest.raises(ValueError):
+            _jpeg_pixels(good[:cut])
+    for cut in (sof + 12, len(good) - 6, len(good)):
+        with pytest.raises(NotImplementedError, match="SOF3"):
+            _jpeg_pixels(good[:cut])
+    bomb = bytearray(good)
+    bomb[sof + 5 : sof + 9] = b"\xff\xff\xff\xff"
+    with pytest.raises(NotImplementedError, match="SOF3"):
+        _jpeg_pixels(bytes(bomb))
+
+
+def test_jpeg_lossless_routes_through_spark_feature_path(spark):
+    """A lossless JPEG travels the same mapInPandas feature/aHash
+    plumbing as every other image and quarantines there: one
+    ``decode_features`` row naming SOF3 and no aHash row, while the
+    BMP of the same pixels decodes and hashes."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        encode_jpeg,
+        image_ahash,
+    )
+
+    rng = np.random.RandomState(37)
+    rgb = rng.randint(0, 256, (16, 16, 3)).astype(np.uint8)
+    lossless = bytearray(encode_jpeg(rgb))
+    sof = lossless.index(b"\xff\xc0")
+    lossless[sof + 1] = 0xC3
+    df = spark.createDataFrame(
+        [
+            (1, lossless, "image/jpeg"),
+            (2, bytearray(make_bmp(rgb)), "image/bmp"),
+        ],
+        "doc_id long, payload binary, mime string",
+    )
+    feats = {r.doc_id: r for r in decode_features(df).collect()}
+    assert len(feats) == 2
+    assert not feats[1].ok and "NotImplementedError" in feats[1].err and "SOF3" in feats[1].err
+    assert feats[2].ok and (feats[2].width, feats[2].height) == (16, 16)
+    assert [r.doc_id for r in image_ahash(df.drop("mime")).collect()] == [2]
+
+
+def test_apng_frames_compose_and_metadata():
+    """With the APNG frame layer gone an APNG is a PNG whose default
+    image is frame 0: ``decode_png`` skips acTL/fcTL/fdAT and reports
+    that image's dims and means, no frame count; image/apng itself
+    quarantines by name."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        _png_pixels,
+        decode_media,
+        decode_png,
+    )
+
+    rng = np.random.RandomState(61)
+    f0 = rng.randint(0, 256, (8, 10, 3)).astype(np.uint8)
+    f1 = rng.randint(0, 256, (8, 10, 3)).astype(np.uint8)
+    apng = _apng([f0, f1])
+    assert (_png_pixels(apng) == f0).all()
+    meta = decode_png(apng)
+    assert (meta["width"], meta["height"]) == (10, 8) and "n_frames" not in meta
+    assert meta["mean_r"] == pytest.approx(f0[:, :, 0].mean())
+    assert decode_media(apng, "image/png") == meta
+    with pytest.raises(NotImplementedError, match="'image/apng'"):
+        decode_media(apng, "image/apng")
+
+
+def test_apng_corrupt_payloads_quarantine():
+    """Truncated APNGs quarantine as ValueError through the PNG
+    decoder; damage confined to the animation chunks (an acTL frame
+    count that lies, a broken fcTL sequence number) no longer matters —
+    the default image decodes unchanged."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import _png_pixels
+
+    rng = np.random.RandomState(67)
+    f0 = rng.randint(0, 256, (6, 6, 3)).astype(np.uint8)
+    f1 = rng.randint(0, 256, (6, 6, 3)).astype(np.uint8)
+    good = _apng([f0, f1])
+    idat_end = good.index(b"IDAT") + 4 + struct.unpack_from(">I", good, good.index(b"IDAT") - 4)[0]
+    for cut in (10, 40, 80, idat_end - 2):
+        with pytest.raises(ValueError):
+            _png_pixels(good[:cut])
+    bad = bytearray(good)
+    i = bad.find(b"acTL")
+    bad[i + 4 : i + 8] = struct.pack(">I", 3)
+    assert (_png_pixels(bytes(bad)) == f0).all()
+    bad = bytearray(good)
+    i = bad.find(b"fcTL")
+    bad[i + 4 : i + 8] = struct.pack(">I", 9)
+    assert (_png_pixels(bytes(bad)) == f0).all()
+
+
+def test_apng_mutated_fdat_quarantines_as_value_error():
+    """A mutated fdAT body is never inflated now, so the default image
+    still decodes; the same mutation in the IDAT body reaches zlib and
+    surfaces as the uniform ValueError, not a raw zlib.error."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import _png_pixels
+
+    rng = np.random.RandomState(71)
+    f0 = rng.randint(0, 256, (6, 6, 3)).astype(np.uint8)
+    good = _apng([f0, f0])
+    bad = bytearray(good)
+    bad[bad.find(b"fdAT") + 12] ^= 0xFF
+    assert (_png_pixels(bytes(bad)) == f0).all()
+    bad = bytearray(good)
+    bad[bad.find(b"IDAT") + 8] ^= 0xFF
+    with pytest.raises(ValueError, match="corrupt PNG|size mismatch"):
+        _png_pixels(bytes(bad))
+
+
+def test_apng_canvas_bomb_bounded_before_allocation():
+    """An APNG whose IHDR width demands a 171 GiB image hits the PNG
+    decoder's absolute pixel cap before any allocation."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import _png_pixels
+
+    rng = np.random.RandomState(83)
+    f0 = rng.randint(0, 256, (16, 16, 3)).astype(np.uint8)
+    bomb = bytearray(_apng([f0, f0]))
+    bomb[16:20] = struct.pack(">I", 0xAB000010)  # IHDR width
+    with pytest.raises(ValueError, match="decode cap"):
+        _png_pixels(bytes(bomb))
+
+
+def test_apng_video_fixture_matches_vid0(spark):
+    """The video fixture's old APNG slots (doc_id 9 and 21) now carry
+    VID0 and hash frame for frame like doc 0; an APNG fed to the frame
+    path gets no rows (not a video container)."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        synthesize_mixed_video_from_text,
+        video_frame_hashes,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, "one text for every doc") for i in (0, 9, 21)],
+        "doc_id long, text string",
+    )
+    f0 = np.zeros((4, 4, 3), dtype=np.uint8)
+    apng = spark.createDataFrame(
+        [(99, bytearray(_apng([f0, f0 + 9])), "image/apng")],
+        "doc_id long, payload binary, mime string",
+    )
+    mixed = synthesize_mixed_video_from_text(docs).unionByName(apng)
+    by_doc = {}
+    for r in video_frame_hashes(mixed).collect():
+        by_doc.setdefault(r.doc_id, []).append((r.frame_id, r.fhash))
+    assert set(by_doc) == {0, 9, 21} and len(by_doc[0]) == 6
+    assert sorted(by_doc[0]) == sorted(by_doc[9]) == sorted(by_doc[21])
+
+
+def test_gif_animation_disposal_and_first_frame_compat():
+    """Animated GIF playback is gone; the still decoder reads the first
+    image. A crafted two-frame GIF (frame 1 two pixels of color 1 with
+    disposal 2, frame 2 a transparent 1x1 patch) decodes to frame 1,
+    and a stack of stills decodes to its first still."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        _gif_lzw_encode,
+        _gif_pixels,
+        decode_gif,
+        encode_gif,
+    )
+
+    pal = b"\x10\x20\x30" + b"\xaa\xbb\xcc" + b"\x00" * 6  # bg = index 0
+    out = bytearray(b"GIF89a")
+    out += struct.pack("<HHBBB", 2, 1, 0x80 | 0x01, 0, 0)  # 4-color global
+    out += pal
+    out += b"\x21\xf9\x04" + bytes([2 << 2]) + b"\x00\x00\x00\x00"  # disposal 2
+    out += struct.pack("<BHHHHB", 0x2C, 0, 0, 2, 1, 0)
+    data = _gif_lzw_encode([1, 1], 2)
+    out += bytes([2, len(data)]) + data + b"\x00"
+    out += b"\x21\xf9\x04" + bytes([1]) + b"\x00\x00\x03\x00"  # transparent 3
+    out += struct.pack("<BHHHHB", 0x2C, 0, 0, 1, 1, 0)
+    data = _gif_lzw_encode([3], 2)
+    out += bytes([2, len(data)]) + data + b"\x00\x3b"
+    px = _gif_pixels(bytes(out))
+    assert px.shape == (1, 2, 3) and (px == [0xAA, 0xBB, 0xCC]).all()
+    assert decode_gif(bytes(out))["mean_r"] == 0xAA
+
+    a = (np.arange(48, dtype=np.uint8).reshape(4, 4, 3) * 5).astype(np.uint8)
+    b = 255 - a
+    assert (_gif_pixels(_animated_gif([a, b])) == a).all()
+    assert (_gif_pixels(encode_gif(a)) == a).all()
+
+
+def test_gif_animation_hostile_payloads_quarantine():
+    """The still decoder never allocates the logical screen: a GIF
+    lying 65535x65535 there, or with a second frame outside it, still
+    decodes its first image. Cuts into the first image quarantine as
+    ValueError; cuts after it leave that image intact."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        _gif_pixels,
+        encode_gif,
+    )
+
+    px = np.zeros((4, 4, 3), dtype=np.uint8)
+    px[1, 2] = 200
+    good = _animated_gif([px, px[::-1]])
+    bad = bytearray(good)
+    struct.pack_into("<HH", bad, 6, 0xFFFF, 0xFFFF)
+    assert (_gif_pixels(bytes(bad)) == px).all()
+    second = good.index(b"\x2c", len(encode_gif(px)) - 1)
+    bad = bytearray(good)
+    struct.pack_into("<HH", bad, second + 1, 100, 100)
+    assert (_gif_pixels(bytes(bad)) == px).all()
+    first_end = len(encode_gif(px)) - 1
+    for cut in (14, 20, first_end - 2):
+        with pytest.raises(ValueError):
+            _gif_pixels(good[:cut])
+    for cut in (first_end + 3, len(good) - 3):
+        assert (_gif_pixels(good[:cut]) == px).all()
+
+
+def test_gif_playback_resource_bounds_review_findings():
+    """Resource bounds of the still GIF decoder: (a) a zero-area first
+    image decodes to an empty image rather than amplifying; (b) an
+    image declaring 65535x65535 with enough LZW bytes to clear the
+    data-backed bound still hits the absolute decode cap before the
+    index list is built; (c) a long animation costs one image."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        _gif_pixels,
+        decode_gif,
+        encode_gif,
+    )
+
+    good = bytearray(encode_gif(np.zeros((4, 4, 3), dtype=np.uint8)))
+    struct.pack_into("<HH", good, 13 + 5, 0, 0)  # first image w = h = 0
+    assert _gif_pixels(bytes(good)).shape == (0, 0, 3)
+    assert decode_gif(bytes(good))["width"] == 0
+
+    big = bytearray(b"GIF89a") + struct.pack("<HHBBB", 1, 1, 0, 0, 0)
+    big += struct.pack("<BHHHHB", 0x2C, 0, 0, 0xFFFF, 0xFFFF, 0x81) + bytes(12)
+    big += b"\x02" + (b"\xff" + bytes(255)) * 1600 + b"\x00\x3b"  # 408 KB of data
+    with pytest.raises(ValueError, match="decode cap"):
+        _gif_pixels(bytes(big))
+
+    frames = [np.full((64, 64, 3), k, dtype=np.uint8) for k in range(8)]
+    px = _gif_pixels(_animated_gif(frames))
+    assert px.shape == (64, 64, 3) and (px == 0).all()
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    h=st.integers(1, 12),
+    w=st.integers(1, 12),
+    nf=st.integers(1, 5),
+    seed=st.integers(0, 2**31 - 1),
+)
+def test_gif_animation_round_trip_property(h, w, nf, seed):
+    """Any stack of palette-sized stills decodes, through the still
+    decoder, to exactly its first frame; each still round-trips on
+    its own."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        _gif_pixels,
+        encode_gif,
+    )
+
+    rng = np.random.RandomState(seed)
+    frames = [(rng.randint(0, 4, (h, w, 3)) * 80).astype(np.uint8) for _ in range(nf)]
+    assert (_gif_pixels(_animated_gif(frames)) == frames[0]).all()
+    for f in frames:
+        assert (_gif_pixels(encode_gif(f)) == f).all()
