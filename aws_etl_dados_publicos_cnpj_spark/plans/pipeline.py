@@ -33,6 +33,9 @@ from ..sources.acquisition import acquire_manifest
 from ..sources.cnpj_csv import read_cnpj_csv
 from ..sources.sink import register_table, write_snapshot
 
+# the reference's INLINE Map over tables (state_machine.asl:24-131)
+MAX_CONCURRENT_TABLES = 4
+
 
 def run_pipeline(
     spark: SparkSession,
@@ -43,7 +46,6 @@ def run_pipeline(
     requested_tables: list[str] | None = None,
     base_url: str = "",
     database: str = "default",
-    max_concurrent_tables: int = 4,
 ) -> dict[str, str]:
     """One scheduled run (S26). Returns ``{table: ref_date}`` for every
     table actually refreshed (fresh tables are skipped — the Succeed
@@ -66,7 +68,7 @@ def run_pipeline(
         return table, date
 
     refreshed: dict[str, str] = {}
-    with ThreadPoolExecutor(max_workers=max_concurrent_tables) as pool:
+    with ThreadPoolExecutor(max_workers=MAX_CONCURRENT_TABLES) as pool:
         for table, date in pool.map(_ingest, list(by_table)):
             refreshed[table] = date
     return refreshed

@@ -2,8 +2,10 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and print ONE JSON line (fitted to the
 driver's 2000-char tail capture; the complete payload — methodology,
-cold timings, adjudication detail — is written to BENCH.out.json,
-committed at round end).
+cold timings, errors — is written to BENCH.out.json). ``value`` is
+this run's own sum of per-query warm timings, measured on ``cpus``
+cores; run-to-run drift is judged by comparing several runs at the
+same ``cpus``, not inside the harness.
 
 Headline set: the flagship star join + the scan/agg/window/dedup/ANN
 representatives — one per operator family, so a regression in any
@@ -124,8 +126,9 @@ def _incremental_dedup_refresh(spark, sf_dir):
 
 
 def _quiet_loggers(spark) -> None:
-    """BENCH-ONLY log hygiene (SCALE.md §BENCH_r04): repeated runs of
-    checkpoint-bearing queries race a driver GC (which unregisters
+    """BENCH-ONLY log hygiene (SCALE.md, "stderr stack fragment:
+    diagnosed benign"): repeated runs of checkpoint-bearing queries
+    race a driver GC (which unregisters
     weakly-referenced SQL-metric accumulators of already-collected
     executions) against late task-COMPLETION events — DAGScheduler
     then logs hundreds of 'non-existent accumulator' ERROR stacks.
@@ -133,89 +136,19 @@ def _quiet_loggers(spark) -> None:
     retries / fetch failures, and any REAL failure raises in collect()
     and lands in the errors dict. Silence just these loggers for the
     timing loop so the bench tail stays parseable; correctness gates
-    (check_oracle, pytest) never do this."""
-    try:
-        jvm = spark.sparkContext._jvm
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-            "org.apache.spark.scheduler.DAGScheduler",
-            jvm.org.apache.logging.log4j.Level.FATAL,
-        )
-        # the WARN-level twin ('Attempted to access garbage collected
-        # accumulator N') — same race, confirms the GC mechanism
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-            "org.apache.spark.util.AccumulatorContext",
-            jvm.org.apache.logging.log4j.Level.ERROR,
-        )
-    except Exception:  # noqa: BLE001 — logging backend changed; noise returns
-        pass
-
-
-def recover_timings_from_tail(tail: str, names) -> dict[str, float]:
-    """Recover per-query warm timings from a driver ``tail`` capture
-    even when the JSON line is truncated at the FRONT (BENCH_r06: the
-    one-line artifact outgrew the driver's 2000-char tail, so
-    ``parsed`` is null and the leading ~11 timings are gone — r6
-    verdict item #1). Strategy: regex every scalar ``"name": 1.234``
-    pair plus every adjudicated ``{"session": x, "isolated": y}``
-    block, and keep only keys in ``names`` (the headline set) so
-    wrapper keys like ``value``/``sf`` can't masquerade as queries.
-    Adjudicated entries contribute min(session, isolated) — the same
-    value the final timings dict records."""
-    import re
-
-    names = set(names)
-    out: dict[str, float] = {}
-    # value must be a COMPLETE number — a fragment truncated mid-value
-    # ('"q03": 0.') must be dropped, not read as 0.0 (it would poison
-    # bench_compare ratios and best-known floors)
-    for q, v in re.findall(r'"([a-zA-Z0-9_]+)":\s*([0-9]+(?:\.[0-9]+)?)[,}]', tail):
-        if q in names and float(v) > 0:
-            out[q] = float(v)
-    for q, s, i in re.findall(
-        r'"([a-zA-Z0-9_]+)":\s*\{"session":\s*([0-9.]+),\s*"isolated":\s*([0-9.]+)\}',
-        tail,
-    ):
-        if q in names and min(float(s), float(i)) > 0:
-            out[q] = min(float(s), float(i))
-    return out
-
-
-def _best_known() -> dict[str, float]:
-    """Per-query MIN across every landed BENCH_r*.json and the local
-    BENCH.out.json — the best time this box has ever measured for each
-    query. Used as the drift reference for isolated adjudication (r5
-    verdict item #2: the r5 artifact carried 2.5-3.4x phantom
-    regressions on untouched queries that vanished in isolated
-    reruns). Reads, in order of trust: the file's own ``queries`` dict
-    (BENCH.out.json), the driver wrapper's ``parsed`` payload, then a
-    truncated-``tail`` recovery (r6 verdict item #1 — without it r6's
-    45 surviving timings were invisible to adjudication)."""
-    import glob
-    import re
-
-    best: dict[str, float] = {}
-    here = os.path.dirname(os.path.abspath(__file__))
-    paths = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))
-    paths += glob.glob(os.path.join(here, "BENCH.out.json"))
-    for path in paths:
-        try:
-            d = json.load(open(path))
-        except (json.JSONDecodeError, OSError):
-            continue
-        qd = d.get("queries") or (d.get("parsed") or {}).get("queries") or {}
-        if not qd and isinstance(d.get("raw"), str):
-            m = re.search(r"\{.*\}", d["raw"])
-            if m:
-                try:
-                    qd = json.loads(m.group(0)).get("queries", {})
-                except json.JSONDecodeError:
-                    qd = {}
-        if not qd and isinstance(d.get("tail"), str):
-            qd = recover_timings_from_tail(d["tail"], HEADLINE)
-        for q, t in qd.items():
-            if isinstance(t, (int, float)) and t > 0:
-                best[q] = min(best.get(q, float("inf")), float(t))
-    return best
+    (check_oracle, pytest) never do this. pyspark 4.x logs through
+    log4j2; a changed backend fails here loudly."""
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.scheduler.DAGScheduler",
+        jvm.org.apache.logging.log4j.Level.FATAL,
+    )
+    # the WARN-level twin ('Attempted to access garbage collected
+    # accumulator N') — same race, confirms the GC mechanism
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.util.AccumulatorContext",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
 
 
 TAIL_BUDGET = 1900  # driver captures last 2000 stdout chars; keep margin
@@ -229,28 +162,7 @@ def fitted_line(out: dict, budget: int = TAIL_BUDGET) -> str:
     total to truncation). The COMPLETE payload lives in
     BENCH.out.json; this line is what the driver records."""
     compact = dict(out)
-    # same_box_ab per-query detail is the first thing to shrink (the
-    # full detail always survives in BENCH.out.json); the block's
-    # SUMMARY (ratio + verdict) is dropped last — it's the r11 drift
-    # adjudication the driver artifact exists to carry.
-    if (
-        len(json.dumps(compact, separators=(",", ":"))) > budget
-        and isinstance(compact.get("same_box_ab"), dict)
-        and "queries" in compact["same_box_ab"]
-    ):
-        compact["same_box_ab"] = {
-            k: v for k, v in compact["same_box_ab"].items() if k != "queries"
-        }
-    for drop in (
-        "adjudicated",
-        "cold_total",
-        "errors",
-        "methodology",
-        "git_head",
-        "run_total",
-        "cpu_probe_sec",
-        "same_box_ab",
-    ):
+    for drop in ("cold_total", "errors", "methodology"):
         line = json.dumps(compact, separators=(",", ":"))
         if len(line) <= budget:
             return line
@@ -262,10 +174,10 @@ def fitted_line(out: dict, budget: int = TAIL_BUDGET) -> str:
         }
         line = json.dumps(compact, separators=(",", ":"))
     # FINAL resort — guaranteed-fit: drop the fastest queries (least
-    # information lost; their best-known floors survive in older
-    # artifacts) and say how many. Without this the r6 failure mode
-    # (over-budget line → front-truncated tail → parsed:null) recurs
-    # silently the day the headline outgrows the budget again.
+    # information lost; BENCH.out.json still holds them) and say how
+    # many. Without this the r6 failure mode (over-budget line →
+    # front-truncated tail → parsed:null) recurs silently the day the
+    # headline outgrows the budget again.
     omitted = 0
     while len(line) > budget and compact.get("queries"):
         qd = compact["queries"]
@@ -277,208 +189,10 @@ def fitted_line(out: dict, budget: int = TAIL_BUDGET) -> str:
     return line
 
 
-ADJUDICATE_RATIO = 1.2  # r6: 1.5 left 1.3-1.4x phantoms in the artifact
-ADJUDICATE_ABS = 0.15  # seconds — sub-0.15s swings are pure scheduler noise
-ADJUDICATE_CAP = 16  # bound the extra wall-clock per round
-
-
-def _cpu_probe() -> float:
-    """Seconds for a fixed 10M-iteration integer-add loop, run before
-    Spark starts — a box-speed fingerprint for the artifact. This
-    co-tenanted box drifts ±2x between sessions (r8 measured the same
-    tree at 43.6s and 52.4s hours apart, uniformly across queries with
-    zero code change); recording the probe lets bench_compare read a
-    total delta against BOX speed instead of guessing from prose."""
-    t = time.perf_counter()
-    s = 0
-    for i in range(10_000_000):
-        s += i
-    return round(time.perf_counter() - t, 3)
-
-
-# --- same-box worktree A/B (r11 verdict item #2) ---------------------------
-#
-# cpu_probe is single-thread; this box's MULTI-core throughput drifts
-# independently of it (r11 close burned three re-measures arguing a
-# 53.5s-vs-45.85s headline that the judge settled in one run by
-# checking out the prior round's tree in a git worktree and running the
-# drifted queries through BOTH trees back-to-back on the same box: the
-# r10 tree reproduced the r11 timings exactly → box drift, not engine
-# drift). The harness now owns that method: when the full-run headline
-# drifts past AB_GATE vs the last landed round artifact, the drifted
-# queries are re-run through both trees and the measured RATIO lands in
-# the artifact — cross-round comparisons stop depending on box luck.
-
-AB_GATE = 1.2  # headline drift ratio (vs last landed round) that triggers A/B
-AB_MAX_QUERIES = 8  # bound the extra wall-clock: worst drifters only
-AB_MIN_DELTA_SEC = 0.15  # sub-0.15s swings are scheduler noise (ADJUDICATE_ABS)
-AB_EQUAL_BAND = 0.10  # trees within ±10% on the same box = same engine
-
-
-def _parse_bench_line(stdout: str) -> dict | None:
-    """Last stdout line that parses as a bench payload (mini-runs print
-    exactly one fitted JSON line, but Spark/Ivy banners may precede it)."""
-    for line in reversed(stdout.strip().splitlines()):
-        line = line.strip()
-        if line.startswith("{") and line.endswith("}"):
-            try:
-                d = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if isinstance(d, dict) and "queries" in d:
-                return d
-    return None
-
-
-def _latest_landed_bench(repo: str) -> tuple[str, dict] | None:
-    """(basename, payload) of the highest-numbered landed BENCH_r*.json
-    — the prior round's close measurement, the drift reference."""
-    import glob
-    import re
-
-    rounds: list[tuple[int, str]] = []
-    for path in glob.glob(os.path.join(repo, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if m:
-            rounds.append((int(m.group(1)), path))
-    for _, path in sorted(rounds, reverse=True):
-        try:
-            d = json.load(open(path))
-        except (OSError, json.JSONDecodeError):
-            continue
-        parsed = d.get("parsed") if isinstance(d.get("parsed"), dict) else d
-        if isinstance(parsed, dict) and parsed.get("queries"):
-            return os.path.basename(path), parsed
-    return None
-
-
-def _prior_close_commit(repo: str, artifact: str) -> str | None:
-    """The commit that landed the prior round's bench artifact — the
-    driver's round-close commit, i.e. the prior round's final tree."""
-    import subprocess
-
-    try:
-        sha = subprocess.run(
-            ["git", "-C", repo, "log", "-1", "--format=%H", "--", artifact],
-            capture_output=True, text=True, timeout=10, check=True,
-        ).stdout.strip()
-        return sha or None
-    except Exception:  # noqa: BLE001
-        return None
-
-
-def _run_tree_bench(tree: str, queries: list[str], sf_dir: str) -> dict | None:
-    """One SPARK_GRAFT_BENCH_ONLY mini-run of ``tree``'s bench.py in a
-    subprocess (fresh JVM either way — symmetric process state for the
-    A and B sides). Returns the per-query timings dict or None."""
-    import subprocess
-
-    env = dict(os.environ)
-    env["SPARK_GRAFT_BENCH_ONLY"] = ",".join(queries)
-    env["SPARK_GRAFT_SF_DIR"] = sf_dir
-    env["SPARK_GRAFT_NO_AB"] = "1"
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.join(tree, "bench.py")],
-            capture_output=True, text=True, timeout=2400, cwd=tree, env=env,
-        )
-    except (subprocess.TimeoutExpired, OSError):
-        return None
-    payload = _parse_bench_line(proc.stdout)
-    return payload.get("queries") if payload else None
-
-
-def same_box_ab(repo: str, timings: dict[str, float], sf_dir: str) -> dict | None:
-    """When this run's headline drifts >AB_GATE past the last landed
-    round artifact on their common query set, adjudicate engine-vs-box:
-    check out the prior round's close commit in a scratch git worktree
-    and run the worst-drifted queries through BOTH trees back-to-back
-    on the same box. Trees equal within AB_EQUAL_BAND → the box moved
-    (the r11 outcome); prior tree faster → a real engine regression,
-    recorded at its measured ratio. Returns the artifact block, or
-    None when the gate doesn't trip; never raises into the caller."""
-    import subprocess
-
-    landed = _latest_landed_bench(repo)
-    if not landed:
-        return None
-    artifact, prior = landed
-    prior_q = {
-        q: float(t)
-        for q, t in prior["queries"].items()
-        if isinstance(t, (int, float)) and t > 0
-    }
-    common = sorted(set(timings) & set(prior_q))
-    if not common:
-        return None
-    cur_total = sum(timings[q] for q in common)
-    old_total = sum(prior_q[q] for q in common)
-    if old_total <= 0 or cur_total <= old_total * AB_GATE:
-        return None
-    # worst absolute drifters (they carry the headline delta); if the
-    # drift is diffuse, the top absolute deltas still represent it
-    drifted = sorted(
-        (q for q in common if timings[q] - prior_q[q] > AB_MIN_DELTA_SEC),
-        key=lambda q: prior_q[q] - timings[q],
-    )[:AB_MAX_QUERIES]
-    if not drifted:
-        return None
-    sha = _prior_close_commit(repo, artifact)
-    if not sha:
-        return {"error": f"gate tripped but no close commit for {artifact}"}
-    block: dict = {
-        "gate": AB_GATE,
-        "prior_artifact": artifact,
-        "prior_commit": sha[:12],
-        "drift_ratio_vs_artifact": round(cur_total / old_total, 3),
-    }
-    wt = os.path.join("/tmp", f"spark_graft_ab_{sha[:12]}")
-    added = False
-    try:
-        if not os.path.isdir(wt):
-            subprocess.run(
-                ["git", "-C", repo, "worktree", "add", "--detach", wt, sha],
-                capture_output=True, text=True, timeout=60, check=True,
-            )
-            added = True
-        prior_tree = _run_tree_bench(wt, drifted, sf_dir)
-        cur_tree = _run_tree_bench(repo, drifted, sf_dir)
-        if not prior_tree or not cur_tree:
-            block["error"] = "mini-run failed on one side"
-            return block
-        both = [q for q in drifted if q in prior_tree and q in cur_tree]
-        a = round(sum(prior_tree[q] for q in both), 3)
-        b = round(sum(cur_tree[q] for q in both), 3)
-        block["queries"] = {
-            q: [prior_tree[q], cur_tree[q]] for q in both  # [prior, current]
-        }
-        block["prior_tree_sec"] = a
-        block["current_tree_sec"] = b
-        if a > 0:
-            ratio = round(b / a, 3)
-            block["ratio"] = ratio
-            block["verdict"] = (
-                "box drift (trees equal on today's box)"
-                if abs(ratio - 1.0) <= AB_EQUAL_BAND
-                else "engine change (trees differ on the same box)"
-            )
-        return block
-    except Exception as exc:  # noqa: BLE001 — A/B must never kill the bench
-        block["error"] = f"{type(exc).__name__}: {exc}"[:200]
-        return block
-    finally:
-        if added:
-            subprocess.run(
-                ["git", "-C", repo, "worktree", "remove", "--force", wt],
-                capture_output=True, text=True, timeout=60,
-            )
-
-
 def main() -> None:
     import __spark_entry__ as entrymod
     from aws_etl_dados_publicos_cnpj_spark.session import build_session
 
-    cpu_probe = _cpu_probe()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     def _fresh_session():
@@ -539,65 +253,14 @@ def main() -> None:
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
         # NOTE (r5 drift investigation): do NOT force System.gc() here —
         # measured +31% on the common set (150 forced full GCs cost far
-        # more than the checkpoint-block pressure they release). Session
-        # pressure is real but smaller — isolated adjudication below is
-        # the correction for what min-of-2-in-session can't fix.
+        # more than the checkpoint-block pressure they release).
     # the local[N] core count the timings were measured on
     cpus = spark.sparkContext.defaultParallelism
     spark.stop()
 
-    # Isolated adjudication (r5 verdict item #2): a query whose
-    # in-session min drifted >ADJUDICATE_RATIO past its best-ever landed time is
-    # re-measured ALONE in a fresh JVM (cold + 2 warm, min taken) —
-    # on this co-tenanted box, session position and neighbor load
-    # produced 2.5-3.4x phantom regressions in BENCH_r05 that vanished
-    # in isolation. A REAL regression survives the isolated rerun and
-    # is recorded at its isolated (still slow) time.
-    best = _best_known()
-    suspects = sorted(
-        (
-            n
-            for n, t in timings.items()
-            if n in best
-            and t > best[n] * ADJUDICATE_RATIO
-            and t - best[n] > ADJUDICATE_ABS
-        ),
-        key=lambda n: -(timings[n] / best[n]),
-    )[:ADJUDICATE_CAP]
-    adjudicated: dict[str, dict[str, float]] = {}
-    if suspects:
-        iso = _fresh_session()
-        for name in suspects:
-            try:
-                qs[name](iso, sf_dir).collect()  # untimed: codegen warm-up
-                runs = []
-                for _ in range(2):
-                    start = time.perf_counter()
-                    qs[name](iso, sf_dir).collect()
-                    runs.append(time.perf_counter() - start)
-                iso_t = round(min(runs), 3)
-            except Exception as exc:  # noqa: BLE001
-                errors[name] = f"adjudicate: {type(exc).__name__}: {exc}"[:300]
-                continue
-            adjudicated[name] = {"session": timings[name], "isolated": iso_t}
-            timings[name] = min(timings[name], iso_t)
-        iso.stop()
-
-    total = round(sum(timings.values()), 3)
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    # same-box A/B (r11 verdict item #2): only full runs adjudicate —
-    # a mini-run's partial set can't trip a headline gate honestly.
-    ab = None
-    if not only and not os.environ.get("SPARK_GRAFT_NO_AB"):
-        try:
-            ab = same_box_ab(here, timings, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — never kill the bench
-            ab = {"error": f"{type(exc).__name__}: {exc}"[:200]}
-
     out = {
         "metric": "headline_queries_wall_clock",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "cold_total": round(sum(cold.values()), 3),
@@ -608,133 +271,24 @@ def main() -> None:
         "methodology": {
             "recycle_every": RECYCLE_EVERY,
             "warm_runs": 2,
-            "report": (
-                f"min(warm); isolated adjudication of >{ADJUDICATE_RATIO}x "
-                "drift vs best-known; headline=min over same-tree full "
-                "runs (raw run in run_total)"
-            ),
-            "adjudicate": {
-                "ratio": ADJUDICATE_RATIO,
-                "abs_floor_sec": ADJUDICATE_ABS,
-                "cap": ADJUDICATE_CAP,
-            },
+            "report": "cold + min of 2 warm per query; value = this run's sum",
             "logger_suppression": True,
         },
-        "cpu_probe_sec": cpu_probe,
     }
-    if adjudicated:
-        out["adjudicated"] = adjudicated
     if errors:
         out["errors"] = errors
-    if ab:
-        out["same_box_ab"] = ab
 
-    # Artifact fix (r6 verdict item #1): the one-line JSON outgrew the
-    # driver's 2000-char tail capture, so BENCH_r06.json landed with
-    # parsed:null and 11 timings truncated off the front. Two-part fix:
-    # (a) the COMPLETE payload is written to BENCH.out.json (committed
-    # at round end, so nothing is ever lost to tail truncation again);
-    # (b) stdout gets a line FITTED to the tail budget — optional
-    # fields are dropped, least-important first, until the line fits,
-    # so the driver's parse always succeeds and always carries every
-    # per-query timing. Recovery of older truncated artifacts lives in
-    # recover_timings_from_tail().
+    # The driver captures only the last 2000 stdout chars, so the
+    # COMPLETE payload goes to BENCH.out.json and stdout gets a line
+    # fitted to that budget (fitted_line) that always parses and always
+    # carries every per-query timing.
     if not only:  # a SPARK_GRAFT_BENCH_ONLY mini-run must never
         # clobber the committed full-headline artifact (it did, once)
-        out_path = os.path.join(here, "BENCH.out.json")
-        # floor_runs (r7 verdict item #7): totals of earlier full runs
-        # AT THIS SAME COMMIT — the in-artifact record of this box's
-        # run-to-run noise band (r7's prose-only "43.4s floor vs the
-        # landed 44.5s"). Re-running bench at an unchanged HEAD
-        # inherits the previous run's total; any commit invalidates
-        # the floor (a code change may legitimately move the total).
-        out["git_head"] = _git_head(here)
-        try:
-            prev = json.load(open(out_path))
-        except (OSError, json.JSONDecodeError):
-            prev = {}
-        floor = inherit_floor_runs(prev, out)
-        if floor:
-            out["floor_runs"] = floor
-        # a same-head rerun that does NOT trip the A/B gate must not
-        # discard a prior run's adjudication evidence (the block that
-        # proves a slow floor_runs entry was box drift) — inherit it,
-        # marked as carried, under the same same-head rule as floor_runs
-        if (
-            "same_box_ab" not in out
-            and floor
-            and isinstance(prev.get("same_box_ab"), dict)
-        ):
-            out["same_box_ab"] = dict(prev["same_box_ab"], carried_from_prior_run=True)
-        # Headline = the FASTEST same-tree full run (r8 verdict #2):
-        # r8's landed artifact was a slow-box final rerun (52.4s) that
-        # overstated the round by ~10% vs its own 43.6s floor. The raw
-        # measurement of THIS run stays in run_total (and, via
-        # inherit_floor_runs, in the next run's floor_runs), so the
-        # noise band is still recorded honestly — only the headline
-        # stops depending on which run happened to come last.
-        out["run_total"] = total
-        out["value"] = round(min(floor + [total]), 3)
-        with open(out_path, "w") as f:
+        here = os.path.dirname(os.path.abspath(__file__))
+        with open(os.path.join(here, "BENCH.out.json"), "w") as f:
             json.dump(out, f, indent=1)
             f.write("\n")
     print(fitted_line(out))
-
-
-def inherit_floor_runs(prev: dict, out: dict) -> list[float]:
-    """Floor totals carried from the previous full run into this one —
-    ONLY when the previous BENCH.out.json was measured at the same
-    commit, sf, headline set and core count (a code change may
-    legitimately move the total, so any commit resets the floor; a
-    floor from another core count measures another machine)."""
-    if not (
-        prev.get("git_head")
-        and prev.get("git_head") == out.get("git_head")
-        and prev.get("sf") == out.get("sf")
-        and prev.get("cpus") == out.get("cpus")
-        and set(prev.get("queries", {})) == set(out.get("queries", {}))
-    ):
-        return []
-    floor = [t for t in prev.get("floor_runs", []) if isinstance(t, (int, float))]
-    # run_total is the previous run's RAW measurement; value may already
-    # be the floor-of-runs headline (r8 verdict #2) — appending value
-    # would duplicate the floor instead of recording the real run.
-    prev_raw = prev.get("run_total", prev.get("value"))
-    if isinstance(prev_raw, (int, float)):
-        floor.append(prev_raw)
-    # Cap by RECENCY, not speed: keeping the 7 fastest would silently
-    # drop legitimate slow runs and shrink the recorded noise band over
-    # repeated runs — the exact misattribution floor_runs exists to
-    # prevent. The list is chronological (oldest first), so keep the tail.
-    return floor[-7:]
-
-
-_ENGINE_PATHS = ["aws_etl_dados_publicos_cnpj_spark", "bench.py", "__spark_entry__.py"]
-
-
-def _git_head(repo: str) -> str | None:
-    """Fingerprint of the ENGINE code the bench measures: the git tree
-    hashes of the package + harness, not the commit id — so committing
-    artifacts (BENCH.out.json, MIRROR, docs) between runs does not
-    reset the noise floor, while any engine change does. Returns None
-    (never inherit) when the engine paths have uncommitted changes:
-    the measured code then isn't the committed tree."""
-    import subprocess
-
-    try:
-        dirty = subprocess.run(
-            ["git", "-C", repo, "status", "--porcelain", "--", *_ENGINE_PATHS],
-            capture_output=True, text=True, timeout=10, check=True,
-        ).stdout.strip()
-        if dirty:
-            return None
-        trees = subprocess.run(
-            ["git", "-C", repo, "rev-parse", *[f"HEAD:{p}" for p in _ENGINE_PATHS]],
-            capture_output=True, text=True, timeout=10, check=True,
-        ).stdout.strip()
-        return trees.replace("\n", "-") or None
-    except Exception:  # noqa: BLE001 — no git on the box: floor resets per run
-        return None
 
 
 if __name__ == "__main__":

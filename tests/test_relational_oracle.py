@@ -4,15 +4,11 @@ rows-only queries must at least run and return a stable schema."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entrymod  # noqa: E402
-from conftest import SF_SMALL  # noqa: E402
-from tools.check_oracle import compare  # noqa: E402
+import __spark_entry__ as entrymod
+from conftest import SF_SMALL
+from tools.check_oracle import compare
 
 ALL_QUERIES = entrymod.queries()
 ALL_ORACLES = entrymod.oracle_sql()

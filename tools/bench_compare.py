@@ -1,31 +1,21 @@
-"""Compare two BENCH_r*.json files on their COMMON query set — the
-same analysis the round-3/4 drift investigations did by hand: common
+"""Compare two bench artifacts on their COMMON query set — the same
+analysis the round-3/4 drift investigations did by hand: common
 total, per-query deltas, and queries regressing past a threshold.
 
-Usage: python tools/bench_compare.py BENCH_r04.json BENCH_r05.json [pct]
+Usage: python tools/bench_compare.py A.json B.json [pct]
 
-Same-box A/B mode (r11 verdict item #2 — the judge's worktree method):
-
-  python tools/bench_compare.py --ab <git-ref> q1,q2,... [sf_dir]
-
-checks <git-ref> out in a scratch worktree and runs the named queries
-through BOTH trees back-to-back on the same box (each side a fresh
-subprocess JVM), printing per-query [prior, current] and the measured
-ratio. This separates engine drift from box drift in one run — the
-cpu_probe fingerprint is single-thread-only and cannot (r11's close
-burned three full re-measures learning this). bench.py runs the same
-method automatically when a full run's headline drifts >1.2x past the
-last landed round artifact (bench.same_box_ab).
+Each file is bench.py's own output (the stdout line or
+BENCH.out.json), the driver's wrapper around it (``parsed``), or raw
+bench stdout whose last JSON line is the payload. Compare artifacts
+measured at the same ``cpus``; box drift is read from several runs of
+each side, not from one pair.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import re
 import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _payload(path: str) -> dict:
@@ -34,23 +24,8 @@ def _payload(path: str) -> dict:
         d = json.loads(raw)
         if "queries" in d:  # bench.py's own output line / BENCH.out.json
             return d
-        if "parsed" in d and d["parsed"]:  # the driver's BENCH_r*.json wrapper
+        if d.get("parsed"):  # the driver's wrapper
             return d["parsed"]
-        if isinstance(d.get("tail"), str):
-            # Front-truncated tail (BENCH_r06: the JSON line outgrew the
-            # driver's 2000-char capture, parsed landed null). Recover
-            # whatever per-query timings survive; flag partiality so the
-            # common-set comparison below is read accordingly.
-            from bench import HEADLINE, recover_timings_from_tail
-
-            qd = recover_timings_from_tail(d["tail"], HEADLINE)
-            if qd:
-                print(
-                    f"NOTE: {path} is a truncated tail — recovered "
-                    f"{len(qd)}/{len(HEADLINE)} headline timings; totals "
-                    "cover the common RECOVERED set only"
-                )
-                return {"queries": qd, "truncated": True}
     except json.JSONDecodeError:
         pass
     # raw bench stdout with a stderr fragment — last line that parses
@@ -66,64 +41,7 @@ def _payload(path: str) -> dict:
     raise SystemExit(f"no bench JSON found in {path}")
 
 
-def _queries(path: str) -> dict[str, float]:
-    return _payload(path)["queries"]
-
-
-def _ab_main() -> None:
-    import subprocess
-
-    import bench
-
-    ref = sys.argv[2]
-    queries = [q for q in sys.argv[3].split(",") if q]
-    sf_dir = sys.argv[4] if len(sys.argv) > 4 else os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-    )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sha = subprocess.run(
-        ["git", "-C", repo, "rev-parse", ref],
-        capture_output=True, text=True, timeout=10, check=True,
-    ).stdout.strip()
-    wt = os.path.join("/tmp", f"spark_graft_ab_{sha[:12]}")
-    added = False
-    try:
-        if not os.path.isdir(wt):
-            subprocess.run(
-                ["git", "-C", repo, "worktree", "add", "--detach", wt, sha],
-                capture_output=True, text=True, timeout=60, check=True,
-            )
-            added = True
-        print(f"A = {ref} ({sha[:12]}) in {wt}\nB = working tree {repo}")
-        prior = bench._run_tree_bench(wt, queries, sf_dir)
-        cur = bench._run_tree_bench(repo, queries, sf_dir)
-        if not prior or not cur:
-            raise SystemExit(f"mini-run failed: A={'ok' if prior else 'FAIL'} "
-                             f"B={'ok' if cur else 'FAIL'}")
-        both = [q for q in queries if q in prior and q in cur]
-        for q in both:
-            print(f"  {q:40s} A {prior[q]:6.3f}s   B {cur[q]:6.3f}s")
-        a_t, b_t = sum(prior[q] for q in both), sum(cur[q] for q in both)
-        ratio = b_t / a_t if a_t else float("nan")
-        verdict = (
-            "box-equal: same engine speed on today's box"
-            if abs(ratio - 1.0) <= bench.AB_EQUAL_BAND
-            else "trees DIFFER on the same box — engine change"
-        )
-        print(f"A total {a_t:.3f}s   B total {b_t:.3f}s   "
-              f"ratio B/A {ratio:.3f} — {verdict}")
-    finally:
-        if added:
-            subprocess.run(
-                ["git", "-C", repo, "worktree", "remove", "--force", wt],
-                capture_output=True, text=True, timeout=60,
-            )
-
-
 def main() -> None:
-    if sys.argv[1:2] == ["--ab"]:
-        _ab_main()
-        return
     a, b = sys.argv[1], sys.argv[2]
     threshold = float(sys.argv[3]) if len(sys.argv) > 3 else 10.0
     pa, pb = _payload(a), _payload(b)
@@ -137,60 +55,11 @@ def main() -> None:
             "WARNING: methodology differs — deltas mix harness and engine "
             f"changes\n  {a}: {ma}\n  {b}: {mb}"
         )
-    for path, p in ((a, pa), (b, pb)):
-        ab = p.get("same_box_ab")
-        if isinstance(ab, dict) and ab.get("ratio") is not None:
-            print(
-                f"same-box A/B in {path}: prior tree "
-                f"{ab.get('prior_tree_sec')}s vs current "
-                f"{ab.get('current_tree_sec')}s (ratio {ab['ratio']}) — "
-                f"{ab.get('verdict', '')}"
-            )
-    for path, p in ((a, pa), (b, pb)):
-        if p.get("adjudicated"):
-            adj = ", ".join(
-                f"{q} {v['session']:.2f}->{v['isolated']:.2f}s"
-                for q, v in p["adjudicated"].items()
-            )
-            print(f"adjudicated in {path}: {adj}")
     common = sorted(set(qa) & set(qb))
     ta, tb = sum(qa[q] for q in common), sum(qb[q] for q in common)
     print(f"common queries: {len(common)}")
     delta_pct = 100 * (tb - ta) / ta
     print(f"{a}: {ta:.2f}s   {b}: {tb:.2f}s   delta {delta_pct:+.1f}%")
-    # cpu_probe_sec (r8): both artifacts may carry a pre-Spark single-
-    # thread probe of the box. A probe ratio far from 1.0 says the BOX
-    # moved between measurements — read the total delta against it
-    # before attributing anything to the engine.
-    ca, cb = pa.get("cpu_probe_sec"), pb.get("cpu_probe_sec")
-    if isinstance(ca, (int, float)) and isinstance(cb, (int, float)) and ca > 0:
-        ratio = cb / ca
-        print(
-            f"box speed probe: {a} {ca:.2f}s vs {b} {cb:.2f}s "
-            f"(x{ratio:.2f} single-thread time) — a total delta near "
-            f"{100 * (ratio - 1):+.0f}% is box drift, not engine drift"
-        )
-    # floor_runs (r7 verdict item #7): the newer artifact may carry the
-    # totals of repeated full runs at the same commit — the measured
-    # run-to-run noise band on this co-tenanted box. A total delta
-    # inside that band is noise, not drift, and the report says so
-    # without anyone having to re-read SCALE.md prose.
-    # run_total (r9) is the artifact's RAW current-run measurement;
-    # value may be the floor-of-runs headline (min), which would
-    # collapse the band to 0 and misreport real noise as drift.
-    floor = [
-        t
-        for t in pb.get("floor_runs", []) + [pb.get("run_total", pb.get("value"))]
-        if isinstance(t, (int, float))
-    ]
-    if len(floor) >= 2:
-        noise_pct = 100 * (max(floor) - min(floor)) / min(floor)
-        verdict = "WITHIN" if abs(delta_pct) <= noise_pct else "OUTSIDE"
-        print(
-            f"run-to-run band at {b}'s commit: {min(floor):.2f}-"
-            f"{max(floor):.2f}s over {len(floor)} full runs "
-            f"(±{noise_pct:.1f}%) — total delta is {verdict} observed noise"
-        )
     regressions = []
     for q in common:
         d = 100 * (qb[q] - qa[q]) / qa[q] if qa[q] else 0.0

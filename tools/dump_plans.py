@@ -10,10 +10,12 @@ upgrade shuffle joins to broadcast, noted in the header)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 MARKERS = [
     "BroadcastHashJoin",
@@ -126,7 +128,7 @@ def main() -> None:
             f"| {len(cols)} |"
         )
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(out)
     bad = [
         l
