@@ -1,6 +1,5 @@
 from .scalar import (  # noqa: F401
     decimal_comma_to_double,
-    json_get,
     normalize_table_key,
     yyyymmdd_int,
 )

@@ -7,7 +7,6 @@ Reference parity map (SURVEY.md §2.1):
 - ``normalize_table_key``  ← S4, ``lambdas/check_update/check_update.py:55-60``
 - ``yyyymmdd_int``         ← S7, ``check_update.py:65``
 - ``decimal_comma_to_double`` ← S21 dialect, ``lambdas/fetch_data/fetch_data.py:73``
-- ``json_get``             ← S27 JSONPath doc ops, ``state_machines/state_machine.asl:50-53``
 """
 
 from __future__ import annotations
@@ -50,10 +49,3 @@ def decimal_comma_to_double(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_replace(c, ",", ".").try_cast("double")
 
-
-def json_get(doc: Column | str, path: str) -> Column:
-    """JSONPath scalar projection over a JSON document column — the
-    data-plane form of the control-plane ``ResultSelector``/``OutputPath``
-    transforms (``state_machine.asl:50-53``, ``README.md:271-275``)."""
-    c = F.col(doc) if isinstance(doc, str) else doc
-    return F.get_json_object(c, path)

@@ -5,6 +5,18 @@ synthesizers that back the oracle contract.
 Split out of the r12 single-module multimodal.py (r12 verdict item:
 52% of the package in one file); facade in ``__init__``. See the
 package docstring for the decode status of each format.
+
+Two private helpers carry the Arrow-batch plumbing; each stage keeps
+only its per-row logic. ``_synthesize`` runs every ``synthesize_*``
+fixture stage: ``make(doc_id, text_utf8) -> (payload, mime)`` per row,
+and any exception fails the job. ``_payload_rows`` runs
+``extract_features``, ``sample_frames``, ``sample_audio_frames``,
+``image_ahash``, ``video_frame_hashes`` and ``audio_energy_hash``:
+``rows(payload)`` gives a document's rows, a ``ValueError`` or
+``NotImplementedError`` drops the document, and any other exception
+fails the job. ``decode_features`` keeps its own loop to turn ANY
+decode failure into an ``ok=false`` row; ``resize_bmp`` raises on an
+undecodable payload.
 """
 
 from __future__ import annotations
@@ -29,6 +41,45 @@ from .containers import (
     _image_pixels, _mp4_mjpeg_frames, _mp4_video_stats, _mp4_video_track,
     decode_mp4_mjpeg,
 )
+
+def _synthesize(df: DataFrame, id_col: str, text_col: str, make) -> DataFrame:
+    """One fixture stage over (id, text): ``make(doc_id, text_utf8)``
+    returns the row's ``(payload, mime)``."""
+
+    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                [
+                    (d, *make(int(d), t.encode("utf-8")))
+                    for d, t in zip(pdf[id_col], pdf[text_col])
+                ],
+                columns=["doc_id", "payload", "mime"],
+            )
+
+    return df.select(id_col, text_col).mapInPandas(
+        _batches, "doc_id long, payload binary, mime string"
+    )
+
+
+def _payload_rows(df: DataFrame, id_col: str, schema: str, rows) -> DataFrame:
+    """One 1→N stage over (id, payload): ``rows(payload)`` returns a
+    document's output rows without the id; a ``ValueError`` or
+    ``NotImplementedError`` drops the document (undecodable → no rows)."""
+    cols = [field.split()[0] for field in schema.split(",")]
+
+    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = []
+            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+                try:
+                    got = rows(bytes(payload))
+                except (ValueError, NotImplementedError):
+                    continue
+                out.extend((doc_id, *r) for r in got)
+            yield pd.DataFrame(out, columns=cols)
+
+    return df.select(id_col, "payload").mapInPandas(_batches, schema)
+
 
 def decode_media(payload: bytes, mime: str) -> dict:
     """Decode entry point, routed by mime: WAV, AIFF/AIFC, FLAC, BMP,
@@ -77,20 +128,10 @@ def extract_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the byte-level stats with codec output): n_bytes, first byte, and a
     mod-256 checksum. Deterministic, so the SQL oracle can verify the
     full mapInPandas plumbing."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": payloads.map(len).astype("int32"),
-                    "first_byte": payloads.map(lambda b: b[0] if len(b) else -1).astype("int32"),
-                    "checksum": payloads.map(lambda b: int(sum(b)) % 256).astype("int32"),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(_batches, FEATURE_SCHEMA)
+    return _payload_rows(
+        df, id_col, FEATURE_SCHEMA,
+        lambda b: [(len(b), b[0] if len(b) else -1, sum(b) % 256)],
+    )
 
 
 DECODE_SCHEMA = (
@@ -170,40 +211,24 @@ def resize_bmp(df: DataFrame, width: int = 8, height: int = 8, id_col: str = "do
 def sample_audio_frames(df: DataFrame, every_n: int = 1000, id_col: str = "doc_id") -> DataFrame:
     """REAL audio frame sampling for WAV payloads: decode, then emit
     every Nth sample as a row (1→N through mapInPandas)."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, vals = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    samples = _wav_samples_f64(bytes(payload))[0]
-                except (ValueError, NotImplementedError):
-                    continue  # quarantine: undecodable → no rows
-                picked = samples[::every_n]
-                ids.extend([doc_id] * len(picked))
-                idxs.extend(range(len(picked)))
-                vals.extend(picked)
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "sample": vals})
-
-    return df.select(id_col, "payload").mapInPandas(_batches, AUDIO_FRAME_SCHEMA)
+    if every_n < 1:
+        raise ValueError(f"every_n must be >= 1, got {every_n}")
+    return _payload_rows(
+        df, id_col, AUDIO_FRAME_SCHEMA,
+        lambda b: enumerate(_wav_samples_f64(b)[0][::every_n]),
+    )
 
 
 def sample_frames(df: DataFrame, every_n: int = 50, id_col: str = "doc_id") -> DataFrame:
     """Frame-sampling stage (video analog): emit every Nth payload byte
     as a "frame" row — a 1→N batch output through mapInPandas, the shape
     a real frame extractor uses. Deterministic, so SQL-verifiable."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, vals = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                for frame_idx, pos in enumerate(range(0, len(payload), every_n)):
-                    ids.append(doc_id)
-                    idxs.append(frame_idx)
-                    vals.append(payload[pos])
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame_byte": vals})
-
-    return df.select(id_col, "payload").mapInPandas(_batches, FRAME_SCHEMA)
+    if every_n < 1:
+        raise ValueError(f"every_n must be >= 1, got {every_n}")
+    return _payload_rows(
+        df, id_col, FRAME_SCHEMA,
+        lambda b: [(i, b[pos]) for i, pos in enumerate(range(0, len(b), every_n))],
+    )
 
 
 def synthesize_wav_from_text(
@@ -217,21 +242,11 @@ def synthesize_wav_from_text(
     data size, real size in ds64), driver-gating the 64-bit walk
     under the unchanged n_frames/rms/peak oracle."""
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                _rf64_payload(t.encode("utf-8"), rate)
-                if int(doc_id) % 6 == 5
-                else _wav_payload(t.encode("utf-8"), rate)
-                for doc_id, t in zip(pdf[id_col], pdf[text_col])
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": payloads, "mime": "audio/wav"}
-            )
+    def make(d: int, raw: bytes) -> tuple[bytes, str]:
+        wav = _rf64_payload if d % 6 == 5 else _wav_payload
+        return wav(raw, rate), "audio/wav"
 
-    return df.select(id_col, text_col).mapInPandas(
-        _batches, "doc_id long, payload binary, mime string"
-    )
+    return _synthesize(df, id_col, text_col, make)
 
 
 def _rf64_payload(raw: bytes, rate: int = 8000) -> bytes:
@@ -409,44 +424,21 @@ def synthesize_mixed_audio_from_text(
       bytes as L/R, so the decoded interleaved stream is unchanged and
       the stereo-decorrelation decode runs); mono otherwise."""
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads, mimes = [], []
-            for doc_id, t in zip(pdf[id_col], pdf[text_col]):
-                raw = t.encode("utf-8")
-                d = int(doc_id)
-                if d % 3 == 1:
-                    if d % 6 == 4:
-                        if d % 12 == 4:
-                            comp = b"sowt"
-                        elif d % 24 == 22:
-                            comp = b"fl32"
-                        else:
-                            comp = b"NONE"
-                        payloads.append(_aifc_payload(raw, rate, comp))
-                    else:
-                        payloads.append(_aiff_payload(raw, rate))
-                    mimes.append("audio/aiff")
-                elif d % 3 == 2:
-                    payloads.append(_flac_payload(raw, rate, stereo=d % 6 == 5))
-                    mimes.append("audio/flac")
-                else:
-                    if d % 12 == 6:
-                        payloads.append(
-                            _float_wav_payload(raw, rate, double=d % 24 == 18)
-                        )
-                    elif d % 24 == 12:
-                        payloads.append(_pcm32_wav_payload(raw, rate))
-                    else:
-                        payloads.append(_wav_payload(raw, rate))
-                    mimes.append("audio/wav")
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": payloads, "mime": mimes}
-            )
+    def make(d: int, raw: bytes) -> tuple[bytes, str]:
+        if d % 3 == 1:
+            if d % 6 != 4:
+                return _aiff_payload(raw, rate), "audio/aiff"
+            comp = b"sowt" if d % 12 == 4 else b"fl32" if d % 24 == 22 else b"NONE"
+            return _aifc_payload(raw, rate, comp), "audio/aiff"
+        if d % 3 == 2:
+            return _flac_payload(raw, rate, stereo=d % 6 == 5), "audio/flac"
+        if d % 12 == 6:
+            return _float_wav_payload(raw, rate, double=d % 24 == 18), "audio/wav"
+        if d % 24 == 12:
+            return _pcm32_wav_payload(raw, rate), "audio/wav"
+        return _wav_payload(raw, rate), "audio/wav"
 
-    return df.select(id_col, text_col).mapInPandas(
-        _batches, "doc_id long, payload binary, mime string"
-    )
+    return _synthesize(df, id_col, text_col, make)
 
 
 def synthesize_bmp_from_text(
@@ -462,18 +454,9 @@ def synthesize_bmp_from_text(
     (and SQL-oracled) with no media files in the environment. Rows are
     serialized bottom-up per the BMP spec; width 8 → 24-byte rows, no
     padding."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                _bmp_payload(t.encode("utf-8"), width, height) for t in pdf[text_col]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": payloads, "mime": "image/bmp"}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        _batches, "doc_id long, payload binary, mime string"
+    return _synthesize(
+        df, id_col, text_col,
+        lambda d, raw: (_bmp_payload(raw, width, height), "image/bmp"),
     )
 
 
@@ -518,30 +501,15 @@ def synthesize_mixed_image_from_text(
     oracle. 8×8 fixtures have ≤64 distinct colors, comfortably
     in-palette."""
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads, mimes = [], []
-            for doc_id, t in zip(pdf[id_col], pdf[text_col]):
-                raw = t.encode("utf-8")
-                kind = int(doc_id) % 3
-                if kind == 0:
-                    payloads.append(_bmp_payload(raw, width, height))
-                    mimes.append("image/bmp")
-                    continue
-                rgb = _fixture_bgr(raw, width, height)[:, :, ::-1]
-                if kind == 1:
-                    payloads.append(encode_gif(rgb))
-                    mimes.append("image/gif")
-                else:
-                    payloads.append(encode_png(rgb))
-                    mimes.append("image/png")
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": payloads, "mime": mimes}
-            )
+    def make(d: int, raw: bytes) -> tuple[bytes, str]:
+        if d % 3 == 0:
+            return _bmp_payload(raw, width, height), "image/bmp"
+        rgb = _fixture_bgr(raw, width, height)[:, :, ::-1]
+        if d % 3 == 1:
+            return encode_gif(rgb), "image/gif"
+        return encode_png(rgb), "image/png"
 
-    return df.select(id_col, text_col).mapInPandas(
-        _batches, "doc_id long, payload binary, mime string"
-    )
+    return _synthesize(df, id_col, text_col, make)
 
 
 def synthesize_png_from_text(
@@ -564,72 +532,49 @@ def synthesize_png_from_text(
     under the same pixel contract and unchanged oracles."""
     import zlib
 
-    _chunk = _png_chunk
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make(d: int, raw: bytes) -> tuple[bytes, str]:
+        # the BMP fixture's byte indexing, read as RGB
+        rgb = _fixture_bgr(raw, width, height)
+        if d % 2 == 1:
+            return encode_png(rgb, interlace=d % 6 == 3), "image/png"
         stride = width * 3
-        for pdf in it:
-            payloads = []
-            for doc_id, t in zip(pdf[id_col], pdf[text_col]):
-                raw = t.encode("utf-8")
-                n = len(raw)
-                idx = np.arange(height * width * 3) % max(n, 1)
-                flat = (
-                    np.frombuffer(raw, dtype=np.uint8)[idx]
-                    if n
-                    else np.zeros(height * width * 3, dtype=np.uint8)
-                )
-                if int(doc_id) % 2 == 1:
-                    payloads.append(
-                        encode_png(
-                            flat.reshape(height, width, 3),
-                            interlace=int(doc_id) % 6 == 3,
-                        )
-                    )
-                    continue
-                px = flat.reshape(height, stride).astype(np.int64)
-                lines = []
-                prev = np.zeros(stride, dtype=np.int64)
-                for y in range(height):
-                    f = y % 5
-                    cur = px[y]
-                    filt = np.zeros(stride, dtype=np.int64)
-                    for x in range(stride):
-                        a = int(cur[x - 3]) if x >= 3 else 0
-                        b = int(prev[x])
-                        if f == 0:
-                            pred = 0
-                        elif f == 1:
-                            pred = a
-                        elif f == 2:
-                            pred = b
-                        elif f == 3:
-                            pred = (a + b) >> 1
-                        else:
-                            c = int(prev[x - 3]) if x >= 3 else 0
-                            p = a + b - c
-                            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                            pred = (
-                                a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                            )
-                        filt[x] = (int(cur[x]) - pred) & 0xFF
-                    lines.append(bytes([f]) + filt.astype(np.uint8).tobytes())
-                    prev = cur
-                ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
-                idat = zlib.compress(b"".join(lines))
-                payloads.append(
-                    _PNG_MAGIC
-                    + _chunk(b"IHDR", ihdr)
-                    + _chunk(b"IDAT", idat)
-                    + _chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": payloads, "mime": "image/png"}
-            )
+        px = rgb.reshape(height, stride).astype(np.int64)
+        lines = []
+        prev = np.zeros(stride, dtype=np.int64)
+        for y in range(height):
+            f = y % 5
+            cur = px[y]
+            filt = np.zeros(stride, dtype=np.int64)
+            for x in range(stride):
+                a = int(cur[x - 3]) if x >= 3 else 0
+                b = int(prev[x])
+                if f == 0:
+                    pred = 0
+                elif f == 1:
+                    pred = a
+                elif f == 2:
+                    pred = b
+                elif f == 3:
+                    pred = (a + b) >> 1
+                else:
+                    c = int(prev[x - 3]) if x >= 3 else 0
+                    p = a + b - c
+                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+                filt[x] = (int(cur[x]) - pred) & 0xFF
+            lines.append(bytes([f]) + filt.astype(np.uint8).tobytes())
+            prev = cur
+        ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
+        idat = zlib.compress(b"".join(lines))
+        png = (
+            _PNG_MAGIC
+            + _png_chunk(b"IHDR", ihdr)
+            + _png_chunk(b"IDAT", idat)
+            + _png_chunk(b"IEND", b"")
+        )
+        return png, "image/png"
 
-    return df.select(id_col, text_col).mapInPandas(
-        _batches, "doc_id long, payload binary, mime string"
-    )
+    return _synthesize(df, id_col, text_col, make)
 
 
 def synthesize_jpeg_from_text(
@@ -646,26 +591,12 @@ def synthesize_jpeg_from_text(
     exactly — so the LOSSY codec is exactly lossless on these
     fixtures and the aHash oracle stays a pure function of the text
     bytes, while the full huffman/DCT machinery runs for real."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for t in pdf[text_col]:
-                raw = t.encode("utf-8")
-                n = len(raw)
-                vals = (
-                    np.frombuffer(raw, dtype=np.uint8)[np.arange(n_blocks) % n]
-                    if n
-                    else np.zeros(n_blocks, dtype=np.uint8)
-                )
-                px = np.tile(np.repeat(vals, 8), (8, 1)).astype(np.uint8)
-                payloads.append(encode_jpeg(px, restart_interval=2))
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": payloads, "mime": "image/jpeg"}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        _batches, "doc_id long, payload binary, mime string"
+    return _synthesize(
+        df, id_col, text_col,
+        lambda d, raw: (
+            _mjpeg_frames_for_text(raw, 1, n_blocks, restart_interval=2)[0],
+            "image/jpeg",
+        ),
     )
 
 
@@ -683,23 +614,24 @@ def image_ahash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     SimHash convention so the same pigeonhole block join applies.
     Undecodable payloads quarantine per-payload (no row), matching
     the video_frame_hashes discipline (r9 review)."""
+    return _payload_rows(
+        df, id_col, "doc_id long, ahash long",
+        lambda b: [(_pixel_ahash(_image_pixels(b)),)],
+    )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, out = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    px = _image_pixels(bytes(payload))
-                except (ValueError, NotImplementedError):
-                    continue  # quarantine: unfingerprintable → no row
-                gray3 = px.reshape(-1, 3).sum(axis=1).astype(np.int64)[:AHASH_BITS]
-                total = int(gray3.sum())
-                bits = (AHASH_BITS * gray3 > total).astype(np.int64)
-                ids.append(doc_id)
-                out.append(int((bits << np.arange(AHASH_BITS)).sum()))
-            yield pd.DataFrame({"doc_id": ids, "ahash": out})
 
-    return df.mapInPandas(_batches, "doc_id long, ahash long")
+def _threshold_bits(values: np.ndarray) -> int:
+    """Pack bit k = "value k above the mean", compared in exact integer
+    arithmetic as ``60·v_k > Σv`` so no float mean sits on a tie; 60
+    bits keep the signature sign-safe in a BIGINT."""
+    bits = (AHASH_BITS * values > int(values.sum())).astype(np.int64)
+    return int((bits << np.arange(AHASH_BITS)).sum())
+
+
+def _pixel_ahash(px: np.ndarray) -> int:
+    """aHash of an (h, w, 3) pixel array over its first 60 row-major
+    pixels, brightness gray3 = r+g+b (channel-order independent)."""
+    return _threshold_bits(px.reshape(-1, 3).sum(axis=1).astype(np.int64)[:AHASH_BITS])
 
 
 def image_ahash_near_pairs(
@@ -729,36 +661,19 @@ def synthesize_video_from_text(
     decoded pixel byte k is ``text_bytes[(192·f + k) % n]`` — so the
     REAL container parse + per-frame BMP decode runs at corpus scale
     with no media files."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                _vid0_payload(t.encode("utf-8"), n_frames) for t in pdf[text_col]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": payloads, "mime": "video/x-frames"}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        _batches, "doc_id long, payload binary, mime string"
+    return _synthesize(
+        df, id_col, text_col,
+        lambda d, raw: (_vid0_payload(raw, n_frames), "video/x-frames"),
     )
 
 
 def _vid0_payload(raw: bytes, n_frames: int) -> bytes:
     """The VID0 fixture contract: frame f's decoded pixel byte k is
     ``raw[(192·f + k) % n]`` over 8×8 24-bit BMP frames."""
-    w = h = 8
     n = max(len(raw), 1)
-    src = np.frombuffer(raw, dtype=np.uint8) if len(raw) else np.zeros(1, np.uint8)
-    frames = []
-    for f in range(n_frames):
-        idx = (192 * f + np.arange(h * w * 3)) % n
-        px = src[idx].reshape(h, w, 3)
-        body = np.flipud(px).reshape(h, w * 3).tobytes()
-        header = struct.pack("<2sIHHI", b"BM", 54 + len(body), 0, 0, 54) + struct.pack(
-            "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 0, 0, 0, 0
-        )
-        frames.append(header + body)
+    # frame f is the BMP fixture of raw rotated left by 192·f bytes
+    shifts = [192 * f % n for f in range(n_frames)]
+    frames = [_bmp_payload(raw[s:] + raw[:s], 8, 8) for s in shifts]
     return _VIDEO_MAGIC + struct.pack("<I", n_frames) + b"".join(frames)
 
 
@@ -822,21 +737,12 @@ def synthesize_avi_mjpeg_from_text(
     lossless fixture contract of ``synthesize_jpeg_from_text`` — so a
     STANDARD video container round-trips through the real JPEG codec
     with no media libraries."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                _avi_mjpeg_container(
-                    _mjpeg_frames_for_text(t.encode("utf-8"), n_frames, n_blocks)
-                )
-                for t in pdf[text_col]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": payloads, "mime": "video/x-msvideo"}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        _batches, "doc_id long, payload binary, mime string"
+    return _synthesize(
+        df, id_col, text_col,
+        lambda d, raw: (
+            _avi_mjpeg_container(_mjpeg_frames_for_text(raw, n_frames, n_blocks)),
+            "video/x-msvideo",
+        ),
     )
 
 
@@ -865,9 +771,11 @@ def _avi_mjpeg_container(frames: list[bytes], width: int = 64, height: int = 8) 
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def _mjpeg_frames_for_text(raw: bytes, n_frames: int, n_blocks: int = 8) -> list[bytes]:
-    """The shared block-constant MJPEG fixture contract (AVI and MP4
-    synthesizers): frame f is a 8×(8·n_blocks) grayscale JPEG whose
+def _mjpeg_frames_for_text(
+    raw: bytes, n_frames: int, n_blocks: int = 8, restart_interval: int = 0
+) -> list[bytes]:
+    """The shared block-constant MJPEG fixture contract (JPEG, AVI and
+    MP4 synthesizers): frame f is a 8×(8·n_blocks) grayscale JPEG whose
     block b is solid ``raw[(n_blocks·f + b) % n]`` — exactly lossless
     through the real JPEG codec (DC divisor 8, block-constant)."""
     n = len(raw)
@@ -879,7 +787,7 @@ def _mjpeg_frames_for_text(raw: bytes, n_frames: int, n_blocks: int = 8) -> list
             else np.zeros(n_blocks, dtype=np.uint8)
         )
         px = np.tile(np.repeat(vals, 8), (8, 1)).astype(np.uint8)
-        frames.append(encode_jpeg(px))
+        frames.append(encode_jpeg(px, restart_interval=restart_interval))
     return frames
 
 
@@ -958,22 +866,14 @@ def synthesize_mp4_mjpeg_from_text(
     (frame f block b = ``text_bytes[(n_blocks·f + b) % n]``), so a
     STANDARD MP4 container round-trips through the real sample-table
     walk + JPEG codec with no media libraries."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                _mp4_mjpeg_container(
-                    _mjpeg_frames_for_text(t.encode("utf-8"), n_frames, n_blocks),
-                    width=8 * n_blocks,
-                )
-                for t in pdf[text_col]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": payloads, "mime": "video/mp4"}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        _batches, "doc_id long, payload binary, mime string"
+    return _synthesize(
+        df, id_col, text_col,
+        lambda d, raw: (
+            _mp4_mjpeg_container(
+                _mjpeg_frames_for_text(raw, n_frames, n_blocks), width=8 * n_blocks
+            ),
+            "video/mp4",
+        ),
     )
 
 
@@ -989,35 +889,15 @@ def synthesize_mixed_video_from_text(
     so all three real container walks (and the JPEG codec behind two
     of them) run under one oracle gate. One mapInPandas, one scan."""
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads, mimes = [], []
-            for doc_id, t in zip(pdf[id_col], pdf[text_col]):
-                raw = t.encode("utf-8")
-                kind = int(doc_id) % 3
-                if kind == 0:
-                    payloads.append(_vid0_payload(raw, n_frames))
-                    mimes.append("video/x-frames")
-                elif kind == 1:
-                    payloads.append(
-                        _avi_mjpeg_container(_mjpeg_frames_for_text(raw, n_frames))
-                    )
-                    mimes.append("video/x-msvideo")
-                else:
-                    payloads.append(
-                        _mp4_mjpeg_container(
-                            _mjpeg_frames_for_text(raw, n_frames),
-                            samples_per_chunk=2,
-                        )
-                    )
-                    mimes.append("video/mp4")
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": payloads, "mime": mimes}
-            )
+    def make(d: int, raw: bytes) -> tuple[bytes, str]:
+        if d % 3 == 0:
+            return _vid0_payload(raw, n_frames), "video/x-frames"
+        frames = _mjpeg_frames_for_text(raw, n_frames)
+        if d % 3 == 1:
+            return _avi_mjpeg_container(frames), "video/x-msvideo"
+        return _mp4_mjpeg_container(frames, samples_per_chunk=2), "video/mp4"
 
-    return df.select(id_col, text_col).mapInPandas(
-        _batches, "doc_id long, payload binary, mime string"
-    )
+    return _synthesize(df, id_col, text_col, make)
 
 
 def _avi_video_header(payload: bytes) -> dict:
@@ -1163,24 +1043,10 @@ def video_frame_hashes(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             pos += _FRAME_BYTES
         return out
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, fids, hashes = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    frames = _frame_pixels(bytes(payload))
-                except (ValueError, NotImplementedError):
-                    continue  # quarantine: corrupt/undecodable → no rows
-                for f, px in enumerate(frames):
-                    gray3 = px.reshape(-1, 3).sum(axis=1).astype(np.int64)[:AHASH_BITS]
-                    total = int(gray3.sum())
-                    bits = (AHASH_BITS * gray3 > total).astype(np.int64)
-                    ids.append(doc_id)
-                    fids.append(f)
-                    hashes.append(int((bits << np.arange(AHASH_BITS)).sum()))
-            yield pd.DataFrame({"doc_id": ids, "frame_id": fids, "fhash": hashes})
-
-    return df.mapInPandas(_batches, "doc_id long, frame_id int, fhash long")
+    return _payload_rows(
+        df, id_col, "doc_id long, frame_id int, fhash long",
+        lambda b: [(f, _pixel_ahash(px)) for f, px in enumerate(_frame_pixels(b))],
+    )
 
 
 def video_near_dup_pairs(
@@ -1226,29 +1092,18 @@ def audio_energy_hash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     doc can't join; ``decode_features`` reports why), matching the
     video_frame_hashes discipline (r9 review)."""
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, out = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    s = _pcm16_samples(bytes(payload)).astype(np.int64)
-                except (ValueError, NotImplementedError):
-                    continue  # quarantine: unfingerprintable → no row
-                n = len(s)
-                base, extra = divmod(n, AHASH_BITS)
-                energies = np.zeros(AHASH_BITS, dtype=np.int64)
-                pos = 0
-                for k in range(AHASH_BITS):
-                    ln = base + (1 if k < extra else 0)
-                    energies[k] = int((s[pos : pos + ln] ** 2).sum())
-                    pos += ln
-                total = int(energies.sum())
-                bits = (AHASH_BITS * energies > total).astype(np.int64)
-                ids.append(doc_id)
-                out.append(int((bits << np.arange(AHASH_BITS)).sum()))
-            yield pd.DataFrame({"doc_id": ids, "ehash": out})
+    def rows(b: bytes) -> list[tuple[int]]:
+        s = _pcm16_samples(b).astype(np.int64)
+        base, extra = divmod(len(s), AHASH_BITS)
+        energies = np.zeros(AHASH_BITS, dtype=np.int64)
+        pos = 0
+        for k in range(AHASH_BITS):
+            ln = base + (1 if k < extra else 0)
+            energies[k] = int((s[pos : pos + ln] ** 2).sum())
+            pos += ln
+        return [(_threshold_bits(energies),)]
 
-    return df.mapInPandas(_batches, "doc_id long, ehash long")
+    return _payload_rows(df, id_col, "doc_id long, ehash long", rows)
 
 
 def audio_near_dup_pairs(

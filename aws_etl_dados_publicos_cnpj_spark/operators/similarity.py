@@ -1,16 +1,17 @@
 """[EXT] Similarity search over embedding columns (BASELINE.json north
 star; SURVEY.md §2.3).
 
-Scoring backends — two, by design:
+Scoring forms — two, by design:
 
-- **vectorized (default)**: Arrow-batched numpy. Spark 4 higher-order
+- **vectorized** (what the operators run): Arrow-batched numpy. Spark 4 higher-order
   functions are interpreted (not codegen'd, ~30× slower — measured for
   MinHash, commit 9f59134), so the per-pair dot products here go
   through ``pandas_udf`` / ``mapInPandas`` where a whole Arrow batch is
   one BLAS call. This is the 100 TB hot path.
 - **hof**: the JVM ``zip_with``/``aggregate`` sequential left fold —
   bit-deterministic and matching DuckDB's ``list_cosine_similarity``
-  loop, kept as the oracle twin and for environments without Arrow.
+  loop, kept as private oracle twins (``_*_hof``) the tests compare
+  the vectorized operators against.
 
 Operators:
 
@@ -124,26 +125,21 @@ def ann_bruteforce_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    backend: str = "vectorized",
 ) -> DataFrame:
     """Exact top-k cosine neighbors per probe.
 
-    Vectorized backend (default): the probe set is collected to a small
-    numpy matrix (bounded by definition — it is the query side) and
-    shipped inside the ``mapInPandas`` closure; every corpus Arrow
-    batch is scored with ONE ``C @ P.T`` matrix multiply and emits only
-    its local top-k rows per probe. Exactness is preserved because
+    The probe set is collected to a small numpy matrix (bounded by
+    definition — it is the query side) and shipped inside the
+    ``mapInPandas`` closure; every corpus Arrow batch is scored with
+    ONE ``C @ P.T`` matrix multiply and emits only its local top-k
+    rows per probe. Exactness is preserved because
     global top-k is a monotone selection over batch-local top-k (same
     (sim DESC, neighbor ASC) order both levels). The corpus is read
     map-only — no shuffle of corpus rows, no per-probe Arrow transfer —
     and the final window ranks (batches × probes × k) rows regardless
-    of corpus size.
-
-    ``backend='hof'`` keeps the deterministic JVM fold (oracle twin).
+    of corpus size. ``_bruteforce_topk_hof`` is the deterministic JVM
+    fold twin.
     """
-    if backend == "hof":
-        return _bruteforce_topk_hof(corpus, probes, k, id_col, vec_col)
-
     probe_pd = probes.select(
         F.col(id_col).alias("probe_id"),
         F.col(vec_col).cast("array<double>").alias("pvec"),
@@ -196,23 +192,6 @@ def _hyperplanes(dim: int = EMBED_DIM, planes: int = LSH_PLANES, seed: int = LSH
     return rng.randn(planes, dim).tolist()
 
 
-def lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Sign-LSH bucket code: bit p = 1 iff dot(vec, plane_p) > 0.
-    Packed with integer shiftleft/bitwiseOR so the code stays LongType
-    (exact) at any plane count — floating-point ``pow`` would silently
-    round bits away above 2^53. JVM-expression form (oracle twin);
-    ``lsh_bucket_vec`` is the Arrow hot path."""
-    code: Column = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        plane_col = F.array(*[F.lit(float(x)) for x in plane])
-        code = code.bitwiseOR(
-            F.when(
-                _dot(vec_col, plane_col) > 0, F.shiftleft(F.lit(1).cast("long"), p)
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return code
-
-
 _QUANT_SCHEMA = StructType(
     [
         StructField("scale", DoubleType()),
@@ -237,7 +216,6 @@ def quantize_embeddings(
     df: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    backend: str = "vec",
 ) -> DataFrame:
     """Symmetric per-vector int8 quantization: ``scale = max|v| / 127``,
     ``q_i = round(v_i / scale)`` ∈ [-127, 127] (the bound holds without
@@ -247,28 +225,34 @@ def quantize_embeddings(
     This is the storage/shuffle reducer for 100 TB embedding corpora:
     int8 codes are 8× smaller than float64 on the wire, so ANN candidate
     generation reads codes and only the exact re-rank touches the float
-    originals. ``backend='vec'`` (default) is one numpy pass per Arrow
-    batch; ``backend='hof'`` is the deterministic JVM-expression twin
-    the DuckDB oracle mirrors (both proven bit-identical in tests).
+    originals. One numpy pass per Arrow batch; ``_quantize_hof`` is the
+    deterministic JVM-expression twin the DuckDB oracle mirrors (proven
+    bit-identical in tests).
 
     Output: (id_col, scale, qvec array<int>).
     """
     v = F.col(vec_col).cast("array<double>")
-    if backend == "hof":
-        maxabs = F.array_max(F.transform(v, lambda x: F.abs(x)))
-        staged = df.select(F.col(id_col), v.alias("__v"), (maxabs / F.lit(127)).alias("scale"))
-        q = F.when(
-            F.col("scale") == F.lit(0.0),
-            F.transform(F.col("__v"), lambda x: F.lit(0)),
-        ).otherwise(
-            F.transform(
-                F.col("__v"),
-                lambda x: F.round(x / F.col("scale"), 0).cast("int"),
-            )
-        )
-        return staged.select(id_col, "scale", q.alias("qvec"))
     out = df.select(F.col(id_col), _quantize_vec(v).alias("__q"))
     return out.select(id_col, F.col("__q.scale").alias("scale"), F.col("__q.qvec").alias("qvec"))
+
+
+def _quantize_hof(
+    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
+) -> DataFrame:
+    """JVM-expression twin of ``quantize_embeddings``."""
+    v = F.col(vec_col).cast("array<double>")
+    maxabs = F.array_max(F.transform(v, lambda x: F.abs(x)))
+    staged = df.select(F.col(id_col), v.alias("__v"), (maxabs / F.lit(127)).alias("scale"))
+    q = F.when(
+        F.col("scale") == F.lit(0.0),
+        F.transform(F.col("__v"), lambda x: F.lit(0)),
+    ).otherwise(
+        F.transform(
+            F.col("__v"),
+            lambda x: F.round(x / F.col("scale"), 0).cast("int"),
+        )
+    )
+    return staged.select(id_col, "scale", q.alias("qvec"))
 
 
 def quantize_embeddings_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1076,30 +1060,16 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    backend: str = "vectorized",
 ) -> DataFrame:
     """Encode each vector as its per-subspace argmin-L2 code array —
     one map-side pass, no shuffle.
 
-    Vectorized backend (default): one Arrow-batched numpy broadcast
-    per subspace — Spark 4 higher-order functions are interpreted, and
-    the unrolled m×k fold expressions measured ~20× slower at sf0.1.
-    ``backend='hof'`` keeps the JVM expression form (oracle twin:
-    sequential fold exactly like DuckDB's list_distance loop)."""
+    One Arrow-batched numpy broadcast per subspace — Spark 4
+    higher-order functions are interpreted, and the unrolled m×k fold
+    expressions measured ~20× slower at sf0.1. ``_pq_encode_hof`` keeps
+    the JVM expression form (oracle twin: sequential fold exactly like
+    DuckDB's list_distance loop)."""
     vec = F.col(vec_col).cast("array<double>")
-    if backend == "hof":
-        codes = []
-        for m, book in enumerate(codebooks):
-            sub = len(book[0])
-            s = F.slice(vec, m * sub + 1, sub)
-            dists = F.array(
-                *[
-                    F.struct(_sq_l2(s, c).alias("d"), F.lit(i).alias("code"))
-                    for i, c in enumerate(book)
-                ]
-            )
-            codes.append(F.element_at(F.array_sort(dists), 1).getField("code"))
-        return df.select(F.col(id_col), F.array(*codes).alias("codes"))
 
     @pandas_udf(ArrayType(IntegerType()))
     def _codes(vecs: pd.Series) -> pd.Series:
@@ -1109,6 +1079,28 @@ def pq_encode(
     return df.select(F.col(id_col), _codes(vec).alias("codes"))
 
 
+def _pq_encode_hof(
+    df: DataFrame,
+    codebooks: list[list[list[float]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """JVM-expression twin of ``pq_encode``."""
+    vec = F.col(vec_col).cast("array<double>")
+    codes = []
+    for m, book in enumerate(codebooks):
+        sub = len(book[0])
+        s = F.slice(vec, m * sub + 1, sub)
+        dists = F.array(
+            *[
+                F.struct(_sq_l2(s, c).alias("d"), F.lit(i).alias("code"))
+                for i, c in enumerate(book)
+            ]
+        )
+        codes.append(F.element_at(F.array_sort(dists), 1).getField("code"))
+    return df.select(F.col(id_col), F.array(*codes).alias("codes"))
+
+
 def ann_pq_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -1116,108 +1108,121 @@ def ann_pq_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    backend: str = "vectorized",
 ) -> DataFrame:
     """ADC top-k: corpus rows are scored through their PQ codes against
     each probe's m×|codebook| distance lookup table — the probe stays
     full-precision, the corpus never ships raw vectors past the scan.
 
-    Vectorized backend (default, the ``ann_bruteforce_topk`` shape):
-    probe LUTs are a small numpy tensor shipped in the ``mapInPandas``
-    closure (the probe side is bounded by definition); each corpus
-    Arrow batch encodes with one numpy broadcast and scores ALL probes
-    with one ``take_along_axis`` gather per subspace, emitting only its
-    batch-local top-k per probe — exact because global top-k is a
-    monotone selection over batch-local top-k. ``backend='hof'`` keeps
-    the JVM expression form: broadcast probe LUT arrays +
-    ``zip_with(codes, lut, element_at)`` (oracle twin)."""
-    if backend == "hof":
-        encoded = pq_encode(corpus, codebooks, id_col, vec_col, "hof").withColumnRenamed(
-            id_col, "neighbor_id"
-        )
-        pvec = F.col(vec_col).cast("array<double>")
-        lut = F.array(
-            *[
-                F.array(
-                    *[
-                        _sq_l2(F.slice(pvec, m * len(book[0]) + 1, len(book[0])), c)
-                        for c in book
-                    ]
-                )
-                for m, book in enumerate(codebooks)
-            ]
-        )
-        p = probes.select(F.col(id_col).alias("probe_id"), lut.alias("lut"))
-        dist = F.aggregate(
-            F.zip_with(
-                F.col("codes"), F.col("lut"), lambda c, row: F.element_at(row, c + 1)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        scored = (
-            encoded.join(F.broadcast(p))
-            .filter(F.col("neighbor_id") != F.col("probe_id"))
-            .select("probe_id", "neighbor_id", F.round(dist, 4).alias("dist"))
-        )
-    else:
-        probe_pd = probes.select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).cast("array<double>").alias("pvec"),
-        ).toPandas()
-        pids = probe_pd["probe_id"].to_numpy()
-        P = (
-            np.stack(probe_pd["pvec"].to_numpy())
-            if len(probe_pd)
-            else np.zeros((0, 1))
-        )
-        # LUT[p, m, code] = squared L2 of probe p's subvector m vs centroid
-        luts = np.stack(
-            [
-                ((P[:, m * len(b[0]) : (m + 1) * len(b[0]), None]
-                  - np.asarray(b, dtype=np.float64).T[None, :, :]) ** 2).sum(axis=1)
-                for m, b in enumerate(codebooks)
-            ],
-            axis=1,
-        ) if len(probe_pd) else np.zeros((0, len(codebooks), 1))
+    The ``ann_bruteforce_topk`` shape: probe LUTs are a small numpy
+    tensor shipped in the ``mapInPandas`` closure (the probe side is
+    bounded by definition); each corpus Arrow batch encodes with one
+    numpy broadcast and scores ALL probes with one ``take_along_axis``
+    gather per subspace, emitting only its batch-local top-k per probe
+    — exact because global top-k is a monotone selection over
+    batch-local top-k. ``_ann_pq_topk_hof`` keeps the JVM expression
+    form: broadcast probe LUT arrays + ``zip_with(codes, lut,
+    element_at)`` (oracle twin)."""
+    probe_pd = probes.select(
+        F.col(id_col).alias("probe_id"),
+        F.col(vec_col).cast("array<double>").alias("pvec"),
+    ).toPandas()
+    pids = probe_pd["probe_id"].to_numpy()
+    P = (
+        np.stack(probe_pd["pvec"].to_numpy())
+        if len(probe_pd)
+        else np.zeros((0, 1))
+    )
+    # LUT[p, m, code] = squared L2 of probe p's subvector m vs centroid
+    luts = np.stack(
+        [
+            ((P[:, m * len(b[0]) : (m + 1) * len(b[0]), None]
+              - np.asarray(b, dtype=np.float64).T[None, :, :]) ** 2).sum(axis=1)
+            for m, b in enumerate(codebooks)
+        ],
+        axis=1,
+    ) if len(probe_pd) else np.zeros((0, len(codebooks), 1))
 
-        def score_batches(batches):
-            for pdf in batches:
-                if not len(pdf) or not len(pids):
-                    continue
-                ids = pdf["neighbor_id"].to_numpy()
-                C = np.stack(pdf["cvec"].to_numpy())
-                codes = _pq_codes_np(C, codebooks)  # (B, M)
-                # dist[b, p] = Σ_m LUT[p, m, codes[b, m]]
-                d = np.zeros((len(ids), len(pids)))
-                for m in range(codes.shape[1]):
-                    d += luts[:, m, :][:, codes[:, m]].T
-                d = _round_half_away(d)
-                out_p, out_n, out_d = [], [], []
-                for j, pid in enumerate(pids):
-                    col = d[:, j]
-                    mask = ids != pid
-                    cand_ids, cand_d = ids[mask], col[mask]
-                    order = np.lexsort((cand_ids, cand_d))[:k]
-                    out_p.append(np.full(len(order), pid))
-                    out_n.append(cand_ids[order])
-                    out_d.append(cand_d[order])
-                yield pd.DataFrame(
-                    {
-                        "probe_id": np.concatenate(out_p),
-                        "neighbor_id": np.concatenate(out_n),
-                        "dist": np.concatenate(out_d),
-                    }
-                )
+    def score_batches(batches):
+        for pdf in batches:
+            if not len(pdf) or not len(pids):
+                continue
+            ids = pdf["neighbor_id"].to_numpy()
+            C = np.stack(pdf["cvec"].to_numpy())
+            codes = _pq_codes_np(C, codebooks)  # (B, M)
+            # dist[b, p] = Σ_m LUT[p, m, codes[b, m]]
+            d = np.zeros((len(ids), len(pids)))
+            for m in range(codes.shape[1]):
+                d += luts[:, m, :][:, codes[:, m]].T
+            d = _round_half_away(d)
+            out_p, out_n, out_d = [], [], []
+            for j, pid in enumerate(pids):
+                col = d[:, j]
+                mask = ids != pid
+                cand_ids, cand_d = ids[mask], col[mask]
+                order = np.lexsort((cand_ids, cand_d))[:k]
+                out_p.append(np.full(len(order), pid))
+                out_n.append(cand_ids[order])
+                out_d.append(cand_d[order])
+            yield pd.DataFrame(
+                {
+                    "probe_id": np.concatenate(out_p),
+                    "neighbor_id": np.concatenate(out_n),
+                    "dist": np.concatenate(out_d),
+                }
+            )
 
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cvec"),
-        )
-        scored = c.mapInPandas(
-            score_batches, "probe_id long, neighbor_id long, dist double"
-        )
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).cast("array<double>").alias("cvec"),
+    )
+    scored = c.mapInPandas(
+        score_batches, "probe_id long, neighbor_id long, dist double"
+    )
+    return _pq_rank(scored, k)
 
+
+def _ann_pq_topk_hof(
+    corpus: DataFrame,
+    probes: DataFrame,
+    codebooks: list[list[list[float]]],
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """JVM-expression twin of ``ann_pq_topk``."""
+    encoded = _pq_encode_hof(corpus, codebooks, id_col, vec_col).withColumnRenamed(
+        id_col, "neighbor_id"
+    )
+    pvec = F.col(vec_col).cast("array<double>")
+    lut = F.array(
+        *[
+            F.array(
+                *[
+                    _sq_l2(F.slice(pvec, m * len(book[0]) + 1, len(book[0])), c)
+                    for c in book
+                ]
+            )
+            for m, book in enumerate(codebooks)
+        ]
+    )
+    p = probes.select(F.col(id_col).alias("probe_id"), lut.alias("lut"))
+    dist = F.aggregate(
+        F.zip_with(
+            F.col("codes"), F.col("lut"), lambda c, row: F.element_at(row, c + 1)
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    scored = (
+        encoded.join(F.broadcast(p))
+        .filter(F.col("neighbor_id") != F.col("probe_id"))
+        .select("probe_id", "neighbor_id", F.round(dist, 4).alias("dist"))
+    )
+    return _pq_rank(scored, k)
+
+
+def _pq_rank(scored: DataFrame, k: int) -> DataFrame:
+    """Global (dist ASC, neighbor_id ASC) top-k per probe."""
     w = Window.partitionBy("probe_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w))

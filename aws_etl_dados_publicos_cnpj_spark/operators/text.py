@@ -93,10 +93,10 @@ def token_count(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def _fingerprint_hof() -> Column:
+def _fingerprint_hof(text: Column) -> Column:
     """JVM higher-order-function form of the rolling hash — the
     deterministic oracle twin (interpreted, so not the hot path)."""
-    codes = F.transform(F.split(F.col("__fp_text"), ""), lambda ch: F.ascii(ch).cast("long"))
+    codes = F.transform(F.split(text, ""), lambda ch: F.ascii(ch).cast("long"))
     return F.aggregate(
         codes,
         F.lit(0).cast("long"),
@@ -131,18 +131,11 @@ def fingerprint(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    backend: str = "vectorized",
 ) -> DataFrame:
     """Deterministic rolling (polynomial) hash of the full text, mod a
     large prime — an order-sensitive document fingerprint usable as a
-    cheap exact-dup key. Both backends produce identical values
-    (integer math throughout); ``vectorized`` is the hot path,
-    ``hof`` the JVM expression twin."""
-    if backend == "hof":
-        return df.select(
-            id_col,
-            F.col(text_col).alias("__fp_text"),
-        ).select(id_col, _fingerprint_hof().alias("fingerprint"))
+    cheap exact-dup key. Arrow-vectorized; ``_fingerprint_hof`` is the
+    JVM expression twin, identical by integer math throughout."""
     return df.select(id_col, _fingerprint_vec(F.col(text_col)).alias("fingerprint"))
 
 

@@ -132,16 +132,3 @@ RAW_SCHEMAS: dict[str, T.StructType] = {
     ),
 }
 
-
-def typed_schema(table: str) -> T.StructType:
-    """Schema of the table *after* source-side normalization: the
-    decimal-comma string columns become DoubleType (matching the Glue
-    sample's ``cap_soc: double``, ``check_update.py:172-174``)."""
-    raw = RAW_SCHEMAS[table]
-    comma_cols = set(DECIMAL_COMMA_COLUMNS.get(table, []))
-    return T.StructType(
-        [
-            T.StructField(f.name, T.DoubleType() if f.name in comma_cols else f.dataType, True)
-            for f in raw
-        ]
-    )

@@ -29,7 +29,6 @@ def write_snapshot(
     df: DataFrame,
     table_root: str,
     ref_date: str | int,
-    target_partitions: int | None = None,
 ) -> None:
     """Land one snapshot partition: ``<table_root>/ref_date=<date>/``.
 
@@ -39,8 +38,6 @@ def write_snapshot(
     partition.
     """
     out = df.withColumn(PARTITION_COLUMN, F.lit(str(ref_date)))
-    if target_partitions is not None:
-        out = out.repartition(target_partitions)
     out.write.mode("overwrite").partitionBy(PARTITION_COLUMN).parquet(table_root)
 
 

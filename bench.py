@@ -162,7 +162,11 @@ def fitted_line(out: dict, budget: int = TAIL_BUDGET) -> str:
     total to truncation). The COMPLETE payload lives in
     BENCH.out.json; this line is what the driver records."""
     compact = dict(out)
-    for drop in ("cold_total", "errors", "methodology"):
+    if "errors" in compact and len(json.dumps(compact, separators=(",", ":"))) > budget:
+        # keep WHICH queries failed (``value`` sums fewer queries then);
+        # the messages stay in BENCH.out.json
+        compact["errors"] = sorted(compact["errors"])
+    for drop in ("cold_total", "methodology"):
         line = json.dumps(compact, separators=(",", ":"))
         if len(line) <= budget:
             return line

@@ -18,7 +18,7 @@ from aws_etl_dados_publicos_cnpj_spark.sources.sink import (
 def test_compact_partition_reduces_files_keeps_rows(spark, tmp_path):
     root = str(tmp_path / "t")
     df = spark.range(10_000).withColumnRenamed("id", "codigo")
-    write_snapshot(df, root, "20230506", target_partitions=16)
+    write_snapshot(df.repartition(16), root, "20230506")
     part = f"{root}/ref_date=20230506"
     assert len(glob.glob(f"{part}/*.parquet")) == 16
     n = compact_partition(spark, root, "20230506", target_files=2)
@@ -35,7 +35,7 @@ def test_compact_partition_recovers_from_stale_aside(spark, tmp_path):
     produce the right data, with no aside left behind."""
     root = str(tmp_path / "t")
     df = spark.range(1_000).withColumnRenamed("id", "codigo")
-    write_snapshot(df, root, "20230506", target_partitions=4)
+    write_snapshot(df.repartition(4), root, "20230506")
     stale = f"{root}/.compact_old_20230506"
     os.makedirs(stale)
     with open(f"{stale}/junk.txt", "w") as fh:
@@ -52,7 +52,7 @@ def test_compact_partition_restores_partition_left_aside(spark, tmp_path):
     must rename it back, compact it, and leave no aside."""
     root = str(tmp_path / "t")
     df = spark.range(1_000).withColumnRenamed("id", "codigo")
-    write_snapshot(df, root, "20230506", target_partitions=4)
+    write_snapshot(df.repartition(4), root, "20230506")
     part = f"{root}/ref_date=20230506"
     aside = f"{root}/.compact_old_20230506"
     os.rename(part, aside)

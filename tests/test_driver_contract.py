@@ -86,6 +86,8 @@ def test_fitted_line_always_parses_within_budget():
     parsed = json.loads(line)
     assert parsed["queries"].keys() == queries.keys()
     assert parsed["value"] == 12.3 and parsed["cpus"] == 4
+    # a failed query's name survives; only its message is dropped
+    assert parsed["errors"] == ["some_query"]
     # a small payload keeps everything
     small = dict(out, queries={"q01": 1.0})
     parsed_small = json.loads(bench.fitted_line(small))

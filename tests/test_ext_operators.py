@@ -252,6 +252,9 @@ def test_ann_vectorized_equals_hof_backend(spark):
     """The mapInPandas GEMM path must return exactly what the
     deterministic JVM/HOF twin returns (same rounding, same ties)."""
     from aws_etl_dados_publicos_cnpj_spark.operators import load_table
+    from aws_etl_dados_publicos_cnpj_spark.operators.similarity import (
+        _bruteforce_topk_hof,
+    )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     probes = emb.filter(F.col("vec_id") < 5)
@@ -259,7 +262,8 @@ def test_ann_vectorized_equals_hof_backend(spark):
         tuple(r) for r in ann_bruteforce_topk(emb, probes, k=5).collect()
     )
     hof = sorted(
-        tuple(r) for r in ann_bruteforce_topk(emb, probes, k=5, backend="hof").collect()
+        tuple(r)
+        for r in _bruteforce_topk_hof(emb, probes, 5, "vec_id", "embedding").collect()
     )
     assert vec == hof and len(vec) == 25
 
@@ -323,10 +327,16 @@ def test_fingerprint_vectorized_equals_hof(spark):
     """Integer math throughout — the Arrow batch backend must be
     bit-identical to the JVM fold on real corpus text."""
     from aws_etl_dados_publicos_cnpj_spark.operators import load_table
+    from aws_etl_dados_publicos_cnpj_spark.operators.text import _fingerprint_hof
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     vec = {r.doc_id: r.fingerprint for r in fingerprint(docs).collect()}
-    hof = {r.doc_id: r.fingerprint for r in fingerprint(docs, backend="hof").collect()}
+    hof = {
+        r.doc_id: r.fingerprint
+        for r in docs.select(
+            "doc_id", _fingerprint_hof(F.col("text")).alias("fingerprint")
+        ).collect()
+    }
     assert vec == hof and len(vec) == 500
 
 
@@ -372,12 +382,13 @@ def test_redact_pii_planted(spark):
 def test_quantize_backends_bit_identical_and_bounded(spark):
     from aws_etl_dados_publicos_cnpj_spark.operators import load_table
     from aws_etl_dados_publicos_cnpj_spark.operators.similarity import (
+        _quantize_hof,
         quantize_embeddings,
     )
 
     emb = load_table(spark, SF_SMALL, "embeddings")
     vec = sorted(tuple(r) for r in quantize_embeddings(emb).collect())
-    hof = sorted(tuple(r) for r in quantize_embeddings(emb, backend="hof").collect())
+    hof = sorted(tuple(r) for r in _quantize_hof(emb).collect())
     assert vec == hof
     for _, scale, q in vec:
         assert scale >= 0
@@ -683,6 +694,8 @@ def test_pq_backends_equal(spark):
         PQ_PINNED_CODEBOOKS,
     )
     from aws_etl_dados_publicos_cnpj_spark.operators.similarity import (
+        _ann_pq_topk_hof,
+        _pq_encode_hof,
         ann_pq_topk,
         pq_encode,
     )
@@ -693,7 +706,7 @@ def test_pq_backends_equal(spark):
     vec = {r.vec_id: list(r.codes) for r in pq_encode(emb, PQ_PINNED_CODEBOOKS).collect()}
     hof = {
         r.vec_id: list(r.codes)
-        for r in pq_encode(emb, PQ_PINNED_CODEBOOKS, backend="hof").collect()
+        for r in _pq_encode_hof(emb, PQ_PINNED_CODEBOOKS).collect()
     }
     assert vec == hof
     probes = emb.filter(F.col("vec_id") < 5)
@@ -701,7 +714,7 @@ def test_pq_backends_equal(spark):
     b = sorted(
         map(
             tuple,
-            ann_pq_topk(emb, probes, PQ_PINNED_CODEBOOKS, k=3, backend="hof").collect(),
+            _ann_pq_topk_hof(emb, probes, PQ_PINNED_CODEBOOKS, k=3).collect(),
         )
     )
     assert a == b and len(a) > 0

@@ -193,6 +193,14 @@ def test_sample_audio_frames_every_n(spark):
         (2, 6.0),
         (3, 9.0),
     ]
+    # a non-positive step is the caller's error, raised up front rather
+    # than read as an undecodable payload that drops every document
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import sample_frames
+
+    for stage in (sample_audio_frames, sample_frames):
+        for bad in (0, -3):
+            with pytest.raises(ValueError, match="every_n"):
+                stage(df, every_n=bad)
 
 
 def make_png(px: np.ndarray, color_type: int = 2, filters=None) -> bytes:
@@ -2556,6 +2564,29 @@ def test_audio_and_image_hashes_quarantine_per_payload(spark):
     mixed = spark.createDataFrame(rows, "doc_id long, payload binary")
     got = {r.doc_id for r in image_ahash(mixed).collect()}
     assert got == {0, 1, 2}
+
+    # a batch where EVERY payload drops still yields zero rows under
+    # the declared schema (an empty output batch, not an error)
+    from aws_etl_dados_publicos_cnpj_spark.operators.multimodal import (
+        sample_audio_frames,
+        video_frame_hashes,
+    )
+
+    garbage = spark.createDataFrame(
+        [(7, b""), (8, b"\x00" * 32), (9, b"RIFF\x04\x00\x00\x00WAVE")],
+        "doc_id long, payload binary",
+    ).coalesce(1)
+    for stage, schema in [
+        (image_ahash, "doc_id bigint, ahash bigint"),
+        (audio_energy_hash, "doc_id bigint, ehash bigint"),
+        (video_frame_hashes, "doc_id bigint, frame_id int, fhash bigint"),
+        (sample_audio_frames, "doc_id bigint, frame_idx int, sample double"),
+    ]:
+        out = stage(garbage)
+        assert out.collect() == []
+        assert ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in out.schema
+        ) == schema
 
 
 # --- PNG color-type / Adam7 coverage (r9) ----------------------------
