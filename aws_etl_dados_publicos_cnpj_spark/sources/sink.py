@@ -12,9 +12,10 @@ Replaces three reference operators (SURVEY.md §2.1 S22/S23/S25):
 
 Scale notes: dynamic partition overwrite makes snapshot re-ingest
 idempotent per ``ref_date`` (the reference blindly re-PUTs objects and
-can leave mixed partial state — SURVEY.md §7.4). ``target_file_rows``
-compacts output files so a 100 TB table lands as bounded-size parquet
-files instead of one file per upstream task.
+can leave mixed partial state — SURVEY.md §7.4). ``compact_partition``
+rewrites a snapshot into bounded-size parquet files instead of one file
+per upstream task. Files land zstd-compressed (the session's codec,
+``session.build_session``).
 """
 
 from __future__ import annotations
@@ -32,13 +33,23 @@ def write_snapshot(
 ) -> None:
     """Land one snapshot partition: ``<table_root>/ref_date=<date>/``.
 
-    With ``partitionOverwriteMode=dynamic`` (session default) only the
-    written ``ref_date`` value is replaced — other snapshots are
-    untouched, so a weekly incremental run is exactly-once per
-    partition.
+    The write sets ``partitionOverwriteMode=dynamic`` itself, so only
+    the written ``ref_date`` value is replaced whatever the session's
+    mode — other snapshots are untouched, so a weekly incremental run is
+    exactly-once per partition.
     """
-    out = df.withColumn(PARTITION_COLUMN, F.lit(str(ref_date)))
-    out.write.mode("overwrite").partitionBy(PARTITION_COLUMN).parquet(table_root)
+    _overwrite_partition(df.withColumn(PARTITION_COLUMN, F.lit(str(ref_date))), table_root)
+
+
+def _overwrite_partition(out: DataFrame, table_root: str) -> None:
+    # per-write option: a session in Spark's default static mode would
+    # otherwise delete every other ref_date under table_root
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(PARTITION_COLUMN)
+        .parquet(table_root)
+    )
 
 
 def register_table(
@@ -129,13 +140,14 @@ def write_clustered(
     repartitionByRange + sortWithinPartitions gives every parquet file
     a narrow min/max band on the cluster keys, so row-group statistics
     prune point/range scans (the Z-order-lite that plain parquet
-    supports)."""
+    supports). Replaces only the ``ref_date`` partition it writes, as
+    ``write_snapshot`` does."""
     out = (
         df.repartitionByRange(files_per_partition, *cluster_by)
         .sortWithinPartitions(*cluster_by)
         .withColumn(PARTITION_COLUMN, F.lit(str(ref_date)))
     )
-    out.write.mode("overwrite").partitionBy(PARTITION_COLUMN).parquet(table_root)
+    _overwrite_partition(out, table_root)
 
 
 def analyze_table(

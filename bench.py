@@ -1,11 +1,11 @@
 """Benchmark harness (driver contract): run the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and print ONE JSON line (fitted to the
-driver's 2000-char tail capture; the complete payload — methodology,
-cold timings, errors — is written to BENCH.out.json). ``value`` is
-this run's own sum of per-query warm timings, measured on ``cpus``
-cores; run-to-run drift is judged by comparing several runs at the
-same ``cpus``, not inside the harness.
+local[$SPARK_GRAFT_CPUS] (default: the process's cores) and print ONE
+JSON line (fitted to the driver's 2000-char tail capture; the complete
+payload — methodology, cold timings, errors — is written to
+BENCH.out.json). ``value`` is this run's own sum of per-query warm
+timings, measured on ``cpus`` cores; run-to-run drift is judged by
+comparing several runs at the same ``cpus``, not inside the harness.
 
 Headline set: the flagship star join + the scan/agg/window/dedup/ANN
 representatives — one per operator family, so a regression in any
@@ -195,7 +195,7 @@ def fitted_line(out: dict, budget: int = TAIL_BUDGET) -> str:
 
 def main() -> None:
     import __spark_entry__ as entrymod
-    from aws_etl_dados_publicos_cnpj_spark.session import build_session
+    from aws_etl_dados_publicos_cnpj_spark.session import build_session, local_cpus
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -258,8 +258,9 @@ def main() -> None:
         # NOTE (r5 drift investigation): do NOT force System.gc() here —
         # measured +31% on the common set (150 forced full GCs cost far
         # more than the checkpoint-block pressure they release).
-    # the local[N] core count the timings were measured on
-    cpus = spark.sparkContext.defaultParallelism
+    # the local[N] core count the timings were measured on: the
+    # affinity count unless $SPARK_GRAFT_CPUS sets it, as in perfbench
+    cpus = local_cpus()
     spark.stop()
 
     out = {

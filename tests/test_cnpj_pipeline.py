@@ -15,7 +15,12 @@ from aws_etl_dados_publicos_cnpj_spark.plans.pipeline import run_pipeline
 from aws_etl_dados_publicos_cnpj_spark.plans.planner import CatalogState, plan_updates
 from aws_etl_dados_publicos_cnpj_spark.sources.cnpj_csv import read_cnpj_csv
 from aws_etl_dados_publicos_cnpj_spark.sources.listing import ListingRow, listing_df
-from aws_etl_dados_publicos_cnpj_spark.sources.sink import latest_partition, list_partitions
+from aws_etl_dados_publicos_cnpj_spark.sources.sink import (
+    latest_partition,
+    list_partitions,
+    write_clustered,
+    write_snapshot,
+)
 
 EMPRESAS_CSV = (
     "12345678;EMPRESA SÃO PAULO LTDA;2046;10;1234,56;3;SP\n"
@@ -138,6 +143,54 @@ def test_partition_overwrite_idempotent(spark, fixture_zips):
     for _ in range(2):
         run_pipeline(spark, listing, CatalogState({}), wh, str(fixture_zips / "scratch"))
     assert spark.sql("SELECT count(*) AS n FROM default.empresas").collect()[0].n == 3
+
+
+def test_snapshot_writers_keep_other_dates_in_static_session(spark, tmp_path):
+    """Both snapshot writers replace only their own ``ref_date``, even
+    in a session left at Spark's default static overwrite mode (where a
+    plain partitioned overwrite deletes every other snapshot)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        df = spark.createDataFrame([(1, "A")], "codigo long, desc string")
+        writers = {
+            "snapshot": write_snapshot,
+            "clustered": lambda d, root, ref: write_clustered(d, root, ref, ["codigo"], 1),
+        }
+        for name, write in writers.items():
+            root = str(tmp_path / name)
+            write(df, root, "20240101")
+            write(df, root, "20240108")
+            parts = sorted(d for d in os.listdir(root) if d.startswith("ref_date="))
+            assert parts == ["ref_date=20240101", "ref_date=20240108"], name
+            assert spark.read.parquet(root).count() == 2, name
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_snapshots_land_zstd_and_read_back_outside_spark(spark, fixture_zips):
+    """Every landed column chunk is zstd (the session's codec), and
+    DuckDB reads the files to the same row count as Spark."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    wh = fixture_zips / "warehouse"
+    run_pipeline(
+        spark, _listing(spark, fixture_zips), CatalogState({}), str(wh), str(fixture_zips / "scratch")
+    )
+    for table in ("empresas", "municipios"):
+        codecs = set()
+        for f in (wh / table).rglob("*.parquet"):
+            meta = pq.read_metadata(f)
+            for g in range(meta.num_row_groups):
+                group = meta.row_group(g)
+                codecs |= {group.column(c).compression for c in range(group.num_columns)}
+        assert codecs == {"ZSTD"}, (table, codecs)
+        n_duck = duckdb.sql(
+            f"SELECT count(*) FROM read_parquet('{wh / table}/*/*.parquet')"
+        ).fetchone()[0]
+        assert n_duck == spark.table(f"default.{table}").count() > 0
 
 
 def test_read_unknown_table_fails(spark):

@@ -3,10 +3,13 @@ elimination, partition pruning visibility."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from aws_etl_dados_publicos_cnpj_spark.operators import load_table
 from aws_etl_dados_publicos_cnpj_spark.operators.skew import salted_join
+from aws_etl_dados_publicos_cnpj_spark.session import local_cpus
 from aws_etl_dados_publicos_cnpj_spark.sources.sink import write_bucketed
 
 from conftest import SF_SMALL
@@ -187,3 +190,15 @@ def test_spread_guard_ignores_tokens_inside_expressions(spark, tmp_path):
     # And real shuffle nodes still short-circuit.
     agg = scan.groupBy("note").agg(F.count("*").alias("c"))
     assert spread(agg) is agg
+
+
+def test_local_cores_follow_env_then_affinity(spark, monkeypatch):
+    """``local[N]`` is ``$SPARK_GRAFT_CPUS`` when set and otherwise the
+    cores the process may run on, never a fixed guess; checked against
+    the live session and by resolving the count, not by starting a
+    second session."""
+    assert spark.sparkContext.master == f"local[{local_cpus()}]"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert local_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == 3

@@ -4,7 +4,9 @@ reference's anchor (~1 GB CSV → Parquet in ≤480 s per 9 GB Lambda,
 
 Generates N MB of synthetic empresas-dialect CSV (latin-1, ';',
 decimal comma), then times read_cnpj_csv → write_snapshot →
-register_table end-to-end.
+register_table end-to-end. Both modes also print
+``parquet_bytes_per_csv_byte``: the ``.parquet`` bytes landed under the
+table root per byte of CSV parsed.
 
 Usage: python tools/bench_ingest.py [mb]
        python tools/bench_ingest.py --refresh [mb_per_part] [n_parts]
@@ -99,6 +101,16 @@ def make_csv_fast(path: str, target_mb: int, seed: int) -> int:
     return n_rows
 
 
+def parquet_bytes(root: str) -> int:
+    """Bytes of the ``.parquet`` files under ``root`` (the landed table)."""
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(root)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
 def _rmtree_at_exit(path: str) -> None:
     """Remove the fixture dir on ANY exit — normal, exception, or
     SIGTERM (a `timeout`-killed refresh run leaked 1.7 GB in /tmp)."""
@@ -134,12 +146,12 @@ def refresh_main() -> None:
 
     tmp = tempfile.mkdtemp(prefix="bench_refresh_")
     _rmtree_at_exit(tmp)  # ~12 GB of fixtures must not outlive a killed run
-    total_csv_mb = 0.0
+    csv_bytes = 0
     rows = []
     for p in range(n_parts):
         csv_path = os.path.join(tmp, f"Empresas{p}.csv")
         make_csv_fast(csv_path, mb_per_part, seed=p)
-        total_csv_mb += os.path.getsize(csv_path) / 1e6
+        csv_bytes += os.path.getsize(csv_path)
         zip_path = os.path.join(tmp, f"Empresas{p}.zip")
         # deflate level 1: the timed side (extraction) decodes the same
         # stream family as the reference's zips; level only affects the
@@ -166,6 +178,7 @@ def refresh_main() -> None:
     elapsed = time.perf_counter() - start
     assert refreshed == {"empresas": "20230506"}, refreshed
     n = spark.sql("SELECT count(*) AS n FROM default.empresas").collect()[0].n
+    total_csv_mb = csv_bytes / 1e6
     print(
         json.dumps(
             {
@@ -176,6 +189,9 @@ def refresh_main() -> None:
                 "csv_mb": round(total_csv_mb, 1),
                 "mb_per_s": round(total_csv_mb / elapsed, 1),
                 "rows": n,
+                "parquet_bytes_per_csv_byte": round(
+                    parquet_bytes(os.path.join(wh, "empresas")) / csv_bytes, 4
+                ),
                 "reference_bound_sec": 480,
             }
         )
@@ -216,6 +232,9 @@ def main() -> None:
                 "unit": "MB/s",
                 "csv_mb": round(actual_mb, 1),
                 "rows": n_rows,
+                "parquet_bytes_per_csv_byte": round(
+                    parquet_bytes(root) / os.path.getsize(csv_path), 4
+                ),
                 "wall_s": round(elapsed, 2),
                 "baseline_mb_s": 2.2,
             }
