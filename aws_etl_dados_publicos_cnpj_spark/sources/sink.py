@@ -8,7 +8,9 @@ Replaces three reference operators (SURVEY.md §2.1 S22/S23/S25):
   layout spec ``README.md:94-117``)
 - Glue crawler catalog registration
   (``state_machines/state_machine.asl:132-139``) → Spark catalog
-  external table + partition recovery.
+  external table, created once; later runs add and drop its
+  ``ref_date`` partitions in place, as the crawler updates the tables
+  it already holds, so the table keeps its identity across refreshes.
 
 Scale notes: dynamic partition overwrite makes snapshot re-ingest
 idempotent per ``ref_date`` (the reference blindly re-PUTs objects and
@@ -52,26 +54,72 @@ def _overwrite_partition(out: DataFrame, table_root: str) -> None:
     )
 
 
+def _sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal (backslash escapes)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def register_table(
     spark: SparkSession,
     name: str,
     table_root: str,
     database: str = "default",
 ) -> None:
-    """Register the partitioned parquet directory as an external table
-    and recover partitions — the crawler's job
-    (``state_machine.asl:132-139``) done natively.
+    """Register the ``ref_date``-partitioned parquet directory as an
+    external table and bring its partitions up to date — the crawler's
+    job (``state_machine.asl:132-139``) done natively.
 
-    Schema (including the partition column) is inferred from the
-    parquet footers + directory layout, like the crawler; Spark 4
-    requires either a full explicit column list or none with
-    ``PARTITIONED BY``, so we omit both and let inference find the
-    ``ref_date`` directories, then recover partitions.
+    A table already registered at ``table_root`` keeps its identity, as
+    the crawler's tables do: the ``ref_date=`` directories are diffed
+    against the catalog's partitions, new ones are added, removed ones
+    dropped, and the cached file listing is refreshed. That is catalog
+    work only, with no Spark job at any history length.
+
+    An absent table, one registered at another location, or one that
+    carries ``analyze_table`` statistics (which a new snapshot makes
+    stale) is dropped and re-created instead: the schema (including the
+    partition column) is inferred from the parquet footers and directory
+    layout, like the crawler — Spark 4 requires either a full explicit
+    column list or none with ``PARTITIONED BY``, so both are omitted —
+    and the partitions are recovered.
     """
+    table = f"{database}.{name}"
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    root = jvm_path(table_root)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    # the session catalog's own metadata: DESCRIBE TABLE EXTENDED says the
+    # same at ~30 ms a call, as much as the rest of the in-place path
+    state = spark._jsparkSession.sessionState()
+    ident = state.sqlParser().parseTableIdentifier(table)
+    if state.catalog().tableExists(ident):
+        meta = state.catalog().getTableMetadata(ident)
+        if jvm_path(meta.location()).equals(fs.makeQualified(root)) and meta.stats().isEmpty():
+            _sync_partitions(spark, name, database, fs, root)
+            return
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-    spark.sql(f"DROP TABLE IF EXISTS {database}.{name}")
-    spark.sql(f"CREATE TABLE {database}.{name} USING PARQUET LOCATION '{table_root}'")
-    spark.sql(f"MSCK REPAIR TABLE {database}.{name}")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(f"CREATE TABLE {table} USING PARQUET LOCATION {_sql_string(table_root)}")
+    spark.sql(f"MSCK REPAIR TABLE {table}")
+
+
+def _sync_partitions(spark: SparkSession, name: str, database: str, fs, root) -> None:
+    # the effect of MSCK REPAIR ... SYNC PARTITIONS, which re-lists every
+    # partition and submits a Spark job once the table has more than ten
+    table = f"{database}.{name}"
+    prefix = f"{PARTITION_COLUMN}="
+    dirs = (s.getPath().getName() for s in fs.listStatus(root) if s.isDirectory())
+    on_disk = {d[len(prefix):] for d in dirs if d.startswith(prefix)}
+    listed = set(list_partitions(spark, name, database))
+
+    def spec(value: str) -> str:
+        return f"PARTITION ({PARTITION_COLUMN} = {_sql_string(value)})"
+
+    if on_disk - listed:
+        spark.sql(f"ALTER TABLE {table} ADD IF NOT EXISTS " + " ".join(map(spec, on_disk - listed)))
+    if listed - on_disk:
+        spark.sql(f"ALTER TABLE {table} DROP IF EXISTS " + ", ".join(map(spec, listed - on_disk)))
+    # an overwritten partition keeps its directory but not its files
+    spark.catalog.refreshTable(table)
 
 
 def compact_partition(

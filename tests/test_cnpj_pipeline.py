@@ -16,8 +16,10 @@ from aws_etl_dados_publicos_cnpj_spark.plans.planner import CatalogState, plan_u
 from aws_etl_dados_publicos_cnpj_spark.sources.cnpj_csv import read_cnpj_csv
 from aws_etl_dados_publicos_cnpj_spark.sources.listing import ListingRow, listing_df
 from aws_etl_dados_publicos_cnpj_spark.sources.sink import (
+    analyze_table,
     latest_partition,
     list_partitions,
+    register_table,
     write_clustered,
     write_snapshot,
 )
@@ -49,6 +51,19 @@ def _listing(spark, tmp_path):
         ListingRow("LAYOUT.pdf", "file://nope", "2023-05-06 10:22", False),
     ]
     return listing_df(spark, rows)
+
+
+def _job_ids(spark, group: str, fn):
+    """Run ``fn`` under a job group; return its result and the ids of
+    the Spark jobs it submitted from this thread."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
 
 
 def test_full_pipeline_roundtrip(spark, fixture_zips):
@@ -100,22 +115,14 @@ def test_unchanged_week_executes_the_plan_once(spark, fixture_zips):
     nothing."""
     listing = _listing(spark, fixture_zips)
     fresh = CatalogState({"empresas": ["20230506"], "municipios": ["20230506"]})
-    sc = spark.sparkContext
-    try:
-        sc.setJobGroup("unchanged-week-run", "run_pipeline on an unchanged week")
-        refreshed = run_pipeline(
-            spark, listing, fresh, str(fixture_zips / "warehouse"), str(fixture_zips / "scratch")
-        )
-        sc.setJobGroup("unchanged-week-plan", "one collect of the manifest")
-        manifest = plan_updates(spark, listing, fresh).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert refreshed == {} and manifest == []
-    tracker = sc.statusTracker()
-    assert len(tracker.getJobIdsForGroup("unchanged-week-run")) == len(
-        tracker.getJobIdsForGroup("unchanged-week-plan")
+    refreshed, run_jobs = _job_ids(spark, "unchanged-week-run", lambda: run_pipeline(
+        spark, listing, fresh, str(fixture_zips / "warehouse"), str(fixture_zips / "scratch")
+    ))
+    manifest, plan_jobs = _job_ids(
+        spark, "unchanged-week-plan", lambda: plan_updates(spark, listing, fresh).collect()
     )
+    assert refreshed == {} and manifest == []
+    assert len(run_jobs) == len(plan_jobs)
 
 
 def test_planner_inputs_are_local_relations(spark, fixture_zips):
@@ -403,3 +410,133 @@ def test_partial_failure_resume_ingests_only_missing(spark, fixture_zips):
         {"empresas": ["20230506"], "municipios": ["20230506"]}
     )
     assert plan_updates(spark, listing, complete).count() == 0
+
+
+# --- catalog registration contract: register_table on a table that
+# already exists at the same root syncs partitions in place ---
+
+
+def _table_info(spark, table: str) -> dict[str, str]:
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED default.{table}").collect()
+    return {r.col_name: r.data_type for r in rows}
+
+
+def _dim(spark, *keys: int):
+    return spark.createDataFrame([(k, f"v{k}") for k in keys], "k long, v string")
+
+
+def test_register_existing_table_adds_new_snapshot(spark, tmp_path):
+    root = str(tmp_path / "reg_new")
+    write_snapshot(_dim(spark, 1), root, "20240101")
+    register_table(spark, "reg_new", root)
+    write_snapshot(_dim(spark, 1, 2), root, "20240108")
+    register_table(spark, "reg_new", root)
+    assert list_partitions(spark, "reg_new") == ["20240101", "20240108"]
+    assert spark.table("default.reg_new").filter("ref_date = '20240108'").count() == 2
+
+
+def test_register_existing_table_reads_overwritten_partition(spark, tmp_path):
+    root = str(tmp_path / "reg_over")
+    write_snapshot(_dim(spark, 1), root, "20240101")
+    register_table(spark, "reg_over", root)
+    assert [r.k for r in spark.table("default.reg_over").collect()] == [1]  # lists the files
+    write_snapshot(_dim(spark, 7, 8), root, "20240101")
+    register_table(spark, "reg_over", root)
+    assert sorted(r.k for r in spark.table("default.reg_over").collect()) == [7, 8]
+
+
+def test_register_existing_table_drops_removed_partition(spark, tmp_path):
+    import shutil
+
+    root = str(tmp_path / "reg_gone")
+    write_snapshot(_dim(spark, 1), root, "20240101")
+    write_snapshot(_dim(spark, 2), root, "20240108")
+    register_table(spark, "reg_gone", root)
+    shutil.rmtree(os.path.join(root, "ref_date=20240101"))
+    register_table(spark, "reg_gone", root)
+    assert list_partitions(spark, "reg_gone") == ["20240108"]
+    assert [r.k for r in spark.table("default.reg_gone").collect()] == [2]
+
+
+def test_register_existing_table_does_not_keep_stale_statistics(spark, tmp_path):
+    """``analyze_table`` statistics go when a snapshot is added and when
+    one is overwritten in place (no partition added or dropped)."""
+    root = str(tmp_path / "reg_stats")
+    write_snapshot(_dim(spark, 1, 2), root, "20240101")
+    register_table(spark, "reg_stats", root)
+    assert "2 rows" in analyze_table(spark, "reg_stats")["Statistics"]
+    write_snapshot(_dim(spark, 3, 4), root, "20240108")
+    register_table(spark, "reg_stats", root)
+    assert "Statistics" not in _table_info(spark, "reg_stats")
+    assert "4 rows" in analyze_table(spark, "reg_stats")["Statistics"]
+    write_snapshot(_dim(spark, 5, 6, 7), root, "20240108")
+    register_table(spark, "reg_stats", root)
+    assert "Statistics" not in _table_info(spark, "reg_stats")
+    assert spark.table("default.reg_stats").count() == 5
+
+
+def test_register_same_name_from_another_root_repoints(spark, tmp_path):
+    first, second = str(tmp_path / "a" / "reg_move"), str(tmp_path / "b" / "reg_move")
+    write_snapshot(_dim(spark, 1), first, "20240101")
+    write_snapshot(_dim(spark, 5, 6), second, "20240108")
+    register_table(spark, "reg_move", first)
+    register_table(spark, "reg_move", second)
+    assert _table_info(spark, "reg_move")["Location"] == f"file:{second}"
+    assert list_partitions(spark, "reg_move") == ["20240108"]
+    assert sorted(r.k for r in spark.table("default.reg_move").collect()) == [5, 6]
+
+
+def test_register_existing_table_submits_no_jobs(spark, tmp_path):
+    """Re-registering a table at its own root is catalog work only: no
+    schema inference and no partition-listing job, also past the ten
+    partitions where Spark's own partition recovery starts listing
+    with a job."""
+    root = str(tmp_path / "reg_jobs")
+    df = _dim(spark, 1)
+    for week in range(12):
+        write_snapshot(df, root, str(20240101 + week))
+    register_table(spark, "reg_jobs", root)
+    write_snapshot(df, root, "20240201")
+    _, jobs = _job_ids(spark, "register-existing", lambda: register_table(spark, "reg_jobs", root))
+    assert list(jobs) == []
+    assert len(list_partitions(spark, "reg_jobs")) == 13
+    assert spark.table("default.reg_jobs").count() == 13
+
+
+def test_register_table_root_with_apostrophe(spark, tmp_path):
+    """The location is a quoted SQL literal: a root whose path holds
+    ``'`` registers, and re-registers in place."""
+    root = str(tmp_path / "o'brien" / "reg_quote")
+    write_snapshot(_dim(spark, 1), root, "20240101")
+    register_table(spark, "reg_quote", root)
+    write_snapshot(_dim(spark, 2), root, "20240108")
+    _, jobs = _job_ids(spark, "register-quoted", lambda: register_table(spark, "reg_quote", root))
+    assert list(jobs) == []
+    assert _table_info(spark, "reg_quote")["Location"] == f"file:{root}"
+    assert sorted(r.k for r in spark.table("default.reg_quote").collect()) == [1, 2]
+
+
+def test_refresh_into_registered_warehouse_job_budget(spark, fixture_zips):
+    """A refresh into a warehouse that already holds its tables submits
+    the plan's jobs plus one write job per refreshed table: the catalog
+    step adds none."""
+    wh, scratch = str(fixture_zips / "warehouse"), str(fixture_zips / "scratch")
+    run_pipeline(spark, _listing(spark, fixture_zips), CatalogState({}), wh, scratch)
+    week2 = listing_df(spark, [
+        ListingRow("Empresas0.zip", f"file://{fixture_zips}/Empresas0.zip", "2023-06-10 09:00", False),
+        ListingRow("Municipios.zip", f"file://{fixture_zips}/Municipios.zip", "2023-06-10 09:00", False),
+    ])
+    catalog = CatalogState({"empresas": ["20230506"], "municipios": ["20230506"]})
+    _, plan_jobs = _job_ids(
+        spark, "refresh-plan", lambda: plan_updates(spark, week2, catalog).collect()
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))  # the pipeline's pool threads set no group
+    refreshed, run_jobs = _job_ids(
+        spark, "refresh-run", lambda: run_pipeline(spark, week2, catalog, wh, scratch)
+    )
+    pool_jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert refreshed == {"empresas": "20230610", "municipios": "20230610"}
+    assert len(run_jobs) == len(plan_jobs)
+    assert len(pool_jobs) == len(refreshed)
+    assert list_partitions(spark, "empresas") == ["20230506", "20230610"]
