@@ -1,5 +1,1 @@
-from .scalar import (  # noqa: F401
-    decimal_comma_to_double,
-    normalize_table_key,
-    yyyymmdd_int,
-)
+from .scalar import decimal_comma_to_double  # noqa: F401

@@ -4,8 +4,6 @@ whole-stage codegen; no Python UDFs).
 
 Reference parity map (SURVEY.md §2.1):
 
-- ``normalize_table_key``  ← S4, ``lambdas/check_update/check_update.py:55-60``
-- ``yyyymmdd_int``         ← S7, ``check_update.py:65``
 - ``decimal_comma_to_double`` ← S21 dialect, ``lambdas/fetch_data/fetch_data.py:73``
 """
 
@@ -13,29 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def normalize_table_key(name: Column | str) -> Column:
-    """Filename → table key: text before the first ``.``, lowercased,
-    non-letters stripped (``check_update.py:55-60``).
-
-    ``Empresas0.zip`` → ``empresas``; ``F.K.Motivos.zip`` would keep only
-    the pre-dot segment, matching the reference's ``split('.')[0]``.
-    """
-    col = F.col(name) if isinstance(name, str) else name
-    return F.regexp_replace(F.lower(F.split_part(col, F.lit("."), F.lit(1))), "[^a-z]", "")
-
-
-def yyyymmdd_int(ts_text: Column | str) -> Column:
-    """``'2023-05-06 10:22'`` → ``20230506`` (int) — first 10 chars,
-    ``-`` stripped, cast int (``check_update.py:65``).
-
-    ``try_cast``: under ANSI mode (Spark 4 default) a plain cast of one
-    malformed listing cell would kill the whole job; malformed dates
-    become null instead (the planner treats a null freshness comparison
-    as not-stale — no evidence, no re-ingest)."""
-    col = F.col(ts_text) if isinstance(ts_text, str) else ts_text
-    return F.regexp_replace(F.substring(col, 1, 10), "-", "").try_cast("int")
 
 
 def decimal_comma_to_double(col: Column | str) -> Column:

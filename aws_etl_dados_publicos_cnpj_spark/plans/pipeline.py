@@ -12,9 +12,10 @@ collapses to:
     collect, driver download pool) → read_cnpj_csv(all files) →
     write_snapshot → register_table
 
-The planner's inputs are local relations, so planning and acquisition
-execute the plan once and launch no Python-worker job; the unchanged
-week costs that one collect. Per-table work is submitted concurrently
+The planner runs on the driver and returns the manifest as a local
+relation, so planning and acquisition submit no Spark job: the
+unchanged week runs none at all, and a stale week runs only its write
+jobs. Per-table work is submitted concurrently
 from the driver (``ThreadPoolExecutor``); Spark's scheduler multiplexes
 the jobs across executor slots, replacing the INLINE Map concurrency
 (``state_machine.asl:24-131``). Within a table, file-level parallelism

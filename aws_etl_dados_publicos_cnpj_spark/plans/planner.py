@@ -1,16 +1,16 @@
 """Incremental update planner — the reference's whole control plane
 (``lambdas/check_update/check_update.py`` + the freshness Lambda +
-the two Choice states) as ONE pure-DataFrame function.
+the two Choice states) as one driver-side function.
 
 Operator parity (SURVEY.md §2.1):
 
 - S3 skip folders                ← ``check_update.py:52-53``
 - S4 filename → table key        ← ``check_update.py:55-60``
-- S5 allow-list semi-join        ← ``check_update.py:16-20,30-31,61-62``
+- S5 allow-list filter           ← ``check_update.py:16-20,30-31,61-62``
 - S6 URL concat                  ← ``check_update.py:64``
 - S7 last-modified → YYYYMMDD    ← ``check_update.py:65``
 - S8 group/collect_list/max      ← ``check_update.py:67-70``
-- S9 exists (catalog semi-join)  ← ``check_update.py:34,101``
+- S9 exists (catalog lookup)     ← ``check_update.py:34,101``
 - S10 drop empty groups          ← ``check_update.py:80``
 - S14 freshness (true max)       ← ``lambdas/download_test/lambda_function.py:6-10``
                                    (reference takes ``partitionValues[0]``;
@@ -19,30 +19,44 @@ Operator parity (SURVEY.md §2.1):
 - S15 route stale/new/fresh      ← ``state_machines/state_machine.asl:32-42,79-89``
 - S11 manifest unnest            ← ``check_update.py:81-89``
 
-Everything is expressed on DataFrames so the same plan logic runs
-unchanged whether the listing has 40 rows (CNPJ) or 40 million (a
-100 TB data lake's file inventory): the group-by shuffles on
-``table_name`` only, the catalog join broadcasts the small side, and no
-step collects an unbounded list to the driver except the final manifest
-(bounded by file count per refresh).
+Like the reference's Lambda, the plan is plain Python: both inputs are
+already on the driver (the listing is tens of parsed rows in a local
+relation, collected without a Spark job, and the catalog is a dict).
+The same plan as a DataFrame program cost about 15 Catalyst analyses
+and 3 Spark jobs per run to group about 20 rows. Casts keep Spark's
+``TRY_CAST`` semantics (``sink.max_int``), so a malformed listing date
+or catalog partition is a null, never an error. The results are local
+relations too (``LocalTableScan``): collecting the manifest submits no
+job, so the unchanged week runs no Spark job at all.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.scalar import normalize_table_key, yyyymmdd_int
 from ..schemas import ALLOWED_TABLE_NAMES
 from ..sources.listing import local_df
+from ..sources.sink import max_int
 
-CATALOG_SCHEMA = T.StructType(
+STATUS_SCHEMA = T.StructType(
     [
         T.StructField("table_name", T.StringType(), True),
-        T.StructField("partition_values", T.ArrayType(T.StringType()), True),
+        T.StructField("n_files", T.LongType(), False),
+        T.StructField("ref_date", T.IntegerType(), True),
+        T.StructField("latest_partition", T.IntegerType(), True),
+        T.StructField("exists", T.BooleanType(), False),
+        T.StructField("should_update", T.BooleanType(), False),
+    ]
+)
+MANIFEST_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("table_name", T.StringType(), True),
+        T.StructField("date", T.StringType(), True),
     ]
 )
 
@@ -55,67 +69,64 @@ class CatalogState:
 
     tables: dict[str, list[str]] = field(default_factory=dict)
 
-    def to_df(self, spark: SparkSession) -> DataFrame:
-        rows = [(name, list(parts)) for name, parts in self.tables.items()]
-        return local_df(spark, rows, CATALOG_SCHEMA)
+
+@dataclass
+class _Planned:
+    """One requested table's routing: the Choice states' inputs."""
+
+    table_name: str
+    files: list[str]
+    n_files: int
+    ref_date: int | None
+    latest_partition: int | None
+
+    @property
+    def exists(self) -> bool:  # S9: a table with no integer partition is new
+        return self.latest_partition is not None
+
+    @property
+    def should_update(self) -> bool:  # S15: new, or stale by a known date
+        if not self.exists:
+            return True
+        # a malformed site date on an existing table is no evidence: skip
+        return self.ref_date is not None and self.ref_date > self.latest_partition
 
 
 def _planned_tables(
-    spark: SparkSession,
     listing: DataFrame,
-    catalog: CatalogState | DataFrame,
+    catalog: CatalogState,
     requested_tables: list[str] | None,
     base_url: str,
-) -> DataFrame:
-    """Shared planner core: per-table row with
-    ``(table_name, files, n_files, ref_date, exists, latest_partition,
-    should_update)``."""
-    catalog_df = catalog.to_df(spark) if isinstance(catalog, CatalogState) else catalog
-    requested = [t for t in (requested_tables or ALLOWED_TABLE_NAMES) if t in ALLOWED_TABLE_NAMES]
+) -> list[_Planned]:
+    """One entry per listed, requested table, in listing order."""
+    requested = {t for t in (requested_tables or ALLOWED_TABLE_NAMES) if t in ALLOWED_TABLE_NAMES}
+    grouped: dict[str, list[tuple[str | None, str | None]]] = {}
+    for row in listing.collect():  # a local relation: no Spark job
+        if row.is_folder is not False or row.file_name is None:  # S3: folders, unknown kinds
+            continue
+        table = re.sub("[^a-z]", "", row.file_name.split(".", 1)[0].lower())  # S4
+        if table not in requested:  # S5
+            continue
+        url = None if row.href is None else base_url + row.href  # S6
+        modified = row.last_modified
+        date = None if modified is None else modified[:10].replace("-", "")  # S7
+        grouped.setdefault(table, []).append((url, date))  # S8
 
-    files = (
-        listing.filter(~F.col("is_folder"))  # S3
-        .withColumn("table_name", normalize_table_key("file_name"))  # S4
-        .filter(F.col("table_name").isin(requested))  # S5
-        .withColumn("url", F.concat(F.lit(base_url), F.col("href")))  # S6
-        .withColumn("file_ref_date", yyyymmdd_int("last_modified"))  # S7
-    )
-
-    grouped = files.groupBy("table_name").agg(  # S8
-        F.collect_list("url").alias("files"),
-        F.count("*").alias("n_files"),
-        F.max("file_ref_date").alias("ref_date"),
-    )
-    # S10: guard mirrors the reference (empty groups can't occur post-groupBy)
-    grouped = grouped.filter(F.size("files") > 0)
-
-    # S9 + S14: existence and true-max freshness from the catalog side.
-    catalog_max = catalog_df.select(
-        "table_name",
-        F.aggregate(
-            F.col("partition_values"),
-            F.lit(None).cast("int"),
-            lambda acc, pv: F.greatest(acc, pv.try_cast("int")),
-        ).alias("latest_partition"),
-    )
-
-    return (
-        grouped.join(F.broadcast(catalog_max), "table_name", "left")
-        .withColumn("exists", F.col("latest_partition").isNotNull())
-        .withColumn(  # S15: new table OR stale table → ingest; a null
-            # comparison (malformed site date on an existing table) is
-            # explicitly NOT stale — no evidence, no re-ingest
-            "should_update",
-            (~F.col("exists"))
-            | F.coalesce(F.col("ref_date") > F.col("latest_partition"), F.lit(False)),
-        )
-    )
+    planned = []
+    for table, files in grouped.items():
+        urls = [url for url, _ in files if url is not None]
+        if not urls:  # S10
+            continue
+        ref_date = max_int(date for _, date in files)  # S8: the newest file's date
+        latest = max_int(catalog.tables.get(table) or [])  # S14
+        planned.append(_Planned(table, urls, len(files), ref_date, latest))
+    return planned
 
 
 def plan_updates(
     spark: SparkSession,
     listing: DataFrame,
-    catalog: CatalogState | DataFrame,
+    catalog: CatalogState,
     requested_tables: list[str] | None = None,
     base_url: str = "",
 ) -> DataFrame:
@@ -124,30 +135,31 @@ def plan_updates(
     Returns columns ``(url, table_name, date)`` — the reference's
     fetch_data event shape (``README.md:230-237``); only stale or new
     tables appear (fresh tables are the Succeed-no-op branch,
-    ``state_machine.asl:90-92``).
+    ``state_machine.asl:90-92``). A new table with no parseable listing
+    date raises ``ValueError``: it has no ``ref_date`` to land under.
     """
-    planned = _planned_tables(spark, listing, catalog, requested_tables, base_url)
-    return (
-        planned.filter(F.col("should_update"))
-        .select(  # S11: unnest file list, broadcast group attrs onto each row
-            F.explode("files").alias("url"),
-            "table_name",
-            F.col("ref_date").cast("string").alias("date"),
-        )
-    )
+    planned = _planned_tables(listing, catalog, requested_tables, base_url)
+    routed = [p for p in planned if p.should_update]
+    undated = [p.table_name for p in routed if p.ref_date is None]
+    if undated:
+        raise ValueError(f"no parseable listing date for new table(s) {undated}")
+    rows = [(url, p.table_name, str(p.ref_date)) for p in routed for url in p.files]  # S11
+    return local_df(spark, rows, MANIFEST_SCHEMA)
 
 
 def plan_status(
     spark: SparkSession,
     listing: DataFrame,
-    catalog: CatalogState | DataFrame,
+    catalog: CatalogState,
     requested_tables: list[str] | None = None,
     base_url: str = "",
 ) -> DataFrame:
     """Diagnostic view: one row per requested table with
-    ``(table_name, n_files, ref_date, exists, latest_partition,
+    ``(table_name, n_files, ref_date, latest_partition, exists,
     should_update)`` — the planner's Choice-state routing made
     inspectable (``state_machine.asl:32-42,79-89``)."""
-    return _planned_tables(spark, listing, catalog, requested_tables, base_url).select(
-        "table_name", "n_files", "ref_date", "latest_partition", "exists", "should_update"
-    )
+    rows = [
+        (p.table_name, p.n_files, p.ref_date, p.latest_partition, p.exists, p.should_update)
+        for p in _planned_tables(listing, catalog, requested_tables, base_url)
+    ]
+    return local_df(spark, rows, STATUS_SCHEMA)

@@ -3,10 +3,10 @@ directory scrape (S1–S3, ``lambdas/check_update/check_update.py:40-53,95-97``)
 
 The listing is tiny metadata (tens of rows), so parsing happens
 driver-side and the rows become a small local relation (an Arrow-built
-``LocalTableScan``, no Python-worker job) that feeds the pure-DataFrame
-planner (``plans/planner.py``). The HTML parser is gated
-behind an import-try (bs4 may be absent); the planner itself only needs
-the parsed-row DataFrame, so tests inject rows directly
+``LocalTableScan``) that the driver-side planner (``plans/planner.py``)
+collects without a Spark job; the planner returns its manifest through
+``local_df`` too. The HTML parser is the stdlib's; the planner itself
+only needs the parsed-row DataFrame, so tests inject rows directly
 (FIXTURES.md §A.6).
 """
 
@@ -115,9 +115,9 @@ def parse_listing_html(html: str) -> list[ListingRow]:
     last-modified cell; the first 3 rows and the final row are
     header/nav chrome (``check_update.py:46``) — that slice is applied
     here as part of parsing (it is an artifact of the HTML table, not of
-    the data), while the folder/name/date logic stays in the DataFrame
-    planner. Uses the stdlib HTML parser (bs4 is an optional extra,
-    not required).
+    the data), while the folder/name/date logic stays in the planner.
+    Uses the stdlib HTML parser (bs4 is an optional extra, not
+    required).
     """
     parser = _IndexTableParser()
     parser.feed(html)

@@ -22,6 +22,9 @@ per upstream task. Files land zstd-compressed (the session's codec,
 
 from __future__ import annotations
 
+import re
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -242,9 +245,34 @@ def latest_partition(spark: SparkSession, name: str, database: str = "default") 
     """True max over partition values — the *intended* semantics of the
     reference's freshness check (``lambdas/download_test/lambda_function.py:6``
     takes ``partitionValues[0]`` relying on service ordering; intent per
-    ``README.md:222`` is the max — SURVEY.md §2.1 S14)."""
-    parts = list_partitions(spark, name, database)
-    return max((int(p) for p in parts), default=None)
+    ``README.md:222`` is the max — SURVEY.md §2.1 S14). Values that are
+    not integers (a stray ``ref_date=oops`` directory) are skipped."""
+    return max_int(list_partitions(spark, name, database))
+
+
+_INT_TEXT = re.compile(r"[+-]?[0-9]+")
+# what Spark trims before a string → int cast: ASCII whitespace and controls
+_CAST_TRIM = "".join(map(chr, range(0x21))) + "\x7f"
+
+
+def _try_int(text: str | None) -> int | None:
+    """``TRY_CAST(text AS INT)``: an optionally signed run of ASCII
+    digits, ASCII whitespace and controls trimmed; anything else, a
+    fraction or a value outside int32 is ``None``."""
+    if text is None:
+        return None
+    text = text.strip(_CAST_TRIM)
+    if not _INT_TEXT.fullmatch(text):
+        return None
+    value = int(text)
+    return value if -(2**31) <= value < 2**31 else None
+
+
+def max_int(texts: Iterable[str | None]) -> int | None:
+    """The largest of ``texts`` as ``TRY_CAST(... AS INT)`` reads them,
+    skipping those it reads as null; ``None`` when none is an integer."""
+    values = (_try_int(text) for text in texts)
+    return max((v for v in values if v is not None), default=None)
 
 
 def snapshot_diff(

@@ -12,7 +12,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from aws_etl_dados_publicos_cnpj_spark.plans.pipeline import run_pipeline
-from aws_etl_dados_publicos_cnpj_spark.plans.planner import CatalogState, plan_updates
+from aws_etl_dados_publicos_cnpj_spark.plans.planner import (
+    CatalogState,
+    plan_status,
+    plan_updates,
+)
 from aws_etl_dados_publicos_cnpj_spark.sources.cnpj_csv import read_cnpj_csv
 from aws_etl_dados_publicos_cnpj_spark.sources.listing import ListingRow, listing_df
 from aws_etl_dados_publicos_cnpj_spark.sources.sink import (
@@ -109,37 +113,55 @@ def test_freshness_skip_and_stale(spark, fixture_zips):
 
 
 def test_unchanged_week_executes_the_plan_once(spark, fixture_zips):
-    """The unchanged week's ``run_pipeline`` submits exactly the jobs of
-    one ``plan_updates(...).collect()``: no count-then-rerun of the
-    manifest, no Python-worker job for zero rows. Counts jobs, times
-    nothing."""
+    """The unchanged week's ``run_pipeline`` submits no Spark job: the
+    plan runs on the driver over the collected local listing, and the
+    empty manifest is a local relation. Counts jobs, times nothing."""
     listing = _listing(spark, fixture_zips)
     fresh = CatalogState({"empresas": ["20230506"], "municipios": ["20230506"]})
     refreshed, run_jobs = _job_ids(spark, "unchanged-week-run", lambda: run_pipeline(
         spark, listing, fresh, str(fixture_zips / "warehouse"), str(fixture_zips / "scratch")
     ))
-    manifest, plan_jobs = _job_ids(
-        spark, "unchanged-week-plan", lambda: plan_updates(spark, listing, fresh).collect()
-    )
-    assert refreshed == {} and manifest == []
-    assert len(run_jobs) == len(plan_jobs)
+    assert refreshed == {}
+    assert list(run_jobs) == []
 
 
 def test_planner_inputs_are_local_relations(spark, fixture_zips):
-    """Listing and catalog rows plan to ``LocalTableScan`` (evaluated in
-    the JVM without a job), not a pickled-RDD scan through Python
-    workers — empty inputs included."""
-    inputs = [
-        _listing(spark, fixture_zips),
+    """Listings, manifests and status frames plan to ``LocalTableScan``
+    (collected in the JVM without a job), not a pickled-RDD scan through
+    Python workers — empty ones included."""
+    listing = _listing(spark, fixture_zips)
+    stale = CatalogState({"empresas": ["20230101"], "municipios": ["20230506"]})
+    fresh = CatalogState({"empresas": ["20230506"], "municipios": ["20230506"]})
+    frames = [
+        listing,
         listing_df(spark, []),
-        CatalogState({"empresas": ["20230101", "20230506"], "municipios": []}).to_df(spark),
-        CatalogState({}).to_df(spark),
+        plan_updates(spark, listing, stale),
+        plan_updates(spark, listing, fresh),
+        plan_status(spark, listing, stale),
+        plan_status(spark, listing_df(spark, []), stale),
     ]
-    for df in inputs:
+    for df in frames:
         assert df._jdf.queryExecution().executedPlan().toString().startswith("LocalTableScan")
-    assert inputs[2].collect()[0].partition_values == ["20230101", "20230506"]
+    assert [(r.table_name, r.date) for r in frames[2].collect()] == [("empresas", "20230506")]
+    assert frames[3].collect() == [] and frames[5].collect() == []
     with pytest.raises(ValueError):  # a row of the wrong width is refused, not padded
         listing_df(spark, [("Empresas0.zip", "file://x", "2023-05-06 10:22")])
+
+
+def test_new_table_without_listing_date_fails_before_download(spark, fixture_zips):
+    """A new table whose listing date does not parse has no ``ref_date``
+    to land under: the run raises before any download, and leaves no
+    ``ref_date=None`` snapshot and no catalog table behind."""
+    listing = listing_df(spark, [
+        ListingRow("Municipios.zip", f"file://{fixture_zips}/Municipios.zip", "GARBAGE-DATE", False),
+    ])
+    wh, scratch = fixture_zips / "warehouse", fixture_zips / "scratch"
+    spark.sql("CREATE DATABASE IF NOT EXISTS undated_guard")
+    with pytest.raises(ValueError, match="municipios"):
+        run_pipeline(spark, listing, CatalogState({}), str(wh), str(scratch), database="undated_guard")
+    assert not (wh / "municipios" / "ref_date=None").exists()
+    assert not scratch.exists() or not any(scratch.iterdir())
+    assert not spark.catalog.tableExists("undated_guard.municipios")
 
 
 def test_partition_overwrite_idempotent(spark, fixture_zips):
@@ -516,10 +538,21 @@ def test_register_table_root_with_apostrophe(spark, tmp_path):
     assert sorted(r.k for r in spark.table("default.reg_quote").collect()) == [1, 2]
 
 
+def test_latest_partition_skips_non_integer_values(spark, tmp_path):
+    """One stray ``ref_date=oops`` directory does not break the
+    latest-snapshot lookup: it is skipped, as the planner skips it."""
+    root = str(tmp_path / "stray_ref")
+    for ref in ("20240101", "20240108", "oops"):
+        write_snapshot(_dim(spark, 1), root, ref)
+    register_table(spark, "stray_ref", root)
+    assert list_partitions(spark, "stray_ref") == ["20240101", "20240108", "oops"]
+    assert latest_partition(spark, "stray_ref") == 20240108
+
+
 def test_refresh_into_registered_warehouse_job_budget(spark, fixture_zips):
     """A refresh into a warehouse that already holds its tables submits
-    the plan's jobs plus one write job per refreshed table: the catalog
-    step adds none."""
+    exactly one write job per refreshed table: planning, acquisition
+    and the catalog step add none."""
     wh, scratch = str(fixture_zips / "warehouse"), str(fixture_zips / "scratch")
     run_pipeline(spark, _listing(spark, fixture_zips), CatalogState({}), wh, scratch)
     week2 = listing_df(spark, [
@@ -527,9 +560,6 @@ def test_refresh_into_registered_warehouse_job_budget(spark, fixture_zips):
         ListingRow("Municipios.zip", f"file://{fixture_zips}/Municipios.zip", "2023-06-10 09:00", False),
     ])
     catalog = CatalogState({"empresas": ["20230506"], "municipios": ["20230506"]})
-    _, plan_jobs = _job_ids(
-        spark, "refresh-plan", lambda: plan_updates(spark, week2, catalog).collect()
-    )
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))  # the pipeline's pool threads set no group
     refreshed, run_jobs = _job_ids(
@@ -537,6 +567,6 @@ def test_refresh_into_registered_warehouse_job_budget(spark, fixture_zips):
     )
     pool_jobs = set(tracker.getJobIdsForGroup(None)) - before
     assert refreshed == {"empresas": "20230610", "municipios": "20230610"}
-    assert len(run_jobs) == len(plan_jobs)
+    assert list(run_jobs) == []
     assert len(pool_jobs) == len(refreshed)
     assert list_partitions(spark, "empresas") == ["20230506", "20230610"]

@@ -5,7 +5,10 @@ a mixed catalog state — asserts the full manifest document."""
 
 from __future__ import annotations
 
+import pytest
+
 from aws_etl_dados_publicos_cnpj_spark.plans.planner import CatalogState, plan_status, plan_updates
+from aws_etl_dados_publicos_cnpj_spark.schemas import ALLOWED_TABLE_NAMES
 from aws_etl_dados_publicos_cnpj_spark.sources.listing import ListingRow, listing_df
 
 BASE = "https://dadosabertos.example/cnpj/"
@@ -85,11 +88,9 @@ def test_requested_subset_limits_plan(spark):
 
 
 def test_planner_scales_to_10k_file_listing(spark):
-    """The planner's no-driver-bottleneck claim (planner.py module
-    docstring), exercised: a 10^4-file listing built distributedly
-    (spark.range, never a Python list), planned end to end. The plan
-    must contain no Python evaluation node — pure JVM DataFrame ops —
-    and the only collect is the bounded per-table status."""
+    """A 10^4-file listing built distributedly (``spark.range``, not a
+    Python list) plans end to end: one manifest row per file, and the
+    status stays one row per table, not per file."""
     from pyspark.sql import functions as F
 
     n = 10_000
@@ -100,9 +101,125 @@ def test_planner_scales_to_10k_file_listing(spark):
         F.lit(False).alias("is_folder"),
     )
     manifest = plan_updates(spark, listing, CatalogState({}), base_url=BASE)
-    plan = manifest._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert manifest.count() == n
     status = plan_status(spark, listing, CatalogState({})).collect()
     assert len(status) == 1  # bounded: one row per table, not per file
     assert status[0].n_files == n and status[0].should_update
+
+
+# --- parity over hostile inputs: the expected rows were captured once
+# from the DataFrame planner this driver-side planner replaced (Spark's
+# TRY_CAST, split_part/lower/regexp_replace, collect_list/max, left
+# join on the catalog) and are pinned here verbatim ---
+
+HOSTILE_LISTING = [
+    ("Empresas0.zip", "E0.zip", " 2023-05-06 10:22", False),  # space shifts the 10-char cut
+    ("EMPRESAS.1.zip", "E1.zip", "2023-05-07 08:00", False),
+    ("empresas-2.zip", None, "2023-05-08", False),  # counted and dated, no URL
+    ("Estabelecimentos9.zip", "Est9.zip", "+2023-05-06", False),  # sign kept
+    ("Estabelecimentos10.zip", "Est10.zip", "2023-05-06\x00", False),
+    ("Sócios.zip", "Soc.zip", "2023-05-06", False),  # non-ASCII stripped → "scios"
+    ("Socios.zip", "So.zip", "-2023-05-06", False),  # '-' removal eats the sign
+    ("so.cios", "So2", "99999-99-99", False),  # pre-dot part only → "so"
+    ("Simples.zip", "Si.zip", "9999999999", False),  # int32 overflow
+    ("Simples.D.zip", "Si2.zip", "2023-05-0.", False),  # a fraction is not an int
+    ("Cnaes.zip", "C.zip", "2023", False),  # short
+    ("Cnaes.zip", "C2.zip", "\xa02023-05-06", False),  # non-ASCII space is not trimmed
+    ("Motivos.zip", "M.zip", None, False),
+    ("Motivos2.zip", "M2.zip", "2023-05-06 ", False),
+    ("", "empty.zip", "2023-05-06", False),
+    (None, "null.zip", "2023-05-06", False),
+    (None, None, None, None),
+    ("Paises.zip", "P.zip", "2023-05-06", None),  # unknown kind: skipped like a folder
+    ("Paises", "Pdir/", "2023-05-06", True),
+    ("Naturezas.zip", None, "2023-05-06", False),  # no URL at all: group dropped
+    ("MUNICÍPIOS.zip", "Mi.zip", "2023-05-06", False),
+    ("Municipios.zip", "Mu.zip", "\t2023-05-06\n", False),
+    ("Municipios.V2.zip", "Mu2.zip", "2147483647", False),
+    ("Municipios3.zip", "Mu3.zip", "2147483648", False),
+    ("Quali-ficacoes 1.zip", "Q.zip", "-2147483648", False),
+    ("Qualificacoes2.zip", "Q2.zip", "20-23-05-06", False),
+    ("LAYOUT.pdf", "L.pdf", "2023-05-06", False),
+]
+HOSTILE_CATALOG = {
+    "empresas": [],
+    "estabelecimentos": [None],
+    "socios": ["oops", "2023-05-06", " 20230101 ", "+20230102"],
+    "simples": ["x", None],
+    "cnaes": ["00002023"],
+    "motivos": ["20230506", "99999999999"],
+    "municipios": ["2147483647"],
+    "qualificacoes": ["-1", ""],
+}
+STATUS_DTYPES = [
+    ("table_name", "string"), ("n_files", "bigint"), ("ref_date", "int"),
+    ("latest_partition", "int"), ("exists", "boolean"), ("should_update", "boolean"),
+]
+MANIFEST_DTYPES = [("url", "string"), ("table_name", "string"), ("date", "string")]
+STATUS_HOSTILE = [
+    ("cnaes", 2, 2023, 2023, True, False),
+    ("empresas", 3, 20230508, None, False, True),
+    ("estabelecimentos", 2, 20230506, None, False, True),
+    ("motivos", 2, 20230506, 20230506, True, False),
+    ("municipios", 3, 2147483647, 2147483647, True, False),
+    ("qualificacoes", 2, 214748364, -1, True, True),
+    ("simples", 2, None, None, False, True),
+    ("socios", 1, 2023050, 20230102, True, False),
+]
+STATUS_EMPTY_CATALOG = [
+    ("cnaes", 2, 2023, None, False, True),
+    ("empresas", 3, 20230508, None, False, True),
+    ("estabelecimentos", 2, 20230506, None, False, True),
+    ("motivos", 2, 20230506, None, False, True),
+    ("municipios", 3, 2147483647, None, False, True),
+    ("qualificacoes", 2, 214748364, None, False, True),
+    ("simples", 2, None, None, False, True),
+    ("socios", 1, 2023050, None, False, True),
+]
+MANIFEST_HOSTILE = [
+    ("https://x/E0.zip", "empresas", "20230508"),
+    ("https://x/E1.zip", "empresas", "20230508"),
+    ("https://x/Est10.zip", "estabelecimentos", "20230506"),
+    ("https://x/Est9.zip", "estabelecimentos", "20230506"),
+    ("https://x/Q.zip", "qualificacoes", "214748364"),
+    ("https://x/Q2.zip", "qualificacoes", "214748364"),
+]
+MANIFEST_SIMPLES_LANDED = [
+    ("https://x/C.zip", "cnaes", "2023"),
+    ("https://x/C2.zip", "cnaes", "2023"),
+    ("https://x/E0.zip", "empresas", "20230508"),
+    ("https://x/E1.zip", "empresas", "20230508"),
+    ("https://x/Est10.zip", "estabelecimentos", "20230506"),
+    ("https://x/Est9.zip", "estabelecimentos", "20230506"),
+    ("https://x/M.zip", "motivos", "20230506"),
+    ("https://x/M2.zip", "motivos", "20230506"),
+    ("https://x/Mu.zip", "municipios", "2147483647"),
+    ("https://x/Mu2.zip", "municipios", "2147483647"),
+    ("https://x/Mu3.zip", "municipios", "2147483647"),
+    ("https://x/Q.zip", "qualificacoes", "214748364"),
+    ("https://x/Q2.zip", "qualificacoes", "214748364"),
+    ("https://x/So.zip", "socios", "2023050"),
+]
+
+
+def _plan(fn, spark, catalog, requested=None):
+    df = fn(spark, listing_df(spark, HOSTILE_LISTING), CatalogState(catalog), requested, "https://x/")
+    return df.dtypes, sorted(tuple(r) for r in df.collect())
+
+
+def test_planner_parity_over_hostile_inputs(spark):
+    assert _plan(plan_status, spark, HOSTILE_CATALOG) == (STATUS_DTYPES, STATUS_HOSTILE)
+    assert _plan(plan_status, spark, {}) == (STATUS_DTYPES, STATUS_EMPTY_CATALOG)
+    # simples is new and undated (see the ValueError test below), so it is not requested;
+    # unknown and wrongly cased names are dropped
+    requested = [t for t in ALLOWED_TABLE_NAMES if t != "simples"] + ["not_a_table", "Empresas"]
+    assert _plan(plan_updates, spark, HOSTILE_CATALOG, requested) == (MANIFEST_DTYPES, MANIFEST_HOSTILE)
+    assert _plan(plan_updates, spark, {"simples": ["20230101"]}) == (MANIFEST_DTYPES, MANIFEST_SIMPLES_LANDED)
+
+
+def test_new_table_without_listing_date_is_refused(spark):
+    """A new table with no parseable listing date has no ``ref_date``
+    to land under, so the manifest refuses it rather than emit
+    ``date=None``."""
+    with pytest.raises(ValueError, match="simples"):
+        _plan(plan_updates, spark, HOSTILE_CATALOG)

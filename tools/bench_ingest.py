@@ -19,7 +19,9 @@ parts and the reference's derived bound for the whole refresh is
 synthesizes n_parts distinct zipped CSV parts, builds a ``file://``
 listing, and times ONE ``run_pipeline`` refresh end-to-end
 (plan → parallel download+unzip → multi-file scan → partitioned
-snapshot → catalog)."""
+snapshot → catalog). It then re-runs the same listing against the
+landed catalog — the unchanged week, which must refresh nothing — and
+prints its wall time as ``noop_refresh_s``."""
 
 from __future__ import annotations
 
@@ -139,6 +141,7 @@ def refresh_main() -> None:
     from aws_etl_dados_publicos_cnpj_spark.plans.planner import CatalogState
     from aws_etl_dados_publicos_cnpj_spark.session import build_session
     from aws_etl_dados_publicos_cnpj_spark.sources.listing import ListingRow, listing_df
+    from aws_etl_dados_publicos_cnpj_spark.sources.sink import list_partitions
 
     args = [a for a in sys.argv[1:] if a != "--refresh"]
     mb_per_part = int(args[0]) if args else 1000
@@ -178,6 +181,11 @@ def refresh_main() -> None:
     elapsed = time.perf_counter() - start
     assert refreshed == {"empresas": "20230506"}, refreshed
     n = spark.sql("SELECT count(*) AS n FROM default.empresas").collect()[0].n
+    landed = CatalogState({"empresas": list_partitions(spark, "empresas")})
+    start = time.perf_counter()
+    again = run_pipeline(spark, listing, landed, wh, os.path.join(tmp, "scratch"))
+    noop_s = time.perf_counter() - start
+    assert again == {}, again
     total_csv_mb = csv_bytes / 1e6
     print(
         json.dumps(
@@ -193,6 +201,7 @@ def refresh_main() -> None:
                     parquet_bytes(os.path.join(wh, "empresas")) / csv_bytes, 4
                 ),
                 "reference_bound_sec": 480,
+                "noop_refresh_s": round(noop_s, 3),
             }
         )
     )
