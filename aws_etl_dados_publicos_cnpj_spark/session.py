@@ -2,10 +2,11 @@
 
 Local mode is a single JVM (``local[N]``); the same config block is what
 we would ship to a 1000-executor cluster — AQE handles runtime
-re-planning (partition coalescing, skew-join splitting), dynamic
-partition overwrite gives idempotent snapshot writes (replacing the
-reference's blind S3 PutObject, ``lambdas/fetch_data/fetch_data.py:80-83``),
-and UTC session time keeps timestamp semantics engine-independent.
+re-planning (partition coalescing, skew-join splitting), and UTC session
+time keeps timestamp semantics engine-independent. Snapshot writes need
+no session conf: the sink commits each ``ref_date`` itself
+(``sources/sink.py``), in place of the reference's blind S3 PutObject
+(``lambdas/fetch_data/fetch_data.py:80-83``).
 """
 
 from __future__ import annotations
@@ -37,9 +38,6 @@ def build_session(
       runtime; on the real cluster this converts sort-merge joins to
       broadcast when a post-filter side shrinks, and splits skewed
       shuffle partitions.
-    - ``spark.sql.sources.partitionOverwriteMode=dynamic`` — snapshot
-      re-ingest overwrites only the ``ref_date`` partitions it produces
-      (exactly-once-per-partition; SURVEY.md §7.4).
     - ``spark.sql.session.timeZone=UTC`` — deterministic timestamp
       semantics (and DuckDB-oracle comparability).
     - ``spark.sql.parquet.compression.codec=zstd`` — every Parquet
@@ -61,7 +59,6 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # ref_date partition values stay strings, matching the reference's
         # catalog schema (check_update.py:145-150); without this the parquet
         # reader re-infers them as ints

@@ -12,12 +12,15 @@ Replaces three reference operators (SURVEY.md §2.1 S22/S23/S25):
   ``ref_date`` partitions in place, as the crawler updates the tables
   it already holds, so the table keeps its identity across refreshes.
 
-Scale notes: dynamic partition overwrite makes snapshot re-ingest
-idempotent per ``ref_date`` (the reference blindly re-PUTs objects and
-can leave mixed partial state — SURVEY.md §7.4). ``compact_partition``
-rewrites a snapshot into bounded-size parquet files instead of one file
-per upstream task. Files land zstd-compressed (the session's codec,
-``session.build_session``).
+Every snapshot lands through one commit, ``_commit_partition``: the
+rows are written to a staging directory, then swapped in for the live
+``ref_date=<date>/`` by filesystem renames, so re-ingesting a date
+replaces that snapshot and no other, and a crash at any step leaves one
+full copy that the next commit restores (the reference blindly re-PUTs
+objects and can leave mixed partial state — SURVEY.md §7.4).
+``compact_partition`` rewrites a snapshot into bounded-size parquet
+files instead of one file per upstream task. Files land zstd-compressed
+(the session's codec, ``session.build_session``).
 """
 
 from __future__ import annotations
@@ -38,23 +41,60 @@ def write_snapshot(
 ) -> None:
     """Land one snapshot partition: ``<table_root>/ref_date=<date>/``.
 
-    The write sets ``partitionOverwriteMode=dynamic`` itself, so only
-    the written ``ref_date`` value is replaced whatever the session's
-    mode — other snapshots are untouched, so a weekly incremental run is
-    exactly-once per partition.
-    """
-    _overwrite_partition(df.withColumn(PARTITION_COLUMN, F.lit(str(ref_date))), table_root)
+    Only that ``ref_date`` is replaced — other snapshots are untouched,
+    so a weekly incremental run is exactly-once per partition."""
+    _commit_partition(df, table_root, ref_date)
 
 
-def _overwrite_partition(out: DataFrame, table_root: str) -> None:
-    # per-write option: a session in Spark's default static mode would
-    # otherwise delete every other ref_date under table_root
+def _rename(fs, src, dst) -> None:
+    # Hadoop reports a failed rename by returning false, not by raising
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src} -> {dst} failed")
+
+
+def _commit_partition(df: DataFrame, table_root: str, ref_date: str | int) -> None:
+    """Replace ``<table_root>/ref_date=<date>/`` with ``df``'s rows.
+
+    ``df`` is written as plain Parquet into ``.stage_<date>``; the live
+    partition is then renamed aside to ``.aside_<date>``, the stage
+    renamed into its place, and the aside deleted. Readers and partition
+    discovery skip dot-directories, and every intermediate state keeps
+    one full copy: a crash between the two renames leaves the old rows
+    in the aside, which the next commit of that date renames back first.
+    (Spark's own partition overwrite deletes the live directory before
+    it renames the new one in.) A rename is atomic on HDFS and local
+    disks but not on object stores, where neither this nor Spark's
+    ``FileOutputCommitter`` is a single atomic step."""
+    fs, live, stage, aside = _snapshot_dirs(df.sparkSession, table_root, ref_date)
+    # the partition value is the directory name, never a data column; no
+    # _SUCCESS marker: the live partition holds only data files, as a
+    # partitioned write lands them
     (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(PARTITION_COLUMN)
-        .parquet(table_root)
+        df.drop(PARTITION_COLUMN)
+        .write.mode("overwrite")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(stage.toString())
     )
+    fs.delete(aside, True)  # a stale aside: the live copy was restored or rewritten
+    if fs.exists(live):
+        _rename(fs, live, aside)
+    _rename(fs, stage, live)
+    fs.delete(aside, True)
+
+
+def _snapshot_dirs(spark: SparkSession, table_root: str, ref_date: str | int):
+    """The filesystem and the live, stage and aside paths of one
+    snapshot, after renaming back a partition that a crash between the
+    commit's two renames left only in the aside."""
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = jvm_path(table_root).getFileSystem(spark._jsc.hadoopConfiguration())
+    live, stage, aside = (
+        jvm_path(f"{table_root}/{name}")
+        for name in (f"{PARTITION_COLUMN}={ref_date}", f".stage_{ref_date}", f".aside_{ref_date}")
+    )
+    if not fs.exists(live) and fs.exists(aside):
+        _rename(fs, aside, live)
+    return fs, live, stage, aside
 
 
 def _sql_string(value: str) -> str:
@@ -135,29 +175,17 @@ def compact_partition(
     """Rewrite one snapshot partition into ``target_files`` parquet
     files. Small-file compaction is the maintenance op a weekly
     incremental sink needs at scale (thousands of per-task files →
-    bounded, scan-efficient objects). Uses an overwrite of just the one
-    partition directory. Returns the row count rewritten.
+    bounded, scan-efficient objects). The rewrite lands through the
+    snapshot commit, so a crash mid-swap never loses the partition.
+    Returns the row count rewritten.
 
     ``cluster_by`` keeps (or establishes) range clustering through the
     rewrite — plain round-robin repartition would destroy the narrow
     per-file min/max bands a ``write_clustered`` snapshot relies on for
     row-group pruning, so clustered tables must compact with the same
     keys."""
-    part_path = f"{table_root}/{PARTITION_COLUMN}={ref_date}"
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(table_root).getFileSystem(spark._jsc.hadoopConfiguration())
-    old_path = f"{table_root}/.compact_old_{ref_date}"
-
-    def rename(src: str, dst: str) -> None:
-        # Hadoop reports a failed rename by returning false, not by raising
-        if not fs.rename(jvm_path(src), jvm_path(dst)):
-            raise OSError(f"rename {src} -> {dst} failed")
-
-    if not fs.exists(jvm_path(part_path)) and fs.exists(jvm_path(old_path)):
-        # a crash between the two renames below left the partition only
-        # in the aside, which readers skip (dot-directory): restore it
-        rename(old_path, part_path)
-    df = spark.read.parquet(part_path)
+    _, live, _, _ = _snapshot_dirs(spark, table_root, ref_date)
+    df = spark.read.parquet(live.toString())
     n = df.count()
     if cluster_by:
         compacted = df.repartitionByRange(target_files, *cluster_by).sortWithinPartitions(
@@ -165,18 +193,7 @@ def compact_partition(
         )
     else:
         compacted = df.repartition(target_files)
-    tmp_path = f"{table_root}/.compact_tmp_{ref_date}"
-    compacted.write.mode("overwrite").parquet(tmp_path)
-    # crash-safe swap via filesystem renames (atomic on HDFS/local;
-    # object stores would use a manifest commit instead): move the live
-    # partition ASIDE first, install the compacted copy, then delete
-    # the aside — every intermediate state retains one full copy, so a
-    # crash mid-swap never loses the partition (the next call renames
-    # .compact_old_<date> back when the live directory is missing).
-    fs.delete(jvm_path(old_path), True)  # leftover aside from a prior crash
-    rename(part_path, old_path)
-    rename(tmp_path, part_path)
-    fs.delete(jvm_path(old_path), True)
+    _commit_partition(compacted, table_root, ref_date)
     return n
 
 
@@ -193,12 +210,8 @@ def write_clustered(
     prune point/range scans (the Z-order-lite that plain parquet
     supports). Replaces only the ``ref_date`` partition it writes, as
     ``write_snapshot`` does."""
-    out = (
-        df.repartitionByRange(files_per_partition, *cluster_by)
-        .sortWithinPartitions(*cluster_by)
-        .withColumn(PARTITION_COLUMN, F.lit(str(ref_date)))
-    )
-    _overwrite_partition(out, table_root)
+    out = df.repartitionByRange(files_per_partition, *cluster_by).sortWithinPartitions(*cluster_by)
+    _commit_partition(out, table_root, ref_date)
 
 
 def analyze_table(
@@ -215,23 +228,6 @@ def analyze_table(
         spark.sql(f"ANALYZE TABLE {database}.{name} COMPUTE STATISTICS FOR COLUMNS {cols}")
     rows = spark.sql(f"DESCRIBE TABLE EXTENDED {database}.{name}").collect()
     return {r.col_name: r.data_type for r in rows if r.col_name == "Statistics"}
-
-
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    key: str,
-    buckets: int = 32,
-    sort_by: str | None = None,
-) -> None:
-    """Bucketed managed table: pre-shuffles once at write so every later
-    join/agg on ``key`` is co-located — no Exchange in the plan
-    (SURVEY.md §7.4 / guide's bucketing row; the pattern for fact-fact
-    joins repeated across a 100 TB warehouse's workload)."""
-    writer = df.write.mode("overwrite").bucketBy(buckets, key)
-    if sort_by:
-        writer = writer.sortBy(sort_by)
-    writer.format("parquet").saveAsTable(name)
 
 
 def list_partitions(spark: SparkSession, name: str, database: str = "default") -> list[str]:
@@ -316,69 +312,3 @@ def snapshot_diff(
         .filter(F.col("change").isNotNull())
         .select(*key_cols, "change")
     )
-
-
-def scd2_merge(
-    current: DataFrame,
-    updates: DataFrame,
-    key_cols: list[str],
-    attr_cols: list[str],
-    effective_col: str = "effective_date",
-) -> DataFrame:
-    """Type-2 slowly-changing-dimension merge: history-preserving upsert
-    of a dimension snapshot (the warehouse consumption feature the
-    reference's weekly full re-uploads approximate by overwriting —
-    this keeps every version queryable).
-
-    ``current`` rows carry ``valid_from`` / ``valid_to`` (NULL = open);
-    ``updates`` carries the new attribute values with their effective
-    date. Semantics: an open row whose attribute CONTENT HASH differs
-    from its update closes at the effective date and a new open row
-    begins there; brand-new keys open a first row; unchanged rows and
-    already-closed history pass through untouched.
-
-    Plan shape: ONE key-partitioned join of open rows × updates decides
-    everything (closed history is a pass-through union, no join); the
-    attribute comparison is an xxhash64 of the attr columns, so wide
-    dimensions compare without shipping both attribute sets through the
-    plan twice."""
-    attr_hash = F.xxhash64(
-        *[F.coalesce(F.col(c).cast("string"), F.lit("\0")) for c in attr_cols]
-    )
-    closed = current.filter(F.col("valid_to").isNotNull())
-    open_rows = current.filter(F.col("valid_to").isNull())
-
-    u = updates.select(
-        *key_cols,
-        *[F.col(c).alias(f"__new_{c}") for c in attr_cols],
-        F.col(effective_col).alias("__eff"),
-        F.xxhash64(
-            *[F.coalesce(F.col(c).cast("string"), F.lit("\0")) for c in attr_cols]
-        ).alias("__new_hash"),
-    )
-    joined = open_rows.withColumn("__hash", attr_hash).join(u, key_cols, "full_outer")
-
-    unchanged_or_no_update = joined.filter(
-        F.col("__eff").isNull() | (F.col("__hash") == F.col("__new_hash"))
-    ).select(*key_cols, *attr_cols, "valid_from", "valid_to")
-
-    closing = joined.filter(
-        F.col("__hash").isNotNull()
-        & F.col("__eff").isNotNull()
-        & (F.col("__hash") != F.col("__new_hash"))
-    )
-    closed_now = closing.select(
-        *key_cols, *attr_cols, "valid_from", F.col("__eff").alias("valid_to")
-    )
-    opened_now = joined.filter(
-        F.col("__eff").isNotNull()
-        & (F.col("__hash").isNull() | (F.col("__hash") != F.col("__new_hash")))
-    ).select(
-        *key_cols,
-        *[F.col(f"__new_{c}").alias(c) for c in attr_cols],
-        F.col("__eff").alias("valid_from"),
-        F.lit(None).cast(current.schema["valid_to"].dataType).alias("valid_to"),
-    )
-    return closed.unionByName(unchanged_or_no_update).unionByName(
-        closed_now
-    ).unionByName(opened_now)

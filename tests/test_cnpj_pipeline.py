@@ -165,8 +165,8 @@ def test_new_table_without_listing_date_fails_before_download(spark, fixture_zip
 
 
 def test_partition_overwrite_idempotent(spark, fixture_zips):
-    """Dynamic partition overwrite: re-ingesting the same ref_date must
-    not duplicate rows (the reference's blind PutObject can)."""
+    """The snapshot commit replaces a ref_date: re-ingesting the same
+    date must not duplicate rows (the reference's blind PutObject can)."""
     listing = _listing(spark, fixture_zips)
     wh = str(fixture_zips / "warehouse")
     for _ in range(2):
@@ -362,53 +362,6 @@ def test_snapshot_diff_classifies_changes(spark, tmp_path):
         spark.conf.set("spark.sql.maxMetadataStringLength", old_len)
     prunes = re.findall(r"PartitionFilters: \[[^\]]*= (\d+)\)", plan)
     assert sorted(prunes) == ["20240101", "20240108"], plan[:3000]
-
-
-def test_scd2_merge_history_semantics(spark):
-    """Changed rows close and reopen at the effective date, new keys
-    open a first version, unchanged keys pass through, closed history
-    is untouched — and re-applying the same update batch is a no-op
-    (idempotent upsert)."""
-    from pyspark.sql import functions as F
-
-    from aws_etl_dados_publicos_cnpj_spark.sources.sink import scd2_merge
-
-    current = spark.createDataFrame(
-        [
-            (1, "acme", 10.0, "20240101", None),        # open, will change
-            (2, "beta", 20.0, "20240101", None),        # open, unchanged
-            (3, "gone", 30.0, "20230101", "20240101"),  # closed history
-            (3, "gone2", 31.0, "20240101", None),       # open, no update row
-        ],
-        "k long, nome string, cap double, valid_from string, valid_to string",
-    )
-    updates = spark.createDataFrame(
-        [
-            (1, "acme", 15.0, "20240201"),   # cap changed
-            (2, "beta", 20.0, "20240201"),   # identical → no-op
-            (4, "novel", 40.0, "20240201"),  # new key
-        ],
-        "k long, nome string, cap double, effective_date string",
-    )
-    merged = scd2_merge(current, updates, ["k"], ["nome", "cap"])
-    rows = {(r.k, r.valid_from, r.valid_to): (r.nome, r.cap) for r in merged.collect()}
-    assert rows == {
-        (1, "20240101", "20240201"): ("acme", 10.0),
-        (1, "20240201", None): ("acme", 15.0),
-        (2, "20240101", None): ("beta", 20.0),
-        (3, "20230101", "20240101"): ("gone", 30.0),
-        (3, "20240101", None): ("gone2", 31.0),
-        (4, "20240201", None): ("novel", 40.0),
-    }
-    # idempotence: replaying the batch changes nothing (hashes now match)
-    again = scd2_merge(merged, updates, ["k"], ["nome", "cap"])
-    rows2 = {(r.k, r.valid_from, r.valid_to): (r.nome, r.cap) for r in again.collect()}
-    assert rows2 == rows
-    # exactly one open row per key survives
-    open_counts = (
-        merged.filter(F.col("valid_to").isNull()).groupBy("k").count().collect()
-    )
-    assert all(r["count"] == 1 for r in open_counts)
 
 
 def test_partial_failure_resume_ingests_only_missing(spark, fixture_zips):

@@ -1,5 +1,5 @@
-"""Scale techniques: salted join equivalence, bucketed-join shuffle
-elimination, partition pruning visibility."""
+"""Scale techniques: salted join equivalence, the persisted IVF index,
+partition pruning visibility."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from aws_etl_dados_publicos_cnpj_spark.operators import load_table
 from aws_etl_dados_publicos_cnpj_spark.operators.skew import salted_join
 from aws_etl_dados_publicos_cnpj_spark.session import local_cpus
-from aws_etl_dados_publicos_cnpj_spark.sources.sink import write_bucketed
 
 from conftest import SF_SMALL
 
@@ -82,29 +81,6 @@ def test_salted_join_balances_planted_hot_key(spark):
             spark.conf.set(key, val)
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    li = load_table(spark, SF_SMALL, "lineitem").select("l_orderkey", "l_quantity")
-    orders = load_table(spark, SF_SMALL, "orders").select("o_orderkey", "o_totalprice")
-    write_bucketed(li, "b_lineitem", "l_orderkey", buckets=8)
-    write_bucketed(orders, "b_orders", "o_orderkey", buckets=8)
-    a = spark.table("b_lineitem")
-    b = spark.table("b_orders")
-    joined = a.join(
-        b.hint("merge"), a.l_orderkey == b.o_orderkey
-    )  # force sort-merge so broadcast doesn't mask bucketing
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    # and it still returns the right rows
-    n = joined.count()
-    plain = load_table(spark, SF_SMALL, "lineitem").join(
-        load_table(spark, SF_SMALL, "orders"),
-        F.col("l_orderkey") == F.col("o_orderkey"),
-    ).count()
-    assert n == plain
-    spark.sql("DROP TABLE b_lineitem")
-    spark.sql("DROP TABLE b_orders")
-
-
 def test_ivf_persisted_index_prunes_and_matches(spark, tmp_path):
     """The persisted IVF index: search results equal the in-plan
     ann_ivf_topk (same quantizer seed), and the assignments scan is
@@ -126,6 +102,22 @@ def test_ivf_persisted_index_prunes_and_matches(spark, tmp_path):
     assert sorted(tuple(r) for r in got.collect()) == sorted(
         tuple(r) for r in inplan.collect()
     )
+
+
+def test_ivf_rebuild_at_same_path_replaces_every_cell(spark, tmp_path):
+    """Rebuilding an index in place with fewer cells leaves none of the
+    old build's cells behind: every corpus vector is assigned once."""
+    from aws_etl_dados_publicos_cnpj_spark.operators.similarity import build_ivf_index
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    idx = str(tmp_path / "ivf")
+    build_ivf_index(emb.filter(F.col("vec_id") < 400), idx, n_cells=8)
+    small = emb.filter(F.col("vec_id") < 100)
+    build_ivf_index(small, idx, n_cells=4)
+    cells = sorted(d for d in os.listdir(f"{idx}/assignments") if d.startswith("cell="))
+    assert cells == [f"cell={c}" for c in range(4)]
+    assert spark.read.parquet(f"{idx}/assignments").count() == small.count()
+    assert spark.read.parquet(f"{idx}/centers").count() == 4
 
 
 def test_partition_pruning_in_plan(spark, tmp_path):
