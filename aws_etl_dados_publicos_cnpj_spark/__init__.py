@@ -9,14 +9,12 @@ Layout:
                    HTML listing scan, zip-over-HTTP acquisition,
                    partitioned Parquet sink + catalog registration.
 - ``plans``      — incremental update planner + pipeline driver
-                   (DataFrame re-expression of the reference's
-                   Step Functions state machine).
+                   (the reference's Step Functions state machine as
+                   plain driver-side Python around Spark writes).
 - ``functions``  — scalar expression library shared by operators.
 - ``operators``  — consumption-layer relational operators plus the
                    [EXT] large-scale training-data ops (dedup,
                    similarity search, text analysis, multimodal).
-- ``streaming``  — Structured Streaming forms of the incremental
-                   semantics (windowed aggs, stateful ops).
 """
 
 __version__ = "0.1.0"

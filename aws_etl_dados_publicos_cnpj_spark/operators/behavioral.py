@@ -129,8 +129,7 @@ def volume_anomaly(events: DataFrame, round_to: int = 4) -> DataFrame:
 
 
 def dedup_events_window(events: DataFrame, slot_minutes: int = 10) -> DataFrame:
-    """Batch twin of ``streaming.windows.streaming_dedup_events``: keep
-    the FIRST event per (user, type, tumbling slot) — the classic
+    """Keep the FIRST event per (user, type, tumbling slot) — the classic
     client-retry / double-fire scrub — and report how many the slot
     absorbed. One shuffle; both the keeper rank and the slot count come
     from the same window partitioning."""

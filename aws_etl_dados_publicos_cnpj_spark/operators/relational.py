@@ -367,7 +367,7 @@ FROM events
 
 def date_bucket_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7 date encoding + time bucketing: hourly rollup of the events
-    stream table (the batch form of the streaming windowed agg)."""
+    table."""
     events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy(F.date_format("ts", "yyyy-MM-dd HH").alias("hour_bucket"))
@@ -497,8 +497,7 @@ FROM lineitem GROUP BY l_returnflag
 
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (gap > 30 min starts a new session) via lag window
-    + conditional cumsum — the batch twin of streaming
-    ``session_window`` (SURVEY.md §2.2 streaming notes)."""
+    + conditional cumsum."""
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # ts is TIMESTAMP_NTZ under a default session (parquet NANOS infers

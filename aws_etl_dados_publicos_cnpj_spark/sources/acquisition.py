@@ -135,7 +135,7 @@ def acquire_manifest(manifest: DataFrame, scratch_dir: str) -> list[tuple[str, s
     manifest (the unchanged week) costs the one collect and nothing else.
     The first failed file raises, and files not yet started are cancelled.
     """
-    rows = manifest.select("url", "table_name", "date").collect()
+    rows = manifest.collect()
 
     def _acquire(row) -> tuple[str, str, str]:
         path = retry(

@@ -12,7 +12,7 @@ Replaces three reference operators (SURVEY.md §2.1 S22/S23/S25):
   ``ref_date`` partitions in place, as the crawler updates the tables
   it already holds, so the table keeps its identity across refreshes.
 
-Every snapshot lands through one commit, ``_commit_partition``: the
+Every snapshot lands through one commit, ``write_snapshot``: the
 rows are written to a staging directory, then swapped in for the live
 ``ref_date=<date>/`` by filesystem renames, so re-ingesting a date
 replaces that snapshot and no other, and a crash at any step leaves one
@@ -34,47 +34,42 @@ from pyspark.sql import functions as F
 from ..schemas import PARTITION_COLUMN
 
 
-def write_snapshot(
-    df: DataFrame,
-    table_root: str,
-    ref_date: str | int,
-) -> None:
-    """Land one snapshot partition: ``<table_root>/ref_date=<date>/``.
-
-    Only that ``ref_date`` is replaced — other snapshots are untouched,
-    so a weekly incremental run is exactly-once per partition."""
-    _commit_partition(df, table_root, ref_date)
-
-
 def _rename(fs, src, dst) -> None:
     # Hadoop reports a failed rename by returning false, not by raising
     if not fs.rename(src, dst):
         raise OSError(f"rename {src} -> {dst} failed")
 
 
-def _commit_partition(df: DataFrame, table_root: str, ref_date: str | int) -> None:
-    """Replace ``<table_root>/ref_date=<date>/`` with ``df``'s rows.
+def write_snapshot(df: DataFrame, table_root: str, ref_date: str | int) -> None:
+    """Land one snapshot: replace ``<table_root>/ref_date=<date>/`` with
+    ``df``'s rows and leave every other snapshot untouched, so a weekly
+    incremental run is exactly-once per partition.
 
     ``df`` is written as plain Parquet into ``.stage_<date>``; the live
     partition is then renamed aside to ``.aside_<date>``, the stage
     renamed into its place, and the aside deleted. Readers and partition
     discovery skip dot-directories, and every intermediate state keeps
     one full copy: a crash between the two renames leaves the old rows
-    in the aside, which the next commit of that date renames back first.
-    (Spark's own partition overwrite deletes the live directory before
-    it renames the new one in.) A rename is atomic on HDFS and local
-    disks but not on object stores, where neither this nor Spark's
-    ``FileOutputCommitter`` is a single atomic step."""
+    in the aside, which the next write of that date renames back first.
+    A write job that fails deletes its stage and leaves the live
+    partition as it was. (Spark's own partition overwrite deletes the
+    live directory before it renames the new one in.) A rename is atomic
+    on HDFS and local disks but not on object stores, where neither this
+    nor Spark's ``FileOutputCommitter`` is a single atomic step."""
     fs, live, stage, aside = _snapshot_dirs(df.sparkSession, table_root, ref_date)
     # the partition value is the directory name, never a data column; no
     # _SUCCESS marker: the live partition holds only data files, as a
     # partitioned write lands them
-    (
-        df.drop(PARTITION_COLUMN)
-        .write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .parquet(stage.toString())
-    )
+    try:
+        (
+            df.drop(PARTITION_COLUMN)
+            .write.mode("overwrite")
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+            .parquet(stage.toString())
+        )
+    except Exception:
+        fs.delete(stage, True)
+        raise
     fs.delete(aside, True)  # a stale aside: the live copy was restored or rewritten
     if fs.exists(live):
         _rename(fs, live, aside)
@@ -193,7 +188,7 @@ def compact_partition(
         )
     else:
         compacted = df.repartition(target_files)
-    _commit_partition(compacted, table_root, ref_date)
+    write_snapshot(compacted, table_root, ref_date)
     return n
 
 
@@ -211,7 +206,7 @@ def write_clustered(
     supports). Replaces only the ``ref_date`` partition it writes, as
     ``write_snapshot`` does."""
     out = df.repartitionByRange(files_per_partition, *cluster_by).sortWithinPartitions(*cluster_by)
-    _commit_partition(out, table_root, ref_date)
+    write_snapshot(out, table_root, ref_date)
 
 
 def analyze_table(

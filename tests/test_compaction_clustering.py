@@ -142,7 +142,8 @@ def test_relanded_rows_take_the_new_date(spark, tmp_path):
 
 def test_failed_write_job_keeps_live_snapshot(spark, tmp_path):
     """A write job that fails leaves the live snapshot in place: the
-    catalog table still reads its old rows."""
+    catalog table still reads its old rows. Whether it rewrites a landed
+    date or lands a new one, it leaves no stage behind."""
     root = str(tmp_path / "t")
     df = spark.range(100).withColumnRenamed("id", "codigo")
     write_snapshot(df, root, "20230506")
@@ -151,8 +152,10 @@ def test_failed_write_job_keeps_live_snapshot(spark, tmp_path):
     failing = df.withColumn(
         "codigo", F.when(F.col("codigo") >= 0, F.raise_error(F.lit("boom"))).otherwise(F.col("codigo"))
     )
-    with pytest.raises(Exception, match="boom"):
-        write_snapshot(failing, root, "20230506")
+    for date in ("20230506", "20230601"):
+        with pytest.raises(Exception, match="boom"):
+            write_snapshot(failing, root, date)
+    assert sorted(os.listdir(root)) == ["ref_date=20230506"]
     back = spark.table("commit_crash.t")
     assert back.count() == 100
     assert back.agg(F.sum("codigo")).collect()[0][0] == sum(range(100))

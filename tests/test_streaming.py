@@ -1,143 +1,11 @@
-"""Streaming: availableNow drain must equal the batch rollup; the
-stateful running-total operator must accumulate across batches."""
+"""Stateless operators run unchanged on a stream: draining a
+``readStream`` through them selects exactly the batch result."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from aws_etl_dados_publicos_cnpj_spark.operators import load_table
-from aws_etl_dados_publicos_cnpj_spark.streaming.stateful import running_totals
-from aws_etl_dados_publicos_cnpj_spark.streaming.windows import (
-    EVENTS_SCHEMA,
-    hourly_event_rollup,
-    run_available_now,
-    streaming_hourly_rollup,
-)
 
 from conftest import SF_SMALL
-
-
-@pytest.fixture(scope="module")
-def events_dir(spark, tmp_path_factory):
-    """Re-land events as micros-timestamp parquet (the raw corpus is
-    TIMESTAMP(NANOS), which the streaming file source can't read)."""
-    out = str(tmp_path_factory.mktemp("events_stream"))
-    load_table(spark, SF_SMALL, "events").coalesce(2).write.mode("overwrite").parquet(out)
-    return out
-
-
-def test_streaming_equals_batch(spark, events_dir):
-    events = spark.read.schema(EVENTS_SCHEMA).parquet(events_dir)
-    batch = {
-        (r.hour_bucket, r.event_type): (r.n_events, r.sum_value)
-        for r in hourly_event_rollup(events).collect()
-    }
-    agg = streaming_hourly_rollup(spark, events_dir)
-    run_available_now(agg, "t_stream_hourly")
-    stream = {
-        (r.hour_bucket, r.event_type): (r.n_events, r.sum_value)
-        for r in spark.sql("SELECT * FROM t_stream_hourly").collect()
-    }
-    assert stream == batch
-    assert len(batch) > 0
-
-
-def test_session_window_streaming_equals_batch(spark, events_dir):
-    from aws_etl_dados_publicos_cnpj_spark.streaming.windows import (
-        session_window_counts,
-        streaming_session_counts,
-    )
-
-    events = spark.read.schema(EVENTS_SCHEMA).parquet(events_dir)
-    batch = {
-        (r.user_id, r.session_start): r.n_events
-        for r in session_window_counts(events).collect()
-    }
-    q = (
-        streaming_session_counts(spark, events_dir)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("t_sessions")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    stream = {
-        (r.user_id, r.session_start): r.n_events
-        for r in spark.sql("SELECT * FROM t_sessions").collect()
-    }
-    assert stream == batch and len(batch) > 0
-    # session count per user agrees with the lag+cumsum batch form
-    from aws_etl_dados_publicos_cnpj_spark.operators.relational import sessionize_events
-
-    per_user = {}
-    for (uid, _), _n in batch.items():
-        per_user[uid] = per_user.get(uid, 0) + 1
-    lag_form = {
-        r.user_id: r.n_sessions for r in sessionize_events(spark, SF_SMALL).collect()
-    }
-    assert per_user == lag_form
-
-
-def test_stream_static_enrichment(spark, events_dir):
-    from aws_etl_dados_publicos_cnpj_spark.streaming.windows import streaming_enriched_events
-
-    cust = load_table(spark, SF_SMALL, "customer").select("c_custkey", "c_mktsegment")
-    q = (
-        streaming_enriched_events(spark, events_dir, cust)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_enriched")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.sql("SELECT * FROM t_enriched")
-    n_events = load_table(spark, SF_SMALL, "events").count()
-    assert out.count() == n_events  # left join keeps every event
-    # joined segment values match a batch join
-    events = load_table(spark, SF_SMALL, "events")
-    batch = (
-        events.join(cust, events.user_id == cust.c_custkey, "left")
-        .groupBy("c_mktsegment")
-        .count()
-    )
-    want = {r.c_mktsegment: r["count"] for r in batch.collect()}
-    got = {
-        r.c_mktsegment: r.n
-        for r in spark.sql(
-            "SELECT c_mktsegment, count(*) AS n FROM t_enriched GROUP BY c_mktsegment"
-        ).collect()
-    }
-    assert got == want
-
-
-def test_streaming_dedup_collapses_replayed_input(spark, events_dir, tmp_path):
-    import shutil
-    import glob
-    import os
-
-    from aws_etl_dados_publicos_cnpj_spark.streaming.windows import streaming_dedup_events
-
-    dup_dir = str(tmp_path / "dup_events")
-    os.makedirs(dup_dir)
-    # replay the same files twice (at-least-once delivery simulation)
-    for i, f in enumerate(glob.glob(f"{events_dir}/*.parquet")):
-        shutil.copy(f, f"{dup_dir}/a{i}.parquet")
-        shutil.copy(f, f"{dup_dir}/b{i}.parquet")
-    q = (
-        streaming_dedup_events(spark, dup_dir)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_dedup")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    n_unique = load_table(spark, SF_SMALL, "events").count()
-    got = spark.sql("SELECT count(*) AS n, count(DISTINCT event_id) AS d FROM t_dedup").collect()[0]
-    assert got.n == n_unique == got.d
 
 
 def test_streaming_corpus_ops_equal_batch(spark, tmp_path):
@@ -196,36 +64,6 @@ def test_streaming_corpus_ops_equal_batch(spark, tmp_path):
     assert stream_split == batch_split
 
 
-def test_stateful_running_totals(spark, events_dir):
-    stream = spark.readStream.schema(EVENTS_SCHEMA).format("parquet").load(events_dir)
-    q = (
-        running_totals(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("t_running")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # last update per key must equal the batch totals
-    got = {
-        r.event_type: (r.total_events, r.total_value)
-        for r in spark.sql(
-            "SELECT event_type, max_by(total_events, total_events) AS total_events,"
-            " max_by(total_value, total_events) AS total_value"
-            " FROM t_running GROUP BY event_type"
-        ).collect()
-    }
-    events = spark.read.schema(EVENTS_SCHEMA).parquet(events_dir)
-    want = {
-        r.event_type: (r.n, r.s)
-        for r in events.groupBy("event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("s"))
-        .collect()
-    }
-    assert got == want
-
-
 def test_streaming_redaction_and_quantization_equal_batch(spark, tmp_path):
     """PII redaction and int8 quantization are stateless map passes, so
     the same plan runs on readStream unchanged — the streaming-ingest
@@ -282,207 +120,3 @@ def test_streaming_redaction_and_quantization_equal_batch(spark, tmp_path):
         for r in spark.sql("SELECT * FROM t_stream_quant").collect()
     )
     assert egot == ebatch and len(egot) == 50
-
-
-def test_streaming_incremental_dedup_matches_full_batch(spark, tmp_path):
-    """Docs arrive as a stream (one file per micro-batch); the
-    accumulated pair table must equal the full-corpus batch dedup —
-    every near-dup pair is found exactly when its later doc arrives."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.dedup import minhash_lsh_dedup
-    from aws_etl_dados_publicos_cnpj_spark.streaming.incremental_dedup import (
-        start_streaming_dedup,
-    )
-
-    docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
-    stream_dir = str(tmp_path / "docs_arriving")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("overwrite").parquet(stream_dir)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stream_dir)
-
-    sig_store = str(tmp_path / "sig_store")
-    out = str(tmp_path / "pairs_out")
-    ckpt = str(tmp_path / "ckpt")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stream_dir)
-    )
-    q = start_streaming_dedup(spark, stream, sig_store, out, ckpt)
-    q.awaitTermination()
-
-    got = sorted(
-        (r.doc_a, r.doc_b, r.jaccard) for r in spark.read.parquet(out).collect()
-    )
-    want = sorted(
-        (r.doc_a, r.doc_b, r.jaccard) for r in minhash_lsh_dedup(docs).collect()
-    )
-    assert got == want and len(got) > 0
-    # signature store holds every doc exactly once
-    assert spark.read.parquet(sig_store).count() == docs.count()
-
-
-def test_streaming_dedup_batch_replay_is_idempotent(spark, tmp_path):
-    """Checkpoint recovery replays a foreachBatch invocation with the
-    same batch_id: the pair table and the signature store must be
-    byte-identical to the single-run state (mode('append') would
-    duplicate rows in both on every replay — ADVICE r3)."""
-    from aws_etl_dados_publicos_cnpj_spark.streaming.incremental_dedup import (
-        process_dedup_batch,
-    )
-
-    docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text").limit(200)
-    b0 = docs.filter(F.col("doc_id") % 2 == 0)
-    b1 = docs.filter(F.col("doc_id") % 2 == 1)
-    sig_store = str(tmp_path / "sig_store")
-    out = str(tmp_path / "pairs_out")
-
-    process_dedup_batch(b0, 0, sig_store, out)
-    process_dedup_batch(b1, 1, sig_store, out)
-    pairs_once = sorted(
-        (r.doc_a, r.doc_b, r.jaccard) for r in spark.read.parquet(out).collect()
-    )
-    sigs_once = spark.read.parquet(sig_store).count()
-    assert len(pairs_once) > 0
-
-    # crash-replay of the last batch (and a double replay, for good measure)
-    process_dedup_batch(b1, 1, sig_store, out)
-    process_dedup_batch(b1, 1, sig_store, out)
-    pairs_replayed = sorted(
-        (r.doc_a, r.doc_b, r.jaccard) for r in spark.read.parquet(out).collect()
-    )
-    assert pairs_replayed == pairs_once
-    assert spark.read.parquet(sig_store).count() == sigs_once
-
-
-def test_stream_stream_interval_join_equals_batch(spark, events_dir):
-    """Stream-stream inner join (watermarked both sides, time-bounded
-    condition) must produce exactly the batch join's pairs once all
-    input drains."""
-    from aws_etl_dados_publicos_cnpj_spark.streaming.windows import (
-        EVENTS_SCHEMA,
-        batch_click_error_join,
-        run_available_now,
-        streaming_click_error_join,
-    )
-
-    batch_df = spark.read.schema(EVENTS_SCHEMA).parquet(events_dir)
-    batch = {tuple(r) for r in batch_click_error_join(batch_df).collect()}
-
-    joined = streaming_click_error_join(spark, events_dir)
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_stream_ss_join")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    stream = {tuple(r) for r in spark.sql("SELECT * FROM t_stream_ss_join").collect()}
-    assert stream == batch and len(batch) > 0
-
-
-def test_streaming_funnel_equals_batch(spark, events_dir):
-    """The per-user stateful funnel (applyInPandasWithState) must agree
-    with the batch funnel's per-stage survivor counts once the stream
-    drains."""
-    from aws_etl_dados_publicos_cnpj_spark.operators.behavioral import funnel
-    from aws_etl_dados_publicos_cnpj_spark.streaming.stateful import streaming_funnel
-    from aws_etl_dados_publicos_cnpj_spark.streaming.windows import EVENTS_SCHEMA
-
-    batch_df = spark.read.schema(EVENTS_SCHEMA).parquet(events_dir)
-    batch = {r.stage_ord: r.users for r in funnel(batch_df).collect()}
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA).format("parquet").load(events_dir)
-    )
-    q = (
-        streaming_funnel(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("t_stream_funnel")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # update mode re-emits per batch: the user's FINAL stage is the last
-    # emitted row; with availableNow over one directory it's one batch
-    rows = spark.sql(
-        "SELECT user_id, max(stage_reached) AS stage FROM t_stream_funnel GROUP BY user_id"
-    ).collect()
-    stream_counts = {
-        k: sum(1 for r in rows if r.stage >= k) for k in batch
-    }
-    assert stream_counts == batch and batch[1] > 0
-
-
-def test_watermark_drops_late_events(spark, tmp_path):
-    """Event-time watermark semantics, explicitly: an event arriving in
-    a LATER micro-batch with a timestamp older than (max event time −
-    watermark) must be EXCLUDED from the already-finalized window, and
-    append mode must emit only finalized windows. maxFilesPerTrigger=1
-    forces the two files through separate micro-batches in mtime
-    order, so the second file genuinely arrives 'late'."""
-    import time
-    from datetime import datetime
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ck")
-    # Three files → three micro-batches. The watermark is a GUARANTEE
-    # boundary, not an eager filter: a late row is only certain to be
-    # dropped once its window's state has been EVICTED, which happens
-    # at the end of the batch whose watermark passed the window end —
-    # so the late row must arrive one batch after the advancer.
-    batches = [
-        [(1, datetime(2024, 1, 1, 0, 5), 10, "click", 1.0, "{}")],
-        # raises max event time to 06:00 → the NEXT batch runs with
-        # watermark 04:00 (the watermark used in batch N derives from
-        # batch N−1's max event time)
-        [(2, datetime(2024, 1, 1, 6, 0), 11, "click", 1.0, "{}")],
-        # this batch runs with watermark 04:00 — hour-0 state is
-        # evicted (and its window emitted) at the END of this batch
-        [(3, datetime(2024, 1, 1, 6, 10), 12, "click", 1.0, "{}")],
-        # hour-0's state is GONE → this late row is guaranteed-dropped
-        [(4, datetime(2024, 1, 1, 0, 6), 13, "click", 1.0, "{}"),
-         (5, datetime(2024, 1, 1, 6, 30), 14, "click", 1.0, "{}")],
-    ]
-    for rows in batches:
-        spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        time.sleep(1.1)  # distinct mtimes → deterministic batch order
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
-    agg = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(F.date_format("w.start", "yyyy-MM-dd HH").alias("hb"), "n")
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("t_late_drop")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {r.hb: r.n for r in spark.sql("SELECT * FROM t_late_drop").collect()}
-    # the hour-0 window finalized with ONLY the on-time event; the late
-    # event would have made it 2
-    assert got.get("2024-01-01 00") == 1, got
-    # and the drop is observable in the state-operator metrics
-    dropped = sum(
-        op.get("numRowsDroppedByWatermark", 0)
-        for p in q.recentProgress
-        for op in p["stateOperators"]
-    )
-    assert dropped == 1, [p["batchId"] for p in q.recentProgress]
-    # the hour-6 window never passes the watermark before the stream
-    # drains — append mode must NOT emit it
-    assert "2024-01-01 06" not in got, got
